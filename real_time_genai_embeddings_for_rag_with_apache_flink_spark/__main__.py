@@ -22,7 +22,11 @@ from .streaming import run_pipeline
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("--source-format", default=None, help="json|kafka|rate")
+    p.add_argument("--source-format", default=None,
+                   help="json|kafka|rate (default: kafka when "
+                        "--kafka-bootstrap is given, else json); "
+                        "kinesis-lite needs its stream and region in "
+                        "PipelineConfig.extra, so run it from Python")
     p.add_argument("--source-path", default=None)
     p.add_argument("--kafka-bootstrap", default=None)
     p.add_argument("--kafka-topic", default=None)

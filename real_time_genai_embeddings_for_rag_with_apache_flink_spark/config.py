@@ -25,15 +25,12 @@ class PipelineConfig:
       (``.../BedRockEmbeddingModelAsyncCustomMessage.java:80-85``,
       ``index-creation-function/lambda_function.py:58-61``). The
       deterministic local embedder accepts any dim; tests use 64.
-    - ``max_inflight`` maps the reference's unorderedWait capacity 1000
-      (``DataStreamJob.java:148-154``) onto client-side batch size inside
-      the embedding UDF + maxFilesPerTrigger.
     - ``on_error``: the reference emits null on failure
       (``BedRockEmbeddingModelAsyncCustomMessage.java:109-112``) which would
       NPE its own sink; the engine makes the policy explicit.
     """
 
-    source_format: str = "json"            # json file-stream | kafka | rate | parquet
+    source_format: str = "json"            # json file-stream | kinesis-lite | kafka | rate
     source_path: str | None = None         # dir for file sources
     kafka_bootstrap: str | None = None
     kafka_topic: str | None = None
@@ -41,7 +38,6 @@ class PipelineConfig:
     embedding_model: str = "local-deterministic"
     embedding_dim: int = 64
     embed_batch_size: int = 256
-    max_inflight: int = 1000
     on_error: str = "dead-letter"          # dead-letter | drop | fail
     sink_format: str = "parquet"           # parquet | memory | opensearch
     sink_path: str | None = None

@@ -1,15 +1,13 @@
-"""Kinesis source executed for real: a Spark 4 Python data source
-speaking the PUBLIC Kinesis Data Streams JSON protocol over HTTP.
+"""The package's Kinesis source: a Spark 4 Python data source speaking
+the PUBLIC Kinesis Data Streams JSON protocol over HTTP.
 
-The reference consumes its stream with FlinkKinesisConsumer
+The reference consumes its stream with one FlinkKinesisConsumer
 (``KDS-P/.../msf/DataStreamJob.java:128-140``: stream name + region +
-LATEST start position). The engine's S1 stage maps that config onto the
-public spark-sql-kinesis connector (streaming/pipeline.py
-kinesis_reader_options), but that connector's jar is not in this
-container, so rounds 6-10 could only unit-test the option mapping — the
-read path itself never executed. This module closes the gap the same
-way operators/miniproto.py closed the protobuf one: implement the wire
-protocol directly from its public specification, then execute it.
+LATEST start position). ``format("kinesis-lite")`` is this package's
+one reader for it: ``KinesisLiteStreamReader`` for streaming and
+``KinesisLiteReader`` for one-shot batch reads. It needs no connector
+jar; it implements the wire protocol directly from its public
+specification, the same way operators/miniproto.py does for protobuf.
 
 What is implemented (all public AWS API surface):
 
@@ -51,34 +49,29 @@ progress and re-emit committed records (the duplicate bug pinned in
 tests/test_kinesis_lite.py). The tip is discovered by a driver-side
 GetRecords walk (resumed from the last position this instance saw —
 an instance-local cache that only shortens the walk, never changes the
-answer), run SHARD-CONCURRENTLY over a bounded thread pool
-(``tip_walk_threads``, default 8) so driver poll latency is the max
-over shards rather than their sum; executors then re-read exactly the
-planned (start, end] range via their own AFTER_SEQUENCE_NUMBER
-iterators. The Python stream API exposes no engine-side admission
-control, so pacing is the reader's job: ``max_records_per_trigger``
-caps each shard's advance per trigger whenever the cap is provably
-restart-safe — i.e. the walk start is an instance-derived floor at or
-above the committed position. MEASURED ENGINE BEHAVIOR (Spark 4.1,
-pinned in tests/test_kinesis_lite.py's pipeline test): the engine's
-FIRST call on a new reader instance is ``latestOffset`` — BEFORE
-``initialOffset`` even on a fresh query — and at that moment the
-reader cannot distinguish fresh start from checkpoint restart, so the
-first walk must reach the true tip (a capped guess below a committed
-position would be adopted as progress and re-emit committed records —
-the pinned duplicate bug; and no later clamp can fully repair it,
-because a crash between the stale offset-log write and the clamp
-leaves a fresh instance that replays the stale range verbatim).
-Pacing therefore engages from the SECOND trigger onward: the first
-trigger takes the whole backlog (executors read it page-by-page, so
-memory stays one-page-bounded), every later trigger advances at most
-``max_records_per_trigger`` per shard. A deployment that needs the
-FIRST batch bounded too uses the driver-prefetching
-SimpleDataSourceStreamReader (``kinesis-lite-simple``), whose
-``read(start)`` receives the committed offset and is therefore
-strictly paced by construction. The double fetch is the price of
-exactness — if 2x GetRecords matters, use enhanced fan-out or the
-simple reader (README deployment notes).
+answer), run SHARD-CONCURRENTLY over a thread pool of
+``min(shards, 8)`` so driver poll latency is the max over shards
+rather than their sum; executors then re-read exactly the planned
+(start, end] range via their own AFTER_SEQUENCE_NUMBER iterators, so
+every record is fetched twice (enhanced fan-out is the production
+answer if 2x GetRecords matters). The Python stream API exposes no
+engine-side admission control, so pacing is the reader's job:
+``max_records_per_trigger`` caps each shard's advance per trigger
+whenever the cap is provably restart-safe — i.e. the walk start is an
+instance-derived floor at or above the committed position. MEASURED
+ENGINE BEHAVIOR (Spark 4.1, pinned in tests/test_kinesis_lite.py's
+pipeline test): the engine's FIRST call on a new reader instance is
+``latestOffset`` — BEFORE ``initialOffset`` even on a fresh query —
+and at that moment the reader cannot distinguish fresh start from
+checkpoint restart, so the first walk must reach the true tip (a
+capped guess below a committed position would be adopted as progress
+and re-emit committed records — the pinned duplicate bug; and no later
+clamp can fully repair it, because a crash between the stale
+offset-log write and the clamp leaves a fresh instance that replays
+the stale range verbatim). Pacing therefore engages from the SECOND
+trigger onward: the first trigger takes the whole backlog (executors
+read it page-by-page, so memory stays one-page-bounded), every later
+trigger advances at most ``max_records_per_trigger`` per shard.
 """
 
 from __future__ import annotations
@@ -97,7 +90,6 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 _API_VERSION = "Kinesis_20131202"
@@ -106,6 +98,7 @@ _MAX_EMPTY_POLLS = 8  # GetRecords may return empty pages mid-stream
 # regions) because every page advances the iterator; this cap only
 # trips a service that stops advancing entirely
 _PERSIST_EMPTY_CAP = 100_000
+_WALK_THREADS = 8  # cap on concurrent driver tip walks (one per shard)
 
 
 # ---------------------------------------------------------------------------
@@ -608,12 +601,7 @@ class KinesisLiteStreamReader(DataSourceStreamReader):
         if self.start not in ("TRIM_HORIZON", "LATEST"):
             raise ValueError(f"unknown starting_position {self.start!r}")
         self._client = KinesisClient(self.options)
-        # tip walks run shard-concurrent (each with its own client; the
-        # driver poll is then bounded by the slowest shard, not the sum
-        # over shards)
-        self.walk_threads = max(1, int(options.get("tip_walk_threads", 8)))
-        # per-shard per-trigger catch-up cap (mirrors kinesis-lite-
-        # simple's max_records_per_batch). 0/absent = unpaced (full tip).
+        # per-shard per-trigger catch-up cap. 0/absent = unpaced (full tip).
         self.per_trigger = int(options.get("max_records_per_trigger", 0))
         # walk-start cache ONLY: latestOffset always walks to the true
         # tip (or a PACED prefix of it — see _paced below), so this
@@ -686,8 +674,8 @@ class KinesisLiteStreamReader(DataSourceStreamReader):
 
     def _walk_all(self, targets: dict[str, tuple[str | None, int | None]]):
         """Concurrent tip walks: {shard: (start, cap)} -> {shard: tip}.
-        Bounded pool — driver poll latency is max over shards, not the
-        serial sum (the r11 scale caveat). Completed walks are CACHED
+        One thread per shard, at most _WALK_THREADS — driver poll latency
+        is max over shards, not the serial sum. Completed walks are CACHED
         into self._positions before any failure propagates: on a
         many-shard stream where one shard's walk dies (throttle-retry
         exhaustion, the persist cap), the other shards' possibly
@@ -695,15 +683,7 @@ class KinesisLiteStreamReader(DataSourceStreamReader):
         RESUMES from their tips instead of re-walking every shard."""
         if not targets:
             return {}
-        workers = min(self.walk_threads, len(targets))
-        if workers == 1:
-            out: dict[str, str | None] = {}
-            try:
-                for s, (p, c) in targets.items():
-                    out[s] = self._walk_to_tip(s, p, c)
-            finally:
-                self._positions.update(out)
-            return out
+        workers = min(len(targets), _WALK_THREADS)
         with concurrent.futures.ThreadPoolExecutor(workers) as pool:
             futs = {
                 s: pool.submit(self._walk_to_tip, s, p, c)
@@ -845,92 +825,6 @@ class KinesisLiteStreamReader(DataSourceStreamReader):
         pass
 
 
-class KinesisLiteSimpleStreamReader(SimpleDataSourceStreamReader):
-    """The driver-prefetching variant (``format("kinesis-lite-simple")``)
-    — the paced-batches option the shard-parallel reader cannot offer:
-    ``read(start)`` RECEIVES the committed offset from the engine, so a
-    per-trigger cap (``max_records_per_batch``, per shard) is
-    restart-safe here by construction — pacing restarts from the
-    committed position, never from lost reader state. The trade: every
-    record crosses the DRIVER (Spark's documented guidance — use this
-    for lightweight input rates; the shard-parallel reader for
-    throughput). Offsets share the shard-parallel reader's
-    ``{"shards": {shard_id: seq}}`` shape."""
-
-    def __init__(self, options: dict):
-        self.options = dict(options)
-        self.mode = options.get("decode", "utf8")
-        self.per_batch = int(options.get("max_records_per_batch", 1000))
-        self.start = options.get("starting_position", "TRIM_HORIZON").upper()
-        if self.start not in ("TRIM_HORIZON", "LATEST"):
-            raise ValueError(f"unknown starting_position {self.start!r}")
-        self._client = KinesisClient(self.options)
-
-    @staticmethod
-    def _load(offset: dict) -> dict[str, str | None]:
-        return {
-            s: (None if p == "" else p)
-            for s, p in offset.get("shards", {}).items()
-        }
-
-    @staticmethod
-    def _snap(positions: dict[str, str | None]) -> dict:
-        return {
-            "shards": {
-                s: ("" if p is None else p)
-                for s, p in sorted(positions.items())
-            }
-        }
-
-    def _walk_to_tip(self, shard: str, start: str | None) -> str | None:
-        last = start
-        while True:
-            recs = self._client.read_after(shard, last, 10_000)
-            if not recs:
-                return last
-            last = recs[-1]["SequenceNumber"]
-
-    def initialOffset(self) -> dict:
-        positions: dict[str, str | None] = {}
-        for shard in self._client.list_shards():
-            positions[shard] = (
-                self._walk_to_tip(shard, None)
-                if self.start == "LATEST"
-                else None
-            )
-        return self._snap(positions)
-
-    def read(self, start: dict):
-        pos = self._load(start)
-        # prune deleted shards; adopt new ones at TRIM_HORIZON
-        listed = self._client.list_shards()
-        pos = {shard: pos.get(shard) for shard in listed}
-        rows: list = []
-        for shard, p in pos.items():
-            recs = self._client.read_after(shard, p, self.per_batch)
-            rows.extend(_row(r, shard, self.mode) for r in recs)
-            if recs:
-                pos[shard] = recs[-1]["SequenceNumber"]
-        return iter(rows), self._snap(pos)
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        lo, hi = self._load(start), self._load(end)
-        for shard, end_seq in hi.items():
-            start_seq = lo.get(shard)
-            if end_seq is None or end_seq == start_seq:
-                continue
-            end_i = int(end_seq)
-            for rec in self._client.iter_after(
-                shard, start_seq, 1_000_000_000, strict=True, stop_after=end_i
-            ):
-                if int(rec["SequenceNumber"]) > end_i:
-                    break
-                yield _row(rec, shard, self.mode)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
 class KinesisLiteDataSource(DataSource):
     """``format("kinesis-lite")``. Options: stream_name (required),
     endpoint_url, region, access_key/secret_key/session_token (enables
@@ -938,8 +832,7 @@ class KinesisLiteDataSource(DataSource):
     max_records_per_shard (batch; a one-shot read that would exceed it
     RAISES unless truncate_at_limit=true), truncate_at_limit (batch),
     max_records_per_trigger (streaming; per-shard per-trigger pacing,
-    0 = unpaced), tip_walk_threads (streaming; concurrent driver tip
-    walks, default 8), decode (utf8 | base64)."""
+    0 = unpaced), decode (utf8 | base64)."""
 
     @classmethod
     def name(cls) -> str:
@@ -958,31 +851,6 @@ class KinesisLiteDataSource(DataSource):
         return KinesisLiteStreamReader(self.options)
 
 
-class KinesisLiteSimpleDataSource(DataSource):
-    """``format("kinesis-lite-simple")`` — same options and schema, but
-    the stream reader is the driver-prefetching simple variant (which
-    Spark only consults when ``streamReader`` is absent, hence the
-    separate format name). Adds ``max_records_per_batch`` (per shard
-    per trigger, restart-safe paced batching)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "kinesis-lite-simple"
-
-    def schema(self) -> str:
-        return (
-            "shard_id string, sequence_number string, partition_key string, "
-            "data string, arrival_ts timestamp"
-        )
-
-    def reader(self, schema) -> KinesisLiteReader:
-        return KinesisLiteReader(self.options)
-
-    def simpleStreamReader(self, schema) -> KinesisLiteSimpleStreamReader:
-        return KinesisLiteSimpleStreamReader(self.options)
-
-
 def register(spark) -> None:
-    """Idempotent registration of both kinesis-lite formats."""
+    """Idempotent registration of ``format("kinesis-lite")``."""
     spark.dataSource.register(KinesisLiteDataSource)
-    spark.dataSource.register(KinesisLiteSimpleDataSource)

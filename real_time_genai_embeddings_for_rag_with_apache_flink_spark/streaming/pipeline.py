@@ -5,12 +5,13 @@ Reference job (all three variants): stream source -> JSON parse -> project
 (``KDS-P/.../msf/DataStreamJob.java:133-177``). Here the same stages are
 one declarative streaming plan:
 
-- source: Kafka (``format("kafka")``, the MSK variant's KafkaSource,
+- source: Kinesis (``format("kinesis-lite")``, the KDS variants'
+  FlinkKinesisConsumer, ``KDS-P/.../DataStreamJob.java:128-140``), Kafka
+  (``format("kafka")``, the MSK variant's KafkaSource,
   ``MSK-S/.../DataStreamJob.java:127-135``), a JSON-lines file stream (the
-  test/default source standing in for Kinesis), or the rate source for
-  load generation. Start position (reference divergence: Kinesis LATEST at
-  ``KDS-P/...:130`` vs Kafka earliest at ``MSK-S/...:132``) is
-  ``PipelineConfig.start_position``.
+  test/default source), or the rate source for load generation. Start
+  position (reference divergence: Kinesis LATEST at ``KDS-P/...:130`` vs
+  Kafka earliest at ``MSK-S/...:132``) is ``PipelineConfig.start_position``.
 - parse/normalize/filter: ``from_json`` + select + filter — fused by
   whole-stage codegen into one stage per micro-batch (the analogue of
   Flink operator chaining, ``KDS-P/lib/....ts:230-235``).
@@ -41,8 +42,8 @@ from .sinks import foreach_batch_writer
 
 
 def kinesis_reader_options(cfg: PipelineConfig) -> dict[str, str]:
-    """Option map for the public spark-sql-kinesis connector, mirroring
-    the reference's consumer config: stream name + region
+    """``format("kinesis-lite")`` options mirroring the reference's
+    consumer config: stream name + region
     (KDS-P/.../msf/DataStreamJob.java:128-130, CDK-injected), start
     position LATEST (:130; 'earliest' maps to TRIM_HORIZON — the same
     semantic pair as the Kafka variant's earliest, MSK-S/...:132)."""
@@ -56,14 +57,14 @@ def kinesis_reader_options(cfg: PipelineConfig) -> dict[str, str]:
     if cfg.start_position not in positions:
         raise ValueError(f"unknown start_position {cfg.start_position!r}")
     return {
-        "streamName": str(stream),
+        "stream_name": str(stream),
         "region": str(region),
-        "endpointUrl": str(
+        "endpoint_url": str(
             cfg.extra.get(
                 "kinesis_endpoint", f"https://kinesis.{region}.amazonaws.com"
             )
         ),
-        "startingPosition": positions[cfg.start_position],
+        "starting_position": positions[cfg.start_position],
     }
 
 
@@ -121,49 +122,22 @@ def build_source(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
         return reader.load().select(
             F.col("value").cast("string").alias("value")
         )
-    if cfg.source_format == "kinesis":
-        # The KDS variants' FlinkKinesisConsumer (stream name + region +
-        # LATEST start position, KDS-P/.../msf/DataStreamJob.java:128-140)
-        # mapped onto the public spark-sql-kinesis connector's options.
-        # The connector jar isn't in this container, so .load() only
-        # works where the connector is on the classpath; the option
-        # mapping itself is unit-tested via kinesis_reader_options.
-        reader = spark.readStream.format("kinesis")
-        for key, val in kinesis_reader_options(cfg).items():
-            reader = reader.option(key, val)
-        return reader.load().select(
-            F.col("data").cast("string").alias("value")
-        )
     if cfg.source_format == "kinesis-lite":
-        # The same consumer config driven through the engine's OWN
-        # Kinesis protocol reader (sources/kinesis_lite.py) — no
-        # connector jar required; the wire protocol is public. This is
-        # the path that actually executes in this container (st30), and
-        # it points at real AWS/kinesalite/LocalStack via
-        # extra.kinesis_endpoint + credentials.
+        # The reference's consumer config driven through the package's
+        # own Kinesis protocol reader (sources/kinesis_lite.py); it points
+        # at real AWS/kinesalite/LocalStack via extra.kinesis_endpoint +
+        # credentials.
         from ..sources.kinesis_lite import register as _register_kinesis
 
         _register_kinesis(spark)
-        opts = kinesis_reader_options(cfg)
-        reader = (
-            spark.readStream.format("kinesis-lite")
-            .option("stream_name", opts["streamName"])
-            .option("region", opts["region"])
-            .option("endpoint_url", opts["endpointUrl"])
-            .option(
-                "starting_position",
-                {"LATEST": "LATEST", "TRIM_HORIZON": "TRIM_HORIZON"}[
-                    opts["startingPosition"]
-                ],
-            )
-        )
+        reader = spark.readStream.format("kinesis-lite")
+        for key, val in kinesis_reader_options(cfg).items():
+            reader = reader.option(key, val)
         for key in (
             "access_key",
             "secret_key",
             "session_token",
-            # r12 operational knobs: concurrent driver tip walks and the
-            # restart-safe per-shard per-trigger catch-up cap
-            "tip_walk_threads",
+            # the restart-safe per-shard per-trigger catch-up cap
             "max_records_per_trigger",
             # throttle-backoff tuning (st34 fault-injection row shortens
             # the schedule; production leaves the defaults)

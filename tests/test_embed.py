@@ -262,7 +262,7 @@ class _BlockingBedrockClient:
 
         self.dim = dim
         self.barrier = threading.Barrier(expected, timeout=timeout)
-        self.max_inflight = 0
+        self.peak_inflight = 0
         self._inflight = 0
         self._lock = threading.Lock()
 
@@ -272,7 +272,7 @@ class _BlockingBedrockClient:
 
         with self._lock:
             self._inflight += 1
-            self.max_inflight = max(self.max_inflight, self._inflight)
+            self.peak_inflight = max(self.peak_inflight, self._inflight)
         try:
             self.barrier.wait()
             text = json.loads(body)["inputText"]
@@ -297,7 +297,7 @@ def test_bedrock_adapter_overlaps_invokes():
     emb = BedrockTitanEmbedder(client=client, max_concurrency=4, max_retries=0)
     texts = [f"doc number {i}" for i in range(8)]
     vecs = emb.embed_batch(texts)
-    assert client.max_inflight >= 4
+    assert client.peak_inflight >= 4
     # order preserved: each row's vector derives from its own text
     for t, v in zip(texts, vecs):
         assert v == [float(len(t) + i) for i in range(4)]

@@ -267,8 +267,7 @@ def test_pipeline_source_format_kinesis_lite_end_to_end(spark, fake):
             "kinesis_stream": "docs",
             "kinesis_region": "us-east-1",
             "kinesis_endpoint": url,
-            # the r12 operational knobs ride PipelineConfig.extra
-            "kinesis_tip_walk_threads": 4,
+            # reader options ride PipelineConfig.extra
             "kinesis_max_records_per_trigger": 4,
         },
     )
@@ -490,72 +489,6 @@ def test_reveal_does_not_rehide_closed_shard_remainder():
         assert len(recs) == 6, "closed parent remainder must stay readable"
     finally:
         srv.stop()
-
-
-def test_simple_reader_paced_batches_and_replay(fake):
-    """The driver-prefetching simple variant: read(start) RECEIVES the
-    committed offset, so per-trigger pacing (max_records_per_batch) is
-    restart-safe by construction; readBetweenOffsets replays a planned
-    range deterministically."""
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.kinesis_lite import (
-        KinesisLiteSimpleStreamReader,
-    )
-
-    srv, url = fake
-    r = KinesisLiteSimpleStreamReader(
-        {
-            "stream_name": "docs",
-            "endpoint_url": url,
-            "max_records_per_batch": "4",
-        }
-    )
-    o0 = r.initialOffset()
-    it1, o1 = r.read(o0)
-    rows1 = list(it1)
-    assert len(rows1) == 16  # 4/shard x 4 shards: genuinely paced
-    assert all(p == "3" for p in o1["shards"].values())
-    # replay of the same planned range is identical
-    assert list(r.readBetweenOffsets(o0, o1)) == rows1
-    # pacing resumes from the COMMITTED offset even on a fresh instance
-    # (the restart case the shard-parallel reader cannot pace through)
-    r2 = KinesisLiteSimpleStreamReader(
-        {
-            "stream_name": "docs",
-            "endpoint_url": url,
-            "max_records_per_batch": "4",
-        }
-    )
-    it2, o2 = r2.read(o1)
-    rows2 = list(it2)
-    assert len(rows2) == 16
-    assert not ({(x[0], x[1]) for x in rows1} & {(x[0], x[1]) for x in rows2})
-
-
-def test_simple_reader_through_spark_exactly_once(spark, fake):
-    srv, url = fake
-    register(spark)
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.plans.streaming_queries import (
-        LAST_RUN_BATCHES,
-        run_until_rows,
-    )
-
-    raw = (
-        spark.readStream.format("kinesis-lite-simple")
-        .option("stream_name", "docs")
-        .option("endpoint_url", url)
-        .option("max_records_per_batch", "4")
-        .load()
-    )
-    out = run_until_rows(
-        raw.select("shard_id", "sequence_number", "partition_key"),
-        "kinesis_lite_simple_t",
-        "append",
-        target_rows=40,
-    )
-    rows = out.collect()
-    assert len(rows) == 40
-    assert len({(r.shard_id, r.sequence_number) for r in rows}) == 40
-    assert LAST_RUN_BATCHES["kinesis_lite_simple_t"] >= 3
 
 
 def test_tip_walks_run_concurrently_across_shards(monkeypatch):

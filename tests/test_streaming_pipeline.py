@@ -95,9 +95,10 @@ def test_kafka_source_requires_config(spark):
         build_source(spark, PipelineConfig(source_format="kafka"))
 
 
-def test_unknown_source_format(spark):
+@pytest.mark.parametrize("fmt", ["bogus", "kinesis", "kinesis-lite-simple"])
+def test_unknown_source_format(spark, fmt):
     with pytest.raises(ValueError, match="unknown source_format"):
-        build_source(spark, PipelineConfig(source_format="bogus"))
+        build_source(spark, PipelineConfig(source_format=fmt))
 
 
 def test_idempotent_sink_replay_no_duplicates(spark, wire_dir, tmp_path):
@@ -203,29 +204,29 @@ def test_rate_source_shape(spark):
 
 
 def test_kinesis_reader_options_mirror_reference_consumer():
-    """S1: the Kinesis branch maps PipelineConfig onto the public
-    spark-sql-kinesis connector options — stream/region/endpoint plus
-    the reference's LATEST start position (DataStreamJob.java:130), with
-    'earliest' -> TRIM_HORIZON. No live endpoint needed: the option
-    mapping is the contract."""
+    """S1: the Kinesis branch maps PipelineConfig onto kinesis-lite's
+    own options — stream/region/endpoint plus the reference's LATEST
+    start position (DataStreamJob.java:130), with 'earliest' ->
+    TRIM_HORIZON. No live endpoint needed: the option mapping is the
+    contract."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.pipeline import (
         kinesis_reader_options,
     )
 
     cfg = PipelineConfig(
-        source_format="kinesis",
+        source_format="kinesis-lite",
         start_position="latest",
         extra={"kinesis_stream": "input-stream", "kinesis_region": "us-east-1"},
     )
     assert kinesis_reader_options(cfg) == {
-        "streamName": "input-stream",
+        "stream_name": "input-stream",
         "region": "us-east-1",
-        "endpointUrl": "https://kinesis.us-east-1.amazonaws.com",
-        "startingPosition": "LATEST",
+        "endpoint_url": "https://kinesis.us-east-1.amazonaws.com",
+        "starting_position": "LATEST",
     }
 
     cfg_e = PipelineConfig(
-        source_format="kinesis",
+        source_format="kinesis-lite",
         start_position="earliest",
         extra={
             "kinesis_stream": "s",
@@ -234,13 +235,13 @@ def test_kinesis_reader_options_mirror_reference_consumer():
         },
     )
     opts = kinesis_reader_options(cfg_e)
-    assert opts["startingPosition"] == "TRIM_HORIZON"
-    assert opts["endpointUrl"] == "https://localhost:4566"
+    assert opts["starting_position"] == "TRIM_HORIZON"
+    assert opts["endpoint_url"] == "https://localhost:4566"
 
     import pytest
 
     with pytest.raises(ValueError, match="kinesis_stream"):
-        kinesis_reader_options(PipelineConfig(source_format="kinesis"))
+        kinesis_reader_options(PipelineConfig(source_format="kinesis-lite"))
 
 
 def test_pipeline_observed_metrics_account_for_every_row(
