@@ -1386,8 +1386,8 @@ SELECT q_id, vec_id, sim, rank FROM (
     bench=True,
 )
 def s02_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact k-NN join (8 queries x corpus, k=5): broadcast the query
-    side, score map-side, per-query window top-k."""
+    """Exact k-NN join (8 queries x corpus, k=5): one GEMM per corpus
+    Arrow batch against the collected queries, per-query window top-k."""
     from ..operators.similarity import knn_join
 
     em = load_table(spark, sf_dir, "embeddings")
@@ -1657,89 +1657,6 @@ def s15_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
-    )
-
-
-@query(
-    "s17_gemm_knn",
-    oracle="""
-SELECT q_id, vec_id, sim, rank FROM (
-  SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
-    ROUND(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-                                 CAST(q.embedding AS DOUBLE[])), 6) AS sim,
-    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY ROUND(list_cosine_similarity(
-                         CAST(c.embedding AS DOUBLE[]),
-                         CAST(q.embedding AS DOUBLE[])), 6) DESC, c.vec_id) AS rank
-  FROM (SELECT * FROM embeddings WHERE vec_id < 8) q
-  JOIN (SELECT * FROM embeddings WHERE vec_id >= 8) c ON true
-) WHERE rank <= 5
-""",
-    tags=("similarity", "knn", "gemm", "udf"),
-    bench=True,
-)
-def s17_gemm_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """s02's exact k-NN join, executed as BLAS matrix multiplication:
-    the 8 query vectors become a broadcast numpy matrix; each Arrow
-    batch of corpus vectors is one dense float64 GEMM (batch x dim @
-    dim x queries) inside mapInPandas, followed by a per-batch top-k
-    cut PER QUERY (ordered by the same rounded-sim/vec_id key the
-    final rank uses, so batch pruning can never drop a row the global
-    rank would keep). The survivors — k rows per query per batch, not
-    the corpus — flow to the global WindowGroupLimit rank. Same oracle
-    as s02; the row answers 'is the per-row fold leaving throughput on
-    the table?' with a benched number rather than a guess. At 100 TB
-    the fold (s02) stays the default — no Python in the hot path — and
-    this is the shape to switch to when the query set grows past what
-    per-row codegen folds handle (hundreds of queries x wide dims:
-    GEMM amortizes memory traffic across queries)."""
-    import numpy as np
-    import pandas as pd
-
-    em = load_table(spark, sf_dir, "embeddings")
-    q_rows = (
-        em.filter(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    k = 5
-
-    def gemm_topk(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(E, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (E / norms) @ Qn.T  # (batch, n_queries)
-            # Half-away-from-zero 6-dp rounding = the engines' ROUND.
-            rsims = np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5) / 1e6
-            ids = pdf["vec_id"].to_numpy()
-            out_q, out_v, out_s = [], [], []
-            for j in range(len(q_ids)):
-                order = np.lexsort((ids, -rsims[:, j]))[:k]
-                out_q.extend([q_ids[j]] * len(order))
-                out_v.extend(ids[order])
-                out_s.extend(rsims[order, j])
-            yield pd.DataFrame(
-                {"q_id": out_q, "vec_id": out_v, "sim": out_s}
-            )
-
-    corpus = em.filter(F.col("vec_id") >= 8).select("vec_id", "embedding")
-    cand = corpus.mapInPandas(
-        gemm_topk, "q_id long, vec_id long, sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
     )
 
 
@@ -2297,9 +2214,9 @@ def s16_knn_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled-retrieval primitive behind deduplication-aware sampling and
     weak labeling of new corpora.
 
-    Scale shape: the neighbor set rides knn_join's two-phase
-    WindowGroupLimit (partial top-k below the exchange — the shuffle
-    carries at most k rows per query per map task); the label join is
+    Scale shape: the neighbor set is knn_join's per-batch GEMM top-k
+    merged by a two-phase WindowGroupLimit (the shuffle carries only
+    the batches' partial top-k rows, not the corpus); the label join is
     k*|Q|-sized; the vote and the argmax are hash aggregates, the final
     winner a map-side struct-max, NOT a per-query window."""
     from ..operators.similarity import knn_join

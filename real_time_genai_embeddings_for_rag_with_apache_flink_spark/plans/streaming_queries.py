@@ -1821,17 +1821,16 @@ def st18_stream_knn_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the embeddings file-stream filtered to every 50th vector, so
     queries land across all replay batches, not just the first), and
     each trigger answers its batch exactly against the static corpus
-    via the s02 knn_join — broadcast the (tiny) query batch, score
-    map-side, per-query top-3 through Catalyst's two-phase
-    WindowGroupLimit — then APPENDS the answers to a parquet result
-    log via foreachBatch. st15 maintains the index continuously; this
+    via the s02 knn_join — collect the (tiny) query batch, score each
+    corpus Arrow batch with one GEMM, per-query top-3 through Catalyst's
+    two-phase WindowGroupLimit — then APPENDS the answers to a parquet
+    result log via foreachBatch. st15 maintains the index continuously; this
     is its read path: together they are the full
     ingest->index->serve lifecycle with no external vector store.
 
-    Scale shape per trigger: the corpus scan is the only big side and
-    it never shuffles (queries broadcast; the rank filter's Partial
-    phase caps what reaches the exchange at k rows per query per map
-    task). The result log is idempotent per batch id — each trigger
+    Scale shape per trigger: one pass over the corpus, and only each
+    Arrow batch's partial top-3 per query reaches the rank exchange.
+    The result log is idempotent per batch id — each trigger
     OVERWRITES its own batch directory, so foreachBatch's
     at-least-once retry replaces that batch's answers instead of
     doubling them. The oracle is the

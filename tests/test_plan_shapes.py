@@ -136,12 +136,11 @@ def test_ivf_assignment_has_no_exchange(spark):
 
 
 def test_knn_join_bounds_preshuffle_rows(spark):
-    """knn_join's per-query window must never shuffle the raw scored
-    corpus: Catalyst's two-phase WindowGroupLimit must carry the rank
-    filter, with the Partial phase BELOW the hash exchange — each map
-    task forwards at most k rows per query, so the shuffle is bounded
-    by k * |Q| * n_map_tasks, not |corpus| * |Q|. Zero Python in the
-    plan (an Arrow partial-top-k stage measured no faster)."""
+    """knn_join must never materialize or shuffle the |Q| x |C| scored
+    pairs: the corpus is scored by ONE Arrow GEMM stage below the
+    per-query hash exchange (no nested-loop or cartesian join), and the
+    rank filter plans as a two-phase WindowGroupLimit whose Final phase
+    merges the batches' partial top-k above the exchange."""
     from pyspark.sql import functions as F
 
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.similarity import (
@@ -156,12 +155,13 @@ def test_knn_join_bounds_preshuffle_rows(spark):
     k = 5
     out = knn_join(queries, corpus, k=k)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # no Python crossing anywhere in the hot path
-    assert "MapInPandas" not in plan and "EvalPython" not in plan
-    assert "Exchange hashpartitioning" in plan
-    above, below = plan.split("Exchange hashpartitioning", 1)
+    assert plan.count("MapInArrow") == 1
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    assert "Exchange hashpartitioning(q_id" in plan
+    above, below = plan.split("Exchange hashpartitioning(q_id", 1)
+    assert "MapInArrow" in below
     assert "WindowGroupLimit" in above and "Final" in above
-    assert "WindowGroupLimit" in below and "Partial" in below
     # bounded merge: final output is exactly <= k per query
     assert out.count() <= k * queries.count()
 
