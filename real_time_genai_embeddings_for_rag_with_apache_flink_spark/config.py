@@ -39,7 +39,7 @@ class PipelineConfig:
     embedding_dim: int = 64
     embed_batch_size: int = 256
     on_error: str = "dead-letter"          # dead-letter | drop | fail
-    sink_format: str = "parquet"           # parquet | memory | opensearch
+    sink_format: str = "parquet"           # parquet | opensearch | delta
     sink_path: str | None = None
     checkpoint_dir: str | None = None
     trigger_interval: str | None = None    # None -> availableNow

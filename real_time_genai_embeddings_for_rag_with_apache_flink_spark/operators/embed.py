@@ -220,24 +220,6 @@ class BedrockTitanEmbedder:
         if not work:
             self.row_errors = errs
             return out
-        if len(work) == 1:
-            # no other rows to serve during a backoff, so the scheduler
-            # buys nothing — skip pool/future construction (this path
-            # runs once per Arrow batch in the UDF hot loop)
-            i, t = work[0]
-            last_err = None
-            for attempt in range(self._max_retries + 1):
-                try:
-                    out[i] = self._invoke_once(t)
-                    last_err = None
-                    break
-                except Exception as e:  # noqa: BLE001 - retried then dead-lettered
-                    last_err = f"{type(e).__name__}: {e}"
-                    if attempt < self._max_retries:
-                        time.sleep(self._retry_base * (2**attempt))
-            errs[i] = last_err
-            self.row_errors = errs
-            return out
         with ThreadPoolExecutor(
             max_workers=min(self._max_concurrency, len(work))
         ) as pool:

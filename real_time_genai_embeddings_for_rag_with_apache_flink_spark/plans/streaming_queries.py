@@ -3703,10 +3703,9 @@ def st31_opensearch_protocol_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     md5-BoW embed through the pandas-UDF seam -> foreachBatch bulk
     sink, ``KDS-P/.../msf/DataStreamJob.java:140-177``) runs against
     the in-process OpenSearch-compatible endpoint
-    (streaming/opensearch_fake.py) through the engine's dependency-free
-    HTTP transport (streaming/opensearch_http.py,
-    ``extra.transport='http'``): the driver bootstraps the index with
-    the reference's exact hnsw mapping (D1,
+    (streaming/opensearch_fake.py) through the sink's stdlib HTTP
+    transport (streaming/opensearch_http.py): the driver bootstraps
+    the index with the reference's exact hnsw mapping (D1,
     index-creation-function/lambda_function.py:66-97), each output
     partition opens its own client and streams one NDJSON _bulk
     request executor-side, and the result is read BACK over
@@ -3746,7 +3745,6 @@ def st31_opensearch_protocol_sink(spark: SparkSession, sf_dir: str) -> DataFrame
             on_error="fail",
             checkpoint_dir=tempfile.mkdtemp(prefix="st31_ckpt_"),
             extra={
-                "transport": "http",
                 "hosts": [endpoint],
                 "index": "embeddings",
             },
@@ -3973,7 +3971,6 @@ def st33_reference_topology_wire_to_wire(spark: SparkSession, sf_dir: str) -> Da
                 "kinesis_stream": "docs",
                 "kinesis_region": "us-east-1",
                 "kinesis_endpoint": kurl,
-                "transport": "http",
                 "hosts": [ourl],
                 "index": "embeddings",
             },
@@ -4068,8 +4065,8 @@ def st34_wire_topology_fault_injected(spark: SparkSession, sf_dir: str) -> DataF
       backoff must absorb it without dropping a planned range;
     - the OpenSearch endpoint 429s a 2-request burst at bootstrap
       (request()-level backoff must cover the HEAD/PUT DDL path, not
-      just _bulk) and every 2nd _bulk thereafter: http_bulk must
-      re-POST the SAME idempotent NDJSON body until it lands.
+      just _bulk) and every 2nd _bulk thereafter: request()'s backoff
+      must re-POST the SAME idempotent NDJSON body until it lands.
 
     The oracle is st33's, re-derived from generating arithmetic. One
     dropped record, one double-delivered PutRecords subset, or one
@@ -4136,7 +4133,6 @@ def st34_wire_topology_fault_injected(spark: SparkSession, sf_dir: str) -> DataF
                 "kinesis_region": "us-east-1",
                 "kinesis_endpoint": kurl,
                 "kinesis_throttle_backoff_sec": "0.01",
-                "transport": "http",
                 "hosts": [ourl],
                 "index": "embeddings",
             },
@@ -4243,7 +4239,6 @@ def st35_idempotent_sink_torn_bulk(spark: SparkSession, sf_dir: str) -> DataFram
                 "kinesis_stream": "docs",
                 "kinesis_region": "us-east-1",
                 "kinesis_endpoint": kurl,
-                "transport": "http",
                 "hosts": [ourl],
                 "index": "embeddings",
                 "id_strategy": "deterministic",
@@ -4352,7 +4347,6 @@ def st36_restart_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFram
                 "kinesis_stream": "docs",
                 "kinesis_region": "us-east-1",
                 "kinesis_endpoint": kurl,
-                "transport": "http",
                 "hosts": [ourl],
                 "index": "embeddings",
             },
@@ -4481,7 +4475,6 @@ def st37_reshard_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFram
                 "kinesis_stream": "docs",
                 "kinesis_region": "us-east-1",
                 "kinesis_endpoint": kurl,
-                "transport": "http",
                 "hosts": [ourl],
                 "index": "embeddings",
             },

@@ -1,11 +1,10 @@
 """In-process OpenSearch-compatible endpoint for local development and
 tests: the REST subset the K1 sink drives — HEAD/PUT index, POST
 /_bulk (NDJSON), plus GET /{index}/_search so tests can read back what
-was indexed — over in-memory storage. The opensearch-py-free sibling of
+was indexed — over in-memory storage. The sibling of
 sources/kinesis_fake.py: it lets the sink's real HTTP transport
-(streaming/opensearch_http.py) EXECUTE in a container with no cluster
-and no client library, against the same wire format a real domain
-speaks."""
+(streaming/opensearch_http.py) EXECUTE without a cluster, against the
+same wire format a real domain speaks."""
 
 from __future__ import annotations
 

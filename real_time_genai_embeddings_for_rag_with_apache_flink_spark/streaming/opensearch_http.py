@@ -1,34 +1,33 @@
-"""OpenSearch sink transport executed for real: a stdlib HTTP client
-speaking the PUBLIC OpenSearch/Elasticsearch REST protocol.
+"""The OpenSearch sink's transport: a stdlib HTTP client speaking the
+PUBLIC OpenSearch/Elasticsearch REST protocol.
 
 The reference's K1 stage bulk-indexes into OpenSearch through the Java
 client (``KDS-P/.../msf/DataStreamJob.java:158-177``) after a bootstrap
 Lambda creates the k-NN index
 (``index-creation-function/lambda_function.py:66-97``). The engine's
-sink (streaming/sinks.py) mirrors both, but ``opensearch-py`` is not in
-this container, so rounds 1-10 could only exercise the path against a
-fake CLIENT OBJECT — the wire protocol itself never executed. This
-module closes that gap the kinesis-lite way: the REST surface the sink
-needs is three endpoints —
+sink (streaming/sinks.py) mirrors both over the three endpoints it
+needs —
 
 - ``HEAD /{index}``            index existence,
 - ``PUT  /{index}``            index creation with the hnsw mapping,
 - ``POST /_bulk``              NDJSON bulk indexing —
 
 all public API, implemented over ``urllib`` with optional SigV4 signing
-(service ``es`` for managed domains, ``aoss`` for serverless — the same
-split the opensearch-py factory configures), so the identical sink
-partition code runs against the in-process fake endpoint
-(streaming/opensearch_fake.py), a local OpenSearch, or a signed AWS
-domain. The client object quacks like the opensearch-py subset the sink
-consumes (``indices.exists`` / ``indices.create``), and ``http_bulk``
-replaces ``helpers.bulk`` — so ``_opensearch_writer`` needs no new code
-path beyond factory selection (``cfg.extra["transport"] = "http"``).
+(service ``es`` for managed domains, ``aoss`` for serverless — the
+reference's signer split), so the identical sink partition code runs
+against the in-process fake endpoint (streaming/opensearch_fake.py), a
+local OpenSearch, or a signed AWS domain. ``HttpOpenSearchClient``
+exposes ``indices.exists`` / ``indices.create`` and one ``request``
+method; ``http_bulk`` sends one partition's actions as one request.
+HTTP 429/503 backs off inside ``request`` — the one retry loop for
+bulk, DDL and search calls alike.
 
 At scale nothing changes: one client + one bulk stream per output
 partition, executor-side; the driver only runs the one-shot index
-bootstrap. Bulk errors raise (foreachBatch retries the batch — the same
-at-least-once contract as the reference's bulk processor).
+bootstrap. Bulk errors raise and fail the micro-batch, which is then
+replayed (Spark's task retry on a cluster, or a restart from the
+checkpoint) — the same at-least-once contract as the reference's bulk
+processor.
 """
 
 from __future__ import annotations
@@ -78,11 +77,11 @@ def sigv4_rest_headers(
 
 
 class ThrottledError(RuntimeError):
-    """HTTP 429/503 from the service — retry with backoff, don't fail."""
+    """HTTP 429/503 that outlasted ``request``'s bounded backoff."""
 
 
 class HttpOpenSearchClient:
-    """The opensearch-py subset the sink consumes, over stdlib HTTP:
+    """The index calls the sink makes, over stdlib HTTP:
     ``indices.exists`` / ``indices.create`` plus a raw ``request`` used
     by http_bulk (and by tests to search the fake)."""
 
@@ -95,7 +94,7 @@ class HttpOpenSearchClient:
         secret_key: str | None = None,
         session_token: str | None = None,
         timeout: float = 10.0,
-        throttle_retries: int = 4,
+        throttle_retries: int = 7,
         throttle_backoff_s: float = 0.05,
     ):
         self.base = base_url.rstrip("/")
@@ -106,10 +105,9 @@ class HttpOpenSearchClient:
         self.session_token = session_token
         self.timeout = timeout
         # 429/503 backoff applies to EVERY call — indices.exists /
-        # indices.create during sink bootstrap and raw GET /_search
-        # readers must survive a transient throttle, not just _bulk
-        # (http_bulk layers its own retry loop on top as the
-        # helpers.bulk contract for non-HTTP client objects)
+        # indices.create during sink bootstrap, _bulk, and raw
+        # GET /_search readers all survive a transient throttle; this is
+        # the transport's only retry loop
         self.throttle_retries = throttle_retries
         self.throttle_backoff_s = throttle_backoff_s
         self.indices = _Indices(self)
@@ -161,8 +159,7 @@ class HttpOpenSearchClient:
                     # back off in place for a bounded number of attempts
                     # (every caller — bootstrap DDL, searches, bulk —
                     # survives a transient throttle), then surface the
-                    # typed error so http_bulk's outer retry_on_status
-                    # loop can keep going on long bursts
+                    # typed error, which fails the call
                     if attempt < self.throttle_retries:
                         time.sleep(
                             min(self.throttle_backoff_s * (2**attempt), 5.0)
@@ -227,17 +224,13 @@ class _Indices:
         return out
 
 
-def http_bulk(
-    client: HttpOpenSearchClient,
-    actions,
-    max_retries: int = 5,
-    backoff_s: float = 0.05,
-) -> int:
-    """``helpers.bulk`` over REST: NDJSON ``{"index": {"_index": ...}}``
-    action lines + source lines, one POST /_bulk per call. Raises on
-    any per-item error (foreachBatch's retry handles the batch), so a
-    partial failure can never pass silently. Returns the indexed
-    count."""
+def http_bulk(client: HttpOpenSearchClient, actions) -> int:
+    """Bulk indexing over REST: NDJSON ``{"index": {"_index": ...}}``
+    action lines + source lines, one POST /_bulk per call (throttling
+    backs off inside ``client.request``, which re-POSTs the same
+    body). Raises on any per-item error: the micro-batch
+    fails and is replayed, so a partial failure can never pass
+    silently. Returns the indexed count."""
     lines: list[bytes] = []
     n = 0
     for action in actions:
@@ -257,22 +250,9 @@ def http_bulk(
     if n == 0:
         return 0
     body = b"\n".join(lines) + b"\n"
-    # throttling (429/503) backs off and retries the SAME idempotent
-    # bulk body (index actions; at-least-once is the sink contract, as
-    # with the reference's bulk processor) — only a still-throttled
-    # request after max_retries fails the batch
-    attempt = 0
-    while True:
-        try:
-            status, out = client.request(
-                "POST", "/_bulk", body, content_type="application/x-ndjson"
-            )
-            break
-        except ThrottledError:
-            if attempt >= max_retries:
-                raise
-            time.sleep(min(backoff_s * (2 ** attempt), 5.0))
-            attempt += 1
+    status, out = client.request(
+        "POST", "/_bulk", body, content_type="application/x-ndjson"
+    )
     if status != 200:
         # belt-and-braces: request() raises on HTTP errors for POST, so
         # any non-200 reaching here is a transport-level surprise —
@@ -295,9 +275,13 @@ def http_opensearch_factory(
     secret_key: str | None = None,
     session_token: str | None = None,
 ):
-    """Drop-in replacement for sinks._default_opensearch_factory with
-    zero third-party dependencies — selected by
-    ``cfg.extra["transport"] = "http"``."""
+    """The sink's client factory: built on the driver, CALLED on each
+    executor partition, returns ``(client, bulk_fn)``. ``hosts`` is one
+    endpoint URL or a one-element list of it. With a region and
+    credentials every request is SigV4-signed for service 'es'
+    (managed domain) or 'aoss' (serverless) — the signer split between
+    the reference variants (KDS-P/.../msf/DataStreamJob.java:162 vs
+    KDS-S/.../msf/DataStreamJob.java:185)."""
     base = hosts[0] if isinstance(hosts, (list, tuple)) else hosts
 
     def make():

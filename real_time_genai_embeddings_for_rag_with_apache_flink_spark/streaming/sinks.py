@@ -7,8 +7,8 @@ engine-default sink is a parquet vector table (same at-least-once
 guarantee via checkpointed micro-batches); dead-letter rows (embedding
 errors, which the reference turns into sink-crashing nulls,
 ``BedRockEmbeddingModelAsyncCustomMessage.java:109-112``) are split into
-a sibling table. An OpenSearch adapter keeps the same bulk-emitter shape
-behind an import gate (opensearch-py is not in this container).
+a sibling table. The OpenSearch sink keeps the same bulk-emitter shape
+over the engine's stdlib REST transport (streaming/opensearch_http.py).
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.normalize import to_sink_docs
+from .opensearch_http import http_opensearch_factory
 
 
 def foreach_batch_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None]:
@@ -28,10 +29,6 @@ def foreach_batch_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None
         if not cfg.sink_path:
             raise ValueError("parquet sink needs sink_path")
         return _parquet_writer(cfg)
-    if cfg.sink_format == "memory":
-        raise ValueError(
-            "memory sink is handled by writeStream.format('memory'), not foreachBatch"
-        )
     if cfg.sink_format == "opensearch":
         return _opensearch_writer(cfg)
     if cfg.sink_format == "delta":
@@ -112,50 +109,14 @@ def _parquet_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None]:
     return write_batch
 
 
-def _default_opensearch_factory(hosts, region, service):
-    """Picklable factory: built on the driver, CALLED on each executor
-    partition. Returns (client, bulk_fn). With a region configured the
-    connection is SigV4-signed for service 'es' (managed domain) or
-    'aoss' (serverless) — the exact signer split between the reference
-    variants (KDS-P/.../msf/DataStreamJob.java:162 vs
-    KDS-S/.../msf/DataStreamJob.java:185)."""
-
-    def make():  # pragma: no cover - needs opensearch-py + a cluster
-        from opensearchpy import OpenSearch, helpers
-
-        kwargs: dict = {"hosts": hosts}
-        if region:
-            import boto3
-            from opensearchpy import AWSV4SignerAuth, RequestsHttpConnection
-
-            creds = boto3.Session().get_credentials()
-            kwargs.update(
-                http_auth=AWSV4SignerAuth(creds, region, service),
-                connection_class=RequestsHttpConnection,
-                use_ssl=True,
-                verify_certs=True,
-            )
-        return OpenSearch(**kwargs), helpers.bulk
-
-    return make
-
-
-def knn_index_body(
-    dimension: int,
-    *,
-    ef_construction: int = 128,
-    m: int = 24,
-    shards: int = 5,
-    replicas: int = 1,
-    space_type: str = "l2",
-    engine: str = "nmslib",
-) -> dict:
+def knn_index_body(dimension: int) -> dict:
     """The k-NN index mapping the reference bootstraps before the job
     starts (index-creation-function/lambda_function.py:66-97): a
-    knn_vector passage_embedding with hnsw(ef_construction=128, m=24),
-    date + text fields, knn enabled, 5 shards. Dimension follows the
-    embedding model (titan-v1 -> 1536, titan-v2 -> 1024,
-    lambda_function.py:58-61 / PipelineConfig.resolved_dim)."""
+    knn_vector passage_embedding with hnsw(l2, nmslib,
+    ef_construction=128, m=24), date + text fields, knn enabled, 5
+    shards, 1 replica. Dimension follows the embedding model
+    (titan-v1 -> 1536, titan-v2 -> 1024, lambda_function.py:58-61 /
+    PipelineConfig.resolved_dim)."""
     return {
         "mappings": {
             "properties": {
@@ -164,9 +125,9 @@ def knn_index_body(
                     "dimension": dimension,
                     "method": {
                         "name": "hnsw",
-                        "space_type": space_type,
-                        "engine": engine,
-                        "parameters": {"ef_construction": ef_construction, "m": m},
+                        "space_type": "l2",
+                        "engine": "nmslib",
+                        "parameters": {"ef_construction": 128, "m": 24},
                     },
                 },
                 "date": {"type": "date"},
@@ -187,14 +148,14 @@ def knn_index_body(
         "settings": {
             "index": {
                 "knn": True,
-                "number_of_shards": shards,
-                "number_of_replicas": replicas,
+                "number_of_shards": 5,
+                "number_of_replicas": 1,
             }
         },
     }
 
 
-def ensure_knn_index(client, index: str, dimension: int, **knobs) -> bool:
+def ensure_knn_index(client, index: str, dimension: int) -> bool:
     """Create the k-NN index if it does not exist yet. Returns True when
     this call created it. Without this bootstrap a fresh domain would
     auto-create a mapping-less index on first bulk write and store the
@@ -202,7 +163,7 @@ def ensure_knn_index(client, index: str, dimension: int, **knobs) -> bool:
     at query time."""
     if client.indices.exists(index=index):
         return False
-    resp = client.indices.create(index=index, body=knn_index_body(dimension, **knobs))
+    resp = client.indices.create(index=index, body=knn_index_body(dimension))
     if not resp.get("acknowledged", False):
         raise RuntimeError(f"index creation for {index!r} not acknowledged: {resp}")
     return True
@@ -213,69 +174,60 @@ def _opensearch_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None]:
     per output partition (the reference's bulk-processor-per-subtask
     shape, DataStreamJob.java:158-177). The batch is NEVER funneled
     through the driver — a driver-side toLocalIterator loop caps
-    throughput at one machine regardless of cluster size.
+    throughput at one machine regardless of cluster size. Before the
+    first bulk write the driver creates the k-NN index with the
+    reference's hnsw mapping if it is missing (ensure_knn_index).
 
-    cfg.extra knobs: index, hosts, aws_region + aws_service ('es'|'aoss')
-    for SigV4, client_factory (injectable, mainly for tests),
-    bootstrap_index (default True: create the k-NN index with the
-    reference's hnsw mapping if missing, once, driver-side, before the
-    first bulk write), knn_* overrides (knn_ef_construction, knn_m,
-    knn_shards, knn_replicas, knn_space_type, knn_engine), and
-    index_by_id (default False = the reference's deployed behavior:
-    auto-generated document ids — its ``.id(element.get("_id"))`` line
-    is commented out, DataStreamJob.java:191, so an at-least-once bulk
-    retry can duplicate documents there. True routes the pipeline's M2
-    ``_id`` onto each bulk action, turning every index into an
-    idempotent upsert: a replay of the SAME body after a partial
-    application converges instead of duplicating — pair with
+    cfg.extra keys: index, hosts (one endpoint), aws_region +
+    aws_service ('es'|'aoss') with aws_access_key / aws_secret_key /
+    aws_session_token for SigV4, client_factory (injectable, mainly for
+    tests; replaces the REST transport), and index_by_id (default False
+    = the reference's deployed behavior: auto-generated document ids —
+    its ``.id(element.get("_id"))`` line is commented out,
+    DataStreamJob.java:191, so an at-least-once bulk retry can
+    duplicate documents there. True routes the pipeline's M2 ``_id``
+    onto each bulk action, turning every index into an idempotent
+    upsert: a replay of the SAME body after a partial application
+    converges instead of duplicating — pair with
     extra.id_strategy='deterministic' so restarts reuse ids; driver row
     st35 certifies the claim hash-exactly under injected partial-bulk
     faults)."""
     index = cfg.extra.get("index", "embeddings")
-    hosts = cfg.extra.get("hosts", ["https://localhost:9200"])
-    region = cfg.extra.get("aws_region")
-    service = cfg.extra.get("aws_service", "es")
     factory = cfg.extra.get("client_factory")
-    if factory is None and cfg.extra.get("transport") == "http":
-        # the engine's own REST transport (streaming/opensearch_http.py)
-        # — zero third-party deps, same partition code, SigV4 when
-        # credentialed; this is the path that executes in this
-        # container (st31) and points at real domains elsewhere
-        from .opensearch_http import http_opensearch_factory
-
+    if factory is None:
+        hosts = cfg.extra.get("hosts", ["https://localhost:9200"])
+        if isinstance(hosts, (list, tuple)) and len(hosts) != 1:
+            raise ValueError(
+                f"opensearch sink takes exactly one endpoint in hosts, got {hosts!r}"
+            )
+        region = cfg.extra.get("aws_region")
+        access_key = cfg.extra.get("aws_access_key")
+        secret_key = cfg.extra.get("aws_secret_key")
+        if region and not (access_key and secret_key):
+            raise ValueError(
+                "opensearch sink: aws_region needs aws_access_key and "
+                "aws_secret_key (requests would go out unsigned)"
+            )
         factory = http_opensearch_factory(
             hosts,
             region=region,
-            service=service,
-            access_key=cfg.extra.get("aws_access_key"),
-            secret_key=cfg.extra.get("aws_secret_key"),
+            service=cfg.extra.get("aws_service", "es"),
+            access_key=access_key,
+            secret_key=secret_key,
             session_token=cfg.extra.get("aws_session_token"),
         )
-    if factory is None:
-        try:
-            import opensearchpy  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "opensearch sink requires opensearch-py (not in this container); "
-                "use sink_format='parquet', or extra.transport='http' for the "
-                "engine's dependency-free REST transport"
-            ) from e
-        factory = _default_opensearch_factory(hosts, region, service)
 
-    knn_knobs = {
-        k[len("knn_"):]: v for k, v in cfg.extra.items() if k.startswith("knn_")
-    }
     dimension = cfg.resolved_dim()
     # Bootstrap once per writer, lazily on the first batch (the driver
     # runs foreachBatch, so the single create-if-missing call happens
     # driver-side — the reference does the same from a one-shot lambda
     # before the Flink job starts).
-    pending_bootstrap = [bool(cfg.extra.get("bootstrap_index", True))]
+    pending_bootstrap = [True]
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         if pending_bootstrap[0]:
             client, _ = factory()
-            ensure_knn_index(client, index, dimension, **knn_knobs)
+            ensure_knn_index(client, index, dimension)
             pending_bootstrap[0] = False
         # embed() only carries an error column under the dead-letter
         # policy; under drop/fail the column is absent and there is
@@ -321,7 +273,7 @@ def _default_delta_factory(spark, path: str):
     """Returns a DeltaTable handle for ``path`` or None when no table
     exists there yet. Import-gated: delta-spark (and its JVM jar) are
     not in this container, so the gate raises with the remedy — the
-    same posture as the OpenSearch/codec gates."""
+    same posture as the codec gates."""
     try:
         from delta.tables import DeltaTable
     except ImportError as e:

@@ -176,8 +176,8 @@ def test_http_exhausted_retries_dead_letter(titan_stub):
 
 
 def test_http_single_row_batch_retry_path(titan_stub):
-    """The single-row fast path (no pool) also speaks real HTTP and
-    retries in place."""
+    """A one-row batch goes through the same pool scheduler, speaks
+    real HTTP and retries."""
     srv, url = titan_stub
     srv.throttle["solo"] = 1
     emb = BedrockTitanEmbedder(

@@ -2,8 +2,8 @@
 streaming/opensearch_http.py (stdlib HTTP + SigV4) against the
 in-process endpoint (streaming/opensearch_fake.py). The wire-level
 companion of tests/test_opensearch_sink.py's fake-client checks —
-this file is what makes K1's execution claim true without
-opensearch-py. The end-to-end pipeline run is st31's driver row."""
+this file is what makes K1's execution claim true. The end-to-end
+pipeline run is st31's driver row."""
 
 from __future__ import annotations
 
@@ -80,8 +80,8 @@ def test_index_bootstrap_and_bulk_roundtrip(fake):
 
 
 def test_bulk_errors_raise_not_pass_silently(fake):
-    """A per-item failure must raise so foreachBatch retries the batch —
-    the fake reports errors for unsupported ops."""
+    """A per-item failure must raise so the micro-batch fails and is
+    replayed — the fake reports errors for unsupported ops."""
     srv, url = fake
     client = HttpOpenSearchClient(url)
     body = (
@@ -115,9 +115,9 @@ def test_bulk_errors_raise_not_pass_silently(fake):
 
 
 def test_sink_writer_http_transport_end_to_end(spark, fake):
-    """foreach_batch_writer(cfg) with extra.transport='http': the SAME
-    partition code the opensearch-py path runs, over the engine's REST
-    transport — executor-side clients, driver-side one-shot bootstrap."""
+    """foreach_batch_writer(cfg) with no client_factory: the default
+    path is the engine's REST transport — executor-side clients,
+    driver-side one-shot bootstrap."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.config import (
         PipelineConfig,
     )
@@ -129,7 +129,7 @@ def test_sink_writer_http_transport_end_to_end(spark, fake):
     cfg = PipelineConfig(
         sink_format="opensearch",
         embedding_dim=4,
-        extra={"transport": "http", "hosts": [url], "index": "embeddings"},
+        extra={"hosts": [url], "index": "embeddings"},
     )
     write_batch = foreach_batch_writer(cfg)
     batch = spark.createDataFrame(
@@ -195,21 +195,17 @@ def test_404_is_an_answer_only_for_head(fake):
 
 
 def test_bulk_backs_off_on_throttling_and_delivers():
-    """429/503 is backpressure, not failure: http_bulk retries the same
-    idempotent bulk body with backoff (the helpers.bulk
-    retry_on_status contract) and only raises once max_retries is
-    exhausted — a throttled domain must not fail every micro-batch."""
+    """429/503 is backpressure, not failure: request() re-POSTs the same
+    idempotent bulk body with backoff and only raises once
+    throttle_retries is exhausted — a throttled domain must not fail
+    every micro-batch."""
     srv = FakeOpenSearchServer(throttle_every=2)  # every 2nd bulk 429s
     url = srv.start()
     try:
-        client = HttpOpenSearchClient(url)
+        client = HttpOpenSearchClient(url, throttle_retries=2, throttle_backoff_s=0.01)
         client.indices.create("thr", {"settings": {}})
         for i in range(4):  # half of these hit an injected 429 first
-            n = http_bulk(
-                client,
-                iter([{"_index": "thr", "_source": {"i": i}}]),
-                backoff_s=0.01,
-            )
+            n = http_bulk(client, iter([{"_index": "thr", "_source": {"i": i}}]))
             assert n == 1
         assert len(srv.docs["thr"]) == 4, "every batch delivered once"
 
@@ -223,13 +219,32 @@ def test_bulk_backs_off_on_throttling_and_delivers():
 
             with pytest.raises(ThrottledError):
                 http_bulk(
-                    HttpOpenSearchClient(url2),
+                    HttpOpenSearchClient(
+                        url2, throttle_retries=2, throttle_backoff_s=0.01
+                    ),
                     iter([{"_index": "x", "_source": {"a": 1}}]),
-                    max_retries=2,
-                    backoff_s=0.01,
                 )
         finally:
             always.stop()
+    finally:
+        srv.stop()
+
+
+def test_throttled_bulk_has_one_retry_loop():
+    """A permanently throttled _bulk is re-sent by request()'s loop
+    alone: exactly throttle_retries + 1 requests reach the endpoint
+    before ThrottledError, with no second loop multiplying them."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_http import (
+        ThrottledError,
+    )
+
+    srv = FakeOpenSearchServer(throttle_every=1)
+    url = srv.start()
+    try:
+        client = HttpOpenSearchClient(url, throttle_backoff_s=0.001)
+        with pytest.raises(ThrottledError):
+            http_bulk(client, iter([{"_index": "x", "_source": {"a": 1}}]))
+        assert srv._bulk_seen == client.throttle_retries + 1
     finally:
         srv.stop()
 
@@ -326,7 +341,6 @@ def test_torn_bulk_duplicates_without_ids_and_converges_with_them():
         n = http_bulk(
             client,
             iter([{"_index": "noid", "_source": {"i": i}} for i in range(10)]),
-            backoff_s=0.01,
         )
         assert n == 10
         # bulk #2 applied 5 items then 429'd; the retry applied all 10
@@ -342,7 +356,6 @@ def test_torn_bulk_duplicates_without_ids_and_converges_with_them():
                     for i in range(10)
                 ]
             ),
-            backoff_s=0.01,
         )
         assert n == 10
         assert len(srv.docs["byid"]) == 10, "idempotent upsert converges"

@@ -1,10 +1,10 @@
 """OpenSearch sink adapter: bulk-emitter shape without a server.
 
-opensearch-py isn't in this container, so a stub module is injected to
-verify the adapter builds the reference's exact bulk actions
-({passage_embedding, date, text} per doc, createIndexRequest2 at
-DataStreamJob.java:183-193) and that the import gate raises cleanly
-when the client is absent.
+An injected client_factory captures what the adapter sends, to verify
+it builds the reference's exact bulk actions ({passage_embedding,
+date, text} per doc, createIndexRequest2 at DataStreamJob.java:183-193)
+and bootstraps the k-NN index once; the build-time config checks need
+no Spark at all.
 """
 
 from __future__ import annotations
@@ -17,14 +17,54 @@ from real_time_genai_embeddings_for_rag_with_apache_flink_spark.config import (
 )
 
 
-def test_opensearch_writer_requires_client():
+def test_opensearch_writer_rejects_more_than_one_host():
+    """The transport talks to one endpoint; a second host would be
+    silently ignored, so the writer refuses it at build time."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
         foreach_batch_writer,
     )
 
-    cfg = PipelineConfig(sink_format="opensearch")
-    with pytest.raises(NotImplementedError, match="opensearch-py"):
+    cfg = PipelineConfig(
+        sink_format="opensearch",
+        extra={"hosts": ["http://a:9200", "http://b:9200"]},
+    )
+    with pytest.raises(ValueError, match="exactly one endpoint"):
         foreach_batch_writer(cfg)
+
+
+def test_opensearch_writer_rejects_region_without_credentials():
+    """aws_region asks for SigV4; without both keys every request would
+    go out unsigned, so the writer refuses the config at build time."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
+        foreach_batch_writer,
+    )
+
+    for keys in ({}, {"aws_access_key": "AKIDEXAMPLE"}, {"aws_secret_key": "sk"}):
+        cfg = PipelineConfig(
+            sink_format="opensearch",
+            extra={"hosts": ["http://a:9200"], "aws_region": "us-east-1", **keys},
+        )
+        with pytest.raises(ValueError, match="aws_access_key and aws_secret_key"):
+            foreach_batch_writer(cfg)
+    signed = PipelineConfig(
+        sink_format="opensearch",
+        extra={
+            "hosts": ["http://a:9200"],
+            "aws_region": "us-east-1",
+            "aws_access_key": "AKIDEXAMPLE",
+            "aws_secret_key": "sk",
+        },
+    )
+    assert callable(foreach_batch_writer(signed))
+
+
+def test_memory_sink_format_is_unknown():
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
+        foreach_batch_writer,
+    )
+
+    with pytest.raises(ValueError, match="unknown sink_format 'memory'"):
+        foreach_batch_writer(PipelineConfig(sink_format="memory"))
 
 
 def _file_capture_factory(capture_dir: str):
@@ -32,7 +72,7 @@ def _file_capture_factory(capture_dir: str):
     call writes its actions to a unique file in capture_dir (workers
     share the local filesystem in local mode), so the test can count
     bulk calls per partition and inspect the exact emitted actions —
-    without opensearch-py or a server. Returned as a closure: cloudpickle
+    without a server. Returned as a closure: cloudpickle
     ships closures by value, while a test-module class would be pickled
     by reference and fail to import on executor workers."""
 
@@ -203,6 +243,7 @@ def test_opensearch_writer_bootstraps_knn_index(spark, tmp_path):
     assert vec["dimension"] == 8
     assert vec["method"]["name"] == "hnsw"
     assert vec["method"]["parameters"] == {"ef_construction": 128, "m": 24}
+    assert (vec["method"]["space_type"], vec["method"]["engine"]) == ("l2", "nmslib")
     assert body["mappings"]["properties"]["date"] == {"type": "date"}
     # text keeps the reference's text type, plus the keyword subfield
     # the paginated read-back sorts on (fielddata is disabled on text
@@ -213,6 +254,7 @@ def test_opensearch_writer_bootstraps_knn_index(spark, tmp_path):
     }
     assert body["settings"]["index"]["knn"] is True
     assert body["settings"]["index"]["number_of_shards"] == 5
+    assert body["settings"]["index"]["number_of_replicas"] == 1
 
 
 def test_knn_index_body_follows_model_dimension():
@@ -225,34 +267,3 @@ def test_knn_index_body_follows_model_dimension():
         cfg = PipelineConfig(embedding_model=model)
         body = knn_index_body(cfg.resolved_dim())
         assert body["mappings"]["properties"]["passage_embedding"]["dimension"] == dim
-
-
-def test_bootstrap_can_be_disabled(spark, tmp_path):
-    import pathlib
-
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
-        foreach_batch_writer,
-    )
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
-        embed,
-    )
-
-    cap = tmp_path / "captured"
-    cap.mkdir()
-    cfg = PipelineConfig(
-        sink_format="opensearch",
-        extra={
-            "index": "docs",
-            "client_factory": _file_capture_factory(str(cap)),
-            "bootstrap_index": False,
-        },
-    )
-    writer = foreach_batch_writer(cfg)
-    batch = embed(
-        spark.createDataFrame([("hello",)], ["text"]).withColumn(
-            "created_at", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-        ),
-        dim=8,
-    )
-    writer(batch, 0)
-    assert not (pathlib.Path(cap) / "index-docs.json").exists()
