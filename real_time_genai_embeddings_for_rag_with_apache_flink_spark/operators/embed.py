@@ -16,6 +16,8 @@ the analogue of RichAsyncFunction.open (:47-51).
 Error policy: the reference logs and emits null on failure (:109-112),
 which would NPE its own sink emitter; here failures become a dead-letter
 ``error`` column (or are dropped/raised per PipelineConfig.on_error).
+``embed_chunk`` is that policy, shared with the OpenSearch sink's fused
+embed-and-index stage (streaming/sinks.py).
 """
 
 from __future__ import annotations
@@ -277,6 +279,54 @@ _EMBED_RESULT = StructType(
 )
 
 
+def check_on_error(on_error: str) -> None:
+    if on_error not in ("dead-letter", "drop", "fail"):
+        raise ValueError(f"unknown on_error policy {on_error!r}")
+
+
+def embed_chunk(
+    emb, texts: list[str | None], on_error: str, dim: int | None = None
+) -> tuple[list[list[float] | None], list[str | None]]:
+    """One ``embed_batch`` call under the ``on_error`` policy: the
+    policy loop shared by ``embed()`` and the OpenSearch sink's fused
+    stage. Returns (vectors, per-row errors).
+
+    An exception from the embedder dead-letters the whole chunk;
+    adapters with per-row failure reporting (BedrockTitanEmbedder after
+    its retries) expose ``row_errors`` and dead-letter just those rows.
+    With ``dim`` set, a vector that is not ``dim`` finite float32 values
+    is a per-row error too: an index rejects it, and the bulk carrying
+    it would fail again on every replay. Under 'fail' any row error
+    raises; 'dead-letter' and 'drop' differ only in what the caller
+    keeps."""
+    try:
+        vecs = emb.embed_batch(texts)
+        errs = getattr(emb, "row_errors", None)
+        errs = list(errs) if errs and len(errs) == len(texts) else [None] * len(texts)
+    except Exception as e:  # noqa: BLE001 - dead-letter policy
+        if on_error == "fail":
+            raise
+        return [None] * len(texts), [f"{type(e).__name__}: {e}"] * len(texts)
+    if dim is not None:
+        with np.errstate(over="ignore"):
+            for i, v in enumerate(vecs):
+                if v is None or errs[i] is not None:
+                    continue
+                if len(v) != dim:
+                    errs[i] = f"unindexable vector: {len(v)} values, index has {dim}"
+                    continue
+                try:
+                    finite = bool(np.isfinite(np.asarray(v, np.float32)).all())
+                except (TypeError, ValueError):
+                    finite = False
+                if not finite:
+                    errs[i] = "unindexable vector: a value is not a finite float32"
+    if on_error == "fail" and any(errs):
+        first = next(e for e in errs if e)
+        raise RuntimeError(f"embedding failed: {first}")
+    return vecs, errs
+
+
 def embed_distinct(
     df: DataFrame,
     text_col: str = "text",
@@ -328,30 +378,12 @@ def embed(
             errors: list[str | None] = []
             texts = series.tolist()
             for lo in range(0, len(texts), batch_size):
-                chunk = texts[lo : lo + batch_size]
-                try:
-                    vecs = emb.embed_batch(chunk)
-                    embeddings.extend(vecs)
-                    # adapters with per-row failure reporting (e.g.
-                    # BedrockTitanEmbedder after retries) expose
-                    # row_errors; others mean all-good
-                    row_errs = getattr(emb, "row_errors", None)
-                    if row_errs and len(row_errs) == len(chunk):
-                        if on_error == "fail" and any(row_errs):
-                            first = next(e for e in row_errs if e)
-                            raise RuntimeError(f"embedding failed: {first}")
-                        errors.extend(row_errs)
-                    else:
-                        errors.extend([None] * len(chunk))
-                except Exception as e:  # noqa: BLE001 - dead-letter policy
-                    if on_error == "fail":
-                        raise
-                    embeddings.extend([None] * len(chunk))
-                    errors.extend([f"{type(e).__name__}: {e}"] * len(chunk))
+                vecs, errs = embed_chunk(emb, texts[lo : lo + batch_size], on_error)
+                embeddings.extend(vecs)
+                errors.extend(errs)
             yield pd.DataFrame({"embedding": embeddings, "error": errors})
 
-    if on_error not in ("dead-letter", "drop", "fail"):
-        raise ValueError(f"unknown on_error policy {on_error!r}")
+    check_on_error(on_error)
     out = df.withColumn("_emb", _embed(F.col(text_col))).select(
         "*", F.col("_emb.embedding").alias("embedding"), F.col("_emb.error").alias("error")
     ).drop("_emb")

@@ -68,17 +68,11 @@ def filter_nonempty_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.filter(c.isNotNull() & (c != ""))
 
 
-def to_sink_docs(df: DataFrame, include_id: bool = False) -> DataFrame:
+def to_sink_docs(df: DataFrame) -> DataFrame:
     """EMB -> sink projection {passage_embedding, date, text}
-    (createIndexRequest2, DataStreamJob.java:183-193). ``include_id``
-    carries the M2 ``_id`` through for the sink's index_by_id mode (the
-    ``.id(...)`` seam the reference leaves commented out, :191) —
-    one definition of the sink triple for both modes."""
-    cols = [
+    (createIndexRequest2, DataStreamJob.java:183-193)."""
+    return df.select(
         F.col("embedding").alias("passage_embedding"),
         F.col("created_at").alias("date"),
         F.col("text"),
-    ]
-    if include_id:
-        cols.append(F.col("_id").cast("string").alias("_id"))
-    return df.select(*cols)
+    )

@@ -15,13 +15,19 @@ one declarative streaming plan:
 - parse/normalize/filter: ``from_json`` + select + filter — fused by
   whole-stage codegen into one stage per micro-batch (the analogue of
   Flink operator chaining, ``KDS-P/lib/....ts:230-235``).
-- embed: Arrow-batched pandas UDF (operators/embed.py); micro-batch
-  parallelism across partitions replaces the reference's 1000-deep async
-  pool.
-- sink: ``foreachBatch`` bulk-writing the vector table (parquet append)
-  and dead-letter rows separately — at-least-once, same guarantee as the
-  reference's bulk OpenSearch sink, with checkpoint-based recovery
-  (MSF snapshots, ``KDS-P/lib/....ts:213-215``).
+- embed + sink, OpenSearch: one ``mapInArrow`` stage per partition
+  (streaming/sinks.py ``opensearch_index``) embeds each chunk and hands
+  its ``_bulk`` to a sender thread, so the bulk overlaps the next
+  chunk's model calls — the reference's async operator and bulk
+  processor side by side in each subtask. It yields one status row per
+  document; ``foreachBatch`` runs the one action that drives it.
+- embed + sink, parquet/delta: the Arrow-batched pandas UDF
+  (operators/embed.py), then ``foreachBatch`` writing the vector table
+  and dead-letter rows separately.
+- Either way micro-batch parallelism across partitions replaces the
+  reference's 1000-deep async pool, and delivery is at-least-once, the
+  reference's bulk-sink guarantee, with checkpoint-based recovery (MSF
+  snapshots, ``KDS-P/lib/....ts:213-215``).
 
 At scale: source partitions (Kafka partitions / file chunks) set the
 parallelism; the only stateful pieces are the source offsets in the
@@ -38,7 +44,7 @@ from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 from ..config import PipelineConfig
 from ..operators.embed import DeterministicEmbedder, embed
 from ..operators.normalize import filter_nonempty_text, normalize, parse_raw
-from .sinks import foreach_batch_writer
+from .sinks import foreach_batch_writer, opensearch_index
 
 
 def kinesis_reader_options(cfg: PipelineConfig) -> dict[str, str]:
@@ -178,7 +184,10 @@ def build_source(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
 def build_pipeline(
     spark: SparkSession, cfg: PipelineConfig, embedder_factory=None
 ) -> DataFrame:
-    """source -> RAW -> MSG -> DOC -> EMB as one streaming plan.
+    """source -> RAW -> MSG -> DOC -> EMB as one streaming plan; for the
+    OpenSearch sink DOC -> status rows of the fused embed-and-index
+    stage instead, observed as ``graft_sink`` (rows_indexed,
+    bulk_bytes).
 
     ``embedder_factory`` defaults to the deterministic local embedder;
     production passes a client-backed factory (the open()-once analogue,
@@ -202,27 +211,37 @@ def build_pipeline(
     doc = doc.observe(
         "graft_docs", F.count(F.lit(1)).alias("rows_nonempty")
     )
+    embedder_factory = embedder_factory or DeterministicEmbedder
+    if cfg.sink_format == "opensearch":
+        status = opensearch_index(doc, cfg, embedder_factory)
+        if cfg.on_error == "dead-letter":
+            status = _observe_embed(status)
+        return status.observe(
+            "graft_sink",
+            F.sum(F.col("error").isNull().cast("long")).alias("rows_indexed"),
+            F.sum("bulk_bytes").alias("bulk_bytes"),
+        )
     emb = embed(
         doc,
         text_col="text",
-        embedder_factory=embedder_factory or DeterministicEmbedder,
+        embedder_factory=embedder_factory,
         dim=cfg.resolved_dim(),
         batch_size=cfg.embed_batch_size,
         on_error=cfg.on_error,
     )
     if "error" in emb.columns:
-        emb = emb.observe(
-            "graft_embed",
-            # embedded = rows that actually got a vector; failures are
-            # counted separately, never inside the success metric
-            F.sum(F.col("error").isNull().cast("long")).alias(
-                "rows_embedded"
-            ),
-            F.sum(F.col("error").isNotNull().cast("long")).alias(
-                "rows_dead_lettered"
-            ),
-        )
+        emb = _observe_embed(emb)
     return emb
+
+
+def _observe_embed(df: DataFrame) -> DataFrame:
+    return df.observe(
+        "graft_embed",
+        # embedded = rows that actually got a vector; failures are
+        # counted separately, never inside the success metric
+        F.sum(F.col("error").isNull().cast("long")).alias("rows_embedded"),
+        F.sum(F.col("error").isNotNull().cast("long")).alias("rows_dead_lettered"),
+    )
 
 
 def _merge_observed(totals: dict[str, dict[str, int]], progress) -> None:

@@ -4,9 +4,9 @@ writer API): a staged-segment + manifest vector-index directory.
 The reference's K1 stage bulk-indexes embeddings into OpenSearch, one
 bulk request per Flink subtask (``KDS-P/.../msf/DataStreamJob.java:
 158-177``). The engine's production adapter for that is
-``streaming/sinks.py`` (foreachPartition bulk over the stdlib REST
-transport); THIS module is the same executor-side bulk pattern as a
-self-contained user-defined sink that runs anywhere:
+``streaming/sinks.py`` (a fused embed-and-bulk Arrow stage over the
+stdlib REST transport); THIS module is the same executor-side bulk
+pattern as a self-contained user-defined sink that runs anywhere:
 
 - ``write(iterator)`` executes ON EACH EXECUTOR PARTITION — it stages
   that partition's rows as one parquet segment under ``path/_staging``

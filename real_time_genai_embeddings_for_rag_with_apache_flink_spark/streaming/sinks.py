@@ -8,19 +8,31 @@ guarantee via checkpointed micro-batches); dead-letter rows (embedding
 errors, which the reference turns into sink-crashing nulls,
 ``BedRockEmbeddingModelAsyncCustomMessage.java:109-112``) are split into
 a sibling table. The OpenSearch sink keeps the same bulk-emitter shape
-over the engine's stdlib REST transport (streaming/opensearch_http.py).
+over the engine's stdlib REST transport (streaming/opensearch_http.py),
+fused with the embedding into one Arrow stage (``opensearch_index``):
+each document crosses into Python once, and its vector is formatted in
+Arrow, not by ``json.dumps``.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..operators.embed import check_on_error, embed_chunk
 from ..operators.normalize import to_sink_docs
-from .opensearch_http import http_opensearch_factory
+from .opensearch_http import (
+    bulk_action_line,
+    http_opensearch_factory,
+    json_float_arrays,
+)
 
 
 def foreach_batch_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None]:
@@ -169,54 +181,152 @@ def ensure_knn_index(client, index: str, dimension: int) -> bool:
     return True
 
 
-def _opensearch_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None]:
-    """Executor-distributed bulk indexer: one client + one bulk stream
-    per output partition (the reference's bulk-processor-per-subtask
-    shape, DataStreamJob.java:158-177). The batch is NEVER funneled
-    through the driver — a driver-side toLocalIterator loop caps
-    throughput at one machine regardless of cluster size. Before the
-    first bulk write the driver creates the k-NN index with the
-    reference's hnsw mapping if it is missing (ensure_knn_index).
+def opensearch_client_factory(cfg: PipelineConfig):
+    """The sink's ``factory() -> (client, bulk)``, built on the driver and
+    called on the executors.
 
-    cfg.extra keys: index, hosts (one endpoint), aws_region +
-    aws_service ('es'|'aoss') with aws_access_key / aws_secret_key /
-    aws_session_token for SigV4, client_factory (injectable, mainly for
-    tests; replaces the REST transport), and index_by_id (default False
-    = the reference's deployed behavior: auto-generated document ids —
-    its ``.id(element.get("_id"))`` line is commented out,
-    DataStreamJob.java:191, so an at-least-once bulk retry can
-    duplicate documents there. True routes the pipeline's M2 ``_id``
-    onto each bulk action, turning every index into an idempotent
-    upsert: a replay of the SAME body after a partial application
-    converges instead of duplicating — pair with
-    extra.id_strategy='deterministic' so restarts reuse ids; driver row
-    st35 certifies the claim hash-exactly under injected partial-bulk
-    faults)."""
-    index = cfg.extra.get("index", "embeddings")
+    cfg.extra keys: hosts (one endpoint), aws_region + aws_service
+    ('es'|'aoss') with aws_access_key / aws_secret_key /
+    aws_session_token for SigV4, and client_factory (injectable, mainly
+    for tests; replaces the REST transport)."""
     factory = cfg.extra.get("client_factory")
-    if factory is None:
-        hosts = cfg.extra.get("hosts", ["https://localhost:9200"])
-        if isinstance(hosts, (list, tuple)) and len(hosts) != 1:
-            raise ValueError(
-                f"opensearch sink takes exactly one endpoint in hosts, got {hosts!r}"
-            )
-        region = cfg.extra.get("aws_region")
-        access_key = cfg.extra.get("aws_access_key")
-        secret_key = cfg.extra.get("aws_secret_key")
-        if region and not (access_key and secret_key):
-            raise ValueError(
-                "opensearch sink: aws_region needs aws_access_key and "
-                "aws_secret_key (requests would go out unsigned)"
-            )
-        factory = http_opensearch_factory(
-            hosts,
-            region=region,
-            service=cfg.extra.get("aws_service", "es"),
-            access_key=access_key,
-            secret_key=secret_key,
-            session_token=cfg.extra.get("aws_session_token"),
+    if factory is not None:
+        return factory
+    hosts = cfg.extra.get("hosts", ["https://localhost:9200"])
+    if isinstance(hosts, (list, tuple)) and len(hosts) != 1:
+        raise ValueError(
+            f"opensearch sink takes exactly one endpoint in hosts, got {hosts!r}"
         )
+    region = cfg.extra.get("aws_region")
+    access_key = cfg.extra.get("aws_access_key")
+    secret_key = cfg.extra.get("aws_secret_key")
+    if region and not (access_key and secret_key):
+        raise ValueError(
+            "opensearch sink: aws_region needs aws_access_key and "
+            "aws_secret_key (requests would go out unsigned)"
+        )
+    return http_opensearch_factory(
+        hosts,
+        region=region,
+        service=cfg.extra.get("aws_service", "es"),
+        access_key=access_key,
+        secret_key=secret_key,
+        session_token=cfg.extra.get("aws_session_token"),
+    )
 
+
+def _bulk_actions(
+    chunk: pa.RecordBatch, vecs: list, errs: list, index: str, by_id: bool
+) -> tuple[list[dict], list[int]]:
+    """The bulk actions of a chunk's rows without an error, each
+    ``_source`` already JSON bytes, and every row's share of the bulk
+    body (0 for a row not sent)."""
+    sizes = [0] * len(errs)
+    keep = [i for i, e in enumerate(errs) if e is None]
+    if not keep:
+        return [], sizes
+    rows = chunk.take(keep)
+    vectors = json_float_arrays([vecs[i] for i in keep])
+    # an absolute UTC instant: Arrow carries Spark timestamps as UTC
+    # microseconds whatever the session or worker time zone
+    dates = pc.strftime(
+        rows.column("created_at").cast(pa.timestamp("us")),
+        format="%Y-%m-%dT%H:%M:%SZ",
+    )
+    dates = pc.fill_null(pc.binary_join_element_wise('"', dates, '"', ""), "null")
+    ids = rows.column("_id").to_pylist() if by_id else [None] * len(keep)
+    actions = []
+    for i, vector, date, text, doc_id in zip(
+        keep,
+        vectors,
+        dates.cast(pa.binary()).to_pylist(),
+        rows.column("text").to_pylist(),
+        ids,
+    ):
+        source = b'{"passage_embedding":%s,"date":%s,"text":%s}' % (
+            vector,
+            date,
+            json.dumps(text).encode(),
+        )
+        action = {"_index": index, "_source": source}
+        if by_id:
+            action["_id"] = doc_id
+        sizes[i] = len(bulk_action_line(action)) + len(source) + 2
+        actions.append(action)
+    return actions, sizes
+
+
+def opensearch_index(
+    doc: DataFrame, cfg: PipelineConfig, embedder_factory
+) -> DataFrame:
+    """Embed and bulk-index DOC rows (text, created_at, _id) in one
+    ``mapInArrow`` stage; returns one status row per document:
+    ``error`` (NULL when indexed) and ``bulk_bytes`` (its share of the
+    ``_bulk`` body).
+
+    Each partition takes one ``embed_batch_size`` chunk at a time: it
+    embeds the chunk (``embed_chunk``, the ``on_error`` policy of
+    ``embed()``; a vector the index would reject is a row error),
+    formats the vectors in Arrow, and hands the chunk's actions to one
+    sender thread, so a ``_bulk`` request overlaps the next chunk's
+    model calls — the reference's async operator and bulk processor
+    running side by side in each subtask (DataStreamJob.java:148-177).
+    At most one bulk is in flight, so a partition holds at most two
+    chunks of vectors. A failed bulk raises at the next wait or at the
+    end of the partition and fails the task; the micro-batch is then
+    replayed (at-least-once).
+
+    cfg.extra keys: index (default 'embeddings'), those of
+    ``opensearch_client_factory``, and index_by_id (default False = the
+    reference's auto-generated ids; its ``.id(...)`` line is commented
+    out, :191), which puts the DOC ``_id`` on every action, making a
+    replay an idempotent upsert — pair it with
+    id_strategy='deterministic'."""
+    check_on_error(cfg.on_error)
+    factory = opensearch_client_factory(cfg)
+    index = cfg.extra.get("index", "embeddings")
+    by_id = bool(cfg.extra.get("index_by_id"))
+    dim, batch_size, on_error = cfg.resolved_dim(), cfg.embed_batch_size, cfg.on_error
+
+    def index_partition(batches):
+        emb = client = bulk = sent = None
+        with ThreadPoolExecutor(max_workers=1) as sender:
+            for batch in batches:
+                for lo in range(0, batch.num_rows, batch_size):
+                    chunk = batch.slice(lo, batch_size)
+                    if emb is None:
+                        emb = embedder_factory(dim)
+                    texts = chunk.column("text").to_pylist()
+                    vecs, errs = embed_chunk(emb, texts, on_error, dim)
+                    actions, sizes = _bulk_actions(chunk, vecs, errs, index, by_id)
+                    if actions:
+                        if client is None:
+                            client, bulk = factory()
+                        if sent is not None:
+                            sent.result()
+                        sent = sender.submit(bulk, client, actions)
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(errs, pa.string()), pa.array(sizes, pa.int64())],
+                        names=["error", "bulk_bytes"],
+                    )
+            if sent is not None:
+                sent.result()
+
+    cols = ["text", "created_at"] + (["_id"] if by_id else [])
+    return doc.select(*cols).mapInArrow(
+        index_partition, "error string, bulk_bytes long"
+    )
+
+
+def _opensearch_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None]:
+    """foreachBatch over the status rows of ``opensearch_index``: the
+    embedding and bulk indexing run on the executors, inside the one
+    action this runs (a ``noop`` write), so the batch never funnels
+    through the driver. Before the first batch the driver creates the
+    k-NN index with the reference's hnsw mapping if it is missing
+    (ensure_knn_index)."""
+    factory = opensearch_client_factory(cfg)
+    index = cfg.extra.get("index", "embeddings")
     dimension = cfg.resolved_dim()
     # Bootstrap once per writer, lazily on the first batch (the driver
     # runs foreachBatch, so the single create-if-missing call happens
@@ -229,37 +339,7 @@ def _opensearch_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None]:
             client, _ = factory()
             ensure_knn_index(client, index, dimension)
             pending_bootstrap[0] = False
-        # embed() only carries an error column under the dead-letter
-        # policy; under drop/fail the column is absent and there is
-        # nothing to filter (guard mirrors _parquet_writer's has_error).
-        good = batch
-        if "error" in batch.columns:
-            good = batch.filter(F.col("error").isNull())
-        by_id = bool(cfg.extra.get("index_by_id"))
-        docs = to_sink_docs(good, include_id=by_id)
-
-        def send_partition(rows) -> None:
-            first = next(iter(rows), None)
-            if first is None:
-                return  # empty partition: never build a client
-            import itertools
-
-            client, bulk = factory()
-            actions = (
-                {
-                    "_index": index,
-                    **({"_id": row._id} if by_id else {}),
-                    "_source": {
-                        "passage_embedding": row.passage_embedding,
-                        "date": row.date.isoformat() if row.date else None,
-                        "text": row.text,
-                    },
-                }
-                for row in itertools.chain([first], rows)
-            )
-            bulk(client, actions)
-
-        docs.foreachPartition(send_partition)
+        batch.write.format("noop").mode("overwrite").save()
 
     return write_batch
 

@@ -19,6 +19,7 @@ from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opense
     HttpOpenSearchClient,
     http_bulk,
     http_opensearch_factory,
+    json_float_arrays,
     sigv4_rest_headers,
 )
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
@@ -123,7 +124,15 @@ def test_sink_writer_http_transport_end_to_end(spark, fake):
     )
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
         foreach_batch_writer,
+        opensearch_index,
     )
+
+    def embedder_factory(dim):
+        class _Stub:
+            def embed_batch(self, texts):
+                return [[float(t.split()[1]), 0.0, 0.0, 1.0] for t in texts]
+
+        return _Stub()
 
     srv, url = fake
     cfg = PipelineConfig(
@@ -132,12 +141,11 @@ def test_sink_writer_http_transport_end_to_end(spark, fake):
         extra={"hosts": [url], "index": "embeddings"},
     )
     write_batch = foreach_batch_writer(cfg)
-    batch = spark.createDataFrame(
-        [([float(i), 0.0, 0.0, 1.0], datetime.datetime(2024, 1, 1), f"doc {i}")
-         for i in range(8)],
-        "embedding array<float>, created_at timestamp, text string",
+    docs = spark.createDataFrame(
+        [(datetime.datetime(2024, 1, 1), f"doc {i}") for i in range(8)],
+        "created_at timestamp, text string",
     ).repartition(4)
-    write_batch(batch, 0)
+    write_batch(opensearch_index(docs, cfg, embedder_factory), 0)
     client = HttpOpenSearchClient(url)
     _, out = client.request("GET", "/embeddings/_search")
     hits = [h["_source"] for h in out["hits"]["hits"]]
@@ -396,3 +404,63 @@ def test_sort_on_text_field_rejected_keyword_subfield_works():
         assert [g["text"] for g in got] == [f"doc {i}" for i in range(7)]
     finally:
         srv.stop()
+
+
+def test_json_float_arrays_are_json_with_the_same_float32_bits():
+    """Arrow-formatted vectors are strict JSON (no NaN/Infinity tokens)
+    and read back to the identical float32 bits: tiny and huge
+    magnitudes, negative zero (Arrow writes ``-0``, which a reader takes
+    as the integer 0), subnormals, and off-grid values drawn from
+    random bit patterns."""
+    import numpy as np
+
+    def strict(s):
+        return json.loads(s, parse_constant=lambda c: pytest.fail(f"not JSON: {c}"))
+
+    rng = np.random.default_rng(7)
+    off_grid = rng.integers(0, 2**32, 4096, dtype=np.uint64).astype(np.uint32)
+    off_grid = off_grid.view(np.float32)
+    off_grid = off_grid[np.isfinite(off_grid)]
+    special = np.array(
+        [1e-7, -0.0, 0.0, 3.4e38, -3.4e38, np.finfo(np.float32).max,
+         np.finfo(np.float32).tiny, 1e-45, -1e-45, 1.0, -1.5, 0.1, 1 / 3],
+        np.float32,
+    )
+    vectors = [special.tolist(), None, [], *np.array_split(off_grid, 8)]
+    vectors = [v.tolist() if isinstance(v, np.ndarray) else v for v in vectors]
+    texts = json_float_arrays(vectors)
+    assert len(texts) == len(vectors)
+    for vec, text in zip(vectors, texts):
+        parsed = strict(text)
+        if vec is None:
+            assert parsed is None
+            continue
+        want = np.asarray(vec, np.float32).view(np.uint32)
+        got = np.asarray([float(x) for x in parsed], np.float32).view(np.uint32)
+        assert np.array_equal(got, want)
+    assert strict(texts[0])[1] == 0.0 and str(strict(texts[0])[1]) == "-0.0"
+    # the shortest float32 decimal, not the widened double's repr
+    assert json_float_arrays([[0.1]]) == [b"[0.1]"]
+
+
+def test_http_bulk_sends_bytes_sources_verbatim(fake):
+    srv, url = fake
+    client = HttpOpenSearchClient(url)
+    sent = []
+    request = client.request
+
+    def spy(method, path, body=None, content_type="application/json"):
+        sent.append(body)
+        return request(method, path, body, content_type)
+
+    client.request = spy
+    actions = [
+        {"_index": "raw", "_source": b'{"v":[0.1,-0.0],"text":"a"}'},
+        {"_index": "raw", "_id": "d2", "_source": {"v": [0.5], "text": "b"}},
+    ]
+    assert http_bulk(client, actions) == 2
+    assert sent == [
+        b'{"index":{"_index":"raw"}}\n{"v":[0.1,-0.0],"text":"a"}\n'
+        b'{"index":{"_index":"raw","_id":"d2"}}\n{"v":[0.5],"text":"b"}\n'
+    ]
+    assert srv.docs["raw"] == [{"v": [0.1, -0.0], "text": "a"}, {"v": [0.5], "text": "b"}]

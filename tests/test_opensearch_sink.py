@@ -67,14 +67,16 @@ def test_memory_sink_format_is_unknown():
         foreach_batch_writer(PipelineConfig(sink_format="memory"))
 
 
-def _file_capture_factory(capture_dir: str):
-    """Stand-in for the opensearch client factory: each partition's bulk
-    call writes its actions to a unique file in capture_dir (workers
-    share the local filesystem in local mode), so the test can count
-    bulk calls per partition and inspect the exact emitted actions —
-    without a server. Returned as a closure: cloudpickle
-    ships closures by value, while a test-module class would be pickled
-    by reference and fail to import on executor workers."""
+def _file_capture_factory(capture_dir: str, fail_bulk: bool = False):
+    """Stand-in for the opensearch client factory: each bulk call writes
+    its actions to a unique file in capture_dir (workers share the local
+    filesystem in local mode), so the test can count bulk calls and
+    inspect the exact emitted actions — without a server. ``_source``
+    bytes (the fused stage's pre-serialised JSON) are decoded, and each
+    file also records the worker's TZ. With ``fail_bulk`` every bulk
+    call raises after recording its actions. Returned as a closure:
+    cloudpickle ships closures by value, while a test-module class would
+    be pickled by reference and fail to import on executor workers."""
 
     def factory():
         import json
@@ -97,13 +99,36 @@ def _file_capture_factory(capture_dir: str):
             indices = _FakeIndices()
 
         def bulk(client, actions):
+            decoded = [
+                {
+                    **a,
+                    "_source": json.loads(a["_source"])
+                    if isinstance(a["_source"], bytes)
+                    else a["_source"],
+                }
+                for a in actions
+            ]
             path = os.path.join(capture_dir, f"bulk-{uuid.uuid4().hex}.json")
             with open(path, "w") as f:
-                json.dump(list(actions), f)
+                json.dump({"tz": os.environ.get("TZ"), "actions": decoded}, f)
+            if fail_bulk:
+                raise RuntimeError("bulk rejected")
+            return len(decoded)
 
         return _FakeClient(), bulk
 
     return factory
+
+
+def _captured(cap) -> list[dict]:
+    import json
+    import pathlib
+
+    return [
+        a
+        for f in sorted(pathlib.Path(cap).glob("bulk-*.json"))
+        for a in json.loads(f.read_text())["actions"]
+    ]
 
 
 def test_opensearch_writer_bulk_shape_runs_on_executors(spark, tmp_path, monkeypatch):
@@ -113,22 +138,23 @@ def test_opensearch_writer_bulk_shape_runs_on_executors(spark, tmp_path, monkeyp
     a single-machine bottleneck at any real scale. toLocalIterator and
     collect are poisoned for the duration to prove the batch is never
     materialized on the driver."""
-    import json
     import pathlib
 
     from pyspark.sql import DataFrame
 
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        DeterministicEmbedder,
+    )
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
         foreach_batch_writer,
-    )
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
-        embed,
+        opensearch_index,
     )
 
     cap = tmp_path / "captured"
     cap.mkdir()
     cfg = PipelineConfig(
         sink_format="opensearch",
+        embedding_dim=8,
         extra={"index": "docs", "client_factory": _file_capture_factory(str(cap))},
     )
     writer = foreach_batch_writer(cfg)
@@ -140,18 +166,17 @@ def test_opensearch_writer_bulk_shape_runs_on_executors(spark, tmp_path, monkeyp
     monkeypatch.setattr(DataFrame, "collect", _poisoned)
 
     rows = [(f"doc {i}",) for i in range(64)]
-    batch = embed(
+    docs = (
         spark.createDataFrame(rows, ["text"])
         .repartition(4)
-        .withColumn("created_at", F.to_timestamp(F.lit("2024-01-01 00:00:00"))),
-        dim=8,
+        .withColumn("created_at", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
     )
-    writer(batch, 0)
+    writer(opensearch_index(docs, cfg, DeterministicEmbedder), 0)
 
     files = sorted(pathlib.Path(cap).glob("bulk-*.json"))
-    # one bulk call per NON-EMPTY partition, not one global call
+    # one bulk call per NON-EMPTY partition chunk, not one global call
     assert len(files) > 1
-    actions = [a for f in files for a in json.loads(f.read_text())]
+    actions = _captured(cap)
     assert len(actions) == 64
     for action in actions:
         assert action["_index"] == "docs"
@@ -164,40 +189,33 @@ def test_opensearch_writer_bulk_shape_runs_on_executors(spark, tmp_path, monkeyp
 
 def test_opensearch_writer_tolerates_missing_error_column(spark, tmp_path):
     """embed() drops the error column under on_error='drop'/'fail'; the
-    writer must not assume it exists (it previously raised
-    AnalysisException on the first micro-batch for those policies)."""
-    import json
-    import pathlib
-
+    OpenSearch path must not depend on it: its fused stage applies the
+    same policy itself and still indexes the good rows under 'drop'."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        DeterministicEmbedder,
+        embed,
+    )
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
         foreach_batch_writer,
-    )
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
-        embed,
+        opensearch_index,
     )
 
     cap = tmp_path / "captured"
     cap.mkdir()
     cfg = PipelineConfig(
         sink_format="opensearch",
+        embedding_dim=8,
         on_error="drop",
         extra={"index": "docs", "client_factory": _file_capture_factory(str(cap))},
     )
     writer = foreach_batch_writer(cfg)
-    batch = embed(
-        spark.createDataFrame([("hello world",)], ["text"]).withColumn(
-            "created_at", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-        ),
-        dim=8,
-        on_error="drop",
+    docs = spark.createDataFrame([("hello world",)], ["text"]).withColumn(
+        "created_at", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
     )
+    batch = embed(docs, dim=8, on_error="drop")
     assert "error" not in batch.columns
-    writer(batch, 0)
-    actions = [
-        a
-        for f in pathlib.Path(cap).glob("bulk-*.json")
-        for a in json.loads(f.read_text())
-    ]
+    writer(opensearch_index(docs, cfg, DeterministicEmbedder), 0)
+    actions = _captured(cap)
     assert [a["_source"]["text"] for a in actions] == ["hello world"]
 
 
@@ -210,11 +228,12 @@ def test_opensearch_writer_bootstraps_knn_index(spark, tmp_path):
     import json
     import pathlib
 
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        DeterministicEmbedder,
+    )
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
         foreach_batch_writer,
-    )
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
-        embed,
+        opensearch_index,
     )
 
     cap = tmp_path / "captured"
@@ -225,11 +244,12 @@ def test_opensearch_writer_bootstraps_knn_index(spark, tmp_path):
         extra={"index": "docs", "client_factory": _file_capture_factory(str(cap))},
     )
     writer = foreach_batch_writer(cfg)
-    batch = embed(
+    batch = opensearch_index(
         spark.createDataFrame([("hello",)], ["text"]).withColumn(
             "created_at", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
         ),
-        dim=8,
+        cfg,
+        DeterministicEmbedder,
     )
     writer(batch, 0)
     mapping_file = pathlib.Path(cap) / "index-docs.json"
@@ -267,3 +287,184 @@ def test_knn_index_body_follows_model_dimension():
         cfg = PipelineConfig(embedding_model=model)
         body = knn_index_body(cfg.resolved_dim())
         assert body["mappings"]["properties"]["passage_embedding"]["dimension"] == dim
+
+
+def _stub_embedder_factory(vectors: dict):
+    """embedder_factory returning ``vectors[text]`` for each text."""
+
+    def factory(dim):
+        class _Stub:
+            def embed_batch(self, texts):
+                return [vectors[t] for t in texts]
+
+        return _Stub()
+
+    return factory
+
+
+_UNINDEXABLE = {
+    "nan": [float("nan"), 0.0, 0.0, 0.0],
+    "inf": [0.0, float("-inf"), 0.0, 0.0],
+    "beyond float32": [1e39, 0.0, 0.0, 0.0],
+    "too long": [0.5] * 5,
+    "too short": [0.5] * 3,
+}
+
+
+def test_embed_chunk_marks_unindexable_vectors():
+    """With the index dimension given, a vector that is not ``dim``
+    finite float32 values is a per-row error (an index rejects it, and
+    its bulk would fail on every replay); a missing vector is not."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        embed_chunk,
+    )
+
+    vectors = {**_UNINDEXABLE, "ok": [0.25, -0.0, 1e-7, 3.4e38], "none": None}
+    emb = _stub_embedder_factory(vectors)(4)
+    texts = list(vectors)
+    vecs, errs = embed_chunk(emb, texts, "dead-letter", dim=4)
+    assert vecs == [vectors[t] for t in texts]
+    got = dict(zip(texts, errs))
+    assert got["ok"] is None and got["none"] is None
+    for t in _UNINDEXABLE:
+        assert got[t].startswith("unindexable vector"), (t, got[t])
+    # without a dimension (embed()'s RAG and parquet path) nothing is checked
+    assert embed_chunk(emb, texts, "dead-letter") == (vecs, [None] * len(texts))
+    with pytest.raises(RuntimeError, match="unindexable vector"):
+        embed_chunk(emb, texts, "fail", dim=4)
+
+
+def test_fused_stage_dead_letters_unindexable_vectors(spark, tmp_path):
+    """Unindexable vectors become dead-letter status rows and never
+    reach the bulk; under on_error='fail' they fail the micro-batch."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
+        foreach_batch_writer,
+        opensearch_index,
+    )
+
+    vectors = {**_UNINDEXABLE, "ok": [0.25, 0.5, 0.75, 1.0]}
+    docs = spark.createDataFrame([(t,) for t in vectors], ["text"]).withColumn(
+        "created_at", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
+    )
+    cap = tmp_path / "captured"
+    cap.mkdir()
+    cfg = PipelineConfig(
+        sink_format="opensearch",
+        embedding_dim=4,
+        extra={"index": "docs", "client_factory": _file_capture_factory(str(cap))},
+    )
+    status = opensearch_index(docs, cfg, _stub_embedder_factory(vectors))
+    assert status.columns == ["error", "bulk_bytes"]
+    rows = status.collect()
+    assert len(rows) == len(vectors)
+    bad = [r for r in rows if r.error is not None]
+    assert len(bad) == len(_UNINDEXABLE)
+    assert all(r.error.startswith("unindexable vector") for r in bad)
+    assert all(r.bulk_bytes == 0 for r in bad)
+    [good] = [r for r in rows if r.error is None]
+    assert good.bulk_bytes > 0
+    actions = _captured(cap)
+    assert [a["_source"]["text"] for a in actions] == ["ok"]
+    assert actions[0]["_source"]["passage_embedding"] == [0.25, 0.5, 0.75, 1.0]
+
+    failing = PipelineConfig(
+        sink_format="opensearch",
+        embedding_dim=4,
+        on_error="fail",
+        extra={"index": "docs", "client_factory": _file_capture_factory(str(cap))},
+    )
+    with pytest.raises(Exception, match="unindexable vector"):
+        foreach_batch_writer(failing)(
+            opensearch_index(docs, failing, _stub_embedder_factory(vectors)), 0
+        )
+
+
+def test_bulk_failure_on_first_chunk_fails_the_micro_batch(spark, tmp_path):
+    """A bulk runs on the sender thread while the next chunk embeds; its
+    failure must still fail the task (at the next wait, or at the end
+    of the partition), and no later chunk's bulk may be sent after it."""
+    import pathlib
+
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        DeterministicEmbedder,
+    )
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
+        foreach_batch_writer,
+        opensearch_index,
+    )
+
+    for n_docs in (12, 4):  # three chunks of 4, then a single chunk
+        cap = tmp_path / f"captured-{n_docs}"
+        cap.mkdir()
+        cfg = PipelineConfig(
+            sink_format="opensearch",
+            embedding_dim=8,
+            embed_batch_size=4,
+            extra={
+                "index": "docs",
+                "client_factory": _file_capture_factory(str(cap), fail_bulk=True),
+            },
+        )
+        docs = (
+            spark.createDataFrame([(f"doc {i}",) for i in range(n_docs)], ["text"])
+            .coalesce(1)
+            .withColumn("created_at", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
+        )
+        with pytest.raises(Exception, match="bulk rejected"):
+            foreach_batch_writer(cfg)(
+                opensearch_index(docs, cfg, DeterministicEmbedder), 0
+            )
+        assert len(list(pathlib.Path(cap).glob("bulk-*.json"))) == 1
+
+
+def test_date_is_sent_as_a_utc_instant_under_non_utc_time_zones(spark, tmp_path):
+    """``date`` is an absolute UTC instant whatever the session and
+    worker time zones: formatting a naive local datetime would index
+    12:00Z as 07:00 under America/New_York, and OpenSearch reads a date
+    without an offset as UTC."""
+    import datetime
+
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        DeterministicEmbedder,
+    )
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.schemas import (
+        CREATED_AT_FORMAT,
+    )
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
+        foreach_batch_writer,
+        opensearch_index,
+    )
+
+    cap = tmp_path / "captured"
+    cap.mkdir()
+    cfg = PipelineConfig(
+        sink_format="opensearch",
+        embedding_dim=8,
+        extra={"index": "docs", "client_factory": _file_capture_factory(str(cap))},
+    )
+    sc = spark.sparkContext
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    # Python workers are started per environment: this stage runs in
+    # workers whose local time zone is New York
+    sc.environment["TZ"] = "America/New_York"
+    try:
+        docs = spark.createDataFrame(
+            [("noon utc", "2024-01-01T12:00:00.000Z")], ["text", "created_at"]
+        ).withColumn("created_at", F.to_timestamp("created_at", CREATED_AT_FORMAT))
+        foreach_batch_writer(cfg)(opensearch_index(docs, cfg, DeterministicEmbedder), 0)
+    finally:
+        del sc.environment["TZ"]
+        spark.conf.set("spark.sql.session.timeZone", session_tz)
+    import json
+    import pathlib
+
+    [f] = pathlib.Path(cap).glob("bulk-*.json")
+    captured = json.loads(f.read_text())
+    assert captured["tz"] == "America/New_York"
+    [action] = captured["actions"]
+    date = action["_source"]["date"]
+    assert date.endswith(("Z", "+00:00")), date
+    assert datetime.datetime.fromisoformat(date.replace("Z", "+00:00")) == (
+        datetime.datetime(2024, 1, 1, 12, tzinfo=datetime.timezone.utc)
+    )

@@ -291,6 +291,125 @@ def test_pipeline_observed_metrics_account_for_every_row(
         spark.streams.removeListener(listener)
 
 
+def _counting_opensearch():
+    """The in-process OpenSearch endpoint, also summing the bytes of
+    every _bulk body it receives."""
+    import threading
+
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_fake import (
+        FakeOpenSearchServer,
+    )
+
+    class Counting(FakeOpenSearchServer):
+        bulk_bytes = 0
+        _count_lock = threading.Lock()
+
+        def _handle(self, method, path, body):
+            if method == "POST" and path == "/_bulk":
+                with self._count_lock:
+                    self.bulk_bytes += len(body)
+            return super()._handle(method, path, body)
+
+    srv = Counting()
+    return srv, srv.start()
+
+
+def test_opensearch_pipeline_observed_metrics_account_for_every_row(
+    spark, wire_dir, tmp_path
+):
+    """The OpenSearch twin of the observed-metrics test: the fused
+    embed-and-index stage keeps graft_embed exact, and graft_sink counts
+    the indexed documents and exactly the _bulk bytes the endpoint
+    received."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.pipeline import (
+        MetricsListener,
+        observed_metrics,
+    )
+
+    srv, url = _counting_opensearch()
+    cfg = PipelineConfig(
+        source_format="json",
+        source_path=wire_dir,
+        sink_format="opensearch",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        embedding_dim=32,
+        extra={"id_strategy": "deterministic", "hosts": [url], "index": "embeddings"},
+    )
+    listener = MetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        q = run_pipeline(spark, cfg)
+        q.awaitTermination(120)
+        assert srv.bulk_bytes > 0
+        expected = {
+            "graft_parse": {"rows_in": 5, "rows_corrupt": 1},
+            "graft_docs": {"rows_nonempty": 3},
+            "graft_embed": {"rows_embedded": 3, "rows_dead_lettered": 0},
+            "graft_sink": {"rows_indexed": 3, "bulk_bytes": srv.bulk_bytes},
+        }
+        assert observed_metrics(q) == expected
+        deadline = time.time() + 30
+        while time.time() < deadline and listener.totals(q.id) != expected:
+            time.sleep(0.5)
+        assert listener.totals(q.id) == expected
+        assert sorted(d["text"] for d in srv.docs["embeddings"]) == [
+            "jumps over the lazy dog",
+            "packs my box",
+            "the quick brown fox",
+        ]
+    finally:
+        spark.streams.removeListener(listener)
+        srv.stop()
+
+
+def test_opensearch_pipeline_dead_letters_unindexable_vectors(
+    spark, wire_dir, tmp_path
+):
+    """A NaN or wrong-length vector is a dead letter counted in
+    rows_dead_lettered; it never reaches the bulk, so the micro-batch
+    still commits instead of failing on every replay."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.pipeline import (
+        observed_metrics,
+    )
+
+    def bad_vectors_factory(dim):
+        class _Stub:
+            def embed_batch(self, texts):
+                return [
+                    [float("nan")] * dim
+                    if t.startswith("the quick")
+                    else [0.5] * (dim + 1)
+                    if t.startswith("jumps")
+                    else [0.5] * dim
+                    for t in texts
+                ]
+
+        return _Stub()
+
+    srv, url = _counting_opensearch()
+    cfg = PipelineConfig(
+        source_format="json",
+        source_path=wire_dir,
+        sink_format="opensearch",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        embedding_dim=8,
+        extra={"hosts": [url], "index": "embeddings"},
+    )
+    try:
+        q = run_pipeline(spark, cfg, embedder_factory=bad_vectors_factory)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        metrics = observed_metrics(q)
+        assert metrics["graft_embed"] == {"rows_embedded": 1, "rows_dead_lettered": 2}
+        assert metrics["graft_sink"] == {
+            "rows_indexed": 1,
+            "bulk_bytes": srv.bulk_bytes,
+        }
+        assert [d["text"] for d in srv.docs["embeddings"]] == ["packs my box"]
+    finally:
+        srv.stop()
+
+
 def test_kafka_reader_options_msk_iam_and_passthrough():
     """S2: the Kafka branch maps PipelineConfig onto Spark's Kafka
     connector options — bootstrap/subscribe/startingOffsets plus the
