@@ -10,6 +10,7 @@ pandas UDFs only where built-in operators cannot express the semantics
 Layout
 ------
 - ``session``    SparkSession factory tuned for the target cluster shape
+- ``worker_daemon`` the PySpark daemon its Python workers fork from
 - ``config``     pipeline configuration (mirror of FlinkApplicationProperties)
 - ``schemas``    per-stage StructTypes (RAW -> MSG -> DOC -> EMB)
 - ``sources``    batch parquet table registry + streaming sources

@@ -286,7 +286,7 @@ def check_on_error(on_error: str) -> None:
 
 def embed_chunk(
     emb, texts: list[str | None], on_error: str, dim: int | None = None
-) -> tuple[list[list[float] | None], list[str | None]]:
+) -> tuple[list, list[str | None]]:
     """One ``embed_batch`` call under the ``on_error`` policy: the
     policy loop shared by ``embed()`` and the OpenSearch sink's fused
     stage. Returns (vectors, per-row errors).
@@ -296,9 +296,10 @@ def embed_chunk(
     its retries) expose ``row_errors`` and dead-letter just those rows.
     With ``dim`` set, a vector that is not ``dim`` finite float32 values
     is a per-row error too: an index rejects it, and the bulk carrying
-    it would fail again on every replay. Under 'fail' any row error
-    raises; 'dead-letter' and 'drop' differ only in what the caller
-    keeps."""
+    it would fail again on every replay; the vectors that pass come back
+    as the float32 arrays that check made, so the sink that formats them
+    converts each vector once. Under 'fail' any row error raises;
+    'dead-letter' and 'drop' differ only in what the caller keeps."""
     try:
         vecs = emb.embed_batch(texts)
         errs = getattr(emb, "row_errors", None)
@@ -308,6 +309,7 @@ def embed_chunk(
             raise
         return [None] * len(texts), [f"{type(e).__name__}: {e}"] * len(texts)
     if dim is not None:
+        vecs = list(vecs)
         with np.errstate(over="ignore"):
             for i, v in enumerate(vecs):
                 if v is None or errs[i] is not None:
@@ -316,11 +318,14 @@ def embed_chunk(
                     errs[i] = f"unindexable vector: {len(v)} values, index has {dim}"
                     continue
                 try:
-                    finite = bool(np.isfinite(np.asarray(v, np.float32)).all())
+                    v32 = np.asarray(v, np.float32)
+                    finite = bool(np.isfinite(v32).all())
                 except (TypeError, ValueError):
                     finite = False
                 if not finite:
                     errs[i] = "unindexable vector: a value is not a finite float32"
+                else:
+                    vecs[i] = v32
     if on_error == "fail" and any(errs):
         first = next(e for e in errs if e)
         raise RuntimeError(f"embedding failed: {first}")

@@ -65,8 +65,12 @@ def knn_join(
     materialized or shuffled (tests/test_plan_shapes.py). Against the
     per-pair cosine fold it replaced, the rag_query benchmark's p50
     (4 queries x 2000 x 1024-d, 4-core host, median of seeds 501-510)
-    went from 2386 to 1590 ms; embedding the queries is ~0.7 s of that
-    and Spark's per-job Python stage floor most of the rest."""
+    went from 2386 to 1590 ms. Most of what remained was not arithmetic:
+    before each task of the request's two Python stages (embedding the
+    queries, scoring), the worker re-read the zip directories on its
+    path for 140-270 ms. With ``session.build_session``'s worker daemon
+    it no longer does, and the p50 went from 1432 to 715 ms (median of
+    seeds 661-670, same host)."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from ..sources.batch import spread_compute

@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import datetime
 import hashlib
-import itertools
 import json
 import time
 import urllib.error
@@ -250,15 +249,13 @@ def json_float_arrays(vectors) -> list[bytes]:
     integer 0; it is written ``-0.0`` to keep its sign. The values must
     be finite: Arrow would write ``nan`` / ``inf``, which are not JSON
     (the sink's stage dead-letters such vectors first). A missing
-    vector is ``null``."""
+    vector is ``null``. A vector that is already a float32 array is not
+    converted again."""
     missing = np.fromiter((v is None for v in vectors), bool, len(vectors))
     offsets = np.zeros(len(vectors) + 1, np.int32)
     np.cumsum([0 if v is None else len(v) for v in vectors], out=offsets[1:])
-    flat = np.fromiter(
-        itertools.chain.from_iterable(v for v in vectors if v is not None),
-        np.float32,
-        int(offsets[-1]),
-    )
+    present = [np.asarray(v, np.float32) for v in vectors if v is not None]
+    flat = np.concatenate(present) if present else np.empty(0, np.float32)
     text = pc.cast(pa.array(flat), pa.string())
     negative_zero = np.signbit(flat) & (flat == 0)
     if negative_zero.any():

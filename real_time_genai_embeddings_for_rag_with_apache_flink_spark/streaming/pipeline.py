@@ -186,8 +186,10 @@ def build_pipeline(
 ) -> DataFrame:
     """source -> RAW -> MSG -> DOC -> EMB as one streaming plan; for the
     OpenSearch sink DOC -> status rows of the fused embed-and-index
-    stage instead, observed as ``graft_sink`` (rows_indexed,
-    bulk_bytes).
+    stage instead, observed as ``graft_embed`` under every ``on_error``
+    policy and ``graft_sink`` (rows_indexed, bulk_bytes). On that sink
+    under 'drop', ``rows_dead_lettered`` counts the dropped rows; other
+    sinks observe ``graft_embed`` only under 'dead-letter'.
 
     ``embedder_factory`` defaults to the deterministic local embedder;
     production passes a client-backed factory (the open()-once analogue,
@@ -213,9 +215,9 @@ def build_pipeline(
     )
     embedder_factory = embedder_factory or DeterministicEmbedder
     if cfg.sink_format == "opensearch":
-        status = opensearch_index(doc, cfg, embedder_factory)
-        if cfg.on_error == "dead-letter":
-            status = _observe_embed(status)
+        # the status rows carry every row's error under every policy, so
+        # under 'drop' rows_dead_lettered counts the rows dropped
+        status = _observe_embed(opensearch_index(doc, cfg, embedder_factory))
         return status.observe(
             "graft_sink",
             F.sum(F.col("error").isNull().cast("long")).alias("rows_indexed"),

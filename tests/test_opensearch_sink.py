@@ -9,6 +9,7 @@ no Spark at all.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -323,13 +324,18 @@ def test_embed_chunk_marks_unindexable_vectors():
     emb = _stub_embedder_factory(vectors)(4)
     texts = list(vectors)
     vecs, errs = embed_chunk(emb, texts, "dead-letter", dim=4)
-    assert vecs == [vectors[t] for t in texts]
     got = dict(zip(texts, errs))
     assert got["ok"] is None and got["none"] is None
     for t in _UNINDEXABLE:
         assert got[t].startswith("unindexable vector"), (t, got[t])
+    # an indexable vector comes back as the same float32 bits; the rest as given
+    out = dict(zip(texts, vecs))
+    ok = np.asarray(vectors["ok"], np.float32)
+    assert out["ok"].dtype == np.float32 and out["ok"].tobytes() == ok.tobytes()
+    assert all(out[t] is vectors[t] for t in texts if t != "ok")
     # without a dimension (embed()'s RAG and parquet path) nothing is checked
-    assert embed_chunk(emb, texts, "dead-letter") == (vecs, [None] * len(texts))
+    raw = embed_chunk(emb, texts, "dead-letter")
+    assert raw == ([vectors[t] for t in texts], [None] * len(texts))
     with pytest.raises(RuntimeError, match="unindexable vector"):
         embed_chunk(emb, texts, "fail", dim=4)
 

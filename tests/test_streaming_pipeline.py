@@ -318,48 +318,50 @@ def test_opensearch_pipeline_observed_metrics_account_for_every_row(
     spark, wire_dir, tmp_path
 ):
     """The OpenSearch twin of the observed-metrics test: the fused
-    embed-and-index stage keeps graft_embed exact, and graft_sink counts
-    the indexed documents and exactly the _bulk bytes the endpoint
-    received."""
+    embed-and-index stage keeps graft_embed exact under every policy
+    that lets a batch commit, and graft_sink counts the indexed
+    documents and exactly the _bulk bytes the endpoint received."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.pipeline import (
         MetricsListener,
         observed_metrics,
     )
 
-    srv, url = _counting_opensearch()
-    cfg = PipelineConfig(
-        source_format="json",
-        source_path=wire_dir,
-        sink_format="opensearch",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        embedding_dim=32,
-        extra={"id_strategy": "deterministic", "hosts": [url], "index": "embeddings"},
-    )
-    listener = MetricsListener()
-    spark.streams.addListener(listener)
-    try:
-        q = run_pipeline(spark, cfg)
-        q.awaitTermination(120)
-        assert srv.bulk_bytes > 0
-        expected = {
-            "graft_parse": {"rows_in": 5, "rows_corrupt": 1},
-            "graft_docs": {"rows_nonempty": 3},
-            "graft_embed": {"rows_embedded": 3, "rows_dead_lettered": 0},
-            "graft_sink": {"rows_indexed": 3, "bulk_bytes": srv.bulk_bytes},
-        }
-        assert observed_metrics(q) == expected
-        deadline = time.time() + 30
-        while time.time() < deadline and listener.totals(q.id) != expected:
-            time.sleep(0.5)
-        assert listener.totals(q.id) == expected
-        assert sorted(d["text"] for d in srv.docs["embeddings"]) == [
-            "jumps over the lazy dog",
-            "packs my box",
-            "the quick brown fox",
-        ]
-    finally:
-        spark.streams.removeListener(listener)
-        srv.stop()
+    for on_error in ("dead-letter", "drop"):
+        srv, url = _counting_opensearch()
+        cfg = PipelineConfig(
+            source_format="json",
+            source_path=wire_dir,
+            sink_format="opensearch",
+            checkpoint_dir=str(tmp_path / f"ckpt-{on_error}"),
+            embedding_dim=32,
+            on_error=on_error,
+            extra={"id_strategy": "deterministic", "hosts": [url], "index": "embeddings"},
+        )
+        listener = MetricsListener()
+        spark.streams.addListener(listener)
+        try:
+            q = run_pipeline(spark, cfg)
+            q.awaitTermination(120)
+            assert srv.bulk_bytes > 0
+            expected = {
+                "graft_parse": {"rows_in": 5, "rows_corrupt": 1},
+                "graft_docs": {"rows_nonempty": 3},
+                "graft_embed": {"rows_embedded": 3, "rows_dead_lettered": 0},
+                "graft_sink": {"rows_indexed": 3, "bulk_bytes": srv.bulk_bytes},
+            }
+            assert observed_metrics(q) == expected, on_error
+            deadline = time.time() + 30
+            while time.time() < deadline and listener.totals(q.id) != expected:
+                time.sleep(0.5)
+            assert listener.totals(q.id) == expected, on_error
+            assert sorted(d["text"] for d in srv.docs["embeddings"]) == [
+                "jumps over the lazy dog",
+                "packs my box",
+                "the quick brown fox",
+            ]
+        finally:
+            spark.streams.removeListener(listener)
+            srv.stop()
 
 
 def test_opensearch_pipeline_dead_letters_unindexable_vectors(
@@ -367,7 +369,8 @@ def test_opensearch_pipeline_dead_letters_unindexable_vectors(
 ):
     """A NaN or wrong-length vector is a dead letter counted in
     rows_dead_lettered; it never reaches the bulk, so the micro-batch
-    still commits instead of failing on every replay."""
+    still commits instead of failing on every replay. Under 'drop' the
+    same rows are dropped, and rows_dead_lettered counts them."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.pipeline import (
         observed_metrics,
     )
@@ -386,28 +389,33 @@ def test_opensearch_pipeline_dead_letters_unindexable_vectors(
 
         return _Stub()
 
-    srv, url = _counting_opensearch()
-    cfg = PipelineConfig(
-        source_format="json",
-        source_path=wire_dir,
-        sink_format="opensearch",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        embedding_dim=8,
-        extra={"hosts": [url], "index": "embeddings"},
-    )
-    try:
-        q = run_pipeline(spark, cfg, embedder_factory=bad_vectors_factory)
-        q.awaitTermination(120)
-        assert q.exception() is None
-        metrics = observed_metrics(q)
-        assert metrics["graft_embed"] == {"rows_embedded": 1, "rows_dead_lettered": 2}
-        assert metrics["graft_sink"] == {
-            "rows_indexed": 1,
-            "bulk_bytes": srv.bulk_bytes,
-        }
-        assert [d["text"] for d in srv.docs["embeddings"]] == ["packs my box"]
-    finally:
-        srv.stop()
+    for on_error in ("dead-letter", "drop"):
+        srv, url = _counting_opensearch()
+        cfg = PipelineConfig(
+            source_format="json",
+            source_path=wire_dir,
+            sink_format="opensearch",
+            checkpoint_dir=str(tmp_path / f"ckpt-{on_error}"),
+            embedding_dim=8,
+            on_error=on_error,
+            extra={"hosts": [url], "index": "embeddings"},
+        )
+        try:
+            q = run_pipeline(spark, cfg, embedder_factory=bad_vectors_factory)
+            q.awaitTermination(120)
+            assert q.exception() is None
+            metrics = observed_metrics(q)
+            assert metrics["graft_embed"] == {
+                "rows_embedded": 1,
+                "rows_dead_lettered": 2,
+            }, on_error
+            assert metrics["graft_sink"] == {
+                "rows_indexed": 1,
+                "bulk_bytes": srv.bulk_bytes,
+            }, on_error
+            assert [d["text"] for d in srv.docs["embeddings"]] == ["packs my box"]
+        finally:
+            srv.stop()
 
 
 def test_kafka_reader_options_msk_iam_and_passthrough():
