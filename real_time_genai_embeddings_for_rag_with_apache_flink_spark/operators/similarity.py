@@ -4,20 +4,56 @@ The reference delegates ANN entirely to OpenSearch HNSW
 (``KDS-P/index-creation-function/lambda_function.py:72-80``); the engine
 computes similarity in-plan:
 
-- exact brute-force top-k (``knn_join``): the driver-sized query side
-  ships with the corpus scan, each Arrow batch is scored by one float64
-  GEMM and cut to a partial top-k, and a two-phase window merges the
-  survivors — O(|Q|·|C|) arithmetic, never |Q|·|C| rows;
+- exact brute-force top-k (``knn_join``): one kernel, two placements.
+  The kernel (``_survivors``) scores a block of corpus rows against the
+  driver-sized query side with one float64 GEMM and cuts it to a
+  partial top-k per query, O(|Q|·|C|) arithmetic, never |Q|·|C| rows.
+  A cached corpus of at most ``_DRIVER_MAX_BYTES`` (64 MB, and within
+  ``spark.sql.autoBroadcastJoinThreshold``), queried by at most
+  ``_DRIVER_MAX_QUERIES`` (256) rows, is scored on the driver from a pack
+  (ids, float64 matrices and norms), and the call runs no Spark job
+  beyond collecting its query side. The pack is built at the first
+  such call and freed at the first call that finds the corpus
+  uncached, or when the DataFrame is garbage-collected. Any other
+  call scores the corpus per Arrow batch in one ``mapInArrow`` stage.
+  The driver placement took the rag_query benchmark's p50 from 540 to
+  345 ms (4-core host, 10 seeds); a request is now mostly its query
+  ``embed()`` job;
 - IVF-style pruned search (scale path): k-means-ish coarse centroids by
   hashed bucket, search only the closest buckets.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity, dot
+
+# cached corpus -> its slot (lock, key, pack); see _driver_pack. Keyed
+# on the caller's DataFrame, so a pack goes when that object is
+# collected, or earlier, at the first call that finds the corpus
+# uncached. _PACKS_LOCK guards the dictionary only; a build holds its
+# own corpus's slot lock, so concurrent first calls on one corpus build
+# one pack while calls on other corpora go on.
+_PACKS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_PACKS_LOCK = threading.Lock()
+
+# knn_join's driver placement bounds, from both placements timed on one
+# cached corpus of 1024-d vectors (k = 10, local[4], 4-core host): the
+# driver won at every corpus size measured (8.5, 32 and 64 MB) up to
+# 256 queries (64 MB: 187 vs 669 ms at 4 queries, 818 vs 955 ms at
+# 256), was about even at 384 and 512, and lost at 1024 (3347 vs
+# 2621 ms at 64 MB; 842 vs 746 ms at 8.5 MB). Building a 64 MB
+# corpus's pack took 1.4 s and raised the driver's Python peak RSS by
+# ~0.56 GB; the pack then holds ~0.11 GB. No larger corpus was
+# measured, whatever the broadcast threshold allows.
+_DRIVER_MAX_BYTES = 64 * 1024 * 1024
+_DRIVER_MAX_QUERIES = 256
 
 
 def query_literal(vec: list[float]):
@@ -58,28 +94,54 @@ def knn_join(
     corpus rows, sim rounded to 6 dp, ties broken by corpus id.
 
     The query side is collected to the driver (driver-sized by
-    construction). One ``mapInArrow`` pass scores each Arrow batch of
-    the corpus with one float64 ``E @ Q.T`` and forwards only a partial
-    top-k per query (``_partial_topk``); the rank filter then plans as a
-    two-phase ``WindowGroupLimit``, so no |Q| x |C| pairs are ever
-    materialized or shuffled (tests/test_plan_shapes.py). Against the
-    per-pair cosine fold it replaced, the rag_query benchmark's p50
-    (4 queries x 2000 x 1024-d, 4-core host, median of seeds 501-510)
-    went from 2386 to 1590 ms. Most of what remained was not arithmetic:
-    before each task of the request's two Python stages (embedding the
-    queries, scoring), the worker re-read the zip directories on its
-    path for 140-270 ms. With ``session.build_session``'s worker daemon
-    it no longer does, and the p50 went from 1432 to 715 ms (median of
-    seeds 661-670, same host)."""
+    construction), then the corpus is scored in one of two placements,
+    both by ``_survivors`` and with the same schema and tie rule:
+
+    - On the driver, when the cache manager holds ``corpus`` (what
+      ``storageLevel`` reads; the Python ``is_cached`` flag misses
+      ``spark.catalog.clearCache()``), its cached ``sizeInBytes`` is at
+      most ``_DRIVER_MAX_BYTES`` and at most
+      ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns this placement
+      off), and there are at most ``_DRIVER_MAX_QUERIES`` query rows;
+      both bounds are measured (see them). The first such call collects
+      the corpus into a pack: 0.6 s at the benchmark's 8.5 MB, 1.4 s
+      at 64 MB. Later calls reuse it until one finds the corpus
+      uncached (the pack is freed then) or re-cached (rebuilt); it is
+      also freed when the DataFrame is garbage-collected. The pack
+      holds the vectors as float64, about twice their cached bytes.
+      Until a cache is first filled its size reads as the source
+      plan's estimate, so such a corpus may take the other placement
+      once. The kernel runs over blocks of at most
+      ``spark.sql.execution.arrow.maxRecordsPerBatch`` pack rows, so
+      its |block| x |Q| arrays are no larger than a ``mapInArrow``
+      task's. Spark rounds the survivors' sims over a local relation,
+      the driver ranks them, and the result is a local relation whose
+      ``collect()`` runs no job.
+    - Otherwise one ``mapInArrow`` pass scores each Arrow batch of the
+      corpus and forwards only its partial top-k per query; the rank
+      filter then plans as a two-phase ``WindowGroupLimit``, so no
+      |Q| x |C| pairs are ever materialized or shuffled
+      (tests/test_plan_shapes.py).
+
+    On the rag_query benchmark (4 queries x 2000 x 1024-d, 4-core host)
+    the GEMM took the p50 from 2386 to 1590 ms against the per-pair
+    cosine fold, ``session.build_session``'s worker daemon to 715 ms,
+    and the driver placement from 540 to 345 ms (median of seeds
+    7201-7210, same host, a later run of the parent)."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from ..sources.batch import spread_compute
 
+    if k < 1:
+        raise ValueError(f"knn_join needs k >= 1, got {k!r}")
+    fields = [queries.schema[query_id], corpus.schema[corpus_id]]
     q_table = queries.select(query_id, query_vec).toArrow()
+    pack = _driver_pack(corpus, corpus_id, corpus_vec, q_table.num_rows)
+    if pack is not None:
+        return _score_on_driver(queries.sparkSession, q_table, pack, k, fields)
     # spread a single-split fixture scan so scoring doesn't serialize
     # on one core (no-op when the corpus already arrives wide)
     corpus = spread_compute(corpus, corpus_id).select(corpus_id, corpus_vec)
-    fields = [queries.schema[query_id], corpus.schema[corpus_id]]
     schema = StructType(fields + [StructField("sim", DoubleType())])
     w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.col(corpus_id))
     return (
@@ -89,6 +151,133 @@ def knn_join(
         .filter(F.col("rank") <= k)
         .select(query_id, corpus_id, "sim", "rank")
     )
+
+
+def _driver_pack(corpus: DataFrame, corpus_id: str, corpus_vec: str, n_queries: int):
+    """``(ids, _matrices(vectors))`` of a cached, driver-sized
+    corpus, built on first use; None when ``knn_join`` must take the
+    ``mapInArrow`` placement: the corpus is uncached or over the byte
+    bound, or ``n_queries`` is over the query bound (the pack is then
+    kept for later calls). A pack is keyed on the cache's RDD id, so
+    re-caching the corpus (say after its source changed) rebuilds it,
+    and it is dropped as soon as the corpus is found uncached."""
+    jspark = corpus.sparkSession._jsparkSession
+    cached = jspark.sharedState().cacheManager().lookupCachedData(corpus._jdf)
+    if cached.isEmpty():
+        with _PACKS_LOCK:
+            _PACKS.pop(corpus, None)
+        return None
+    if n_queries > _DRIVER_MAX_QUERIES:
+        return None
+    relation = cached.get().cachedRepresentation()
+    limit = min(
+        jspark.sessionState().conf().autoBroadcastJoinThreshold(), _DRIVER_MAX_BYTES
+    )
+    # a fresh computeStats: once the cache is loaded it reads the cached
+    # bytes, not the source plan's estimate
+    if relation.computeStats().sizeInBytes() > limit:
+        return None
+    key = (relation.cacheBuilder().cachedColumnBuffers().id(), corpus_id, corpus_vec)
+    with _PACKS_LOCK:
+        slot = _PACKS.get(corpus)
+        if slot is None:
+            slot = _PACKS[corpus] = SimpleNamespace(
+                lock=threading.Lock(), key=None, pack=None
+            )
+    with slot.lock:
+        if slot.key != key:
+            slot.pack = None  # let a stale pack go before its successor is built
+            slot.pack = _build_pack(corpus, corpus_id, corpus_vec)
+            slot.key = key
+        return slot.pack
+
+
+def _build_pack(corpus: DataFrame, corpus_id: str, corpus_vec: str):
+    table = corpus.select(corpus_id, corpus_vec).toArrow()
+    return (
+        table.column(0).combine_chunks(),
+        _matrices(table.column(1).combine_chunks()),
+    )
+
+
+def _score_on_driver(spark, q_table, pack, k: int, fields: list) -> DataFrame:
+    """``knn_join``'s result from a driver pack, as a local relation
+    with the query and corpus id ``fields`` the other placement keeps.
+    Spark rounds the survivors' sims (a projection over a local
+    relation, folded without a job: Java's ``Double.toString`` under
+    ``round`` is not Python's ``repr``), then each query id's rows are
+    ranked in the window's order: NaN first, numbers descending, NULL
+    last, then corpus id ascending, NULL ids first."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    ids, corpus = pack
+    q_ids = q_table.column(0).combine_chunks()
+    queries_m = _matrices(q_table.column(1).combine_chunks())
+    # the kernel's |block| x |Q| arrays stay as small as a mapInArrow
+    # task's: blocks of at most maxRecordsPerBatch pack rows
+    step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if step <= 0:
+        step = max(len(ids), 1)
+    blocks = []
+    for lo in range(0, max(len(ids), 1), step):
+        hi = min(lo + step, len(ids))
+        block = _slice_rows(corpus, lo, hi)
+        r, c, sim = _survivors(queries_m, len(q_ids), ids.slice(lo, hi - lo), block, k)
+        blocks.append((r + lo, c, sim))
+    r = np.concatenate([b[0] for b in blocks])
+    c = np.concatenate([b[1] for b in blocks])
+    sim = pa.concat_arrays([b[2] for b in blocks])
+    rounded = (
+        spark.createDataFrame(pa.table({"sim": sim}), "sim double")
+        .select(F.round("sim", 6))
+        .collect()
+    )
+    sim = pa.array([row[0] for row in rounded], pa.float64())
+    null = sim.is_null().to_numpy(zero_copy_only=False)
+    val = sim.fill_null(0.0).to_numpy()
+    nan = np.isnan(val)
+    # one window partition per query id value, as partitionBy(q_id)
+    group = pc.dictionary_encode(q_ids, null_encoding="encode").indices.to_numpy()[c]
+    order = pc.sort_indices(
+        pa.table({
+            "g": group,
+            "cls": np.where(null, 2, np.where(nan, 0, 1)),
+            "neg": np.where(null | nan, 0.0, -val),
+            "id": ids.take(r),
+        }),
+        sort_keys=[(name, "ascending") for name in ("g", "cls", "neg", "id")],
+        null_placement="at_start",
+    ).to_numpy()
+    g = group[order]
+    rank = np.arange(len(g)) - np.searchsorted(g, g) + 1
+    top = order[rank <= k]
+    schema = StructType(fields + [
+        StructField("sim", DoubleType()),
+        StructField("rank", IntegerType(), False),
+    ])
+    out = pa.table([
+        q_ids.take(c[top]),
+        ids.take(r[top]),
+        sim.take(top),
+        pa.array(rank[rank <= k], pa.int32()),
+    ], names=schema.names)
+    return spark.createDataFrame(out, schema)
+
+
+def _slice_rows(matrices: dict, lo: int, hi: int) -> dict:
+    """``_matrices`` of pack rows ``lo`` to ``hi - 1``, renumbered from 0,
+    as views: each length's rows are ascending, so they are a range."""
+    import numpy as np
+
+    out = {}
+    for dim, (rows, M, norms) in matrices.items():
+        a, b = np.searchsorted(rows, [lo, hi]).tolist()
+        if b > a:
+            out[dim] = (rows[a:b] - lo, M[a:b], norms[a:b])
+    return out
 
 
 _TIE_SLACK = 2e-6  # > twice the 6-dp rounding's reach of 5e-7
@@ -117,61 +306,75 @@ def _matrices(vecs) -> dict:
     return out
 
 
-def _partial_topk(q_table, k: int):
-    """``knn_join``'s ``mapInArrow`` body: per corpus batch, yield
-    ``(q_id, vec_id, sim)`` for a superset of every row the final
-    ``(round(sim, 6) desc, id asc)`` rank keeps. Exactness against
+def _survivors(queries: dict, n_queries: int, ids, corpus: dict, k: int):
+    """The k-NN kernel, on one block of corpus rows (``ids``, and
+    ``corpus`` = ``_matrices`` of their vectors) against ``queries``
+    (``_matrices`` of the ``n_queries`` query vectors): ``(r, c, sim)``,
+    corpus row and query index arrays and an Arrow float64 array of
+    sims, for a superset of every row the final ``(round(sim, 6) desc,
+    id asc)`` rank keeps. Exactness against
     ``functions.vector.cosine_similarity``:
 
     - sim = dot / (|e| * |q|) in float64, never from pre-normalised
       vectors (that moves the last bits; a 6-dp rounding can then flip
       a tie).
-    - The GEMM only selects: per query, a batch keeps the rows whose raw
+    - The GEMM only selects: per query, a block keeps the rows whose raw
       sim is >= its k-th best - ``_TIE_SLACK``, so rounded ties across
-      batches and partitions survive. Their dot products are refolded
+      blocks and partitions survive. Their dot products are refolded
       left to right, so every sim is the fold's bit for bit.
     - NULL, zero-norm, wrong-length and NULL-element vectors get a NULL
-      sim and rank last; a batch forwards per query only as many of
+      sim and rank last; a block forwards per query only as many of
       them (lowest ids first) as its scored rows fall short of k.
     - NaN sorts above every number, as in Spark."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    n = len(ids)
+    S = np.zeros((n, n_queries))
+    V = np.zeros(S.shape, dtype=bool)
+    blocks = []
+    for dim, (rows, E, ne) in corpus.items():
+        if dim not in queries:
+            continue
+        js, Q, nq = queries[dim]
+        denom = np.multiply.outer(ne, nq)
+        ok = denom != 0.0
+        S[np.ix_(rows, js)] = np.divide(
+            E @ Q.T, denom, out=np.zeros_like(denom), where=ok
+        )
+        V[np.ix_(rows, js)] = ok
+        blocks.append((rows, js, E, ne, Q, nq))
+    key = np.where(V, np.where(np.isnan(S), np.inf, S), -np.inf)
+    kth = np.partition(key, n - k, axis=0)[n - k] if n > k else -np.inf
+    keep = V & (key >= kth - _TIE_SLACK)
+    for rows, js, E, ne, Q, nq in blocks:
+        r, c = np.nonzero(keep[np.ix_(rows, js)])
+        # + 0.0: the fold, starting from 0.0, never returns -0.0
+        dots = np.cumsum(E[r] * Q[c], axis=1)[:, -1] + 0.0
+        S[rows[r], js[c]] = dots / (ne[r] * nq[c])
+    order = pc.array_sort_indices(ids, null_placement="at_start").to_numpy()
+    null = ~V[order]
+    keep[order] |= null & (np.cumsum(null, axis=0) <= k - V.sum(axis=0))
+    r, c = np.nonzero(keep)
+    return r, c, pa.array(S[r, c], mask=~V[r, c])
+
+
+def _partial_topk(q_table, k: int):
+    """``knn_join``'s ``mapInArrow`` body: ``_survivors`` of each corpus
+    batch, as ``(q_id, vec_id, sim)`` rows."""
+    import pyarrow as pa
+
     q_ids = q_table.column(0).combine_chunks()
     queries = _matrices(q_table.column(1).combine_chunks())
 
     def score(batches):
         for batch in batches:
-            n, ids = batch.num_rows, batch.column(0)
-            S = np.zeros((n, len(q_ids)))
-            V = np.zeros(S.shape, dtype=bool)
-            blocks = []
-            for dim, (rows, E, ne) in _matrices(batch.column(1)).items():
-                if dim not in queries:
-                    continue
-                js, Q, nq = queries[dim]
-                denom = np.multiply.outer(ne, nq)
-                ok = denom != 0.0
-                S[np.ix_(rows, js)] = np.divide(
-                    E @ Q.T, denom, out=np.zeros_like(denom), where=ok
-                )
-                V[np.ix_(rows, js)] = ok
-                blocks.append((rows, js, E, ne, Q, nq))
-            key = np.where(V, np.where(np.isnan(S), np.inf, S), -np.inf)
-            kth = np.partition(key, n - k, axis=0)[n - k] if n > k else -np.inf
-            keep = V & (key >= kth - _TIE_SLACK)
-            for rows, js, E, ne, Q, nq in blocks:
-                r, c = np.nonzero(keep[np.ix_(rows, js)])
-                # + 0.0: the fold, starting from 0.0, never returns -0.0
-                dots = np.cumsum(E[r] * Q[c], axis=1)[:, -1] + 0.0
-                S[rows[r], js[c]] = dots / (ne[r] * nq[c])
-            order = pc.array_sort_indices(ids, null_placement="at_start").to_numpy()
-            null = ~V[order]
-            keep[order] |= null & (np.cumsum(null, axis=0) <= k - V.sum(axis=0))
-            r, c = np.nonzero(keep)
+            ids = batch.column(0)
+            corpus = _matrices(batch.column(1))
+            r, c, sim = _survivors(queries, len(q_ids), ids, corpus, k)
             yield pa.RecordBatch.from_arrays(
-                [q_ids.take(c), ids.take(r), pa.array(S[r, c], mask=~V[r, c])],
+                [q_ids.take(c), ids.take(r), sim],
                 names=[q_table.column_names[0], batch.schema.names[0], "sim"],
             )
 

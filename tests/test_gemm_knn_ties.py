@@ -17,11 +17,11 @@ from pyspark.sql import functions as F
 from conftest import SF_SMOKE
 
 
-def test_s02_pruning_survives_cross_partition_ties(spark, tmp_path):
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark import plans
-
-    # 8 query vectors (vec_id < 8) + 120 corpus vectors of which 100
-    # are byte-identical (one big rounded-tie group) and 20 distinct.
+def _write_tie_block(spark, tmp_path):
+    """An sf_dir whose embeddings hold 8 query vectors (vec_id < 8) and
+    120 corpus vectors, of which 100 are byte-identical (one big
+    rounded-tie group, scattered ids) and 20 distinct, written as 8
+    partitions so the ties span them."""
     dim = 64
     base = [0.1] * dim
     rows = []
@@ -41,10 +41,13 @@ def test_s02_pruning_survives_cross_partition_ties(spark, tmp_path):
         .write.mode("overwrite")
         .parquet(str(sf_dir / "embeddings.parquet"))
     )
-    got = {
-        (r["q_id"], r["rank"]): r["vec_id"]
-        for r in plans.get_spec("s02_knn_join").build(spark, str(sf_dir)).collect()
-    }
+    return sf_dir
+
+
+def _s02_oracle_ranks(sf_dir):
+    """{(q_id, rank): vec_id} from s02's DuckDB oracle."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark import plans
+
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet/*.parquet'"
@@ -57,10 +60,52 @@ def test_s02_pruning_survives_cross_partition_ties(spark, tmp_path):
             )
         ).fetchall()
     }
-    assert got == want
+    return want
+
+
+def test_s02_pruning_survives_cross_partition_ties(spark, tmp_path):
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark import plans
+
+    sf_dir = _write_tie_block(spark, tmp_path)
+    got = {
+        (r["q_id"], r["rank"]): r["vec_id"]
+        for r in plans.get_spec("s02_knn_join").build(spark, str(sf_dir)).collect()
+    }
+    assert got == _s02_oracle_ranks(sf_dir)
     # The tie group must resolve to the LOWEST vec_ids, proving the
     # batch cut kept the right representatives across partitions.
     assert len(got) == 40
+
+
+@pytest.mark.parametrize("block_rows", [10000, 16])
+def test_s02_ties_resolve_the_same_on_a_cached_corpus(spark, tmp_path, block_rows):
+    """The same 100-way tie block, cached across 8 partitions: the
+    driver placement scores the pack in blocks of at most
+    maxRecordsPerBatch rows (one block, then 8 blocks that cut the tie
+    group) and must rank it exactly as the oracle does."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.similarity import (
+        knn_join,
+    )
+
+    sf_dir = _write_tie_block(spark, tmp_path)
+    em = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = em.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    corpus = em.filter(F.col("vec_id") >= 8).repartition(8).cache()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    try:
+        assert corpus.count() == 120
+        spark.conf.set(key, str(block_rows))
+        out = knn_join(queries, corpus, k=5)
+        assert out._jdf.isLocal()  # scored on the driver
+        got = {(r["q_id"], r["rank"]): r["vec_id"] for r in out.collect()}
+        assert got == _s02_oracle_ranks(sf_dir)
+        assert len(got) == 40
+    finally:
+        spark.conf.set(key, before)
+        corpus.unpersist()
 
 
 def _fold_knn(queries, corpus, k):
@@ -89,7 +134,10 @@ def test_knn_join_matches_cosine_fold(spark):
     """Same ids, ranks and sims as the fold, bit for bit: on the smoke
     embeddings, on NULL, all-zero, wrong-length and NULL-element vectors
     (on both sides, so a second query length is scored too), on a
-    corpus smaller than k, and on an empty query frame."""
+    corpus smaller than k, and on an empty query frame. Each case runs
+    in both placements: an uncached corpus (mapInArrow) and the same
+    corpus cached (scored on the driver), there also in blocks of 3
+    rows, so the odd vectors and a corpus smaller than k span blocks."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.similarity import (
         knn_join,
     )
@@ -116,15 +164,64 @@ def test_knn_join_matches_cosine_fold(spark):
     )
     small = corpus.filter(F.col("vec_id") < 12)  # 8 rows, k = 10
     empty = queries.filter(F.lit(False))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
     for q, c, k in [(queries, corpus, 5), (queries, small, 10), (empty, corpus, 5)]:
-        out = knn_join(q, c, k=k)
         ref = _fold_knn(q, c, k)
-        assert [(f.name, f.dataType) for f in out.schema] == [
-            (f.name, f.dataType) for f in ref.schema
-        ]
-        got = sorted(tuple(r) for r in out.collect())
-        assert got == sorted(tuple(r) for r in ref.collect())
-        assert len(got) == (min(k, c.count()) * q.count())
+        want = sorted(tuple(r) for r in ref.collect())
+        try:
+            for cached, block_rows in [(False, before), (True, before), (True, "3")]:
+                if cached and not c.is_cached:
+                    c.cache().count()
+                spark.conf.set(key, block_rows)
+                out = knn_join(q, c, k=k)
+                assert out._jdf.isLocal() == cached
+                assert [(f.name, f.dataType) for f in out.schema] == [
+                    (f.name, f.dataType) for f in ref.schema
+                ]
+                got = sorted(tuple(r) for r in out.collect())
+                assert got == want
+                assert len(got) == (min(k, c.count()) * q.count())
+        finally:
+            spark.conf.set(key, before)
+            c.unpersist()
+
+
+def test_knn_join_keeps_a_string_corpus_id_in_both_placements(spark):
+    """A non-long corpus id: both placements return the very same schema
+    (types and nullability) and rows as the fold. String ids order
+    differently from numbers ("a10" < "a9"), a NULL id ranks first in
+    its tie, and two query rows share one q_id, so their candidates are
+    ranked together, as the window's partitionBy(q_id) does."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.similarity import (
+        knn_join,
+    )
+
+    tie = [0.3, 0.1, 0.2, 0.4]
+    other = [0.4, 0.3, 0.2, 0.1]
+    corpus = spark.createDataFrame(
+        [("a9", tie), ("a10", tie), (None, tie), ("b", tie), ("c", other),
+         ("d", [-0.1, 0.2, 0.0, 0.5]), ("e", None)],
+        "vec_id string, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(1, tie), (1, other), (2, [0.0, 0.0, 1.0, 0.0])],
+        "q_id int, q_vec array<float>",
+    )
+    ref = _fold_knn(queries, corpus, 3)
+    want = sorted(ref.collect(), key=repr)
+    try:
+        for cached in (False, True):
+            if cached:
+                corpus.cache().count()
+            out = knn_join(queries, corpus, k=3)
+            assert out._jdf.isLocal() == cached
+            assert out.schema == ref.schema
+            assert sorted(out.collect(), key=repr) == want
+    finally:
+        corpus.unpersist()
+    ranked = sorted((r["q_id"], r["rank"], r["vec_id"]) for r in want)
+    assert [v for q, _, v in ranked if q == 1] == [None, "a10", "a9"]
 
 
 def test_m05_oracle_matches_on_non_ascii_text(spark, tmp_path):
