@@ -194,10 +194,9 @@ def _driver_pack(corpus: DataFrame, corpus_id: str, corpus_vec: str, n_queries: 
 
 def _build_pack(corpus: DataFrame, corpus_id: str, corpus_vec: str):
     table = corpus.select(corpus_id, corpus_vec).toArrow()
-    return (
-        table.column(0).combine_chunks(),
-        _matrices(table.column(1).combine_chunks()),
-    )
+    ids, vecs = (column.combine_chunks() for column in table.columns)
+    del table  # the collected chunks go; the vectors are held once
+    return ids, _matrices(vecs)
 
 
 def _score_on_driver(spark, q_table, pack, k: int, fields: list) -> DataFrame:
@@ -288,21 +287,41 @@ def _matrices(vecs) -> dict:
     float64 matrix, norms)}``. Each norm is the sqrt of the left-to-right
     sum of squares, bit for bit ``functions.vector.l2_norm`` (cumsum adds
     in order; sum is pairwise). NULL, empty and NULL-element vectors are
-    left out; the fold scores them NULL."""
+    left out; the fold scores them NULL. Besides the matrices, only the
+    column's values and per-block temporaries are held."""
     import numpy as np
     import pyarrow.compute as pc
 
-    lens = pc.list_value_length(vecs).fill_null(0).to_numpy().copy()
-    parent = np.repeat(np.arange(len(vecs)), lens)
+    lens = pc.list_value_length(vecs).fill_null(0).to_numpy()
     flat = vecs.flatten()
+    values = flat.to_numpy(zero_copy_only=False)
+    usable = lens.copy()
     if flat.null_count:
-        lens[parent[flat.is_null().to_numpy(zero_copy_only=False)]] = 0
-    values = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+        nulls = np.flatnonzero(flat.is_null().to_numpy(zero_copy_only=False))
+        usable[np.searchsorted(np.cumsum(lens), nulls, side="right")] = 0
     out = {}
-    for dim in np.unique(lens[lens > 0]).tolist():
-        hit = lens == dim
-        M = (values if hit.all() else values[hit[parent]]).reshape(-1, dim)
-        out[dim] = (np.flatnonzero(hit), M, np.sqrt(np.cumsum(M * M, 1)[:, -1]))
+    for dim in np.unique(usable[usable > 0]).tolist():
+        hit = usable == dim
+        picked = values if hit.all() else values[np.repeat(hit, lens)]
+        M = picked.astype(np.float64).reshape(-1, dim)
+        out[dim] = (np.flatnonzero(hit), M, _norms(M))
+    return out
+
+
+_NORM_BLOCK = 1 << 16  # values per block of _norms' M * M temporary
+
+
+def _norms(M):
+    """Row norms over blocks of rows: cumsum runs along each row, so a
+    block's norms are the whole matrix's bit for bit, and the squares
+    never take a second matrix's memory."""
+    import numpy as np
+
+    out = np.empty(len(M))
+    step = max(1, _NORM_BLOCK // M.shape[1])
+    for lo in range(0, len(M), step):
+        B = M[lo : lo + step]
+        out[lo : lo + step] = np.sqrt(np.cumsum(B * B, 1)[:, -1])
     return out
 
 

@@ -3653,9 +3653,9 @@ def st30_kinesis_protocol_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("shard_id"),
             F.from_json("data", "text string, created_at string").alias("r"),
         ).select("doc_id", "shard_id", "r.text", "r.created_at")
-        # run_until_rows, not run_to_memory: like the docgen stream
-        # (st12), per-trigger cursor sources never report exhaustion to
-        # Trigger.AvailableNow — it captures ONE latestOffset advance
+        # run_until_rows, not run_to_memory: under Trigger.AvailableNow
+        # a Python source takes ONE capped read (no admission control),
+        # so the records revealed later would never land
         landed = run_until_rows(parsed, "st30", "append", target_rows=_ST30_DOCS)
     finally:
         srv.stop()
@@ -4296,12 +4296,10 @@ def st36_restart_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFram
     docs) and terminates; the stream then GROWS (the producer keeps
     writing, simulated by appending the second half to the live
     shards); run 2 restarts from the offset log and must consume ONLY
-    the new records. The restarted reader instance has no walk cache,
-    so this exercises the exact seam the module docstring dissects:
-    Spark calls ``latestOffset`` on the fresh instance before anything
-    else, the unpaced strict walk re-derives the true tip, and
-    ``partitions(committed, tip)`` plans AFTER_SEQUENCE_NUMBER ranges
-    strictly above the committed cursors. The sink uses the reference's
+    the new records. The restarted reader instance keeps no position
+    of its own: the engine hands it the committed offset, and its first
+    ``read`` fetches AFTER_SEQUENCE_NUMBER of the committed cursors,
+    and nothing at or below them. The sink uses the reference's
     AUTO-ID behavior on purpose (no ``index_by_id`` safety net): a
     restart that re-reads even one committed record lands a duplicate
     document, inflating n_docs/sum_coords and breaking st33's
@@ -4311,8 +4309,8 @@ def st36_restart_exactly_once_wire(spark: SparkSession, sf_dir: str) -> DataFram
     (tests/test_kinesis_lite.py pins the same property per-component).
     (sf_dir unused: the corpus is generated.)
 
-    Scale shape: st33's — the restart adds one offset-log read and one
-    unpaced tip walk per shard, nothing corpus-sized."""
+    Scale shape: st33's — the restart adds one offset-log read,
+    nothing corpus-sized."""
     from ..config import PipelineConfig
     from ..operators.embed import Md5BowEmbedder
     from ..sources.docgen import wire_record

@@ -63,8 +63,8 @@ class FakeKinesisServer:
         # Arrival simulation: with reveal_per_list=k, every ListShards
         # call makes k more records per shard visible — a deterministic
         # stand-in for "the producer keeps writing", which is what lets
-        # a tip-based consumer (kinesis_lite latestOffset calls
-        # ListShards once per trigger) observe a GROWING stream and
+        # a consumer (kinesis_lite's stream reader calls ListShards
+        # once per trigger) observe a GROWING stream and
         # exercise real multi-batch progression. None = everything
         # visible immediately.
         self._reveal = reveal_per_list

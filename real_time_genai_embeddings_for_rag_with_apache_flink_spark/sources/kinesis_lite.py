@@ -27,51 +27,29 @@ What is implemented (all public AWS API surface):
   at real AWS, kinesalite, or LocalStack; unsigned requests serve
   anonymous local endpoints (the in-process fake in
   sources/kinesis_fake.py);
-- shard-parallel reads: ``partitions()`` is one slice per shard, so the
-  scan spreads across executors exactly like the real connector;
 - per-shard SEQUENCE-NUMBER offsets: the stream reader checkpoints
-  ``{shard_id: last_sequence_number}`` and replays any committed range
+  ``{shard_id: last_sequence_number}`` and replays any logged range
   via ``AFTER_SEQUENCE_NUMBER`` iterators — Kinesis retention makes a
-  planned range exactly re-readable on task retry or checkpoint
-  recovery, the same replayability contract Kafka offsets give;
-- resharding: ``latestOffset`` re-lists shards every trigger; shards
-  that appear mid-stream (splits/merges) join at TRIM_HORIZON, and a
-  CLOSED parent (iterator ends after the frozen remainder) drains to
-  its final tip and simply stops advancing — the full shard lifecycle
-  is pinned in tests/test_kinesis_lite.py.
+  range exactly re-readable on checkpoint recovery, the same
+  replayability contract Kafka offsets give;
+- resharding: ``read`` re-lists shards every trigger; shards that
+  appear mid-stream (splits/merges) join at TRIM_HORIZON, a CLOSED
+  parent (iterator ends after the frozen remainder) drains and stops
+  advancing, and a shard no longer listed drops out — the full shard
+  lifecycle is pinned in tests/test_kinesis_lite.py.
 
-Execution model (micro-batch planning): ``latestOffset`` returns the
-TRUE CURRENT TIP of every shard — the API's contract ("the most recent
-offset available") and the only restart-safe value: a reader recreated
-over an existing checkpoint has no memory of committed positions, and
-any cursor-derived answer below them would be adopted by the engine as
-progress and re-emit committed records (the duplicate bug pinned in
-tests/test_kinesis_lite.py). The tip is discovered by a driver-side
-GetRecords walk (resumed from the last position this instance saw —
-an instance-local cache that only shortens the walk, never changes the
-answer), run SHARD-CONCURRENTLY over a thread pool of
-``min(shards, 8)`` so driver poll latency is the max over shards
-rather than their sum; executors then re-read exactly the planned
-(start, end] range via their own AFTER_SEQUENCE_NUMBER iterators, so
-every record is fetched twice (enhanced fan-out is the production
-answer if 2x GetRecords matters). The Python stream API exposes no
-engine-side admission control, so pacing is the reader's job:
-``max_records_per_trigger`` caps each shard's advance per trigger
-whenever the cap is provably restart-safe — i.e. the walk start is an
-instance-derived floor at or above the committed position. MEASURED
-ENGINE BEHAVIOR (Spark 4.1, pinned in tests/test_kinesis_lite.py's
-pipeline test): the engine's FIRST call on a new reader instance is
-``latestOffset`` — BEFORE ``initialOffset`` even on a fresh query —
-and at that moment the reader cannot distinguish fresh start from
-checkpoint restart, so the first walk must reach the true tip (a
-capped guess below a committed position would be adopted as progress
-and re-emit committed records — the pinned duplicate bug; and no later
-clamp can fully repair it, because a crash between the stale
-offset-log write and the clamp leaves a fresh instance that replays
-the stale range verbatim). Pacing therefore engages from the SECOND
-trigger onward: the first trigger takes the whole backlog (executors
-read it page-by-page, so memory stays one-page-bounded), every later
-trigger advances at most ``max_records_per_trigger`` per shard.
+Execution model: ``KinesisLiteStreamReader`` is a
+``SimpleDataSourceStreamReader``, so each record is fetched once, on
+the driver. Every trigger reads at most ``max_records_per_trigger``
+records per shard (10,000 when 0 or unset), all shards concurrently,
+past the committed offset the engine passes in; the offset it returns
+is the last record read. Pacing is therefore restart-safe from the
+first trigger. Per trigger the driver holds cap × shards records, and
+Spark's wrapper keeps the last committed batch's rows until the next
+commit. Spark plans the batch as one partition;
+``streaming/pipeline.build_source`` fans it out with one round-robin
+``repartition``. Batch reads (``KinesisLiteReader``) stay one partition
+per shard, read on the executors.
 """
 
 from __future__ import annotations
@@ -82,14 +60,15 @@ import datetime
 import hashlib
 import hmac
 import json
+import time
 import urllib.error
 import urllib.request
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 
 _API_VERSION = "Kinesis_20131202"
@@ -98,7 +77,6 @@ _MAX_EMPTY_POLLS = 8  # GetRecords may return empty pages mid-stream
 # regions) because every page advances the iterator; this cap only
 # trips a service that stops advancing entirely
 _PERSIST_EMPTY_CAP = 100_000
-_WALK_THREADS = 8  # cap on concurrent driver tip walks (one per shard)
 
 
 # ---------------------------------------------------------------------------
@@ -224,9 +202,9 @@ _THROTTLE_TYPES = (
 
 class KinesisClient:
     """Minimal Kinesis Data Streams JSON/HTTP client (ListShards,
-    GetShardIterator, GetRecords, PutRecords). One instance per driver
-    poll or per executor task — stateless besides config, safe to
-    rebuild on retry. Rate-limit errors (the JSON protocol's
+    GetShardIterator, GetRecords, PutRecords). Stateless besides
+    config: safe to share across threads and to rebuild on retry.
+    Rate-limit errors (the JSON protocol's
     ProvisionedThroughputExceeded/LimitExceeded, HTTP 400 + __type)
     retry in-place with exponential backoff (``max_throttle_retries``,
     default 8) — a polling reader at the 5-reads/sec/shard ceiling
@@ -287,9 +265,7 @@ class KinesisClient:
                     err_type.split("#")[-1] in _THROTTLE_TYPES
                     and attempt < self.throttle_retries
                 ):
-                    import time as _time
-
-                    _time.sleep(min(self.backoff_s * (2**attempt), 5.0))
+                    time.sleep(min(self.backoff_s * (2**attempt), 5.0))
                     attempt += 1
                     continue
                 # surface the AWS error body
@@ -332,48 +308,9 @@ class KinesisClient:
             {"ShardIterator": iterator, "Limit": min(limit, 10_000)},
         )
 
-    def read_after(
-        self,
-        shard_id: str,
-        position: str | None,
-        limit: int,
-        strict: bool = False,
-        stop_after: int | None = None,
-        persist: bool = False,
-    ) -> list[dict]:
-        """Up to `limit` records strictly after `position` (None =
-        shard start). Stops at a caught-up shard (empty page with
-        MillisBehindLatest 0) or a closed one (no NextShardIterator).
-        A behind-tip shard may serve empty pages while the iterator
-        seeks (a sparse or aged stream region serves MANY); the three
-        empty-page policies, by call site:
-
-        - default (lenient): return what we have after _MAX_EMPTY_POLLS
-          empties — fine for PACED tip discovery, whose walk start is
-          an instance-derived floor >= every committed position, so an
-          early end can never plan a duplicate range;
-        - ``strict=True``: RAISE — required for a planned EXECUTOR
-          range, where returning early would silently drop committed
-          records; the failed task retries (task retry is real there,
-          unlike a driver-side source call, which would kill the query);
-        - ``persist=True``: keep polling through empty pages until
-          caught up — required for UNPACED driver walks (restart
-          carry-over, LATEST resolution), which have no committed floor
-          and whose early return would log a stale end below committed
-          records (the next batch would then re-emit them). Each empty
-          page still advances the shard iterator, so the walk
-          provably progresses; _PERSIST_EMPTY_CAP bounds the
-          pathological non-advancing endpoint."""
-        return list(
-            self.iter_after(
-                shard_id,
-                position,
-                limit,
-                strict=strict,
-                stop_after=stop_after,
-                persist=persist,
-            )
-        )
+    def read_after(self, shard_id: str, position: str | None, limit: int) -> list[dict]:
+        """``iter_after``'s records as a list, lenient."""
+        return list(self.iter_after(shard_id, position, limit))
 
     def iter_after(
         self,
@@ -384,10 +321,25 @@ class KinesisClient:
         stop_after: int | None = None,
         persist: bool = False,
     ):
-        """Generator form of read_after — yields one GetRecords PAGE's
-        records at a time, so an executor streaming a huge planned
-        range (first TRIM_HORIZON batch, post-restart catch-up) holds
-        at most one page in memory instead of the whole range."""
+        """Up to `limit` records strictly after `position` (None =
+        shard start), one GetRecords page in memory at a time. Stops at
+        a caught-up shard (a page with MillisBehindLatest 0) or a closed
+        one (no NextShardIterator). A behind-tip shard may serve empty
+        pages while the iterator seeks (a sparse or aged stream region
+        serves MANY); the three empty-page policies, by call site:
+
+        - default (lenient): stop after _MAX_EMPTY_POLLS empties — the
+          stream reader's ``read``, whose end offset is the last record
+          returned, so an early stop only defers records to the next
+          trigger;
+        - ``strict=True``: RAISE — a replay of a logged range, where
+          returning early would silently drop records;
+        - ``persist=True``: keep polling through empty pages until
+          caught up — LATEST's tip resolution, whose early return would
+          start the query below records that already existed. Each
+          empty page still advances the shard iterator, so the walk
+          provably progresses; _PERSIST_EMPTY_CAP bounds the
+          pathological non-advancing endpoint."""
         it = self.shard_iterator(shard_id, position)
         n = 0
         empty = 0
@@ -403,6 +355,8 @@ class KinesisClient:
                 and int(recs[-1]["SequenceNumber"]) >= stop_after
             ):
                 break  # planned range fully covered — don't walk to tip
+            if recs and page.get("MillisBehindLatest") == 0:
+                break  # caught up: a further page would come back empty
             if not recs:
                 empty += 1
                 if page.get("MillisBehindLatest", 0) == 0:
@@ -483,9 +437,7 @@ def _client_put_records(
                 # resubmit in ~ms and failing the task; the Spark task
                 # retry would then re-PutRecords the whole partition,
                 # duplicating records already delivered.
-                import time as _time
-
-                _time.sleep(min(client.backoff_s * (2**_attempt), 5.0))
+                time.sleep(min(client.backoff_s * (2**_attempt), 5.0))
         if pending:
             raise RuntimeError(
                 f"PutRecords: {len(pending)} records still failing after "
@@ -589,11 +541,32 @@ class KinesisLiteReader(DataSourceReader):
 
 
 # ---------------------------------------------------------------------------
-# Stream reader: per-shard sequence-number offsets
+# Stream reader: per-shard sequence-number offsets, read on the driver
 # ---------------------------------------------------------------------------
 
+# records per shard per trigger when max_records_per_trigger is 0 or
+# absent: one GetRecords page, never the whole retention window
+_TRIGGER_CAP = 10_000
+_UNBOUNDED = 1 << 62  # no record limit: the tip or stop_after ends the read
 
-class KinesisLiteStreamReader(DataSourceStreamReader):
+
+def _per_shard(fn, shards: list[str]) -> dict:
+    """``{shard: fn(shard)}``, the shards read concurrently on up to 8
+    threads, so a poll takes the slowest shard's time, not the sum."""
+    if not shards:
+        return {}
+    with concurrent.futures.ThreadPoolExecutor(min(len(shards), 8)) as pool:
+        return dict(zip(shards, pool.map(fn, shards)))
+
+
+class KinesisLiteStreamReader(SimpleDataSourceStreamReader):
+    """Offsets are ``{"shards": {shard_id: last sequence number read}}``,
+    ``""`` for a shard read from its start. ``read(start)`` fetches at
+    most ``max_records_per_trigger`` records per shard past ``start``;
+    ``readBetweenOffsets`` replays a logged batch after a restart. The
+    engine passes the committed offset into every call, so the reader
+    keeps no position of its own."""
+
     def __init__(self, options: dict):
         self.options = dict(options)
         self.mode = options.get("decode", "utf8")
@@ -601,228 +574,64 @@ class KinesisLiteStreamReader(DataSourceStreamReader):
         if self.start not in ("TRIM_HORIZON", "LATEST"):
             raise ValueError(f"unknown starting_position {self.start!r}")
         self._client = KinesisClient(self.options)
-        # per-shard per-trigger catch-up cap. 0/absent = unpaced (full tip).
-        self.per_trigger = int(options.get("max_records_per_trigger", 0))
-        # walk-start cache ONLY: latestOffset always walks to the true
-        # tip (or a PACED prefix of it — see _paced below), so this
-        # instance-local state never changes an answer — it just
-        # shortens the walk (the engine may serve initialOffset and
-        # latestOffset from different reader instances, so nothing
-        # correctness-bearing may live here)
-        self._positions: dict[str, str | None] = {}
-        # Shards whose cached position is INSTANCE-DERIVED (established
-        # by this instance's initialOffset or a prior full walk). Only
-        # these may be paced: within one instance the engine's committed
-        # start is always a previous latestOffset()/initialOffset()
-        # return of this same instance, so a capped walk from the cached
-        # position can never stop below it. A restarted instance has no
-        # such floor — its FIRST walk per shard must reach the true tip
-        # (one unpaced catch-up batch, the price of restart-exactness;
-        # the duplicate bug a cursor-derived shortcut causes is pinned
-        # in tests/test_kinesis_lite.py), after which pacing resumes.
-        self._paced: set[str] = set()
-
-    def _snapshot(self) -> dict:
-        # offsets must be JSON round-trippable; None (shard start)
-        # serializes as "" and deserializes back to None
-        return {
-            "shards": {
-                s: ("" if p is None else p)
-                for s, p in sorted(self._positions.items())
-            }
-        }
-
-    @staticmethod
-    def _load(offset: dict) -> dict[str, str | None]:
-        return {
-            s: (None if p == "" else p)
-            for s, p in offset.get("shards", {}).items()
-        }
-
-    def _walk_to_tip(
-        self, shard: str, start: str | None, cap: int | None = None
-    ) -> str | None:
-        """Last sequence number of a shard at most `cap` records past
-        `start` (None cap = the true current tip; walk bounded by
-        retention). Fresh client per call — walks run concurrently.
-
-        UNPACED walks (cap None — restart carry-over, brand-new shard,
-        LATEST resolution) run PERSISTENT: an early return after a few
-        empty behind-tip pages could land BELOW a committed start the
-        restarted instance cannot see, and once the engine logs that
-        stale end the next batch (stale_end, new_tip] re-emits
-        already-committed records. A sparse or aged stream region
-        legitimately serves MANY empty pages while the iterator seeks
-        (so raising here — a driver-side source call, where no task
-        retry exists — would kill the query); persist keeps polling
-        until caught up, guaranteed to progress because every page
-        advances the iterator. PACED walks start from an
-        instance-derived floor ≥ every committed position, so their
-        early return is always ≥ committed and stays lenient."""
-        client = KinesisClient(self.options)
-        last = start
-        remaining = cap
-        while remaining is None or remaining > 0:
-            page = min(10_000, remaining) if remaining is not None else 10_000
-            recs = client.read_after(shard, last, page, persist=cap is None)
-            if not recs:
-                return last
-            last = recs[-1]["SequenceNumber"]
-            if remaining is not None:
-                remaining -= len(recs)
-        return last
-
-    def _walk_all(self, targets: dict[str, tuple[str | None, int | None]]):
-        """Concurrent tip walks: {shard: (start, cap)} -> {shard: tip}.
-        One thread per shard, at most _WALK_THREADS — driver poll latency
-        is max over shards, not the serial sum. Completed walks are CACHED
-        into self._positions before any failure propagates: on a
-        many-shard stream where one shard's walk dies (throttle-retry
-        exhaustion, the persist cap), the other shards' possibly
-        retention-length walks must not be thrown away — the retry then
-        RESUMES from their tips instead of re-walking every shard."""
-        if not targets:
-            return {}
-        workers = min(len(targets), _WALK_THREADS)
-        with concurrent.futures.ThreadPoolExecutor(workers) as pool:
-            futs = {
-                s: pool.submit(self._walk_to_tip, s, p, c)
-                for s, (p, c) in targets.items()
-            }
-            done: dict[str, str | None] = {}
-            first_exc: BaseException | None = None
-            for s, f in futs.items():
-                try:
-                    done[s] = f.result()
-                except BaseException as e:  # noqa: BLE001 - re-raised below
-                    if first_exc is None:
-                        first_exc = e
-            self._positions.update(done)
-            if first_exc is not None:
-                raise first_exc
-            return done
+        cap = int(options.get("max_records_per_trigger", 0))
+        self.cap = cap if cap > 0 else _TRIGGER_CAP
 
     def initialOffset(self) -> dict:
-        listed = self._client.list_shards()
-        if self.start == "LATEST":
-            # resolve "now" to concrete sequence numbers by draining
-            # what already exists (bounded by retention) — LATEST means
-            # "only records produced after the query started", and a
-            # concrete per-shard cursor is what makes that exact.
-            # Resume each walk from the instance cache (forward-only).
-            self._positions.update(
-                self._walk_all(
-                    {s: (self._positions.get(s), None) for s in listed}
-                )
-            )
-            self._paced |= set(listed)
-            return self._snapshot()
-        # TRIM_HORIZON: the ANSWER is the shard start for every shard,
-        # but the instance walk cache must NOT be reset to it — the
-        # engine calls latestOffset BEFORE initialOffset on a fresh
-        # query (measured; see the module docstring), so the cache may
-        # already hold tips this instance returned as a batch end.
-        # Clobbering it to None would let the next CAPPED walk stop
-        # below that logged end, the offset log would step backwards,
-        # and the batch after the stale-clamp would re-read committed
-        # records (the duplicate bug pinned in
-        # test_engine_pacing_engages_from_second_trigger).
-        for shard in listed:
-            self._positions.setdefault(shard, None)
-            self._paced.add(shard)
-        return {"shards": {s: "" for s in sorted(listed)}}
+        shards = self._client.list_shards()
+        if self.start == "TRIM_HORIZON":
+            return {"shards": {s: "" for s in shards}}
 
-    def latestOffset(self) -> dict:
-        # resharding: shards that appeared since the last trigger join
-        # at TRIM_HORIZON; shards the service no longer lists (closed
-        # parents aged out of retention) are PRUNED — keeping them
-        # would poll a deleted shard every trigger and eventually crash
-        # on its ResourceNotFoundException
-        listed = self._client.list_shards()
-        self._positions = {
-            shard: self._positions.get(shard) for shard in listed
-        }
-        self._paced &= set(listed)
-        cap = self.per_trigger if self.per_trigger > 0 else None
-        self._positions.update(
-            self._walk_all(
-                {
-                    # pacing applies only to instance-derived cursors
-                    # (see _paced); a shard first seen by this instance
-                    # mid-stream is either brand-new (no committed
-                    # position exists, so any end is safe) or a restart
-                    # carry-over (committed position unknown, so the
-                    # walk MUST reach the true tip) — the uncapped walk
-                    # is correct for both
-                    shard: (pos, cap if shard in self._paced else None)
-                    for shard, pos in self._positions.items()
-                }
-            )
+        # LATEST: each shard's current tip, walked once through what
+        # already exists. persist: an early stop would start the query
+        # below records that existed before it.
+        def tip(shard: str) -> str:
+            last = ""
+            for rec in self._client.iter_after(shard, None, _UNBOUNDED, persist=True):
+                last = rec["SequenceNumber"]
+            return last
+
+        return {"shards": _per_shard(tip, shards)}
+
+    def read(self, start: dict):
+        committed = start["shards"]
+        # re-listed per trigger: a shard new since `start` (a split or
+        # merge child) joins at TRIM_HORIZON, an unlisted one drops out
+        shards = self._client.list_shards()
+        got = _per_shard(
+            lambda s: self._client.read_after(s, committed.get(s) or None, self.cap),
+            shards,
         )
-        self._paced |= set(listed)
-        return self._snapshot()
+        # lenient read_after: `end` is the last record read, so a read
+        # that stops early still never falls below `start`
+        end = {
+            "shards": {
+                s: got[s][-1]["SequenceNumber"] if got[s] else committed.get(s, "")
+                for s in shards
+            }
+        }
+        if end == start:
+            # the same JSON as `start`, so the engine plans no batch
+            return iter(()), start
+        # a list iterator: Spark's wrapper copies it to serve the batch
+        return iter([_row(r, s, self.mode) for s in shards for r in got[s]]), end
 
-    def partitions(self, start: dict, end: dict):
-        lo, hi = self._load(start), self._load(end)
-        parts = []
-        for shard, end_seq in hi.items():
-            start_seq = lo.get(shard)
-            # STALE-END RECONCILIATION. A walked end can lag the
-            # COMMITTED `start` only via retention expiry: a restart
-            # after the stream's retention window lapsed, where the
-            # horizon walk ends below the offset log's position because
-            # every committed sequence number has aged out. (The other
-            # conceivable path — a transiently slow shard making an
-            # early empty-poll return below live committed records — is
-            # closed at the source: unpaced walks run read_after
-            # persist=True and keep polling to the true tip instead of
-            # returning a stale end; see _walk_to_tip.) The engine has
-            # already
-            # logged the stale end by the time we run, so the next
-            # batch will be planned as (stale_end, new_tip] — but that
-            # range cannot re-emit the committed records: every
-            # sequence number <= the committed start is gone from the
-            # stream (that is what made the walk stop early), and
-            # Kinesis sequence numbers are strictly increasing, so new
-            # arrivals all sort after it. Clamp this batch to empty and
-            # fast-forward the driver cursor to the committed position;
-            # the duplicate bug a LIVE-record lag would cause is pinned
-            # in tests/test_kinesis_lite.py.
-            stale = (
-                end_seq is None
-                or (start_seq is not None and int(end_seq) < int(start_seq))
-            )
-            if stale:
-                cur = self._positions.get(shard)
-                if start_seq is not None and (
-                    cur is None or int(cur) < int(start_seq)
-                ):
-                    self._positions[shard] = start_seq
+    def readBetweenOffsets(self, start: dict, end: dict):
+        """``(start, end]`` page by page. strict: a replay that stopped
+        short would silently drop records the offset log holds. Records
+        aged out of retention are not served, so they are not replayed."""
+        committed = start["shards"]
+        for shard, last in end["shards"].items():
+            first = committed.get(shard, "")
+            if last in ("", first):
                 continue
-            if end_seq != start_seq:
-                parts.append(InputPartition((shard, start_seq, end_seq)))
-        # Spark requires >= 1 partition per batch
-        return parts or [InputPartition((None, None, None))]
-
-    def read(self, partition: InputPartition):
-        shard_id, start_seq, end_seq = partition.value
-        if shard_id is None:
-            return
-        client = KinesisClient(self.options)
-        end_i = int(end_seq)
-        # the planned range is bounded, but GetRecords pages freely —
-        # stream page by page (one page in memory, not the whole range)
-        # and cut at the committed end sequence; strict=True: a planned
-        # range must never be silently truncated
-        for rec in client.iter_after(
-            shard_id, start_seq, 1_000_000_000, strict=True, stop_after=end_i
-        ):
-            if int(rec["SequenceNumber"]) > end_i:
-                break
-            yield _row(rec, shard_id, self.mode)
-
-    def commit(self, end: dict) -> None:
-        pass
+            stop = int(last)
+            for rec in self._client.iter_after(
+                shard, first or None, _UNBOUNDED, strict=True, stop_after=stop
+            ):
+                if int(rec["SequenceNumber"]) > stop:
+                    break
+                yield _row(rec, shard, self.mode)
 
 
 class KinesisLiteDataSource(DataSource):
@@ -831,8 +640,8 @@ class KinesisLiteDataSource(DataSource):
     SigV4), starting_position (TRIM_HORIZON | LATEST, streaming),
     max_records_per_shard (batch; a one-shot read that would exceed it
     RAISES unless truncate_at_limit=true), truncate_at_limit (batch),
-    max_records_per_trigger (streaming; per-shard per-trigger pacing,
-    0 = unpaced), decode (utf8 | base64)."""
+    max_records_per_trigger (streaming; records per shard per trigger,
+    0 or unset = 10,000), decode (utf8 | base64)."""
 
     @classmethod
     def name(cls) -> str:
@@ -847,7 +656,7 @@ class KinesisLiteDataSource(DataSource):
     def reader(self, schema) -> KinesisLiteReader:
         return KinesisLiteReader(self.options)
 
-    def streamReader(self, schema) -> KinesisLiteStreamReader:
+    def simpleStreamReader(self, schema) -> KinesisLiteStreamReader:
         return KinesisLiteStreamReader(self.options)
 
 

@@ -30,9 +30,11 @@ one declarative streaming plan:
   snapshots, ``KDS-P/lib/....ts:213-215``).
 
 At scale: source partitions (Kafka partitions / file chunks) set the
-parallelism; the only stateful pieces are the source offsets in the
-checkpoint — the pipeline itself is embarrassingly parallel, so it scales
-linearly with executors as long as the embedding backend keeps up.
+parallelism, and a Kinesis trigger's rows are spread round-robin over
+the default parallelism; the only stateful pieces are the source
+offsets in the checkpoint — the pipeline itself is embarrassingly
+parallel, so it scales linearly with executors as long as the embedding
+backend keeps up.
 """
 
 from __future__ import annotations
@@ -143,7 +145,7 @@ def build_source(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
             "access_key",
             "secret_key",
             "session_token",
-            # the restart-safe per-shard per-trigger catch-up cap
+            # records per shard per trigger (0 or unset: 10,000)
             "max_records_per_trigger",
             # throttle-backoff tuning (st34 fault-injection row shortens
             # the schedule; production leaves the defaults)
@@ -152,7 +154,14 @@ def build_source(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
         ):
             if cfg.extra.get(f"kinesis_{key}"):
                 reader = reader.option(key, str(cfg.extra[f"kinesis_{key}"]))
-        return reader.load().select(F.col("data").alias("value"))
+        # the reader hands each trigger over as one driver-read
+        # partition; spread it round-robin so embed and _bulk run on
+        # every core
+        return (
+            reader.load()
+            .select(F.col("data").alias("value"))
+            .repartition(spark.sparkContext.defaultParallelism)
+        )
     if cfg.source_format == "rate":
         # Load generator: fabricate wire-format JSON records at a fixed
         # rows/sec (stands in for the producer Lambda,

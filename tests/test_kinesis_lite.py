@@ -136,37 +136,110 @@ def test_stream_reader_offsets_ranges_and_resharding(fake):
     o0 = r.initialOffset()
     assert set(o0["shards"]) == {f"shardId-{i:012d}" for i in range(4)}
     assert all(p == "" for p in o0["shards"].values())
-    # latestOffset = the TRUE shard tip (the API contract: "most
-    # recent offset available")
-    o1 = r.latestOffset()
-    assert all(p == "9" for p in o1["shards"].values())  # 10 per shard
-    parts = r.partitions(o0, o1)
-    got = sorted((row[0], row[1]) for p in parts for row in r.read(p))
+    # one read per record: read(start) returns the rows and the offset
+    # of the last record it read (10 per shard, under the default cap)
+    rows, o1 = r.read(o0)
+    got = sorted((row[0], row[1]) for row in rows)
+    assert all(p == "9" for p in o1["shards"].values())
     assert len(got) == 40 and len(set(got)) == 40
-    # restart safety BY CONSTRUCTION: a fresh reader with no memory of
-    # the committed offsets still answers >= them (it answers the tip)
-    r2 = KinesisLiteStreamReader(opts)
-    o1b = r2.latestOffset()
-    assert o1b == o1
-    assert r2.partitions(o1, o1b) and [
-        row for p in r2.partitions(o1, o1b) for row in r2.read(p)
-    ] == []
+    # a restart replays the logged batch exactly
+    assert sorted((row[0], row[1]) for row in r.readBetweenOffsets(o0, o1)) == got
+    # restart safety BY CONSTRUCTION: a fresh reader given the committed
+    # offset has nothing left to read
+    rows, o1b = KinesisLiteStreamReader(opts).read(o1)
+    assert list(rows) == [] and o1b == o1
     # resharding: a shard appearing mid-stream joins at TRIM_HORIZON,
-    # and appended records move the tip
+    # and appended records move the offset
     srv.add_shard("shardId-000000000009", [("x", b"{}"), ("y", b"{}")])
     srv.append("shardId-000000000000", [("z", b"{}")])
-    o2 = r.latestOffset()
+    rows, o2 = r.read(o1)
     assert o2["shards"]["shardId-000000000009"] == "1"
     assert o2["shards"]["shardId-000000000000"] == "10"
-    parts2 = r.partitions(o1, o2)
-    new_rows = sorted(
-        (row[0], row[1]) for p in parts2 for row in r.read(p)
-    )
+    new_rows = sorted((row[0], row[1]) for row in rows)
     assert new_rows == [
         ("shardId-000000000000", "10"),
         ("shardId-000000000009", "0"),
         ("shardId-000000000009", "1"),
     ]
+    assert sorted((row[0], row[1]) for row in r.readBetweenOffsets(o1, o2)) == new_rows
+
+
+def test_fresh_reader_reads_only_after_the_committed_offset(fake):
+    """Restart-safe by construction: a new reader instance, given the
+    offset the engine committed, returns only the records after it —
+    paced from its first read, with nothing re-read."""
+    srv, url = fake
+    opts = {"stream_name": "docs", "endpoint_url": url, "max_records_per_trigger": "3"}
+    first = KinesisLiteStreamReader(opts)
+    rows, committed = first.read(first.initialOffset())
+    assert len(list(rows)) == 12
+    srv.append("shardId-000000000000", [("late", b"{}")])
+    rows, end = KinesisLiteStreamReader(opts).read(committed)
+    got = sorted((row[0], row[1]) for row in rows)
+    assert got == sorted(
+        (f"shardId-{i:012d}", str(n)) for i in range(4) for n in (3, 4, 5)
+    )
+    assert all(p == "5" for p in end["shards"].values())
+
+
+def test_read_without_a_cap_is_bounded_to_one_page_per_shard():
+    """No max_records_per_trigger never means the whole retention
+    window through the driver: a shard holding 25,000 records yields
+    at most 10,000 on the first read, and the rest on later reads."""
+    srv = FakeKinesisServer(
+        "docs", {"shardId-000000000000": [("k", b"x")] * 25_000}
+    )
+    url = srv.start()
+    try:
+        r = KinesisLiteStreamReader({"stream_name": "docs", "endpoint_url": url})
+        rows, end = r.read(r.initialOffset())
+        assert len(list(rows)) == 10_000
+        assert end["shards"]["shardId-000000000000"] == "9999"
+        rows, end = r.read(end)
+        assert len(list(rows)) == 10_000
+        rows, end = r.read(end)
+        assert len(list(rows)) == 5_000
+        assert end["shards"]["shardId-000000000000"] == "24999"
+    finally:
+        srv.stop()
+
+
+def test_a_caught_up_page_ends_the_shard_read(fake, monkeypatch):
+    """A page that reports MillisBehindLatest 0 is the tip: the read
+    stops there instead of asking for a page that would come back
+    empty, so a trigger costs one GetRecords call per shard."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources import (
+        kinesis_lite as kl,
+    )
+
+    srv, url = fake
+    calls = []
+    orig = kl.KinesisClient.get_records
+    monkeypatch.setattr(
+        kl.KinesisClient,
+        "get_records",
+        lambda self, it, limit: calls.append(it) or orig(self, it, limit),
+    )
+    r = KinesisLiteStreamReader({"stream_name": "docs", "endpoint_url": url})
+    rows, _ = r.read(r.initialOffset())
+    assert len(list(rows)) == 40
+    assert len(calls) == 4
+
+
+def test_idle_read_returns_the_start_offset_unchanged(fake):
+    """With nothing new, read(end) returns no rows and an offset whose
+    JSON is exactly end's, so Spark plans no empty batch."""
+    import json
+
+    srv, url = fake
+    r = KinesisLiteStreamReader({"stream_name": "docs", "endpoint_url": url})
+    _, end = r.read(r.initialOffset())
+    # the engine hands offsets back through JSON
+    start = json.loads(json.dumps(end))
+    rows, again = r.read(start)
+    assert list(rows) == []
+    assert json.dumps(again) == json.dumps(start)
+    assert json.dumps(again, sort_keys=True) == json.dumps(end, sort_keys=True)
 
 
 def test_latest_starting_position_skips_preexisting(fake):
@@ -180,15 +253,14 @@ def test_latest_starting_position_skips_preexisting(fake):
     )
     o0 = r.initialOffset()
     assert all(p == "9" for p in o0["shards"].values())
-    # nothing new -> latestOffset does not move, no partitions planned
-    o1 = r.latestOffset()
-    assert o1 == o0
-    parts = r.partitions(o0, o1)
-    assert [row for p in parts for row in r.read(p)] == []
+    # nothing new -> the offset does not move and no rows come back
+    rows, o1 = r.read(o0)
+    assert list(rows) == [] and o1 == o0
     # appended records after start ARE picked up
     srv.append("shardId-000000000000", [("z", b"{}")])
-    o2 = r.latestOffset()
+    rows, o2 = r.read(o1)
     assert o2["shards"]["shardId-000000000000"] == "10"
+    assert [(row[0], row[1]) for row in rows] == [("shardId-000000000000", "10")]
 
 
 def test_spark_batch_read_shard_parallel(spark, fake):
@@ -211,7 +283,7 @@ def test_spark_batch_read_shard_parallel(spark, fake):
 
 def test_spark_streaming_exactly_once_multi_batch(spark):
     # arrival simulation: each trigger's ListShards reveals 2 more
-    # records per shard, so the tip-based reader sees a GROWING stream
+    # records per shard, so the reader sees a GROWING stream
     # and needs several micro-batches to drain it
     srv = FakeKinesisServer("docs", _seeded_shards(), reveal_per_list=2)
     url = srv.start()
@@ -273,6 +345,9 @@ def test_pipeline_source_format_kinesis_lite_end_to_end(spark, fake):
     )
     raw = build_source(spark, cfg)
     assert raw.columns == ["value"]
+    # each trigger is one driver-read partition, spread round-robin
+    plan = raw._jdf.queryExecution().logical().toString()
+    assert f"Repartition {spark.sparkContext.defaultParallelism}, true" in plan
     rows = run_until_rows(
         raw, "kinesis_lite_cfg", "append", target_rows=40
     ).collect()
@@ -281,16 +356,11 @@ def test_pipeline_source_format_kinesis_lite_end_to_end(spark, fake):
     assert wire0 in {r.value for r in rows}
 
 
-def test_engine_pacing_engages_from_second_trigger(spark, fake):
-    """The ENGINE-LEVEL pacing contract (measured Spark 4.1 behavior
-    the module docstring documents): the engine's first call on a new
-    reader is latestOffset — BEFORE initialOffset even on a fresh
-    query — so the first trigger must take the whole backlog (a capped
-    first walk could sit below a restart's committed position and
-    re-emit committed records). From the second trigger onward,
-    max_records_per_trigger caps each shard's advance. Pinned here so
-    an engine upgrade that changes the call order (and would let the
-    first batch pace too) is noticed."""
+def test_engine_pacing_from_first_trigger(spark, fake):
+    """The ENGINE-LEVEL pacing contract: the engine passes the
+    committed offset into read(), so max_records_per_trigger caps each
+    shard's advance from the first trigger on — the 40-record backlog
+    drains at 4 per shard per trigger over 4 shards."""
     import os
     import tempfile
     import time
@@ -322,9 +392,9 @@ def test_engine_pacing_engages_from_second_trigger(spark, fake):
                 time.sleep(0.2)
             assert spark.table("kl_pace_t").count() >= n
 
-        # trigger 1: the whole 40-record backlog, unpaced by design
+        # the 40-record backlog: >= 3 paced triggers
         wait_rows(40)
-        # post-backlog arrivals ARE paced: 24 new records at 4/shard
+        # later arrivals pace the same way: 24 new records at 4/shard
         # per trigger over 4 shards = >= 2 more non-empty triggers
         for i in range(24):
             _, wire = wire_record(42, 500 + i)
@@ -334,9 +404,8 @@ def test_engine_pacing_engages_from_second_trigger(spark, fake):
         q.stop()
         q.awaitTermination()
     sizes = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
-    assert sizes[0] == 40, sizes
-    paced = sizes[1:]
-    assert len(paced) >= 2 and all(s <= 16 for s in paced), sizes
+    assert sizes[0] == 16, sizes
+    assert len(sizes) >= 5 and all(s <= 16 for s in sizes), sizes
     rows = spark.table("kl_pace_t").collect()
     assert len({(r.shard_id, r.sequence_number) for r in rows}) == 64
 
@@ -414,13 +483,11 @@ def test_shard_split_lifecycle_closed_parent_and_children(fake):
     """SplitShard lifecycle: the parent closes (its iterator ENDS — no
     NextShardIterator after the frozen remainder), children surface on
     the next shard listing and are read from TRIM_HORIZON; the closed
-    parent's tip stops moving and nothing is lost or duplicated."""
+    parent's offset stops moving and nothing is lost or duplicated."""
     srv, url = fake
     r = KinesisLiteStreamReader({"stream_name": "docs", "endpoint_url": url})
-    o0 = r.initialOffset()
-    o1 = r.latestOffset()
-    drained = [row for p in r.partitions(o0, o1) for row in r.read(p)]
-    assert len(drained) == 40
+    rows, o1 = r.read(r.initialOffset())
+    assert len(list(rows)) == 40
 
     srv.split_shard(
         "shardId-000000000000",
@@ -437,23 +504,19 @@ def test_shard_split_lifecycle_closed_parent_and_children(fake):
     with pytest.raises(ValueError):
         srv.append("shardId-000000000000", [("x", b"{}")])
 
-    o2 = r.latestOffset()
-    assert o2["shards"]["shardId-000000000000"] == "9"  # frozen tip
+    rows, o2 = r.read(o1)
+    assert o2["shards"]["shardId-000000000000"] == "9"  # frozen
     assert o2["shards"]["shardId-000000000010"] == "1"
     assert o2["shards"]["shardId-000000000011"] == "0"
-    new_rows = sorted(
-        (row[0], row[1])
-        for p in r.partitions(o1, o2)
-        for row in r.read(p)
-    )
+    new_rows = sorted((row[0], row[1]) for row in rows)
     assert new_rows == [
         ("shardId-000000000010", "0"),
         ("shardId-000000000010", "1"),
         ("shardId-000000000011", "0"),
     ]
-    # a further trigger with no new data plans nothing
-    o3 = r.latestOffset()
-    assert o3 == o2
+    # a further trigger with no new data reads nothing
+    rows, o3 = r.read(o2)
+    assert list(rows) == [] and o3 == o2
 
 
 def test_deleted_shards_are_pruned_from_offsets(fake):
@@ -462,14 +525,13 @@ def test_deleted_shards_are_pruned_from_offsets(fake):
     is a ResourceNotFoundException that would fail every trigger)."""
     srv, url = fake
     r = KinesisLiteStreamReader({"stream_name": "docs", "endpoint_url": url})
-    r.initialOffset()
-    o1 = r.latestOffset()
+    _, o1 = r.read(r.initialOffset())
     assert "shardId-000000000003" in o1["shards"]
     # simulate the service deleting the shard entirely
     with srv._lock:
         del srv._shards["shardId-000000000003"]
         del srv._visible["shardId-000000000003"]
-    o2 = r.latestOffset()
+    _, o2 = r.read(o1)
     assert "shardId-000000000003" not in o2["shards"]
 
 
@@ -491,11 +553,10 @@ def test_reveal_does_not_rehide_closed_shard_remainder():
         srv.stop()
 
 
-def test_tip_walks_run_concurrently_across_shards(monkeypatch):
-    """The r11 verdict's scale caveat: latestOffset used to walk shards
-    SERIALLY, so driver poll latency grew with shard count. The walk is
-    now a bounded thread pool — with 16 shards and the default pool of
-    8, GetRecords calls from distinct shards must overlap in time."""
+def test_shards_are_read_concurrently(monkeypatch):
+    """read() polls shards on a bounded thread pool, so a trigger takes
+    the slowest shard's time rather than the sum: with 16 shards and a
+    pool of 8, GetRecords calls from distinct shards overlap."""
     import threading
     import time
 
@@ -527,38 +588,34 @@ def test_tip_walks_run_concurrently_across_shards(monkeypatch):
 
         monkeypatch.setattr(kl.KinesisClient, "get_records", tracked)
         r = KinesisLiteStreamReader({"stream_name": "docs", "endpoint_url": url})
-        r.initialOffset()
-        o1 = r.latestOffset()
+        rows, o1 = r.read(r.initialOffset())
+        assert len(list(rows)) == 48
         assert all(p == "2" for p in o1["shards"].values())
         assert state["max"] >= 4, (
-            f"tip walks did not overlap (max concurrency {state['max']})"
+            f"shard reads did not overlap (max concurrency {state['max']})"
         )
     finally:
         srv.stop()
 
 
 def test_paced_catchup_first_batch_bounded_and_exactly_once(fake):
-    """max_records_per_trigger caps each shard's per-trigger advance
-    once the instance has a floor (here: initialOffset called first,
-    the DIRECT-API order; the real engine calls latestOffset first, so
-    engine-level pacing starts at trigger 2 — see
-    test_engine_pacing_engages_from_second_trigger): a 40-record
-    backlog drains in >= 4 capped batches instead of one unbounded
-    one, every record exactly once."""
+    """max_records_per_trigger caps each shard's advance per read: a
+    40-record backlog drains in >= 4 capped batches instead of one
+    unbounded one, every record exactly once — and a restarted reader
+    paces from its first read too."""
     srv, url = fake
-    r = KinesisLiteStreamReader(
-        {
-            "stream_name": "docs",
-            "endpoint_url": url,
-            "max_records_per_trigger": "3",
-        }
-    )
+    opts = {
+        "stream_name": "docs",
+        "endpoint_url": url,
+        "max_records_per_trigger": "3",
+    }
+    r = KinesisLiteStreamReader(opts)
     prev = r.initialOffset()
     seen: list[tuple[str, str]] = []
     batches = 0
     while True:
-        cur = r.latestOffset()
-        rows = [row for p in r.partitions(prev, cur) for row in r.read(p)]
+        rows, cur = r.read(prev)
+        rows = list(rows)
         if not rows and cur == prev:
             break
         batches += 1
@@ -569,30 +626,16 @@ def test_paced_catchup_first_batch_bounded_and_exactly_once(fake):
     assert len(seen) == 40 and len(set(seen)) == 40
     assert batches >= 4, f"pacing should take >=4 batches, took {batches}"
 
-    # RESTART mid-stream: a fresh instance has no committed floor, so
-    # its first walk ignores the cap and answers the true tip (the
-    # restart-exactness contract) — then pacing resumes.
+    # RESTART mid-stream: a fresh instance given the committed offset
+    # reads only what came after it, at most the cap per shard
     srv.append("shardId-000000000000", [(str(100 + i), b"{}") for i in range(9)])
-    r2 = KinesisLiteStreamReader(
-        {
-            "stream_name": "docs",
-            "endpoint_url": url,
-            "max_records_per_trigger": "3",
-        }
-    )
-    o_restart = r2.latestOffset()
-    assert o_restart["shards"]["shardId-000000000000"] == "18", (
-        "first post-restart walk must reach the true tip, not a capped "
-        "prefix below the (unknowable) committed position"
-    )
-    rows = [row for p in r2.partitions(prev, o_restart) for row in r2.read(p)]
-    assert sorted(row[1] for row in rows) == [str(i) for i in range(10, 19)]
-    # subsequent triggers ARE paced (instance floor now established)
-    srv.append("shardId-000000000000", [(str(200 + i), b"{}") for i in range(7)])
-    o_next = r2.latestOffset()
-    assert o_next["shards"]["shardId-000000000000"] == "21", (
-        "post-restart steady state must pace at max_records_per_trigger"
-    )
+    r2 = KinesisLiteStreamReader(opts)
+    rows, o_restart = r2.read(prev)
+    assert o_restart["shards"]["shardId-000000000000"] == "12"
+    assert sorted(row[1] for row in rows) == ["10", "11", "12"]
+    rows, o_next = r2.read(o_restart)
+    assert o_next["shards"]["shardId-000000000000"] == "15"
+    assert sorted(row[1] for row in rows) == ["13", "14", "15"]
 
 
 def test_batch_read_raises_on_silent_truncation(spark, fake):
@@ -733,10 +776,8 @@ def test_put_records_raises_when_subset_never_succeeds():
 
 def test_resharding_while_paced_adopts_then_paces(fake):
     """Pacing x resharding: a shard appearing mid-stream (split/merge)
-    while max_records_per_trigger is active gets ONE uncapped adoption
-    walk (it has no instance floor — and for a truly new shard no
-    committed position exists, so any end is safe), then paces like
-    the rest. Nothing lost, nothing duplicated."""
+    while max_records_per_trigger is active joins at TRIM_HORIZON and
+    paces like the rest. Nothing lost, nothing duplicated."""
     srv, url = fake
     r = KinesisLiteStreamReader(
         {
@@ -745,37 +786,29 @@ def test_resharding_while_paced_adopts_then_paces(fake):
             "max_records_per_trigger": "3",
         }
     )
-    prev = r.initialOffset()
     seen: list[tuple[str, str]] = []
 
     def drain_once(prev):
-        cur = r.latestOffset()
-        rows = [row for p in r.partitions(prev, cur) for row in r.read(p)]
+        rows, cur = r.read(prev)
+        rows = list(rows)
         seen.extend((row[0], row[1]) for row in rows)
         return cur, rows
 
-    prev, _ = drain_once(prev)  # paced batch 1 over the 40-record seed
+    prev, _ = drain_once(r.initialOffset())  # paced batch 1 of the seed
     # a new shard with 7 records surfaces mid-stream
     srv.add_shard(
         "shardId-000000000009", [(str(900 + i), b"{}") for i in range(7)]
     )
-    cur = r.latestOffset()
-    assert cur["shards"]["shardId-000000000009"] == "6", (
-        "adoption walk must take the new shard's full backlog (no "
-        "committed floor exists below it)"
+    prev, rows = drain_once(prev)
+    assert prev["shards"]["shardId-000000000009"] == "2", (
+        "a new shard joins at TRIM_HORIZON and paces at the cap"
     )
-    rows = [row for p in r.partitions(prev, cur) for row in r.read(p)]
-    seen.extend((row[0], row[1]) for row in rows)
-    prev = cur
-    # the new shard now paces with everyone else
+    assert [row[1] for row in rows if row[0] == "shardId-000000000009"] == [
+        "0", "1", "2",
+    ]
     srv.append("shardId-000000000009", [(str(950 + i), b"{}") for i in range(5)])
-    cur = r.latestOffset()
-    assert cur["shards"]["shardId-000000000009"] == "9", (
-        "post-adoption triggers must pace at max_records_per_trigger"
-    )
-    rows = [row for p in r.partitions(prev, cur) for row in r.read(p)]
-    seen.extend((row[0], row[1]) for row in rows)
-    prev = cur
+    prev, _ = drain_once(prev)
+    assert prev["shards"]["shardId-000000000009"] == "5"
     # drain the rest; exactly-once across the whole lifecycle
     for _ in range(30):
         cur, rows = drain_once(prev)
@@ -827,23 +860,25 @@ def test_get_records_backs_off_on_throughput_exceeded():
         hard.stop()
 
 
-def test_unpaced_walk_persists_through_empty_pages_behind_tip(monkeypatch):
+def test_latest_initial_offset_persists_through_empty_pages_behind_tip(monkeypatch):
     """A shard serving empty GetRecords pages while still BEHIND TIP
     (sparse/aged stream regions do this for many consecutive pages)
-    must not make an UNPACED driver walk (restart carry-over / LATEST
-    resolution) return early: the early return can land below a
-    committed start the restarted instance cannot see, the engine logs
-    that stale end, and the next batch (stale_end, new_tip] re-emits
-    already-committed records. The unpaced walk PERSISTS — keeps
-    polling through far more than _MAX_EMPTY_POLLS empty pages until
-    the true tip (raising would be just as wrong: a driver-side source
-    failure kills the query, and empty behind-tip pages are normal). A
-    PACED walk starts from an instance-derived floor >= every committed
-    position, so its early return stays lenient."""
-    reader = KinesisLiteStreamReader(
-        {"stream_name": "docs", "endpoint_url": "http://127.0.0.1:1"}
+    must not make LATEST's tip walk stop early: the query would start
+    below records that existed before it. The walk PERSISTS through far
+    more than _MAX_EMPTY_POLLS empty pages until the true tip, and an
+    endpoint whose iterator never advances still raises rather than
+    return a below-tip start."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources import (
+        kinesis_lite as kl,
     )
 
+    reader = KinesisLiteStreamReader(
+        {
+            "stream_name": "docs",
+            "endpoint_url": "http://127.0.0.1:1",
+            "starting_position": "LATEST",
+        }
+    )
     served = {"pages": 0}
 
     def fake_get_records(self, it, limit):
@@ -869,16 +904,17 @@ def test_unpaced_walk_persists_through_empty_pages_behind_tip(monkeypatch):
         }
 
     monkeypatch.setattr(
+        KinesisClient, "list_shards", lambda self: ["shardId-000000000000"]
+    )
+    monkeypatch.setattr(
         KinesisClient, "shard_iterator", lambda self, s, p: "tok"
     )
     monkeypatch.setattr(KinesisClient, "get_records", fake_get_records)
-
-    # unpaced (cap None): pushes through the empty run to the true tip
-    assert reader._walk_to_tip("shardId-000000000000", "7", cap=None) == "99"
+    assert reader.initialOffset() == {"shards": {"shardId-000000000000": "99"}}
     assert served["pages"] >= 51
 
-    # paced (cap set): lenient — early return at the >=committed floor
-    served["pages"] = 0
+    # pathological endpoint (iterator never advances): the persist cap
+    # still refuses to return a below-tip start
     monkeypatch.setattr(
         KinesisClient,
         "get_records",
@@ -888,40 +924,47 @@ def test_unpaced_walk_persists_through_empty_pages_behind_tip(monkeypatch):
             "NextShardIterator": "tok",
         },
     )
-    assert reader._walk_to_tip("shardId-000000000000", "7", cap=5) == "7"
-
-    # pathological endpoint (iterator never advances): the persist cap
-    # still refuses to return a below-tip end
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources import (
-        kinesis_lite as kl,
-    )
-
     monkeypatch.setattr(kl, "_PERSIST_EMPTY_CAP", 20)
     with pytest.raises(RuntimeError, match="not advancing"):
-        reader._walk_to_tip("shardId-000000000000", "7", cap=None)
+        reader.initialOffset()
 
 
-def test_walk_all_keeps_completed_walks_when_one_shard_fails(monkeypatch):
-    """On a many-shard stream where ONE walk dies, the other shards'
-    (possibly retention-length) completed walks must be cached so the
-    retry RESUMES from their tips instead of re-walking everything."""
+def test_lenient_read_that_stops_early_never_ends_below_start(monkeypatch):
+    """read() gives up after _MAX_EMPTY_POLLS empty behind-tip pages
+    rather than block the trigger. That is safe because its end offset
+    is the last record it actually read: an early stop only defers
+    records to the next trigger, and the end never falls below start."""
+    pages = iter(
+        [
+            {
+                "Records": [
+                    {"SequenceNumber": "8", "PartitionKey": "k", "Data": ""}
+                ],
+                "MillisBehindLatest": 5000,
+                "NextShardIterator": "tok",
+            }
+        ]
+    )
+    empty = {"Records": [], "MillisBehindLatest": 5000, "NextShardIterator": "tok"}
+    monkeypatch.setattr(
+        KinesisClient, "list_shards", lambda self: ["shardId-000000000000"]
+    )
+    monkeypatch.setattr(
+        KinesisClient, "shard_iterator", lambda self, s, p: "tok"
+    )
+    monkeypatch.setattr(
+        KinesisClient, "get_records", lambda self, it, limit: next(pages, empty)
+    )
     reader = KinesisLiteStreamReader(
         {"stream_name": "docs", "endpoint_url": "http://127.0.0.1:1"}
     )
-
-    def fake_walk(self, shard, start, cap=None):
-        if shard == "bad":
-            raise RuntimeError("injected walk failure")
-        return "42"
-
-    monkeypatch.setattr(KinesisLiteStreamReader, "_walk_to_tip", fake_walk)
-    with pytest.raises(RuntimeError, match="injected"):
-        reader._walk_all(
-            {"a": (None, None), "bad": (None, None), "c": (None, None)}
-        )
-    assert reader._positions.get("a") == "42"
-    assert reader._positions.get("c") == "42"
-    assert "bad" not in reader._positions
+    start = {"shards": {"shardId-000000000000": "7"}}
+    rows, end = reader.read(start)
+    assert [row[1] for row in rows] == ["8"]
+    assert end == {"shards": {"shardId-000000000000": "8"}}
+    # only empty pages behind tip: nothing read, the offset stays put
+    rows, again = reader.read(end)
+    assert list(rows) == [] and again == end
 
 
 def test_put_records_resubmits_back_off_between_attempts(monkeypatch):
@@ -970,15 +1013,13 @@ def test_put_records_resubmits_back_off_between_attempts(monkeypatch):
 def test_merge_shards_lifecycle_both_parents_closed(fake):
     """MergeShards lifecycle (the half split_shard doesn't model): BOTH
     parents close with frozen remainders, the single merged child reads
-    from TRIM_HORIZON, and a consumer resuming from pre-merge cursors
+    from TRIM_HORIZON, and a consumer resuming from pre-merge offsets
     drains exactly the parents' unread remainders plus the child —
     nothing lost, nothing double-read into the child."""
     srv, url = fake
     r = KinesisLiteStreamReader({"stream_name": "docs", "endpoint_url": url})
-    o0 = r.initialOffset()
-    o1 = r.latestOffset()
-    drained = [row for p in r.partitions(o0, o1) for row in r.read(p)]
-    assert len(drained) == 40
+    rows, o1 = r.read(r.initialOffset())
+    assert len(list(rows)) == 40
 
     # remainder lands on parent A after the consumer's commit, before
     # the merge closes it
@@ -1005,15 +1046,14 @@ def test_merge_shards_lifecycle_both_parents_closed(fake):
             [],
         )
 
-    o2 = r.latestOffset()
+    rows, o2 = r.read(o1)
     assert o2["shards"]["shardId-000000000000"] == "10"  # remainder seen
     assert o2["shards"]["shardId-000000000012"] == "1"  # last seq of 2
-    new_rows = sorted(
-        (row[0], row[1]) for p in r.partitions(o1, o2) for row in r.read(p)
-    )
+    new_rows = sorted((row[0], row[1]) for row in rows)
     assert new_rows == [
         ("shardId-000000000000", "10"),
         ("shardId-000000000012", "0"),
         ("shardId-000000000012", "1"),
     ]
-    assert r.latestOffset() == o2  # quiescent after the drain
+    rows, o3 = r.read(o2)
+    assert list(rows) == [] and o3 == o2  # quiescent after the drain

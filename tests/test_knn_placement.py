@@ -234,3 +234,30 @@ def test_a_pack_build_does_not_hold_up_other_corpora(spark, monkeypatch):
     finally:
         corpus.unpersist()
         other.unpersist()
+
+
+def test_a_pack_build_holds_about_one_matrix(spark):
+    """Building a pack keeps the float64 matrix plus small per-block
+    temporaries: no index array per value, no second float64 copy, no
+    full-size M * M or cumsum. numpy's allocations are traced; Arrow's
+    are not."""
+    import tracemalloc
+
+    n, dim = 2000, 512
+    corpus = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array_repeat((F.col("id") % 7 + 1).cast("float"), dim).alias("embedding"),
+    )
+    corpus.cache().count()
+    try:
+        tracemalloc.start()
+        try:
+            _, matrices = similarity._build_pack(corpus, "vec_id", "embedding")
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        matrix = matrices[dim][1].nbytes
+        assert matrix == n * dim * 8
+        assert peak < 1.5 * matrix, (peak, matrix)
+    finally:
+        corpus.unpersist()
