@@ -12,6 +12,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+# model key -> (Bedrock model id, dimension): the reference's model map
+# (BedRockEmbeddingModelAsyncCustomMessage.java:80-85, lambda_function.py:58-61)
+TITAN_MODELS = {
+    "titan-v1": ("amazon.titan-embed-text-v1", 1536),
+    "titan-v2": ("amazon.titan-embed-text-v2:0", 1024),
+}
+LOCAL_MODEL = "local-deterministic"
+
 
 @dataclass(frozen=True)
 class PipelineConfig:
@@ -21,10 +29,10 @@ class PipelineConfig:
     - ``start_position``: Kinesis variant uses LATEST
       (``KDS-P/.../DataStreamJob.java:130``), MSK variant earliest
       (``MSK-S/.../DataStreamJob.java:132``) — configurable here.
-    - ``embedding_model``: 'titan-v1' -> 1536 dims, 'titan-v2' -> 1024 dims
-      (``.../BedRockEmbeddingModelAsyncCustomMessage.java:80-85``,
-      ``index-creation-function/lambda_function.py:58-61``). The
-      deterministic local embedder accepts any dim; tests use 64.
+    - ``embedding_model`` picks the model: a ``TITAN_MODELS`` key
+      (Bedrock, region and endpoint in ``extra["bedrock_region"]`` /
+      ``extra["bedrock_endpoint"]``) or 'local-deterministic', which
+      accepts any ``embedding_dim``; tests use 64.
     - ``on_error``: the reference emits null on failure
       (``BedRockEmbeddingModelAsyncCustomMessage.java:109-112``) which would
       NPE its own sink; the engine makes the policy explicit.
@@ -35,7 +43,7 @@ class PipelineConfig:
     kafka_bootstrap: str | None = None
     kafka_topic: str | None = None
     start_position: str = "latest"         # latest | earliest
-    embedding_model: str = "local-deterministic"
+    embedding_model: str = LOCAL_MODEL
     embedding_dim: int = 64
     embed_batch_size: int = 256
     on_error: str = "dead-letter"          # dead-letter | drop | fail
@@ -45,7 +53,12 @@ class PipelineConfig:
     trigger_interval: str | None = None    # None -> availableNow
     extra: dict = field(default_factory=dict)
 
-    MODEL_DIMS = {"titan-v1": 1536, "titan-v2": 1024}
-
     def resolved_dim(self) -> int:
-        return self.MODEL_DIMS.get(self.embedding_model, self.embedding_dim)
+        if self.embedding_model == LOCAL_MODEL:
+            return self.embedding_dim
+        if self.embedding_model not in TITAN_MODELS:
+            raise ValueError(
+                f"unknown embedding_model {self.embedding_model!r}; known: "
+                f"{sorted([LOCAL_MODEL, *TITAN_MODELS])}"
+            )
+        return TITAN_MODELS[self.embedding_model][1]

@@ -22,10 +22,15 @@ embed-and-index stage (streaming/sinks.py).
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import json
 import re
+import time
 import zlib
 from collections.abc import Iterator, Sequence
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from heapq import heappop, heappush
 
 import numpy as np
 import pandas as pd
@@ -33,15 +38,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StringType, StructField, StructType
 
+from ..config import TITAN_MODELS
+
 
 class DeterministicEmbedder:
     """Seedless, dependency-free text embedder: hashed bag-of-tokens.
 
     Each token is crc32-hashed into one of ``dim`` buckets with a
     deterministic weight; the vector is L2-normalized. Stands in for the
-    Titan models (1536-d v1 / 1024-d v2, reference model map
-    BedRockEmbeddingModelAsyncCustomMessage.java:80-85) so bench numbers
-    measure engine overhead, not a model API.
+    Titan models (``config.TITAN_MODELS``) so bench numbers measure
+    engine overhead, not a model API.
     """
 
     def __init__(self, dim: int = 64):
@@ -121,47 +127,46 @@ class Md5BowEmbedder:
         return out
 
 
+@functools.lru_cache(maxsize=None)
+def bedrock_client(region: str | None, endpoint_url: str | None):
+    """The process's bedrock-runtime client for ``region`` and
+    ``endpoint_url`` (None: the service's own). boto3 clients are
+    thread-safe and take a tenth of a second or more to build, so every
+    embedder with these settings shares one. Credentials come from
+    boto3's default chain. botocore's own retries are off: its loop
+    would sleep on a pool thread, under the embedder's delay heap."""
+    import boto3
+    from botocore.config import Config
+
+    return boto3.Session(region_name=region).client(
+        "bedrock-runtime",
+        endpoint_url=endpoint_url,
+        config=Config(retries={"total_max_attempts": 1}),
+    )
+
+
 class BedrockTitanEmbedder:
-    """Production adapter for Amazon Titan embeddings over HTTP.
+    """Amazon Titan embeddings over Bedrock: the reference's model map
+    (``config.TITAN_MODELS``), request body ``{"inputText": text}`` and
+    response ``embedding`` array
+    (BedRockEmbeddingModelAsyncCustomMessage.java:80-104).
 
-    Maps model keys exactly as the reference does ('titan-v1' ->
-    amazon.titan-embed-text-v1, 'titan-v2' -> amazon.titan-embed-text-v2:0;
-    BedRockEmbeddingModelAsyncCustomMessage.java:80-85) and sends the
-    reference's request body ``{"inputText": text}`` / reads the
-    ``embedding`` array from the response (:88-96, :99-104). One
-    ``invoke_model`` per text (the Titan embed API is single-input),
-    fanned out over a bounded thread pool inside each Arrow chunk —
-    the per-worker analogue of the reference's 1000-deep unordered
-    async pool (``DataStreamJob.java:148-154``): with sequential
-    invokes a Python worker's throughput is 1/latency regardless of
-    batch size, while ``max_concurrency`` in-flight calls per worker ×
-    partitions recovers the reference's envelope. Results stay in input
-    order (the pool maps, it doesn't race).
+    One ``invoke_model`` per text (the API is single-input), at most
+    ``max_concurrency`` in flight per batch — the per-worker analogue of
+    the reference's 1000-deep unordered async pool
+    (``DataStreamJob.java:148-154``). Results stay in input order.
 
-    Error handling goes beyond the reference (which logs and emits a
-    sink-crashing null, :109-112): transient failures retry with
-    exponential backoff; a text that still fails after ``max_retries``
-    becomes a per-row dead-letter via ``row_errors`` (picked up by
-    ``embed()``), so one poisoned document never fails its whole batch.
+    A failed call retries with exponential backoff; a text still failing
+    after ``max_retries`` is a per-row dead letter in ``row_errors``
+    (read by ``embed_chunk``), where the reference would emit a
+    sink-crashing null (:109-112). Backoff never parks a pool thread: a
+    failed attempt waits on a delay heap and then goes to the back of the
+    pool's queue, so healthy rows keep flowing through a throttling
+    episode (tests/test_embed.py pins that order).
 
-    Backoff never parks a pool thread: a failed attempt goes onto a
-    driver-side DELAY HEAP and is resubmitted to the back of the pool's
-    work queue once its backoff elapses, so every worker keeps serving
-    healthy rows while throttled rows wait — the same
-    no-slot-held-during-wait property as the reference's async pool
-    (DataStreamJob.java:148-154). Under sustained throttling the only
-    capacity the retries consume is their actual re-invocations
-    (tests/test_embed.py pins healthy-rows-before-second-attempt
-    ordering).
-
-    Requires boto3 at runtime unless a client is injected; this
-    container has no AWS SDK, so construction is gated.
+    Without an injected ``client`` the calls go through
+    ``bedrock_client(region, endpoint_url)``.
     """
-
-    MODEL_IDS = {
-        "titan-v1": "amazon.titan-embed-text-v1",
-        "titan-v2": "amazon.titan-embed-text-v2:0",
-    }
 
     def __init__(
         self,
@@ -171,28 +176,18 @@ class BedrockTitanEmbedder:
         max_retries: int = 3,
         retry_base_seconds: float = 0.5,
         max_concurrency: int = 32,
+        endpoint_url: str | None = None,
     ):
+        self.model_id, self.dim = TITAN_MODELS[model_key]
         if client is None:
-            try:
-                import boto3
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "BedrockTitanEmbedder requires boto3; use DeterministicEmbedder "
-                    "for local runs"
-                ) from e
-            client = boto3.Session(region_name=region).client("bedrock-runtime")
+            client = bedrock_client(region, endpoint_url)
         self._client = client
-        self.model_id = self.MODEL_IDS[model_key]
-        self.dim = {"titan-v1": 1536, "titan-v2": 1024}[model_key]
-        self._region = region
         self._max_retries = max_retries
         self._retry_base = retry_base_seconds
         self._max_concurrency = max(1, int(max_concurrency))
         self.row_errors: list[str | None] = []
 
     def _invoke_once(self, text: str) -> list[float]:
-        import json
-
         resp = self._client.invoke_model(
             modelId=self.model_id,
             body=json.dumps({"inputText": text}),
@@ -204,67 +199,40 @@ class BedrockTitanEmbedder:
         return [float(x) for x in payload["embedding"]]
 
     def embed_batch(self, texts: Sequence[str | None]) -> list[list[float] | None]:
-        """Embed a batch with bounded concurrency and NON-BLOCKING
-        retries. Scheduler shape: every pending attempt is a pool task;
-        a failed attempt with retries left goes onto a (ready_time,
-        row) delay heap instead of sleeping on its worker, and the
-        driver loop resubmits it to the back of the pool's queue when
-        its backoff elapses (waking early from ``wait`` exactly at the
-        next retry's ready time). Results land by row index, so output
-        and dead-letter alignment are order-independent."""
-        import time
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-        from heapq import heappop, heappush
-
+        """Every pending attempt is a pool task; a failed attempt with
+        retries left goes onto a (ready_time, seq, row) heap, and this
+        loop resubmits it when its backoff elapses, waking from ``wait``
+        at the next ready time. Results land by row index."""
         out: list[list[float] | None] = [None] * len(texts)
         errs: list[str | None] = [None] * len(texts)
         work = [(i, t) for i, t in enumerate(texts) if t is not None]
         if not work:
             self.row_errors = errs
             return out
-        with ThreadPoolExecutor(
-            max_workers=min(self._max_concurrency, len(work))
-        ) as pool:
-            in_flight = {
-                pool.submit(self._invoke_once, t): (i, t, 0) for i, t in work
-            }
+        with ThreadPoolExecutor(min(self._max_concurrency, len(work))) as pool:
+            in_flight = {pool.submit(self._invoke_once, t): (i, t, 0) for i, t in work}
             retry_heap: list[tuple[float, int, int, str, int]] = []
-            seq = 0  # heap tiebreaker; also preserves retry FIFO on equal ready times
+            seq = 0  # heap tiebreaker; keeps retries FIFO on equal ready times
             while in_flight or retry_heap:
-                now = time.monotonic()
-                while retry_heap and retry_heap[0][0] <= now:
+                while retry_heap and retry_heap[0][0] <= time.monotonic():
                     _, _, i, t, a = heappop(retry_heap)
                     in_flight[pool.submit(self._invoke_once, t)] = (i, t, a)
                 if not in_flight:
                     time.sleep(max(0.0, retry_heap[0][0] - time.monotonic()))
                     continue
                 timeout = (
-                    max(0.0, retry_heap[0][0] - time.monotonic())
-                    if retry_heap
-                    else None
+                    max(0.0, retry_heap[0][0] - time.monotonic()) if retry_heap else None
                 )
-                done, _ = wait(
-                    in_flight, timeout=timeout, return_when=FIRST_COMPLETED
-                )
+                done, _ = wait(in_flight, timeout=timeout, return_when=FIRST_COMPLETED)
                 for fut in done:
                     i, t, a = in_flight.pop(fut)
                     try:
                         out[i] = fut.result()
-                        errs[i] = None
                     except Exception as e:  # noqa: BLE001 - retried then dead-lettered
                         if a < self._max_retries:
                             seq += 1
-                            heappush(
-                                retry_heap,
-                                (
-                                    time.monotonic()
-                                    + self._retry_base * (2**a),
-                                    seq,
-                                    i,
-                                    t,
-                                    a + 1,
-                                ),
-                            )
+                            ready = time.monotonic() + self._retry_base * (2**a)
+                            heappush(retry_heap, (ready, seq, i, t, a + 1))
                         else:
                             errs[i] = f"{type(e).__name__}: {e}"
         self.row_errors = errs

@@ -50,6 +50,13 @@ commit. Spark plans the batch as one partition;
 ``streaming/pipeline.build_source`` fans it out with one round-robin
 ``repartition``. Batch reads (``KinesisLiteReader``) stay one partition
 per shard, read on the executors.
+
+A streaming query over this source needs a processing-time trigger.
+Under Spark's default trigger an idle query calls ``read`` every
+``spark.sql.streaming.pollingDelay`` (10 ms), and each call is one
+ListShards plus one GetShardIterator and one GetRecords per shard, past
+Kinesis's 5 calls per second per shard. ``run_pipeline`` always sets a
+trigger (``trigger_interval``, or availableNow when it is None).
 """
 
 from __future__ import annotations

@@ -8,10 +8,9 @@ provider, one NewTopic(name, num_partitions, replication_factor)).
 ``run_pipeline`` the same way sinks.ensure_knn_index runs before the
 first OpenSearch write.
 
-Import-gated like the other optional runtime deps (boto3, delta-spark):
-``kafka-python`` and — for IAM auth — ``aws-msk-iam-sasl-signer-python``
-are not in this container, so the gate raises a real error naming the
-packages instead of stubbing success. The option surface is unit-tested
+Import-gated like the delta sink: without ``kafka-python`` (and, for
+IAM auth, ``aws-msk-iam-sasl-signer-python``) the gate raises a real
+error naming the packages instead of stubbing success. The option surface is unit-tested
 (tests/test_streaming_pipeline.py) without a broker by injecting an
 admin-client factory.
 """

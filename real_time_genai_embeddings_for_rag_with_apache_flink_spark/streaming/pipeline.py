@@ -43,10 +43,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
-from ..config import PipelineConfig
-from ..operators.embed import DeterministicEmbedder, embed
+from ..config import LOCAL_MODEL, PipelineConfig
+from ..operators.embed import BedrockTitanEmbedder, DeterministicEmbedder, embed
 from ..operators.normalize import filter_nonempty_text, normalize, parse_raw
 from .sinks import foreach_batch_writer, opensearch_index
+
+
+def model_embedder_factory(cfg: PipelineConfig):
+    """The ``embedder_factory`` ``cfg.embedding_model`` names (the
+    reference's ``embedding.model`` switch): ``DeterministicEmbedder``,
+    or ``BedrockTitanEmbedder`` in ``extra["bedrock_region"]`` at
+    ``extra["bedrock_endpoint"]`` (None: the service's own). An unknown
+    key raises ValueError."""
+    cfg.resolved_dim()
+    if cfg.embedding_model == LOCAL_MODEL:
+        return DeterministicEmbedder
+    key, extra = cfg.embedding_model, cfg.extra
+    region, endpoint = extra.get("bedrock_region"), extra.get("bedrock_endpoint")
+    return lambda dim: BedrockTitanEmbedder(key, region=region, endpoint_url=endpoint)
 
 
 def kinesis_reader_options(cfg: PipelineConfig) -> dict[str, str]:
@@ -200,9 +214,10 @@ def build_pipeline(
     under 'drop', ``rows_dead_lettered`` counts the dropped rows; other
     sinks observe ``graft_embed`` only under 'dead-letter'.
 
-    ``embedder_factory`` defaults to the deterministic local embedder;
-    production passes a client-backed factory (the open()-once analogue,
-    operators/embed.py)."""
+    ``embedder_factory`` defaults to the one ``cfg.embedding_model``
+    names (``model_embedder_factory``); an injected factory (tests, the
+    benchmark's fake Titan service) replaces it."""
+    embedder_factory = embedder_factory or model_embedder_factory(cfg)
     raw = build_source(spark, cfg)
     msg = parse_raw(raw, "value")
     # Observed metrics (Spark Observation API): per-trigger operational
@@ -222,7 +237,6 @@ def build_pipeline(
     doc = doc.observe(
         "graft_docs", F.count(F.lit(1)).alias("rows_nonempty")
     )
-    embedder_factory = embedder_factory or DeterministicEmbedder
     if cfg.sink_format == "opensearch":
         # the status rows carry every row's error under every policy, so
         # under 'drop' rows_dead_lettered counts the rows dropped
@@ -339,6 +353,7 @@ def run_pipeline(
     ensure_knn_index. Knobs: extra.topic_partitions,
     extra.topic_replication_factor, extra.msk_region (IAM auth),
     extra.kafka_admin_factory (test injection)."""
+    embedder_factory = embedder_factory or model_embedder_factory(cfg)
     if cfg.source_format == "kafka" and cfg.extra.get("bootstrap_topic"):
         from .kafka_admin import ensure_topic
 

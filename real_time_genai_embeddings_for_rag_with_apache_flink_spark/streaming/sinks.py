@@ -127,8 +127,7 @@ def knn_index_body(dimension: int) -> dict:
     knn_vector passage_embedding with hnsw(l2, nmslib,
     ef_construction=128, m=24), date + text fields, knn enabled, 5
     shards, 1 replica. Dimension follows the embedding model
-    (titan-v1 -> 1536, titan-v2 -> 1024, lambda_function.py:58-61 /
-    PipelineConfig.resolved_dim)."""
+    (lambda_function.py:58-61; PipelineConfig.resolved_dim)."""
     return {
         "mappings": {
             "properties": {

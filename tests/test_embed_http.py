@@ -7,19 +7,27 @@ These tests stand up a threaded http.server speaking the Titan
 response shape ({"embedding": [...]}, the reference's wire contract,
 BedRockEmbeddingModelAsyncCustomMessage.java:88-104) and drive the
 embedder through a minimal urllib client that performs a real POST:
-the only faked thing is the far end of the socket. boto3 is not
-required — the client parameter is the adapter's injection seam.
+the only faked thing is the far end of the socket. The last tests go
+through the adapter's own boto3 client (``endpoint_url`` at the stub,
+dummy credentials from the environment), up to the whole job run by
+the CLI.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
 import threading
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
+from real_time_genai_embeddings_for_rag_with_apache_flink_spark.config import (
+    PipelineConfig,
+)
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
     BedrockTitanEmbedder,
 )
@@ -29,9 +37,19 @@ def _stub_vector(text: str, dim: int = 4) -> list[float]:
     return [float((len(text) + i) % 7) for i in range(dim)]
 
 
+# dummy credentials for boto3's default chain; with them the chain
+# stops at the environment and never asks an instance metadata service
+AWS_ENV = {
+    "AWS_ACCESS_KEY_ID": "test",
+    "AWS_SECRET_ACCESS_KEY": "test",
+    "AWS_EC2_METADATA_DISABLED": "true",
+}
+
+
 class _TitanStub(BaseHTTPRequestHandler):
-    """POST /model/{modelId}/invoke -> {"embedding": [...]}.
-    server.throttle[text] = N fails the first N attempts with 429."""
+    """POST /model/{modelId}/invoke -> {"embedding": [...]} of
+    server.dim values. server.throttle[text] = N fails the first N
+    attempts with Bedrock's 429 ThrottlingException."""
 
     def do_POST(self):  # noqa: N802 - http.server API
         length = int(self.headers.get("Content-Length", "0"))
@@ -53,11 +71,12 @@ class _TitanStub(BaseHTTPRequestHandler):
         if attempt <= srv.throttle.get(text, 0):
             body = b'{"message": "Too many requests"}'
             self.send_response(429)
+            self.send_header("x-amzn-ErrorType", "ThrottlingException")
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
             return
-        body = json.dumps({"embedding": _stub_vector(text)}).encode()
+        body = json.dumps({"embedding": _stub_vector(text, srv.dim)}).encode()
         self.send_response(200)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
@@ -94,6 +113,7 @@ def titan_stub():
     srv.requests = []
     srv.attempts = {}
     srv.throttle = {}
+    srv.dim = 4
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     try:
@@ -187,3 +207,164 @@ def test_http_single_row_batch_retry_path(titan_stub):
     assert got[0] == _stub_vector("solo")
     assert emb.row_errors == [None]
     assert srv.attempts["solo"] == 2
+
+
+# boto3 sends the model id percent-encoded in the path
+_V2_PATH = "/model/amazon.titan-embed-text-v2%3A0/invoke"
+
+
+@pytest.fixture()
+def aws_env(monkeypatch):
+    for key in [k for k in os.environ if k.startswith("AWS_")]:
+        monkeypatch.delenv(key)
+    for key, val in AWS_ENV.items():
+        monkeypatch.setenv(key, val)
+
+
+def test_boto3_client_makes_one_attempt_per_retry(titan_stub, aws_env):
+    """The adapter's own client does not retry a throttled call: a text
+    throttled past max_retries reaches Bedrock exactly max_retries + 1
+    times, every wait on the delay heap rather than inside botocore."""
+    srv, url = titan_stub
+    srv.throttle["poison"] = 99
+    emb = BedrockTitanEmbedder(
+        "titan-v2",
+        region="us-east-1",
+        endpoint_url=url,
+        max_retries=2,
+        retry_base_seconds=0.01,
+    )
+    got = emb.embed_batch(["poison", "fine"])
+    assert got[1] == _stub_vector("fine") and got[0] is None
+    assert "ThrottlingException" in emb.row_errors[0]
+    assert srv.attempts == {"poison": 3, "fine": 1}
+    assert {r["path"] for r in srv.requests} == {_V2_PATH}
+
+
+def test_embedders_with_same_settings_share_one_client(aws_env):
+    def build(key, endpoint):
+        return BedrockTitanEmbedder(key, region="us-east-1", endpoint_url=endpoint)
+
+    one = build("titan-v2", "http://127.0.0.1:9")
+    assert build("titan-v1", "http://127.0.0.1:9")._client is one._client
+    assert build("titan-v2", "http://127.0.0.1:10")._client is not one._client
+    assert (one.model_id, one.dim) == ("amazon.titan-embed-text-v2:0", 1024)
+
+
+def test_titan_key_without_factory_embeds_through_bedrock(
+    spark, titan_stub, tmp_path, monkeypatch
+):
+    """With no injected factory, embedding_model='titan-v2' embeds
+    through BedrockTitanEmbedder: every stored vector is the endpoint's
+    1024-d answer for its text."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming import (
+        run_pipeline,
+    )
+
+    srv, url = titan_stub
+    srv.dim = 1024
+    # Python workers take their environment from the context's map
+    for key, val in AWS_ENV.items():
+        monkeypatch.setitem(spark.sparkContext.environment, key, val)
+    src = tmp_path / "in"
+    src.mkdir()
+    texts = ["alpha beta", "gamma", "delta epsilon zeta"]
+    (src / "batch.jsonl").write_text(
+        "".join(
+            json.dumps({"text": t, "created_at": "2024-01-01T00:00:00.000Z"}) + "\n"
+            for t in texts
+        )
+    )
+    sink = str(tmp_path / "vectors")
+    cfg = PipelineConfig(
+        source_path=str(src),
+        sink_path=sink,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        embedding_model="titan-v2",
+        on_error="fail",
+        extra={"bedrock_region": "us-east-1", "bedrock_endpoint": url},
+    )
+    run_pipeline(spark, cfg).awaitTermination(120)
+    rows = spark.read.parquet(sink).collect()
+    assert {r.text: list(r.passage_embedding) for r in rows} == {
+        t: _stub_vector(t, 1024) for t in texts
+    }
+    assert {r["path"] for r in srv.requests} == {_V2_PATH}
+
+
+def test_cli_runs_kinesis_titan_opensearch_job(titan_stub, tmp_path):
+    """The paper's job from one property file: the CLI, in its own
+    process, drains a Kinesis stream through Titan into OpenSearch, and
+    every indexed vector is the endpoint's answer for its text."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.docgen import (
+        wire_record,
+    )
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.kinesis_fake import (
+        FakeKinesisServer,
+    )
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_fake import (
+        FakeOpenSearchServer,
+    )
+
+    srv, url = titan_stub
+    srv.dim = 1024
+    shards = {f"shardId-{i:012d}": [] for i in range(2)}
+    texts = []
+    for doc_id in range(12):
+        _, wire = wire_record(7, doc_id)
+        shards[f"shardId-{doc_id % 2:012d}"].append((str(doc_id), wire.encode()))
+        texts.append(json.loads(wire)["text"])
+    job = tmp_path / "job.json"
+    env = {k: v for k, v in os.environ.items() if not k.startswith("AWS_")}
+    env.update(AWS_ENV, SPARK_GRAFT_CPUS="2")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ksrv = FakeKinesisServer("docs", shards)
+    osrv = FakeOpenSearchServer()
+    kurl, ourl = ksrv.start(), osrv.start()
+    try:
+        job.write_text(
+            json.dumps(
+                {
+                    "source_format": "kinesis-lite",
+                    "start_position": "earliest",
+                    "embedding_model": "titan-v2",
+                    "on_error": "fail",
+                    "sink_format": "opensearch",
+                    "checkpoint_dir": str(tmp_path / "ckpt"),
+                    "extra": {
+                        "kinesis_stream": "docs",
+                        "kinesis_region": "us-east-1",
+                        "kinesis_endpoint": kurl,
+                        "bedrock_region": "us-east-1",
+                        "bedrock_endpoint": url,
+                        "hosts": [ourl],
+                        "index": "embeddings",
+                    },
+                }
+            )
+        )
+        proc = subprocess.run(
+            [
+                sys.executable,
+                "-m",
+                "real_time_genai_embeddings_for_rag_with_apache_flink_spark",
+                "--config",
+                str(job),
+            ],
+            cwd=repo,
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+    finally:
+        ksrv.stop()
+        osrv.stop()
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    mapping = osrv.indices["embeddings"]["mappings"]["properties"]
+    assert mapping["passage_embedding"]["dimension"] == 1024
+    docs = osrv.docs["embeddings"]
+    assert sorted(d["text"] for d in docs) == sorted(texts)
+    for d in docs:
+        assert d["passage_embedding"] == _stub_vector(d["text"], 1024)
+    assert {r["path"] for r in srv.requests} == {_V2_PATH}

@@ -136,21 +136,58 @@ def test_cli_entrypoint_runs_pipeline(spark, wire_dir, tmp_path):
         main,
     )
 
-    rc = main(
-        [
-            "--source-path", wire_dir,
-            "--sink-path", str(tmp_path / "vectors"),
-            "--checkpoint", str(tmp_path / "ckpt"),
-            "--dim", "16",
-            "--idempotent",
-        ]
+    job = tmp_path / "job.json"
+    job.write_text(
+        json.dumps(
+            {
+                "source_path": wire_dir,
+                "sink_path": str(tmp_path / "vectors"),
+                "checkpoint_dir": str(tmp_path / "ckpt"),
+                "embedding_dim": 16,
+                "extra": {"idempotent_sink": True},
+            }
+        )
     )
-    assert rc == 0
+    assert main(["--config", str(job)]) == 0
     out = spark.read.parquet(str(tmp_path / "vectors"))
     assert out.count() == 3
     assert sorted(c for c in out.columns if c != "_batch") == [
         "date", "passage_embedding", "text",
     ]
+    # a re-run over the same checkpoint replays nothing
+    assert main(["--config", str(job)]) == 0
+    assert spark.read.parquet(str(tmp_path / "vectors")).count() == 3
+
+
+def test_cli_rejects_unknown_config_keys(tmp_path, capsys):
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.__main__ import (
+        main,
+    )
+
+    job = tmp_path / "job.json"
+    job.write_text(json.dumps({"sink_path": "/x", "model": "titan-v2"}))
+    with pytest.raises(SystemExit) as exc:
+        main(["--config", str(job)])
+    assert exc.value.code == 2
+    assert "unknown PipelineConfig keys ['model']" in capsys.readouterr().err
+
+
+def test_unknown_model_key_raises_before_a_query_starts(spark, wire_dir, tmp_path):
+    """An embedding_model no table names is an error, not a silent
+    fallback to hash vectors of embedding_dim."""
+    cfg = PipelineConfig(
+        source_path=wire_dir,
+        sink_path=str(tmp_path / "vectors"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        embedding_model="titan-v3",
+    )
+    with pytest.raises(ValueError, match="unknown embedding_model 'titan-v3'"):
+        cfg.resolved_dim()
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="unknown embedding_model 'titan-v3'"):
+        run_pipeline(spark, cfg)
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(tmp_path / "ckpt")
 
 
 def test_pipeline_dead_letters_embedding_failures(spark, wire_dir, tmp_path):
