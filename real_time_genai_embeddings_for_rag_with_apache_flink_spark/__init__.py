@@ -12,6 +12,7 @@ Layout
 - ``session``    SparkSession factory tuned for the target cluster shape
 - ``worker_daemon`` the PySpark daemon its Python workers fork from
 - ``config``     pipeline configuration (mirror of FlinkApplicationProperties)
+- ``aws``        the process's AWS credential chain and SigV4 signer
 - ``schemas``    per-stage StructTypes (RAW -> MSG -> DOC -> EMB)
 - ``sources``    batch parquet table registry + streaming sources
 - ``operators``  the dataflow operators (normalize, filter, embed, dedup, ...)

@@ -10,9 +10,12 @@ plus the app-starter's run-until-stopped behavior
         --config job.json
 
 ``job.json`` is a JSON object of ``PipelineConfig`` fields, ``extra``
-nested; an unknown key is an error. The job runs until its query stops:
-a ``trigger_interval`` runs it continuously, none drains what is
-available and stops.
+nested; an unknown key is an error. The file holds no credentials:
+every AWS call signs with the process's credential chain (``aws.py``).
+The job runs until its query stops: a ``trigger_interval`` runs it
+continuously; without one it runs one availableNow batch and stops (a
+kinesis-lite source then reads at most ``kinesis_max_records_per_trigger``
+records per shard).
 """
 
 from __future__ import annotations

@@ -1,0 +1,75 @@
+"""AWS access for the process: one botocore session, its default
+credential chain, and the one SigV4 signer of the package's own HTTP
+transports (``sources/kinesis_lite.KinesisClient`` and
+``streaming/opensearch_http.HttpOpenSearchClient``). The Bedrock client
+(``operators/embed.bedrock_client``) is built from the same session.
+
+The chain is botocore's: the environment (``AWS_ACCESS_KEY_ID`` /
+``AWS_SECRET_ACCESS_KEY`` / ``AWS_SESSION_TOKEN``), the shared config
+and credential files (``AWS_PROFILE``), then a container or instance
+role. Role credentials refresh themselves; ``sign`` freezes them per
+request, so a long-running job keeps signing across a rotation without
+a restart. No credential lives in a reader option or a task closure:
+each process resolves its own chain.
+
+botocore is imported on first use, so a process that never signs (an
+executor writing to an unsigned local endpoint) never loads it.
+"""
+
+from __future__ import annotations
+
+import functools
+
+
+@functools.lru_cache(maxsize=None)
+def session():
+    """The process's botocore session."""
+    import botocore.session
+
+    return botocore.session.get_session()
+
+
+@functools.lru_cache(maxsize=None)
+def credentials(instance_role: bool = True):
+    """The chain's credentials, or None when it finds none; resolved
+    once per process. The full chain's are the session's own, which its
+    clients (Bedrock's) sign with too. ``instance_role=False`` leaves out
+    the instance metadata service, the one provider that asks the
+    network rather than the host: without credentials it would cost a
+    connect timeout per process, and role credentials are for AWS
+    endpoints only."""
+    if instance_role:
+        return session().get_credentials()
+    from botocore.credentials import CredentialResolver
+
+    providers = session().get_component("credential_provider").providers
+    return CredentialResolver(
+        [p for p in providers if p.METHOD != "iam-role"]
+    ).load_credentials()
+
+
+def sign(
+    creds, method: str, url: str, headers: dict, body: bytes, region: str, service: str
+) -> dict[str, str]:
+    """``headers`` plus the SigV4 headers for one request, signed with
+    ``creds`` frozen now: a retry re-signs with a fresh ``x-amz-date``
+    and, after a rotation, with the new key."""
+    if creds is None:
+        raise RuntimeError(
+            f"cannot sign a {service} request: the AWS credential chain "
+            "found no credentials"
+        )
+    from botocore.auth import SigV4Auth
+    from botocore.awsrequest import AWSRequest
+
+    request = AWSRequest(method=method, url=url, data=body, headers=headers)
+    SigV4Auth(creds.get_frozen_credentials(), service, region).add_auth(request)
+    return dict(request.headers.items())
+
+
+def access_key_id(authorization: str | None) -> str | None:
+    """The access key id a SigV4 ``Authorization`` header names, or None
+    for an unsigned request (the fake endpoints record it)."""
+    if not authorization or "Credential=" not in authorization:
+        return None
+    return authorization.split("Credential=", 1)[1].split("/", 1)[0]

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StringType, StructField, StructType
 
+from .. import aws
 from ..config import TITAN_MODELS
 
 
@@ -130,16 +131,18 @@ class Md5BowEmbedder:
 @functools.lru_cache(maxsize=None)
 def bedrock_client(region: str | None, endpoint_url: str | None):
     """The process's bedrock-runtime client for ``region`` and
-    ``endpoint_url`` (None: the service's own). boto3 clients are
+    ``endpoint_url`` (None: the service's own). botocore clients are
     thread-safe and take a tenth of a second or more to build, so every
-    embedder with these settings shares one. Credentials come from
-    boto3's default chain. botocore's own retries are off: its loop
-    would sleep on a pool thread, under the embedder's delay heap."""
-    import boto3
+    embedder with these settings shares one. It is built from the
+    process's botocore session (``aws.session``), so it signs with the
+    same credential chain as the Kinesis reader and the OpenSearch sink.
+    botocore's own retries are off: its loop would sleep on a pool
+    thread, under the embedder's delay heap."""
     from botocore.config import Config
 
-    return boto3.Session(region_name=region).client(
+    return aws.session().create_client(
         "bedrock-runtime",
+        region_name=region,
         endpoint_url=endpoint_url,
         config=Config(retries={"total_max_attempts": 1}),
     )
@@ -340,7 +343,9 @@ def embed(
     Iterator pandas UDF: the embedder is built once per Python worker
     (not per record — the reference re-allocates its ObjectMapper per
     record, a perf bug SURVEY.md 2A/M1 flags) and fed ``batch_size``
-    slices of each Arrow batch.
+    slices of each Arrow batch. A vector that is not ``dim`` finite
+    float32 values is a row error under ``on_error``, as on the
+    OpenSearch stage (``embed_chunk``).
     """
 
     @F.pandas_udf(_EMBED_RESULT)
@@ -351,7 +356,9 @@ def embed(
             errors: list[str | None] = []
             texts = series.tolist()
             for lo in range(0, len(texts), batch_size):
-                vecs, errs = embed_chunk(emb, texts[lo : lo + batch_size], on_error)
+                vecs, errs = embed_chunk(
+                    emb, texts[lo : lo + batch_size], on_error, dim
+                )
                 embeddings.extend(vecs)
                 errors.extend(errs)
             yield pd.DataFrame({"embedding": embeddings, "error": errors})

@@ -23,6 +23,8 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from ..aws import access_key_id
+
 _EPOCH_2024 = 1704067200  # 2024-01-01T00:00:00Z
 
 
@@ -73,6 +75,8 @@ class FakeKinesisServer:
             for s in self._shards
         }
         self._closed: set[str] = set()
+        # each request's SigV4 access key id, None when unsigned
+        self.access_keys: list[str | None] = []
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
 
@@ -283,6 +287,9 @@ class FakeKinesisServer:
                 payload = json.loads(self.rfile.read(length) or b"{}")
                 target = self.headers.get("X-Amz-Target", "")
                 action = target.split(".")[-1]
+                fake.access_keys.append(
+                    access_key_id(self.headers.get("Authorization"))
+                )
                 try:
                     out = fake._handle(action, payload)
                 except _Throttled:

@@ -20,13 +20,13 @@ What is implemented (all public AWS API surface):
   resubmission; driver row st32), and in-place exponential backoff on
   the protocol's throttling errors (ProvisionedThroughputExceeded /
   LimitExceeded) on every call;
-- AWS Signature Version 4 request signing in pure stdlib (hmac +
-  hashlib; the algorithm is published in full by AWS; the signing core
-  is pinned against the AWS-published signature test-suite vectors),
-  applied whenever credentials are supplied — so the same source points
-  at real AWS, kinesalite, or LocalStack; unsigned requests serve
+- SigV4 signing through the package's one signer (``aws.sign``,
+  botocore's), whenever the process's AWS credential chain yields
+  credentials — so the same source points at real AWS, kinesalite, or
+  LocalStack; with no credentials the requests go out unsigned, for
   anonymous local endpoints (the in-process fake in
-  sources/kinesis_fake.py);
+  sources/kinesis_fake.py). A plain-http endpoint is never AWS, so for
+  it the chain skips the instance metadata service;
 - per-shard SEQUENCE-NUMBER offsets: the stream reader checkpoints
   ``{shard_id: last_sequence_number}`` and replays any logged range
   via ``AFTER_SEQUENCE_NUMBER`` iterators — Kinesis retention makes a
@@ -56,7 +56,10 @@ Under Spark's default trigger an idle query calls ``read`` every
 ``spark.sql.streaming.pollingDelay`` (10 ms), and each call is one
 ListShards plus one GetShardIterator and one GetRecords per shard, past
 Kinesis's 5 calls per second per shard. ``run_pipeline`` always sets a
-trigger (``trigger_interval``, or availableNow when it is None).
+trigger: ``trigger_interval``, or availableNow when it is None. Under
+availableNow the engine takes one ``read``, so a run reads at most
+``max_records_per_trigger`` records per shard and stops, however large
+the backlog; the next run over the same checkpoint reads the next slice.
 """
 
 from __future__ import annotations
@@ -64,8 +67,6 @@ from __future__ import annotations
 import base64
 import concurrent.futures
 import datetime
-import hashlib
-import hmac
 import json
 import time
 import urllib.error
@@ -78,119 +79,14 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from .. import aws
+
 _API_VERSION = "Kinesis_20131202"
 _MAX_EMPTY_POLLS = 8  # GetRecords may return empty pages mid-stream
 # persist=True walks tolerate long empty runs (sparse/aged stream
 # regions) because every page advances the iterator; this cap only
 # trips a service that stops advancing entirely
 _PERSIST_EMPTY_CAP = 100_000
-
-
-# ---------------------------------------------------------------------------
-# SigV4 (public algorithm; pure stdlib)
-# ---------------------------------------------------------------------------
-
-
-def _sha256_hex(data: bytes) -> str:
-    return hashlib.sha256(data).hexdigest()
-
-
-def _hmac(key: bytes, msg: str) -> bytes:
-    return hmac.new(key, msg.encode(), hashlib.sha256).digest()
-
-
-def sigv4_signing_key(
-    secret_key: str, date_stamp: str, region: str, service: str
-) -> bytes:
-    """kSigning = HMAC(HMAC(HMAC(HMAC("AWS4"+secret, date), region),
-    service), "aws4_request") — pinned against AWS's published test
-    vector in tests/test_kinesis_lite.py."""
-    k_date = _hmac(("AWS4" + secret_key).encode(), date_stamp)
-    k_region = _hmac(k_date, region)
-    k_service = _hmac(k_region, service)
-    return _hmac(k_service, "aws4_request")
-
-
-def sigv4_authorization(
-    method: str,
-    canonical_path: str,
-    headers: dict[str, str],
-    body: bytes,
-    region: str,
-    service: str,
-    access_key: str,
-    secret_key: str,
-    amz_date: str,
-    canonical_query: str = "",
-) -> str:
-    """Authorization header value for a request whose header set is
-    already final (every entry is signed): canonical request ->
-    string-to-sign -> signature, per the published SigV4 procedure.
-    The signing core shared by sigv4_headers (Kinesis JSON POSTs) and
-    opensearch_http.sigv4_rest_headers (REST), pinned against the
-    AWS-published signature test-suite vectors in
-    tests/test_kinesis_lite.py (get-vanilla / post-vanilla / query)."""
-    date_stamp = amz_date[:8]
-    payload_hash = _sha256_hex(body)
-    signed_names = ";".join(sorted(headers))
-    canonical = "\n".join(
-        [
-            method,
-            canonical_path,
-            canonical_query,
-            "".join(f"{k}:{headers[k]}\n" for k in sorted(headers)),
-            signed_names,
-            payload_hash,
-        ]
-    )
-    scope = f"{date_stamp}/{region}/{service}/aws4_request"
-    string_to_sign = "\n".join(
-        [
-            "AWS4-HMAC-SHA256",
-            amz_date,
-            scope,
-            _sha256_hex(canonical.encode()),
-        ]
-    )
-    signature = hmac.new(
-        sigv4_signing_key(secret_key, date_stamp, region, service),
-        string_to_sign.encode(),
-        hashlib.sha256,
-    ).hexdigest()
-    return (
-        f"AWS4-HMAC-SHA256 Credential={access_key}/{scope}, "
-        f"SignedHeaders={signed_names}, Signature={signature}"
-    )
-
-
-def sigv4_headers(
-    host: str,
-    target: str,
-    body: bytes,
-    region: str,
-    access_key: str,
-    secret_key: str,
-    session_token: str | None = None,
-    now: datetime.datetime | None = None,
-    service: str = "kinesis",
-) -> dict[str, str]:
-    """Signed header set for one Kinesis POST (the JSON-1.1 header
-    shape over the vector-pinned sigv4_authorization core)."""
-    t = now or datetime.datetime.now(datetime.timezone.utc)
-    amz_date = t.strftime("%Y%m%dT%H%M%SZ")
-    headers = {
-        "content-type": "application/x-amz-json-1.1",
-        "host": host,
-        "x-amz-date": amz_date,
-        "x-amz-target": target,
-    }
-    if session_token:
-        headers["x-amz-security-token"] = session_token
-    headers["authorization"] = sigv4_authorization(
-        "POST", "/", headers, body, region, service, access_key,
-        secret_key, amz_date,
-    )
-    return headers
 
 
 # ---------------------------------------------------------------------------
@@ -226,38 +122,28 @@ class KinesisClient:
             "endpoint_url",
             f"https://kinesis.{self.region}.amazonaws.com",
         ).rstrip("/")
-        self.access_key = options.get("access_key")
-        self.secret_key = options.get("secret_key")
-        self.session_token = options.get("session_token")
+        # the instance metadata service only for an AWS (https) endpoint
+        self._instance_role = self.endpoint.startswith("https://")
         self.timeout = float(options.get("http_timeout_sec", 10))
         self.throttle_retries = int(options.get("max_throttle_retries", 8))
         self.backoff_s = float(options.get("throttle_backoff_sec", 0.05))
 
     def _call(self, action: str, payload: dict) -> dict:
         body = json.dumps(payload, separators=(",", ":")).encode()
-        target = f"{_API_VERSION}.{action}"
-        host = self.endpoint.split("://", 1)[1].split("/", 1)[0]
+        url = self.endpoint + "/"
+        creds = aws.credentials(self._instance_role)
         attempt = 0
         while True:
-            if self.access_key and self.secret_key:
-                # re-sign per attempt: x-amz-date must stay fresh
-                headers = sigv4_headers(
-                    host,
-                    target,
-                    body,
-                    self.region,
-                    self.access_key,
-                    self.secret_key,
-                    self.session_token,
+            headers = {
+                "content-type": "application/x-amz-json-1.1",
+                "x-amz-target": f"{_API_VERSION}.{action}",
+            }
+            if creds is not None:
+                # re-signed per attempt: x-amz-date stays fresh
+                headers = aws.sign(
+                    creds, "POST", url, headers, body, self.region, "kinesis"
                 )
-            else:
-                headers = {
-                    "content-type": "application/x-amz-json-1.1",
-                    "x-amz-target": target,
-                }
-            req = urllib.request.Request(
-                self.endpoint + "/", data=body, headers=headers, method="POST"
-            )
+            req = urllib.request.Request(url, data=body, headers=headers, method="POST")
             try:
                 with urllib.request.urlopen(req, timeout=self.timeout) as resp:
                     return json.loads(resp.read().decode())
@@ -458,9 +344,10 @@ def put_records_writer(options: dict):
     """The engine's P1 WRITE path over the real wire protocol: returns
     a ``foreachPartition`` function that delivers each partition's
     (partition_key, data) rows via an EXECUTOR-SIDE KinesisClient —
-    PutRecords chunks of 500, failed-subset retries, SigV4 when
-    credentialed. data columns may be string or binary. Use with a
-    batch DataFrame (``df.foreachPartition(put_records_writer(opts))``)
+    PutRecords chunks of 500, failed-subset retries, signed when the
+    executor's credential chain yields credentials. data columns may be
+    string or binary. Use with a batch DataFrame
+    (``df.foreachPartition(put_records_writer(opts))``)
     or per micro-batch inside foreachBatch; either way the driver never
     touches a record."""
     opts = dict(options)
@@ -643,12 +530,11 @@ class KinesisLiteStreamReader(SimpleDataSourceStreamReader):
 
 class KinesisLiteDataSource(DataSource):
     """``format("kinesis-lite")``. Options: stream_name (required),
-    endpoint_url, region, access_key/secret_key/session_token (enables
-    SigV4), starting_position (TRIM_HORIZON | LATEST, streaming),
-    max_records_per_shard (batch; a one-shot read that would exceed it
-    RAISES unless truncate_at_limit=true), truncate_at_limit (batch),
-    max_records_per_trigger (streaming; records per shard per trigger,
-    0 or unset = 10,000), decode (utf8 | base64)."""
+    endpoint_url, region, starting_position (TRIM_HORIZON | LATEST,
+    streaming), max_records_per_shard (batch; a one-shot read that would
+    exceed it RAISES unless truncate_at_limit=true), truncate_at_limit
+    (batch), max_records_per_trigger (streaming; records per shard per
+    trigger, 0 or unset = 10,000), decode (utf8 | base64)."""
 
     @classmethod
     def name(cls) -> str:

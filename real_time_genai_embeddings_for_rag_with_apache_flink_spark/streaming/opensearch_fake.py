@@ -12,6 +12,8 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from ..aws import access_key_id
+
 
 class FakeOpenSearchServer:
     def __init__(
@@ -40,6 +42,8 @@ class FakeOpenSearchServer:
         # (bootstrap DDL and searches throttle on real domains too, not
         # just _bulk) — tests set this directly to simulate a burst
         self.throttle_next = 0
+        # each request's SigV4 access key id, None when unsigned
+        self.access_keys: list[str | None] = []
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
 
@@ -203,6 +207,9 @@ class FakeOpenSearchServer:
             def _serve(self):
                 length = int(self.headers.get("Content-Length", 0))
                 body = self.rfile.read(length) if length else b""
+                fake.access_keys.append(
+                    access_key_id(self.headers.get("Authorization"))
+                )
                 status, out = fake._handle(self.command, self.path, body)
                 payload = json.dumps(out).encode()
                 self.send_response(status)

@@ -12,9 +12,11 @@ needs —
 - ``PUT  /{index}``            index creation with the hnsw mapping,
 - ``POST /_bulk``              NDJSON bulk indexing —
 
-all public API, implemented over ``urllib`` with optional SigV4 signing
-(service ``es`` for managed domains, ``aoss`` for serverless — the
-reference's signer split), so the identical sink partition code runs
+all public API, implemented over ``urllib``. With a region set, every
+request is signed by the package's one signer (``aws.sign``, botocore's
+SigV4, with the process's credential chain) for service ``es`` (managed
+domains) or ``aoss`` (serverless) — the reference's signer split; so
+the identical sink partition code runs
 against the in-process fake endpoint (streaming/opensearch_fake.py), a
 local OpenSearch, or a signed AWS domain. ``HttpOpenSearchClient``
 exposes ``indices.exists`` / ``indices.create`` and one ``request``
@@ -33,52 +35,17 @@ the reference's bulk processor.
 
 from __future__ import annotations
 
-import datetime
 import hashlib
 import json
 import time
 import urllib.error
-import urllib.parse
 import urllib.request
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from ..sources.kinesis_lite import sigv4_authorization
-
-
-def sigv4_rest_headers(
-    method: str,
-    host: str,
-    path: str,
-    body: bytes,
-    region: str,
-    service: str,
-    access_key: str,
-    secret_key: str,
-    session_token: str | None = None,
-    now: datetime.datetime | None = None,
-    content_type: str = "application/json",
-) -> dict[str, str]:
-    """SigV4 for an arbitrary REST call (method/path vary, no query
-    string) — the ES-family header shape (x-amz-content-sha256
-    required) over the vector-pinned sigv4_authorization core."""
-    t = now or datetime.datetime.now(datetime.timezone.utc)
-    amz_date = t.strftime("%Y%m%dT%H%M%SZ")
-    headers = {
-        "content-type": content_type,
-        "host": host,
-        "x-amz-content-sha256": hashlib.sha256(body).hexdigest(),
-        "x-amz-date": amz_date,
-    }
-    if session_token:
-        headers["x-amz-security-token"] = session_token
-    headers["authorization"] = sigv4_authorization(
-        method, urllib.parse.quote(path), headers, body, region, service,
-        access_key, secret_key, amz_date,
-    )
-    return headers
+from .. import aws
 
 
 class ThrottledError(RuntimeError):
@@ -95,9 +62,6 @@ class HttpOpenSearchClient:
         base_url: str,
         region: str | None = None,
         service: str = "es",
-        access_key: str | None = None,
-        secret_key: str | None = None,
-        session_token: str | None = None,
         timeout: float = 10.0,
         throttle_retries: int = 7,
         throttle_backoff_s: float = 0.05,
@@ -105,9 +69,6 @@ class HttpOpenSearchClient:
         self.base = base_url.rstrip("/")
         self.region = region
         self.service = service
-        self.access_key = access_key
-        self.secret_key = secret_key
-        self.session_token = session_token
         self.timeout = timeout
         # 429/503 backoff applies to EVERY call — indices.exists /
         # indices.create during sink bootstrap, _bulk, and raw
@@ -125,28 +86,24 @@ class HttpOpenSearchClient:
         content_type: str = "application/json",
     ) -> tuple[int, dict]:
         data = body or b""
-        host = self.base.split("://", 1)[1].split("/", 1)[0]
+        url = self.base + path
+        headers = {"content-type": content_type}
+        if self.region:
+            # aoss needs the payload hash among the signed headers
+            headers["x-amz-content-sha256"] = hashlib.sha256(data).hexdigest()
         attempt = 0
         while True:
-            if self.region and self.access_key and self.secret_key:
-                # re-sign per attempt: x-amz-date must stay fresh
-                headers = sigv4_rest_headers(
-                    method,
-                    host,
-                    path,
-                    data,
-                    self.region,
-                    self.service,
-                    self.access_key,
-                    self.secret_key,
-                    self.session_token,
-                    content_type=content_type,
+            if self.region:
+                # re-signed per attempt: x-amz-date stays fresh
+                signed = aws.sign(
+                    aws.credentials(), method, url, headers, data,
+                    self.region, self.service,
                 )
             else:
-                headers = {"content-type": content_type}
+                signed = headers
             req = urllib.request.Request(
-                self.base + path, data=data if body is not None else None,
-                headers=headers, method=method,
+                url, data=data if body is not None else None,
+                headers=signed, method=method,
             )
             try:
                 with urllib.request.urlopen(req, timeout=self.timeout) as resp:
@@ -304,34 +261,18 @@ def http_bulk(client: HttpOpenSearchClient, actions) -> int:
     return len(lines) // 2
 
 
-def http_opensearch_factory(
-    hosts,
-    region: str | None = None,
-    service: str = "es",
-    access_key: str | None = None,
-    secret_key: str | None = None,
-    session_token: str | None = None,
-):
+def http_opensearch_factory(hosts, region: str | None = None, service: str = "es"):
     """The sink's client factory: built on the driver, CALLED on each
     executor partition, returns ``(client, bulk_fn)``. ``hosts`` is one
-    endpoint URL or a one-element list of it. With a region and
-    credentials every request is SigV4-signed for service 'es'
-    (managed domain) or 'aoss' (serverless) — the signer split between
-    the reference variants (KDS-P/.../msf/DataStreamJob.java:162 vs
+    endpoint URL or a one-element list of it. With a region every
+    request is SigV4-signed, with the executor's own credential chain,
+    for service 'es' (managed domain) or 'aoss' (serverless) — the
+    signer split between the reference variants
+    (KDS-P/.../msf/DataStreamJob.java:162 vs
     KDS-S/.../msf/DataStreamJob.java:185)."""
     base = hosts[0] if isinstance(hosts, (list, tuple)) else hosts
 
     def make():
-        return (
-            HttpOpenSearchClient(
-                base,
-                region=region,
-                service=service,
-                access_key=access_key,
-                secret_key=secret_key,
-                session_token=session_token,
-            ),
-            http_bulk,
-        )
+        return HttpOpenSearchClient(base, region=region, service=service), http_bulk
 
     return make

@@ -147,8 +147,8 @@ def build_source(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     if cfg.source_format == "kinesis-lite":
         # The reference's consumer config driven through the package's
         # own Kinesis protocol reader (sources/kinesis_lite.py); it points
-        # at real AWS/kinesalite/LocalStack via extra.kinesis_endpoint +
-        # credentials.
+        # at real AWS/kinesalite/LocalStack via extra.kinesis_endpoint,
+        # signed with the reader process's AWS credential chain.
         from ..sources.kinesis_lite import register as _register_kinesis
 
         _register_kinesis(spark)
@@ -156,9 +156,6 @@ def build_source(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
         for key, val in kinesis_reader_options(cfg).items():
             reader = reader.option(key, val)
         for key in (
-            "access_key",
-            "secret_key",
-            "session_token",
             # records per shard per trigger (0 or unset: 10,000)
             "max_records_per_trigger",
             # throttle-backoff tuning (st34 fault-injection row shortens
@@ -341,9 +338,11 @@ def run_pipeline(
 ) -> StreamingQuery:
     """Start the streaming job; returns the StreamingQuery handle.
 
-    With ``trigger_interval=None`` the job drains available input and
-    stops (availableNow) — the test/batch-replay mode; with an interval it
-    runs continuously like the reference job.
+    With ``trigger_interval=None`` the job runs availableNow and stops —
+    the test/batch-replay mode: a file source drains what is available,
+    while a kinesis-lite source reads one capped slice (at most
+    ``kinesis_max_records_per_trigger`` records per shard). With an
+    interval it runs continuously like the reference job.
 
     ``extra.bootstrap_topic=True`` (kafka source only) creates the
     source topic first via streaming/kafka_admin.ensure_topic — the

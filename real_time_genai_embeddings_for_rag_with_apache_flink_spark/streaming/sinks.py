@@ -25,6 +25,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import aws
 from ..config import PipelineConfig
 from ..operators.embed import check_on_error, embed_chunk
 from ..operators.normalize import to_sink_docs
@@ -185,9 +186,9 @@ def opensearch_client_factory(cfg: PipelineConfig):
     called on the executors.
 
     cfg.extra keys: hosts (one endpoint), aws_region + aws_service
-    ('es'|'aoss') with aws_access_key / aws_secret_key /
-    aws_session_token for SigV4, and client_factory (injectable, mainly
-    for tests; replaces the REST transport)."""
+    ('es'|'aoss') for SigV4 with the process's AWS credential chain
+    (``aws.credentials``), and client_factory (injectable, mainly for
+    tests; replaces the REST transport)."""
     factory = cfg.extra.get("client_factory")
     if factory is not None:
         return factory
@@ -197,20 +198,13 @@ def opensearch_client_factory(cfg: PipelineConfig):
             f"opensearch sink takes exactly one endpoint in hosts, got {hosts!r}"
         )
     region = cfg.extra.get("aws_region")
-    access_key = cfg.extra.get("aws_access_key")
-    secret_key = cfg.extra.get("aws_secret_key")
-    if region and not (access_key and secret_key):
+    if region and aws.credentials() is None:
         raise ValueError(
-            "opensearch sink: aws_region needs aws_access_key and "
-            "aws_secret_key (requests would go out unsigned)"
+            "opensearch sink: aws_region is set but the AWS credential "
+            "chain has no credentials to sign with"
         )
     return http_opensearch_factory(
-        hosts,
-        region=region,
-        service=cfg.extra.get("aws_service", "es"),
-        access_key=access_key,
-        secret_key=secret_key,
-        session_token=cfg.extra.get("aws_session_token"),
+        hosts, region=region, service=cfg.extra.get("aws_service", "es")
     )
 
 

@@ -8,6 +8,11 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# No test may ask an EC2 instance metadata service for credentials:
+# botocore's chain ends there. Set before any Spark JVM starts, so the
+# Python workers inherit it too.
+os.environ.setdefault("AWS_EC2_METADATA_DISABLED", "true")
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
@@ -59,3 +64,23 @@ def oracle_con():
     from oracle_harness import duckdb_conn
 
     return duckdb_conn(SF_SMOKE)
+
+
+@pytest.fixture()
+def empty_aws_chain(monkeypatch, tmp_path):
+    """An AWS credential chain that finds nothing: no ``AWS_*``
+    variables, config and credential files at empty paths, no instance
+    metadata. The process's cached session and credentials are cleared
+    before and after, so a test may then add what it needs."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark import aws
+
+    for key in [k for k in os.environ if k.startswith("AWS_")]:
+        monkeypatch.delenv(key)
+    monkeypatch.setenv("AWS_EC2_METADATA_DISABLED", "true")
+    monkeypatch.setenv("AWS_CONFIG_FILE", str(tmp_path / "aws-config"))
+    monkeypatch.setenv("AWS_SHARED_CREDENTIALS_FILE", str(tmp_path / "aws-credentials"))
+    aws.session.cache_clear()
+    aws.credentials.cache_clear()
+    yield
+    aws.session.cache_clear()
+    aws.credentials.cache_clear()

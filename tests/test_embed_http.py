@@ -8,7 +8,7 @@ response shape ({"embedding": [...]}, the reference's wire contract,
 BedRockEmbeddingModelAsyncCustomMessage.java:88-104) and drive the
 embedder through a minimal urllib client that performs a real POST:
 the only faked thing is the far end of the socket. The last tests go
-through the adapter's own boto3 client (``endpoint_url`` at the stub,
+through the adapter's own botocore client (``endpoint_url`` at the stub,
 dummy credentials from the environment), up to the whole job run by
 the CLI.
 """
@@ -37,7 +37,7 @@ def _stub_vector(text: str, dim: int = 4) -> list[float]:
     return [float((len(text) + i) % 7) for i in range(dim)]
 
 
-# dummy credentials for boto3's default chain; with them the chain
+# dummy credentials for botocore's default chain; with them the chain
 # stops at the environment and never asks an instance metadata service
 AWS_ENV = {
     "AWS_ACCESS_KEY_ID": "test",
@@ -209,7 +209,7 @@ def test_http_single_row_batch_retry_path(titan_stub):
     assert srv.attempts["solo"] == 2
 
 
-# boto3 sends the model id percent-encoded in the path
+# botocore sends the model id percent-encoded in the path
 _V2_PATH = "/model/amazon.titan-embed-text-v2%3A0/invoke"
 
 
@@ -295,7 +295,9 @@ def test_titan_key_without_factory_embeds_through_bedrock(
 def test_cli_runs_kinesis_titan_opensearch_job(titan_stub, tmp_path):
     """The paper's job from one property file: the CLI, in its own
     process, drains a Kinesis stream through Titan into OpenSearch, and
-    every indexed vector is the endpoint's answer for its text."""
+    every indexed vector is the endpoint's answer for its text. The file
+    holds no keys: every Kinesis and OpenSearch request is signed with
+    the environment's, through the one credential chain."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.docgen import (
         wire_record,
     )
@@ -339,6 +341,7 @@ def test_cli_runs_kinesis_titan_opensearch_job(titan_stub, tmp_path):
                         "bedrock_endpoint": url,
                         "hosts": [ourl],
                         "index": "embeddings",
+                        "aws_region": "us-east-1",
                     },
                 }
             )
@@ -368,3 +371,5 @@ def test_cli_runs_kinesis_titan_opensearch_job(titan_stub, tmp_path):
     for d in docs:
         assert d["passage_embedding"] == _stub_vector(d["text"], 1024)
     assert {r["path"] for r in srv.requests} == {_V2_PATH}
+    assert ksrv.access_keys and set(ksrv.access_keys) == {"test"}
+    assert osrv.access_keys and set(osrv.access_keys) == {"test"}

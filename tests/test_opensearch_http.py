@@ -1,5 +1,5 @@
 """The OpenSearch sink's REST transport executed for real:
-streaming/opensearch_http.py (stdlib HTTP + SigV4) against the
+streaming/opensearch_http.py (stdlib HTTP, SigV4 through aws.sign) against the
 in-process endpoint (streaming/opensearch_fake.py). The wire-level
 companion of tests/test_opensearch_sink.py's fake-client checks —
 this file is what makes K1's execution claim true. The end-to-end
@@ -20,7 +20,6 @@ from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opense
     http_bulk,
     http_opensearch_factory,
     json_float_arrays,
-    sigv4_rest_headers,
 )
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
     ensure_knn_index,
@@ -33,24 +32,6 @@ def fake():
     url = srv.start()
     yield srv, url
     srv.stop()
-
-
-def test_sigv4_rest_headers_vary_with_method_and_path():
-    now = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
-    common = dict(
-        body=b"{}",
-        region="us-east-1",
-        service="es",
-        access_key="AKIDEXAMPLE",
-        secret_key="secret",
-        now=now,
-    )
-    a = sigv4_rest_headers("PUT", "example.com", "/idx", **common)
-    b = sigv4_rest_headers("POST", "example.com", "/idx", **common)
-    c = sigv4_rest_headers("PUT", "example.com", "/idx2", **common)
-    assert a["authorization"] != b["authorization"] != c["authorization"]
-    assert "x-amz-content-sha256" in a  # the ES-family requirement
-    assert a == sigv4_rest_headers("PUT", "example.com", "/idx", **common)
 
 
 def test_index_bootstrap_and_bulk_roundtrip(fake):
@@ -159,15 +140,16 @@ def test_sink_writer_http_transport_end_to_end(spark, fake):
     )
 
 
-def test_signed_requests_traverse_the_same_path(fake):
+def test_signed_requests_traverse_the_same_path(fake, empty_aws_chain, monkeypatch):
     srv, url = fake
-    factory = http_opensearch_factory(
-        [url], region="us-east-1", access_key="AKIDEXAMPLE", secret_key="sk"
-    )
+    monkeypatch.setenv("AWS_ACCESS_KEY_ID", "AKIDEXAMPLE")
+    monkeypatch.setenv("AWS_SECRET_ACCESS_KEY", "sk")
+    factory = http_opensearch_factory([url], region="us-east-1")
     client, bulk = factory()
     ensure_knn_index(client, "signed", dimension=8)
     assert bulk(client, iter([{"_index": "signed", "_source": {"a": 1}}])) == 1
     assert srv.docs["signed"] == [{"a": 1}]
+    assert set(srv.access_keys) == {"AKIDEXAMPLE"}
 
 
 def test_404_is_an_answer_only_for_head(fake):

@@ -33,30 +33,27 @@ def test_opensearch_writer_rejects_more_than_one_host():
         foreach_batch_writer(cfg)
 
 
-def test_opensearch_writer_rejects_region_without_credentials():
-    """aws_region asks for SigV4; without both keys every request would
-    go out unsigned, so the writer refuses the config at build time."""
+def test_opensearch_writer_rejects_region_without_credentials(
+    empty_aws_chain, monkeypatch
+):
+    """aws_region asks for SigV4; with an empty credential chain every
+    request would fail to sign, so the writer refuses the config at
+    build time. Keys in the environment satisfy it."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark import aws
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
         foreach_batch_writer,
     )
 
-    for keys in ({}, {"aws_access_key": "AKIDEXAMPLE"}, {"aws_secret_key": "sk"}):
-        cfg = PipelineConfig(
-            sink_format="opensearch",
-            extra={"hosts": ["http://a:9200"], "aws_region": "us-east-1", **keys},
-        )
-        with pytest.raises(ValueError, match="aws_access_key and aws_secret_key"):
-            foreach_batch_writer(cfg)
-    signed = PipelineConfig(
+    cfg = PipelineConfig(
         sink_format="opensearch",
-        extra={
-            "hosts": ["http://a:9200"],
-            "aws_region": "us-east-1",
-            "aws_access_key": "AKIDEXAMPLE",
-            "aws_secret_key": "sk",
-        },
+        extra={"hosts": ["http://a:9200"], "aws_region": "us-east-1"},
     )
-    assert callable(foreach_batch_writer(signed))
+    with pytest.raises(ValueError, match="no credentials"):
+        foreach_batch_writer(cfg)
+    monkeypatch.setenv("AWS_ACCESS_KEY_ID", "AKIDEXAMPLE")
+    monkeypatch.setenv("AWS_SECRET_ACCESS_KEY", "sk")
+    aws.credentials.cache_clear()
+    assert callable(foreach_batch_writer(cfg))
 
 
 def test_memory_sink_format_is_unknown():
@@ -333,7 +330,7 @@ def test_embed_chunk_marks_unindexable_vectors():
     ok = np.asarray(vectors["ok"], np.float32)
     assert out["ok"].dtype == np.float32 and out["ok"].tobytes() == ok.tobytes()
     assert all(out[t] is vectors[t] for t in texts if t != "ok")
-    # without a dimension (embed()'s RAG and parquet path) nothing is checked
+    # without a dimension nothing is checked
     raw = embed_chunk(emb, texts, "dead-letter")
     assert raw == ([vectors[t] for t in texts], [None] * len(texts))
     with pytest.raises(RuntimeError, match="unindexable vector"):

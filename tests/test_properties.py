@@ -604,28 +604,35 @@ def test_put_records_hash_routing_is_total_and_stable(pk, n_shards):
 )
 @settings(max_examples=60, deadline=None)
 def test_sigv4_signature_binds_every_input(method, path, body):
-    """Changing ANY signed input — method, path, body, date, region,
-    service, or secret — changes the signature (the binding property
-    the conformance vectors can only spot-check)."""
-    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.kinesis_lite import (
-        sigv4_authorization,
-    )
+    """Changing ANY signed input of ``aws.sign`` — method, path, body,
+    date, region, service, or secret — changes the signature (the
+    binding property the conformance vectors can only spot-check)."""
+    import datetime
+    from unittest import mock
 
-    headers = {"host": "example.amazonaws.com", "x-amz-date": "20240101T000000Z"}
+    import botocore.auth
+    from botocore.credentials import Credentials
 
-    def sig(m=method, p=path, b=body, date="20240101T000000Z",
-            region="us-east-1", service="kinesis", secret="secret"):
-        return sigv4_authorization(
-            m, p, dict(headers, **{"x-amz-date": date}), b, region,
-            service, "AKIDEXAMPLE", secret, date,
-        ).rsplit("Signature=", 1)[1]
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark import aws
+
+    def sig(m=method, p=path, b=body, day=1, region="us-east-1",
+            service="kinesis", secret="secret"):
+        with mock.patch.object(
+            botocore.auth, "get_current_datetime",
+            return_value=datetime.datetime(2024, 1, day),
+        ):
+            headers = aws.sign(
+                Credentials("AKIDEXAMPLE", secret), m,
+                "https://example.amazonaws.com" + p, {}, b, region, service,
+            )
+        return headers["Authorization"].rsplit("Signature=", 1)[1]
 
     base = sig()
     assert sig() == base  # deterministic
     assert sig(m="PATCH") != base
     assert sig(p=path + "x") != base
     assert sig(b=body + b"x") != base
-    assert sig(date="20240102T000000Z") != base
+    assert sig(day=2) != base
     assert sig(region="eu-west-1") != base
     assert sig(service="es") != base
     assert sig(secret="other") != base

@@ -229,6 +229,45 @@ def test_pipeline_dead_letters_embedding_failures(spark, wire_dir, tmp_path):
         assert good.filter(good.passage_embedding.isNull()).count() == 0
 
 
+def test_parquet_pipeline_dead_letters_unindexable_vectors(spark, wire_dir, tmp_path):
+    """A NaN or wrong-length vector is a dead letter on the parquet sink,
+    as on the OpenSearch stage, never a good row."""
+    def bad_vectors_factory(dim):
+        class _Stub:
+            def embed_batch(self, texts):
+                return [
+                    [float("nan")] * dim
+                    if t.startswith("the quick")
+                    else [0.5] * (dim + 1)
+                    if t.startswith("jumps")
+                    else [0.5] * dim
+                    for t in texts
+                ]
+
+        return _Stub()
+
+    sink = str(tmp_path / "vectors")
+    cfg = PipelineConfig(
+        source_format="json",
+        source_path=wire_dir,
+        sink_format="parquet",
+        sink_path=sink,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        embedding_dim=8,
+        on_error="dead-letter",
+    )
+    q = run_pipeline(spark, cfg, embedder_factory=bad_vectors_factory)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    good = spark.read.parquet(sink).collect()
+    assert [(r.text, list(r.passage_embedding)) for r in good] == [
+        ("packs my box", [0.5] * 8)
+    ]
+    dead = {r.text: r.error for r in spark.read.parquet(sink + "_dead_letter").collect()}
+    assert sorted(dead) == ["jumps over the lazy dog", "the quick brown fox"]
+    assert all(e.startswith("unindexable vector") for e in dead.values())
+
+
 def test_rate_source_shape(spark):
     """The rate load-generator source must produce the RAW wire schema
     as an unbounded stream (full execution needs wall-clock time, so
