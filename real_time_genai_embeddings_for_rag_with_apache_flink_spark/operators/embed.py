@@ -1,4 +1,4 @@
-"""Stage A1 — the embedding operator, as an Arrow-batched pandas UDF.
+"""Stage A1 — the embedding operator, as one Arrow-batched ``mapInArrow`` stage.
 
 Reference: ``RichAsyncFunction`` doing one Bedrock ``invokeModel`` HTTP
 call per record, up to 1000 unordered in-flight
@@ -6,18 +6,19 @@ call per record, up to 1000 unordered in-flight
 wrapper ``DataStreamJob.java:148-154``).
 
 Spark-first design: the record-at-a-time async pattern becomes *client-side
-batching inside an iterator pandas UDF* — each Arrow batch crosses to the
+batching inside one mapInArrow stage* — each Arrow batch crosses to the
 Python worker once, the embedder sees a whole batch, and micro-batch
 parallelism across partitions replaces the async in-flight pool. The
 embedder is pluggable (deterministic local for tests/bench; HTTP-backed
-for production) and constructed once per worker from a picklable factory —
+for production) and constructed once per partition from a picklable factory —
 the analogue of RichAsyncFunction.open (:47-51).
 
 Error policy: the reference logs and emits null on failure (:109-112),
 which would NPE its own sink emitter; here failures become a dead-letter
 ``error`` column (or are dropped/raised per PipelineConfig.on_error).
-``embed_chunk`` is that policy, shared with the OpenSearch sink's fused
-embed-and-index stage (streaming/sinks.py).
+``embed_chunk`` is that policy and ``embed_chunks`` the chunk loop
+around it; ``embed()`` and the OpenSearch sink's fused embed-and-index
+stage (streaming/sinks.py) both run that loop.
 """
 
 from __future__ import annotations
@@ -28,12 +29,12 @@ import json
 import re
 import time
 import zlib
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterable, Iterator, Sequence
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from heapq import heappop, heappush
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StringType, StructField, StructType
@@ -129,7 +130,7 @@ class Md5BowEmbedder:
 
 
 @functools.lru_cache(maxsize=None)
-def bedrock_client(region: str | None, endpoint_url: str | None):
+def bedrock_client(region: str | None, endpoint_url: str | None, connections: int):
     """The process's bedrock-runtime client for ``region`` and
     ``endpoint_url`` (None: the service's own). botocore clients are
     thread-safe and take a tenth of a second or more to build, so every
@@ -137,14 +138,19 @@ def bedrock_client(region: str | None, endpoint_url: str | None):
     process's botocore session (``aws.session``), so it signs with the
     same credential chain as the Kinesis reader and the OpenSearch sink.
     botocore's own retries are off: its loop would sleep on a pool
-    thread, under the embedder's delay heap."""
+    thread, under the embedder's delay heap. Its pool holds
+    ``connections``, an embedder's in-flight calls: with botocore's
+    default of 10, each call beyond that opened a connection (a TLS
+    handshake against Bedrock) and threw it away."""
     from botocore.config import Config
 
     return aws.session().create_client(
         "bedrock-runtime",
         region_name=region,
         endpoint_url=endpoint_url,
-        config=Config(retries={"total_max_attempts": 1}),
+        config=Config(
+            retries={"total_max_attempts": 1}, max_pool_connections=connections
+        ),
     )
 
 
@@ -168,7 +174,7 @@ class BedrockTitanEmbedder:
     episode (tests/test_embed.py pins that order).
 
     Without an injected ``client`` the calls go through
-    ``bedrock_client(region, endpoint_url)``.
+    ``bedrock_client(region, endpoint_url, max_concurrency)``.
     """
 
     def __init__(
@@ -182,12 +188,12 @@ class BedrockTitanEmbedder:
         endpoint_url: str | None = None,
     ):
         self.model_id, self.dim = TITAN_MODELS[model_key]
+        self._max_concurrency = max(1, int(max_concurrency))
         if client is None:
-            client = bedrock_client(region, endpoint_url)
+            client = bedrock_client(region, endpoint_url, self._max_concurrency)
         self._client = client
         self._max_retries = max_retries
         self._retry_base = retry_base_seconds
-        self._max_concurrency = max(1, int(max_concurrency))
         self.row_errors: list[str | None] = []
 
     def _invoke_once(self, text: str) -> list[float]:
@@ -242,31 +248,22 @@ class BedrockTitanEmbedder:
         return out
 
 
-_EMBED_RESULT = StructType(
-    [
-        StructField("embedding", ArrayType(FloatType()), True),
-        StructField("error", StringType(), True),
-    ]
-)
-
-
 def check_on_error(on_error: str) -> None:
     if on_error not in ("dead-letter", "drop", "fail"):
         raise ValueError(f"unknown on_error policy {on_error!r}")
 
 
 def embed_chunk(
-    emb, texts: list[str | None], on_error: str, dim: int | None = None
+    emb, texts: list[str | None], on_error: str, dim: int
 ) -> tuple[list, list[str | None]]:
-    """One ``embed_batch`` call under the ``on_error`` policy: the
-    policy loop shared by ``embed()`` and the OpenSearch sink's fused
-    stage. Returns (vectors, per-row errors).
+    """One ``embed_batch`` call under the ``on_error`` policy. Returns
+    (vectors, per-row errors).
 
     An exception from the embedder dead-letters the whole chunk;
     adapters with per-row failure reporting (BedrockTitanEmbedder after
     its retries) expose ``row_errors`` and dead-letter just those rows.
-    With ``dim`` set, a vector that is not ``dim`` finite float32 values
-    is a per-row error too: an index rejects it, and the bulk carrying
+    A vector that is not ``dim`` finite float32 values is a per-row error
+    too: an index rejects it, and the bulk carrying
     it would fail again on every replay; the vectors that pass come back
     as the float32 arrays that check made, so the sink that formats them
     converts each vector once. Under 'fail' any row error raises;
@@ -279,28 +276,50 @@ def embed_chunk(
         if on_error == "fail":
             raise
         return [None] * len(texts), [f"{type(e).__name__}: {e}"] * len(texts)
-    if dim is not None:
-        vecs = list(vecs)
-        with np.errstate(over="ignore"):
-            for i, v in enumerate(vecs):
-                if v is None or errs[i] is not None:
-                    continue
-                if len(v) != dim:
-                    errs[i] = f"unindexable vector: {len(v)} values, index has {dim}"
-                    continue
-                try:
-                    v32 = np.asarray(v, np.float32)
-                    finite = bool(np.isfinite(v32).all())
-                except (TypeError, ValueError):
-                    finite = False
-                if not finite:
-                    errs[i] = "unindexable vector: a value is not a finite float32"
-                else:
-                    vecs[i] = v32
+    vecs = list(vecs)
+    with np.errstate(over="ignore"):
+        for i, v in enumerate(vecs):
+            if v is None or errs[i] is not None:
+                continue
+            if len(v) != dim:
+                errs[i] = f"unindexable vector: {len(v)} values, index has {dim}"
+                continue
+            try:
+                v32 = np.asarray(v, np.float32)
+                finite = bool(np.isfinite(v32).all())
+            except (TypeError, ValueError):
+                finite = False
+            if not finite:
+                errs[i] = "unindexable vector: a value is not a finite float32"
+            else:
+                vecs[i] = v32
     if on_error == "fail" and any(errs):
         first = next(e for e in errs if e)
         raise RuntimeError(f"embedding failed: {first}")
     return vecs, errs
+
+
+def embed_chunks(
+    batches: Iterable[pa.RecordBatch],
+    embedder_factory,
+    dim: int,
+    batch_size: int,
+    on_error: str,
+    text_col: str = "text",
+) -> Iterator[tuple[pa.RecordBatch, list, list[str | None]]]:
+    """The chunk loop of every Arrow embed stage (``embed()`` and the
+    OpenSearch sink's fused stage): each ``batch_size`` slice of each
+    batch, with its vectors and row errors from ``embed_chunk``. The
+    embedder is built once, at the first row."""
+    emb = None
+    for batch in batches:
+        for lo in range(0, batch.num_rows, batch_size):
+            chunk = batch.slice(lo, batch_size)
+            if emb is None:
+                emb = embedder_factory(dim)
+            texts = chunk.column(text_col).to_pylist()
+            vecs, errs = embed_chunk(emb, texts, on_error, dim)
+            yield chunk, vecs, errs
 
 
 def embed_distinct(
@@ -338,40 +357,40 @@ def embed(
     batch_size: int = 256,
     on_error: str = "dead-letter",
 ) -> DataFrame:
-    """Append ``embedding`` (array<float>) and ``error`` columns.
+    """Every column of ``df``, in order, plus ``embedding``
+    (array<float>) and, under 'dead-letter', ``error``. Every column
+    crosses into Python and back, so select what the caller needs first.
 
-    Iterator pandas UDF: the embedder is built once per Python worker
-    (not per record — the reference re-allocates its ObjectMapper per
-    record, a perf bug SURVEY.md 2A/M1 flags) and fed ``batch_size``
-    slices of each Arrow batch. A vector that is not ``dim`` finite
-    float32 values is a row error under ``on_error``, as on the
-    OpenSearch stage (``embed_chunk``).
+    One ``mapInArrow`` stage over ``embed_chunks``, the chunk loop the
+    OpenSearch sink's fused stage runs too: the embedder is built once
+    per partition (not per record — the reference re-allocates its
+    ObjectMapper per record, a perf bug SURVEY.md 2A/M1 flags) and fed
+    ``batch_size`` slices of each Arrow batch. A vector that is not
+    ``dim`` finite float32 values is a row error under ``on_error``, as
+    on the OpenSearch stage: 'dead-letter' keeps the row with its
+    ``error``, 'drop' leaves it out, and 'fail' raises on the worker,
+    so the job errors instead of silently dead-lettering (never emits
+    null like the reference,
+    BedRockEmbeddingModelAsyncCustomMessage.java:109-112).
     """
-
-    @F.pandas_udf(_EMBED_RESULT)
-    def _embed(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        emb = embedder_factory(dim)
-        for series in it:
-            embeddings: list[list[float] | None] = []
-            errors: list[str | None] = []
-            texts = series.tolist()
-            for lo in range(0, len(texts), batch_size):
-                vecs, errs = embed_chunk(
-                    emb, texts[lo : lo + batch_size], on_error, dim
-                )
-                embeddings.extend(vecs)
-                errors.extend(errs)
-            yield pd.DataFrame({"embedding": embeddings, "error": errors})
-
     check_on_error(on_error)
-    out = df.withColumn("_emb", _embed(F.col(text_col))).select(
-        "*", F.col("_emb.embedding").alias("embedding"), F.col("_emb.error").alias("error")
-    ).drop("_emb")
-    if on_error == "drop":
-        out = out.filter(F.col("error").isNull()).drop("error")
-    elif on_error == "fail":
-        # fail-fast: the UDF re-raises on the worker, so the job errors
-        # instead of silently dead-lettering (never emits null like the
-        # reference, BedRockEmbeddingModelAsyncCustomMessage.java:109-112).
-        out = out.drop("error")
-    return out
+    fields = [StructField("embedding", ArrayType(FloatType()))]
+    if on_error == "dead-letter":
+        fields.append(StructField("error", StringType()))
+    schema = StructType(df.schema.fields + fields)
+
+    def embed_partition(batches):
+        for chunk, vecs, errs in embed_chunks(
+            batches, embedder_factory, dim, batch_size, on_error, text_col
+        ):
+            # from_pandas: a NaN in a dead-lettered vector is a NULL element
+            vectors = pa.array(vecs, pa.list_(pa.float32()), from_pandas=True)
+            cols = chunk.columns + [vectors]
+            if on_error == "dead-letter":
+                cols.append(pa.array(errs, pa.string()))
+            out = pa.RecordBatch.from_arrays(cols, names=schema.names)
+            if on_error == "drop" and any(errs):
+                out = out.filter(pa.array([e is None for e in errs]))
+            yield out
+
+    return df.mapInArrow(embed_partition, schema)

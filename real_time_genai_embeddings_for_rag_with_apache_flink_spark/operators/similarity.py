@@ -17,14 +17,18 @@ computes similarity in-plan:
   uncached, or when the DataFrame is garbage-collected. Any other
   call scores the corpus per Arrow batch in one ``mapInArrow`` stage.
   The driver placement took the rag_query benchmark's p50 from 540 to
-  345 ms (4-core host, 10 seeds); a request is now mostly its query
-  ``embed()`` job;
+  345 ms (4-core host, 10 seeds), and rounding its survivors on the
+  driver, bit for bit Spark's ``round`` (``_round6``), together with
+  ``embed()`` as one ``mapInArrow`` stage, from 402 to 335 ms (10 pairs,
+  same host); a request is now mostly its query ``embed()`` job;
 - IVF-style pruned search (scale path): k-means-ish coarse centroids by
   hashed bucket, search only the closest buckets.
 """
 
 from __future__ import annotations
 
+import decimal
+import math
 import threading
 import weakref
 from types import SimpleNamespace
@@ -114,9 +118,11 @@ def knn_join(
       once. The kernel runs over blocks of at most
       ``spark.sql.execution.arrow.maxRecordsPerBatch`` pack rows, so
       its |block| x |Q| arrays are no larger than a ``mapInArrow``
-      task's. Spark rounds the survivors' sims over a local relation,
-      the driver ranks them, and the result is a local relation whose
-      ``collect()`` runs no job.
+      task's. The driver rounds the survivors' sims as Spark's
+      ``round(sim, 6)`` does, bit for bit (``_round6``; a call with a
+      sim within an ulp of a 6-dp boundary rounds in Spark instead,
+      over a local relation), ranks them, and the result is a local
+      relation whose ``collect()`` runs no job.
     - Otherwise one ``mapInArrow`` pass scores each Arrow batch of the
       corpus and forwards only its partial top-k per query; the rank
       filter then plans as a two-phase ``WindowGroupLimit``, so no
@@ -127,7 +133,9 @@ def knn_join(
     the GEMM took the p50 from 2386 to 1590 ms against the per-pair
     cosine fold, ``session.build_session``'s worker daemon to 715 ms,
     and the driver placement from 540 to 345 ms (median of seeds
-    7201-7210, same host, a later run of the parent)."""
+    7201-7210, same host, a later run of the parent). Rounding on the
+    driver, with ``embed()`` one ``mapInArrow`` stage, took it from 402
+    to 335 ms (seeds 1201-1210, 10 of 10 pairs lower)."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from ..sources.batch import spread_compute
@@ -202,11 +210,11 @@ def _build_pack(corpus: DataFrame, corpus_id: str, corpus_vec: str):
 def _score_on_driver(spark, q_table, pack, k: int, fields: list) -> DataFrame:
     """``knn_join``'s result from a driver pack, as a local relation
     with the query and corpus id ``fields`` the other placement keeps.
-    Spark rounds the survivors' sims (a projection over a local
-    relation, folded without a job: Java's ``Double.toString`` under
-    ``round`` is not Python's ``repr``), then each query id's rows are
-    ranked in the window's order: NaN first, numbers descending, NULL
-    last, then corpus id ascending, NULL ids first."""
+    The survivors' sims are rounded as Spark's ``round(sim, 6)`` does
+    (``_round6``; in Spark when a sim lies within an ulp of a 6-dp
+    boundary), then each query id's rows are ranked in the window's
+    order: NaN first, numbers descending, NULL last, then corpus id
+    ascending, NULL ids first."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -229,12 +237,10 @@ def _score_on_driver(spark, q_table, pack, k: int, fields: list) -> DataFrame:
     r = np.concatenate([b[0] for b in blocks])
     c = np.concatenate([b[1] for b in blocks])
     sim = pa.concat_arrays([b[2] for b in blocks])
-    rounded = (
-        spark.createDataFrame(pa.table({"sim": sim}), "sim double")
-        .select(F.round("sim", 6))
-        .collect()
-    )
-    sim = pa.array([row[0] for row in rounded], pa.float64())
+    rounded = _round6(sim.to_pylist())
+    if rounded is None:
+        rounded = _round6_in_spark(spark, sim)
+    sim = pa.array(rounded, pa.float64())
     null = sim.is_null().to_numpy(zero_copy_only=False)
     val = sim.fill_null(0.0).to_numpy()
     nan = np.isnan(val)
@@ -264,6 +270,55 @@ def _score_on_driver(spark, q_table, pack, k: int, fields: list) -> DataFrame:
         pa.array(rank[rank <= k], pa.int32()),
     ], names=schema.names)
     return spark.createDataFrame(out, schema)
+
+
+# wide enough that Decimal arithmetic on any double's exact value,
+# scaled by 1e6 and offset by a half, never rounds (<= ~1080 digits)
+_EXACT = decimal.Context(prec=1100, rounding=decimal.ROUND_HALF_UP)
+_HALF = decimal.Decimal("0.5")
+_MICRO = decimal.Decimal("0.000001")
+
+
+def _round6(values: list) -> list | None:
+    """Spark's ``round(x, 6)`` of each double (None for NULL), computed
+    on the driver; None when some ``x`` lies within one ``math.ulp(x)``
+    of a 6-dp boundary ``m ± 5e-7``, which the caller then rounds in
+    Spark.
+
+    Spark computes ``BigDecimal(Double.toString(x)).setScale(6,
+    HALF_UP).doubleValue()``, and on JDK 17 ``Double.toString`` is not
+    always the shortest string, so this rounds Python's ``repr`` and
+    proves the two agree: both strings parse back to ``x``, so both lie
+    in ``x``'s rounding interval (within half an ulp of it). When no
+    boundary lies within an ulp of ``x``, HALF_UP takes both strings to
+    the same 6-dp decimal, and ``doubleValue()`` of it is one correctly
+    rounded conversion, as ``float()`` is. NaN and ±inf pass through,
+    as in Spark; ``+ 0.0`` because a BigDecimal zero has no sign."""
+    out = []
+    with decimal.localcontext(_EXACT):
+        for x in values:
+            if x is None or not math.isfinite(x):
+                out.append(x)
+                continue
+            micros = decimal.Decimal(x).scaleb(6)
+            boundary = micros.to_integral_value(decimal.ROUND_FLOOR) + _HALF
+            if abs(micros - boundary) <= decimal.Decimal(math.ulp(x)).scaleb(6):
+                return None
+            out.append(float(decimal.Decimal(repr(x)).quantize(_MICRO)) + 0.0)
+    return out
+
+
+def _round6_in_spark(spark, sim) -> list:
+    """Spark's own ``round(sim, 6)`` of an Arrow float64 array: a
+    projection over a local relation, folded without a job."""
+    import pyarrow as pa
+
+    rows = (
+        spark.createDataFrame(pa.table({"sim": sim}), "sim double")
+        .select(F.round("sim", 6))
+        .collect()
+    )
+    return [row[0] for row in rows]
 
 
 def _slice_rows(matrices: dict, lo: int, hi: int) -> dict:

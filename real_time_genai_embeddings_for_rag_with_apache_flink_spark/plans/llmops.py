@@ -1987,7 +1987,7 @@ def s13_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p01_pipeline_sink_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full reference dataflow in batch form: documents -> empty-text
-    filter -> deterministic embedding (Arrow-batched pandas UDF) ->
+    filter -> deterministic embedding (one Arrow mapInArrow stage) ->
     sink projection {passage_embedding, date, text}."""
     from ..pipeline import sink_documents
 
@@ -2068,7 +2068,7 @@ SELECT doc_id, sim FROM (
 )
 def p02b_flagship_retrieval_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship reference dataflow itself — parse -> empty-text
-    filter -> embed (Arrow-batched pandas UDF) -> cosine top-k
+    filter -> embed (one Arrow mapInArrow stage) -> cosine top-k
     (``KDS-P/.../msf/DataStreamJob.java:140-177`` plus the retrieval
     the reference delegates to OpenSearch) — VALUE-CERTIFIED hash-exact
     (r10 verdict #2): p02 runs it on the crc32 DeterministicEmbedder
@@ -2079,8 +2079,8 @@ def p02b_flagship_retrieval_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     and norms per shared md5 bucket, one sqrt pair + division on
     identical doubles, top-10 by (ROUND(sim, 6) DESC, doc_id). The
     embedding crossing still goes through the REAL pipeline seam
-    (operators/embed.embed — iterator pandas UDF, embedder built once
-    per worker); only the hash function inside the embedder differs
+    (operators/embed.embed — one mapInArrow stage, embedder built once
+    per partition); only the hash function inside the embedder differs
     from p02.
 
     Scale shape: identical to p02 — the corpus crosses Python once,
@@ -2143,8 +2143,8 @@ LEFT JOIN bw b ON b.doc_id = e.doc_id AND b.bucket = g.bucket
 def p03b_embed_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p03's dedup-before-embed seam VALUE-CERTIFIED hash-exact (the
     p02b recipe applied to embed_distinct): the same operator — each
-    distinct content fingerprint embedded once through the iterator
-    pandas UDF, vectors joined back on the 16-byte fingerprint — but on
+    distinct content fingerprint embedded once through the embed()
+    mapInArrow stage, vectors joined back on the 16-byte fingerprint — but on
     the Md5BowEmbedder tower, whose every coordinate has an exact
     ANSI-SQL twin. The output explodes each returned vector to
     (doc_id, bucket, weight) integer rows, so the DuckDB oracle — which

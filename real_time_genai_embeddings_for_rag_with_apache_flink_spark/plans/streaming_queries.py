@@ -1555,7 +1555,7 @@ def st08_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st05_stream_embed_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full reference dataflow as a stream: documents file-source ->
     empty-text filter (DataStreamJob.java:146) -> deterministic embedding
-    pandas UDF (A1) -> sink projection {passage_embedding, date, text}
+    mapInArrow stage (A1) -> sink projection {passage_embedding, date, text}
     (DataStreamJob.java:185-187) through a memory sink."""
     from ..operators.embed import embed
 

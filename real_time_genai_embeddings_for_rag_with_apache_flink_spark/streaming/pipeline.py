@@ -21,7 +21,7 @@ one declarative streaming plan:
   chunk's model calls — the reference's async operator and bulk
   processor side by side in each subtask. It yields one status row per
   document; ``foreachBatch`` runs the one action that drives it.
-- embed + sink, parquet/delta: the Arrow-batched pandas UDF
+- embed + sink, parquet/delta: ``embed()``'s ``mapInArrow`` stage
   (operators/embed.py), then ``foreachBatch`` writing the vector table
   and dead-letter rows separately.
 - Either way micro-batch parallelism across partitions replaces the

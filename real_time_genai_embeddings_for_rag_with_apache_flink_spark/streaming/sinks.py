@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .. import aws
 from ..config import PipelineConfig
-from ..operators.embed import check_on_error, embed_chunk
+from ..operators.embed import check_on_error, embed_chunks
 from ..operators.normalize import to_sink_docs
 from .opensearch_http import (
     bulk_action_line,
@@ -257,9 +257,9 @@ def opensearch_index(
     ``error`` (NULL when indexed) and ``bulk_bytes`` (its share of the
     ``_bulk`` body).
 
-    Each partition takes one ``embed_batch_size`` chunk at a time: it
-    embeds the chunk (``embed_chunk``, the ``on_error`` policy of
-    ``embed()``; a vector the index would reject is a row error),
+    Each partition takes one ``embed_batch_size`` chunk at a time from
+    ``embed_chunks``, the chunk loop of ``embed()`` (the ``on_error``
+    policy; a vector the index would reject is a row error),
     formats the vectors in Arrow, and hands the chunk's actions to one
     sender thread, so a ``_bulk`` request overlaps the next chunk's
     model calls — the reference's async operator and bulk processor
@@ -282,26 +282,22 @@ def opensearch_index(
     dim, batch_size, on_error = cfg.resolved_dim(), cfg.embed_batch_size, cfg.on_error
 
     def index_partition(batches):
-        emb = client = bulk = sent = None
+        client = bulk = sent = None
         with ThreadPoolExecutor(max_workers=1) as sender:
-            for batch in batches:
-                for lo in range(0, batch.num_rows, batch_size):
-                    chunk = batch.slice(lo, batch_size)
-                    if emb is None:
-                        emb = embedder_factory(dim)
-                    texts = chunk.column("text").to_pylist()
-                    vecs, errs = embed_chunk(emb, texts, on_error, dim)
-                    actions, sizes = _bulk_actions(chunk, vecs, errs, index, by_id)
-                    if actions:
-                        if client is None:
-                            client, bulk = factory()
-                        if sent is not None:
-                            sent.result()
-                        sent = sender.submit(bulk, client, actions)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(errs, pa.string()), pa.array(sizes, pa.int64())],
-                        names=["error", "bulk_bytes"],
-                    )
+            for chunk, vecs, errs in embed_chunks(
+                batches, embedder_factory, dim, batch_size, on_error
+            ):
+                actions, sizes = _bulk_actions(chunk, vecs, errs, index, by_id)
+                if actions:
+                    if client is None:
+                        client, bulk = factory()
+                    if sent is not None:
+                        sent.result()
+                    sent = sender.submit(bulk, client, actions)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(errs, pa.string()), pa.array(sizes, pa.int64())],
+                    names=["error", "bulk_bytes"],
+                )
             if sent is not None:
                 sent.result()
 

@@ -213,7 +213,7 @@ def test_bedrock_adapter_per_row_dead_letter():
 
 
 def test_bedrock_rows_dead_letter_through_embed(spark):
-    """End-to-end through the embed() UDF: per-row adapter failures land
+    """End-to-end through embed(): per-row adapter failures land
     in the error column under the dead-letter policy."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
         BedrockTitanEmbedder,
@@ -371,3 +371,101 @@ def test_bedrock_backoff_does_not_block_healthy_rows():
         f"blocked behind the backoff: {order}"
     )
     assert flaky_positions[2] == 12
+
+
+def _fixed_embedder():
+    """A stub whose vectors are exact float32 values: 'short ...' texts
+    get one value too few (an unindexable vector), NULL texts None."""
+
+    class FixedEmbedder:
+        def __init__(self, dim: int = 4):
+            self.dim = dim
+
+        def embed_batch(self, texts):
+            return [
+                None
+                if t is None
+                else [0.5] * (self.dim - 1)
+                if t.startswith("short")
+                else [len(t) + i / 4 for i in range(self.dim)]
+                for t in texts
+            ]
+
+    return FixedEmbedder
+
+
+_CONTRACT_ROWS = [
+    (1, "alpha", "2024-01-01 00:00:00", 0.5),
+    (2, None, None, None),
+    (3, "short vector", "2024-01-02 12:30:00", 1.5),
+    (4, "gamma delta", "2024-01-03 23:59:59", None),
+    (5, "", "2024-01-04 00:00:01", 2.5),
+]
+
+
+@pytest.mark.parametrize("on_error", ["dead-letter", "drop", "fail"])
+def test_embed_passes_every_column_through_under_each_policy(spark, on_error):
+    """Every input column keeps its name, type, order and values
+    (timestamps and NULL texts included), and the rows keep their order;
+    ``embedding`` follows, and ``error`` only under 'dead-letter'. A
+    wrong-length vector is kept with its error under 'dead-letter',
+    left out under 'drop', and fails the job under 'fail'."""
+    from pyspark.sql.types import ArrayType, FloatType, StringType, StructField
+
+    df = spark.createDataFrame(
+        _CONTRACT_ROWS, "id long, text string, created_at string, score double"
+    ).withColumn("created_at", F.to_timestamp("created_at"))
+    out = embed(
+        df, embedder_factory=_fixed_embedder(), dim=4, batch_size=2, on_error=on_error
+    )
+    extra = [StructField("embedding", ArrayType(FloatType()), True)]
+    if on_error == "dead-letter":
+        extra.append(StructField("error", StringType(), True))
+    assert out.schema.fields == df.schema.fields + extra
+    want = []
+    for i, text, created, score in df.collect():
+        if text is None:
+            vec, err = None, None
+        elif text.startswith("short"):
+            vec, err = [0.5] * 3, "unindexable vector: 3 values, index has 4"
+        else:
+            vec, err = [len(text) + j / 4 for j in range(4)], None
+        if on_error == "dead-letter":
+            want.append((i, text, created, score, vec, err))
+        elif not err:
+            want.append((i, text, created, score, vec))
+    if on_error == "fail":
+        with pytest.raises(Exception, match="unindexable vector"):
+            out.collect()
+        out = embed(
+            df.filter(F.col("id") != 3), embedder_factory=_fixed_embedder(), dim=4,
+            batch_size=2, on_error="fail",
+        )
+    assert [tuple(r) for r in out.collect()] == want
+
+
+def test_embed_runs_on_a_streaming_input(spark, tmp_path):
+    """A streaming DataFrame embeds as a batch one does."""
+    src = str(tmp_path / "in")
+    df = spark.createDataFrame(
+        [(1, "a b"), (2, None), (3, "c d e")], "id long, text string"
+    )
+    df.write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    assert stream.isStreaming
+    q = (
+        embed(stream, dim=8)
+        .writeStream.format("memory")
+        .queryName("embed_streaming_input")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        assert q.exception() is None
+        got = spark.table("embed_streaming_input").orderBy("id").collect()
+    finally:
+        q.stop()
+    want = embed(df, dim=8).orderBy("id").collect()
+    assert got == want
+    assert [r.error for r in got] == [None] * 3

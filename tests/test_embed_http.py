@@ -15,7 +15,9 @@ the CLI.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import logging
 import os
 import subprocess
 import sys
@@ -106,14 +108,27 @@ class _HttpInvokeClient:
         return {"body": resp}
 
 
-@pytest.fixture()
-def titan_stub():
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _TitanStub)
+class _KeepAliveTitanStub(_TitanStub):
+    """The stub over HTTP/1.1 keep-alive, as Bedrock serves it, counting
+    the client connections it accepts in server.connections."""
+
+    protocol_version = "HTTP/1.1"
+
+    def setup(self):
+        super().setup()
+        with self.server.lock:
+            self.server.connections += 1
+
+
+@contextlib.contextmanager
+def _serve(handler):
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), handler)
     srv.lock = threading.Lock()
     srv.requests = []
     srv.attempts = {}
     srv.throttle = {}
     srv.dim = 4
+    srv.connections = 0
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     try:
@@ -121,6 +136,12 @@ def titan_stub():
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+@pytest.fixture()
+def titan_stub():
+    with _serve(_TitanStub) as stub:
+        yield stub
 
 
 def test_http_roundtrip_executes_real_serialization(titan_stub):
@@ -249,6 +270,22 @@ def test_embedders_with_same_settings_share_one_client(aws_env):
     assert build("titan-v1", "http://127.0.0.1:9")._client is one._client
     assert build("titan-v2", "http://127.0.0.1:10")._client is not one._client
     assert (one.model_id, one.dim) == ("amazon.titan-embed-text-v2:0", 1024)
+
+
+def test_bedrock_pool_holds_every_in_flight_call(aws_env, caplog):
+    """The shared client's connection pool holds the embedder's
+    ``max_concurrency`` in-flight calls: over three batches on a
+    keep-alive endpoint it opens at most that many connections and
+    never discards one for a full pool."""
+    caplog.set_level(logging.WARNING, logger="urllib3.connectionpool")
+    with _serve(_KeepAliveTitanStub) as (srv, url):
+        emb = BedrockTitanEmbedder("titan-v2", region="us-east-1", endpoint_url=url)
+        for batch in range(3):
+            texts = [f"text {batch} {i}" for i in range(64)]
+            assert emb.embed_batch(texts) == [_stub_vector(t) for t in texts]
+        assert len(srv.requests) == 3 * 64
+        assert 0 < srv.connections <= emb._max_concurrency == 32
+    assert not [r for r in caplog.records if "pool is full" in r.getMessage()]
 
 
 def test_titan_key_without_factory_embeds_through_bedrock(

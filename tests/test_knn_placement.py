@@ -261,3 +261,121 @@ def test_a_pack_build_holds_about_one_matrix(spark):
         assert peak < 1.5 * matrix, (peak, matrix)
     finally:
         corpus.unpersist()
+
+
+def _spark_round6(spark, values):
+    """Spark's own ``round(x, 6)`` of each double."""
+    import pyarrow as pa
+
+    table = pa.table({"x": pa.array(values, pa.float64())})
+    return spark.createDataFrame(table).select(F.round("x", 6)).toArrow().column(0).to_pylist()
+
+
+def _same_double(a, b) -> bool:
+    """Bit for bit, sign of zero included; NaN equals NaN, None None."""
+    import struct
+
+    if a is None or b is None:
+        return a is b
+    return struct.pack("<d", a) == struct.pack("<d", b) or (a != a and b != b)
+
+
+def test_driver_rounding_is_spark_round_bit_for_bit(spark):
+    """``_round6`` against Spark's ``round(x, 6)`` on ~200k doubles: the
+    nearest doubles to every kind of 6-dp boundary ``k/1e6 + 5e-7`` and
+    both of their neighbours, 7-dp decimals, uniform sims, wide
+    magnitudes, ±0.0, tiny negatives, NaN, ±inf and NULL. A value the
+    driver does not flag must come out as Spark's, bit for bit."""
+    import math
+
+    import numpy as np
+
+    rng = np.random.default_rng(20261019)
+    k = rng.integers(-1_000_000, 1_000_000, 50_000)
+    nearest = (2 * k + 1) / 2_000_000  # one correctly rounded division
+    below = np.nextafter(nearest, -np.inf)
+    above = np.nextafter(nearest, np.inf)
+    seven_dp = rng.integers(-10_000_000, 10_000_000, 25_000) / 1e7
+    uniform = rng.uniform(-1.0, 1.0, 15_000)
+    wide = rng.choice([-1.0, 1.0], 5_000) * 10.0 ** rng.uniform(-12, 12, 5_000)
+    tiny_negatives = [-5e-324, -1e-300, -1e-9, -1e-7, -4.999e-7, -np.nextafter(5e-7, 0)]
+    specials = [0.0, -0.0, math.nan, math.inf, -math.inf, None, 5e-7, -5e-7, 1.0, -1.0]
+    values = [
+        *nearest.tolist(),
+        *below.tolist(),
+        *above.tolist(),
+        *seven_dp.tolist(),
+        *uniform.tolist(),
+        *wide.tolist(),
+        *tiny_negatives,
+        *specials,
+    ]
+    want = _spark_round6(spark, values)
+    got = [similarity._round6([x]) for x in values]
+    checked = {"nearest": 0, "neighbour": 0, "other": 0}
+    n = len(k)
+    for i, (x, g, w) in enumerate(zip(values, got, want)):
+        if g is None:
+            continue
+        assert _same_double(g[0], w), (repr(x), g[0], w)
+        checked["nearest" if i < n else "neighbour" if i < 3 * n else "other"] += 1
+    # the sweep is not vacuous: most values are rounded on the driver,
+    # boundary neighbours among them; the flagged ones are the rare kind
+    assert checked["neighbour"] > 0.2 * n, checked
+    assert checked["other"] > 0.85 * (len(values) - 3 * n), checked
+    for x in tiny_negatives + [-0.0]:
+        (r,) = similarity._round6([x])
+        assert r == 0.0 and math.copysign(1.0, r) == 1.0, (x, r)
+    for x in (math.nan, math.inf, -math.inf, None):
+        assert _same_double(similarity._round6([x])[0], x)
+
+
+def test_a_sim_on_a_rounding_boundary_is_rounded_in_spark(spark, monkeypatch):
+    """A survivor whose sim is a 6-dp boundary sends the call's rounding
+    to Spark, and its rows equal the mapInArrow placement's; a call with
+    no such sim rounds on the driver, with the same rows."""
+    # |e| = 128 exactly, so against a unit axis the sims are +-1/128 =
+    # +-0.0078125 = +-(0.007812 + 5e-7), and 127/128 another boundary
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 127.0, 15.0, 5.0, 2.0]),
+            (2, [-1.0, 127.0, 15.0, 5.0, 2.0]),
+            (3, [3.0, 4.0, 0.0, 0.0, 0.0]),
+            (4, [0.25, 1.0, 2.0, 0.0, 0.5]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    on_boundary = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0, 0.0])],
+        "q_id long, q_vec array<float>",
+    )
+    off_boundary = spark.createDataFrame(
+        [(0, [1.0, 1.0, 0.0, 0.0, 0.3])], "q_id long, q_vec array<float>"
+    )
+    rounded_in_spark = []
+    real = similarity._round6_in_spark
+
+    def spy(*args):
+        rounded_in_spark.append(1)
+        return real(*args)
+
+    monkeypatch.setattr(similarity, "_round6_in_spark", spy)
+    corpus.cache().count()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    try:
+        for queries, falls_back in ((on_boundary, True), (off_boundary, False)):
+            rounded_in_spark.clear()
+            got = knn_join(queries, corpus, k=4)
+            assert got._jdf.isLocal()
+            assert bool(rounded_in_spark) is falls_back
+            spark.conf.set(key, "-1")
+            want = knn_join(queries, corpus, k=4)
+            assert _on_map_in_arrow(want)
+            assert _rows(got) == _rows(want)
+            spark.conf.set(key, before)
+        sims = {(r["q_id"], r["vec_id"]): r["sim"] for r in knn_join(on_boundary, corpus, k=4).collect()}
+        assert (sims[(0, 1)], sims[(0, 2)], sims[(1, 1)]) == (0.007813, -0.007813, 0.992188)
+    finally:
+        spark.conf.set(key, before)
+        corpus.unpersist()

@@ -330,9 +330,6 @@ def test_embed_chunk_marks_unindexable_vectors():
     ok = np.asarray(vectors["ok"], np.float32)
     assert out["ok"].dtype == np.float32 and out["ok"].tobytes() == ok.tobytes()
     assert all(out[t] is vectors[t] for t in texts if t != "ok")
-    # without a dimension nothing is checked
-    raw = embed_chunk(emb, texts, "dead-letter")
-    assert raw == ([vectors[t] for t in texts], [None] * len(texts))
     with pytest.raises(RuntimeError, match="unindexable vector"):
         embed_chunk(emb, texts, "fail", dim=4)
 

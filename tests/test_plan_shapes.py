@@ -8,6 +8,8 @@ run."""
 
 from __future__ import annotations
 
+import pytest
+
 from conftest import SF_SMOKE
 
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark import plans
@@ -164,6 +166,21 @@ def test_knn_join_bounds_preshuffle_rows(spark):
     assert "WindowGroupLimit" in above and "Final" in above
     # bounded merge: final output is exactly <= k per query
     assert out.count() <= k * queries.count()
+
+
+@pytest.mark.parametrize("on_error", ["dead-letter", "drop", "fail"])
+def test_embed_is_one_map_in_arrow(spark, on_error):
+    """embed() crosses into Python once under every policy, in one
+    MapInArrow stage that carries the whole row: no ArrowEvalPython
+    projection."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        embed,
+    )
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    plan = embed(docs, dim=8, on_error=on_error)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 def test_t11_bm25_corpus_never_shuffles(spark):
