@@ -4061,12 +4061,14 @@ def st34_wire_topology_fault_injected(spark: SparkSession, sf_dir: str) -> DataF
       the API's non-atomic partial-failure form): the failed-subset
       resubmission with backoff must deliver each record exactly once;
     - every 3rd GetRecords answers the throttling error (the
-      5-reads/sec/shard ceiling): KinesisClient._call's exponential
+      5-reads/sec/shard ceiling): ``aws.request``'s exponential
       backoff must absorb it without dropping a planned range;
     - the OpenSearch endpoint 429s a 2-request burst at bootstrap
-      (request()-level backoff must cover the HEAD/PUT DDL path, not
-      just _bulk) and every 2nd _bulk thereafter: request()'s backoff
-      must re-POST the SAME idempotent NDJSON body until it lands.
+      (the same backoff must cover the HEAD/PUT DDL path, not just
+      _bulk) and every 2nd _bulk thereafter: it must re-POST the SAME
+      idempotent NDJSON body until it lands.
+
+    Every retry runs on the package's one backoff schedule, untuned.
 
     The oracle is st33's, re-derived from generating arithmetic. One
     dropped record, one double-delivered PutRecords subset, or one
@@ -4108,15 +4110,7 @@ def st34_wire_topology_fault_injected(spark: SparkSession, sf_dir: str) -> DataF
             )
         )
         corpus.foreachPartition(
-            put_records_writer(
-                {
-                    "stream_name": "docs",
-                    "endpoint_url": kurl,
-                    # keep the injected-failure resubmit pauses short —
-                    # the schedule, not the wall-clock, is under test
-                    "throttle_backoff_sec": "0.01",
-                }
-            )
+            put_records_writer({"stream_name": "docs", "endpoint_url": kurl})
         )
         # burst at the bootstrap seam: the next two requests (HEAD
         # existence probe, PUT index DDL) each eat a 429 first
@@ -4132,7 +4126,6 @@ def st34_wire_topology_fault_injected(spark: SparkSession, sf_dir: str) -> DataF
                 "kinesis_stream": "docs",
                 "kinesis_region": "us-east-1",
                 "kinesis_endpoint": kurl,
-                "kinesis_throttle_backoff_sec": "0.01",
                 "hosts": [ourl],
                 "index": "embeddings",
             },

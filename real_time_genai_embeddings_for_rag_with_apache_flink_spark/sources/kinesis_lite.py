@@ -17,9 +17,11 @@ What is implemented (all public AWS API surface):
   consumer protocol for a polling (non-EFO) reader — plus
   ``PutRecords`` (the producer side: put_records_writer delivers
   DataFrame partitions executor-side, 500-record chunks, failed-subset
-  resubmission; driver row st32), and in-place exponential backoff on
-  the protocol's throttling errors (ProvisionedThroughputExceeded /
-  LimitExceeded) on every call;
+  resubmission; driver row st32). Every call goes through the
+  package's one AWS wire call (``aws.request``), which retries the
+  protocol's throttling errors (ProvisionedThroughputExceeded /
+  LimitExceeded) on its one backoff schedule; PutRecords' failed-subset
+  resends pause on the same schedule;
 - SigV4 signing through the package's one signer (``aws.sign``,
   botocore's), whenever the process's AWS credential chain yields
   credentials — so the same source points at real AWS, kinesalite, or
@@ -69,8 +71,6 @@ import concurrent.futures
 import datetime
 import json
 import time
-import urllib.error
-import urllib.request
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -82,11 +82,9 @@ from pyspark.sql.datasource import (
 from .. import aws
 
 _API_VERSION = "Kinesis_20131202"
-_MAX_EMPTY_POLLS = 8  # GetRecords may return empty pages mid-stream
-# persist=True walks tolerate long empty runs (sparse/aged stream
-# regions) because every page advances the iterator; this cap only
-# trips a service that stops advancing entirely
-_PERSIST_EMPTY_CAP = 100_000
+# a walk follows empty pages behind the tip, because every page advances
+# the iterator; this many in a row means the iterator is not advancing
+_EMPTY_PAGES_CAP = 100_000
 
 
 # ---------------------------------------------------------------------------
@@ -103,15 +101,22 @@ _THROTTLE_TYPES = (
 )
 
 
+def _throttled(status: int, body: bytes) -> bool:
+    try:
+        err_type = json.loads(body).get("__type", "")
+    except ValueError:
+        return False
+    return err_type.split("#")[-1] in _THROTTLE_TYPES
+
+
 class KinesisClient:
     """Minimal Kinesis Data Streams JSON/HTTP client (ListShards,
     GetShardIterator, GetRecords, PutRecords). Stateless besides
     config: safe to share across threads and to rebuild on retry.
     Rate-limit errors (the JSON protocol's
     ProvisionedThroughputExceeded/LimitExceeded, HTTP 400 + __type)
-    retry in-place with exponential backoff (``max_throttle_retries``,
-    default 8) — a polling reader at the 5-reads/sec/shard ceiling
-    must slow down, not fail the task."""
+    back off inside ``aws.request`` — a polling reader at the
+    5-reads/sec/shard ceiling must slow down, not fail the task."""
 
     def __init__(self, options: dict):
         self.stream = options.get("stream_name") or options.get("streamname")
@@ -124,47 +129,27 @@ class KinesisClient:
         ).rstrip("/")
         # the instance metadata service only for an AWS (https) endpoint
         self._instance_role = self.endpoint.startswith("https://")
-        self.timeout = float(options.get("http_timeout_sec", 10))
-        self.throttle_retries = int(options.get("max_throttle_retries", 8))
-        self.backoff_s = float(options.get("throttle_backoff_sec", 0.05))
 
     def _call(self, action: str, payload: dict) -> dict:
-        body = json.dumps(payload, separators=(",", ":")).encode()
-        url = self.endpoint + "/"
-        creds = aws.credentials(self._instance_role)
-        attempt = 0
-        while True:
-            headers = {
+        status, raw = aws.request(
+            "POST",
+            self.endpoint + "/",
+            json.dumps(payload, separators=(",", ":")).encode(),
+            {
                 "content-type": "application/x-amz-json-1.1",
                 "x-amz-target": f"{_API_VERSION}.{action}",
-            }
-            if creds is not None:
-                # re-signed per attempt: x-amz-date stays fresh
-                headers = aws.sign(
-                    creds, "POST", url, headers, body, self.region, "kinesis"
-                )
-            req = urllib.request.Request(url, data=body, headers=headers, method="POST")
-            try:
-                with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                    return json.loads(resp.read().decode())
-            except urllib.error.HTTPError as e:
-                raw = e.read().decode()
-                err_type = ""
-                try:
-                    err_type = json.loads(raw).get("__type", "")
-                except ValueError:
-                    pass
-                if (
-                    err_type.split("#")[-1] in _THROTTLE_TYPES
-                    and attempt < self.throttle_retries
-                ):
-                    time.sleep(min(self.backoff_s * (2**attempt), 5.0))
-                    attempt += 1
-                    continue
-                # surface the AWS error body
-                raise RuntimeError(
-                    f"Kinesis {action} failed: HTTP {e.code} {raw!r}"
-                ) from e
+            },
+            aws.credentials(self._instance_role),
+            self.region,
+            "kinesis",
+            _throttled,
+        )
+        if status >= 300:
+            # surface the AWS error body
+            raise RuntimeError(
+                f"Kinesis {action} failed: HTTP {status} {raw.decode()!r}"
+            )
+        return json.loads(raw)
 
     def list_shards(self) -> list[str]:
         shards: list[str] = []
@@ -201,38 +186,24 @@ class KinesisClient:
             {"ShardIterator": iterator, "Limit": min(limit, 10_000)},
         )
 
-    def read_after(self, shard_id: str, position: str | None, limit: int) -> list[dict]:
-        """``iter_after``'s records as a list, lenient."""
-        return list(self.iter_after(shard_id, position, limit))
-
     def iter_after(
         self,
         shard_id: str,
         position: str | None,
         limit: int,
-        strict: bool = False,
         stop_after: int | None = None,
-        persist: bool = False,
     ):
         """Up to `limit` records strictly after `position` (None =
         shard start), one GetRecords page in memory at a time. Stops at
-        a caught-up shard (a page with MillisBehindLatest 0) or a closed
-        one (no NextShardIterator). A behind-tip shard may serve empty
-        pages while the iterator seeks (a sparse or aged stream region
-        serves MANY); the three empty-page policies, by call site:
-
-        - default (lenient): stop after _MAX_EMPTY_POLLS empties — the
-          stream reader's ``read``, whose end offset is the last record
-          returned, so an early stop only defers records to the next
-          trigger;
-        - ``strict=True``: RAISE — a replay of a logged range, where
-          returning early would silently drop records;
-        - ``persist=True``: keep polling through empty pages until
-          caught up — LATEST's tip resolution, whose early return would
-          start the query below records that already existed. Each
-          empty page still advances the shard iterator, so the walk
-          provably progresses; _PERSIST_EMPTY_CAP bounds the
-          pathological non-advancing endpoint."""
+        `limit`, at a record at or past `stop_after`, at the tip (a page
+        with MillisBehindLatest 0) or at a closed shard (no
+        NextShardIterator). Empty pages behind the tip are followed:
+        GetRecords serves them while the iterator passes a part of the
+        shard with no records (an aged-out region under TRIM_HORIZON),
+        and every page advances the iterator. Stopping there instead
+        would hand every later walk from the same position the same
+        empty pages. _EMPTY_PAGES_CAP empty pages in a row raise: the
+        endpoint is not advancing."""
         it = self.shard_iterator(shard_id, position)
         n = 0
         empty = 0
@@ -242,47 +213,27 @@ class KinesisClient:
             n += len(recs)
             it = page.get("NextShardIterator")
             yield from recs
-            if (
-                stop_after is not None
-                and recs
-                and int(recs[-1]["SequenceNumber"]) >= stop_after
-            ):
-                break  # planned range fully covered — don't walk to tip
-            if recs and page.get("MillisBehindLatest") == 0:
-                break  # caught up: a further page would come back empty
+            if page.get("MillisBehindLatest", 0) == 0:
+                break  # at the tip: a further page would come back empty
             if not recs:
                 empty += 1
-                if page.get("MillisBehindLatest", 0) == 0:
-                    break
-                if persist:
-                    if empty >= _PERSIST_EMPTY_CAP:
-                        raise RuntimeError(
-                            f"shard {shard_id}: {empty} consecutive empty "
-                            "GetRecords pages while still behind tip — "
-                            "the iterator is not advancing (service "
-                            "fault); refusing to return a below-tip end"
-                        )
-                    continue
-                if empty >= _MAX_EMPTY_POLLS:
-                    if strict:
-                        raise RuntimeError(
-                            f"shard {shard_id}: {empty} consecutive empty "
-                            "GetRecords pages while still behind tip — "
-                            "failing the task so it retries rather than "
-                            "dropping planned records"
-                        )
-                    break
-            else:
-                empty = 0
+                if empty >= _EMPTY_PAGES_CAP:
+                    raise RuntimeError(
+                        f"shard {shard_id}: {empty} consecutive empty "
+                        "GetRecords pages while still behind tip — the "
+                        "iterator is not advancing (service fault)"
+                    )
+                continue
+            empty = 0
+            if stop_after is not None and int(recs[-1]["SequenceNumber"]) >= stop_after:
+                break  # planned range fully covered — don't walk to tip
 
 
 _PUT_CHUNK = 500  # the PutRecords API cap (records per request)
 
 
 def _client_put_records(
-    client: "KinesisClient",
-    records: list[tuple[str, bytes]],
-    max_retries: int = 5,
+    client: "KinesisClient", records: list[tuple[str, bytes]]
 ) -> int:
     """PutRecords in API-cap chunks, retrying the FAILED SUBSET.
     PutRecords is documented as non-atomic: per-record failures come
@@ -290,13 +241,18 @@ def _client_put_records(
     contract is to resubmit exactly those records (the reference's
     producer writes one record per Lambda invoke via put_record,
     ``kds-producer-lambda/lambda_function.py``; this is the batched
-    form of the same write). Raises after ``max_retries`` resubmits of
-    a still-failing subset — delivery must never be silently partial.
-    Returns the number of records delivered."""
+    form of the same write). Per-record throughput failures are usually
+    still throttled milliseconds later, so each resubmit waits
+    ``aws.backoff(attempt)``; a subset still failing after
+    ``aws.THROTTLE_RETRIES`` resubmits raises — delivery must never be
+    silently partial (a Spark task retry would re-put the whole
+    partition). Returns the number of records delivered."""
     delivered = 0
     for i in range(0, len(records), _PUT_CHUNK):
         pending = records[i : i + _PUT_CHUNK]
-        for _attempt in range(max_retries + 1):
+        for attempt in range(aws.THROTTLE_RETRIES + 1):
+            if attempt:
+                time.sleep(aws.backoff(attempt - 1))
             out = client._call(
                 "PutRecords",
                 {
@@ -310,32 +266,21 @@ def _client_put_records(
                     ],
                 },
             )
-            if not out.get("FailedRecordCount"):
-                delivered += len(pending)
-                pending = []
+            failed = []
+            if out.get("FailedRecordCount"):
+                failed = [
+                    pending[j]
+                    for j, r in enumerate(out["Records"])
+                    if r.get("ErrorCode")
+                ]
+            delivered += len(pending) - len(failed)
+            pending = failed
+            if not pending:
                 break
-            results = out["Records"]
-            still = [
-                pending[j]
-                for j, r in enumerate(results)
-                if r.get("ErrorCode")
-            ]
-            delivered += len(pending) - len(still)
-            pending = still
-            if pending and _attempt < max_retries:
-                # Per-record throughput-exceeded failures are almost
-                # always still throttled milliseconds later — back off
-                # before resubmitting the failed subset (mirroring
-                # _call's throttle backoff) instead of burning every
-                # resubmit in ~ms and failing the task; the Spark task
-                # retry would then re-PutRecords the whole partition,
-                # duplicating records already delivered.
-                time.sleep(min(client.backoff_s * (2**_attempt), 5.0))
         if pending:
             raise RuntimeError(
                 f"PutRecords: {len(pending)} records still failing after "
-                f"{max_retries} resubmits (first error subset retained "
-                "for retry by the caller)"
+                f"{aws.THROTTLE_RETRIES} resubmits"
             )
     return delivered
 
@@ -369,14 +314,7 @@ def put_records_writer(options: dict):
     return write
 
 
-def _decode(rec: dict, mode: str) -> str:
-    raw = rec.get("Data", "")
-    if mode == "base64":
-        return raw
-    return base64.b64decode(raw).decode("utf-8", errors="replace")
-
-
-def _row(rec: dict, shard_id: str, mode: str):
+def _row(rec: dict, shard_id: str):
     ts = rec.get("ApproximateArrivalTimestamp")
     arrival = (
         datetime.datetime.fromtimestamp(float(ts), datetime.timezone.utc)
@@ -387,7 +325,7 @@ def _row(rec: dict, shard_id: str, mode: str):
         shard_id,
         rec["SequenceNumber"],
         rec.get("PartitionKey"),
-        _decode(rec, mode),
+        base64.b64decode(rec.get("Data", "")).decode("utf-8", errors="replace"),
         arrival,
     )
 
@@ -400,7 +338,6 @@ def _row(rec: dict, shard_id: str, mode: str):
 class KinesisLiteReader(DataSourceReader):
     def __init__(self, options: dict):
         self.options = dict(options)
-        self.mode = options.get("decode", "utf8")
         self.limit = int(options.get("max_records_per_shard", 10_000))
         self.truncate_ok = str(
             options.get("truncate_at_limit", "false")
@@ -431,7 +368,7 @@ class KinesisLiteReader(DataSourceReader):
                     "a truncated one-shot read (the streaming reader is "
                     "the unbounded path)"
                 )
-            yield _row(rec, shard_id, self.mode)
+            yield _row(rec, shard_id)
 
 
 # ---------------------------------------------------------------------------
@@ -463,7 +400,6 @@ class KinesisLiteStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, options: dict):
         self.options = dict(options)
-        self.mode = options.get("decode", "utf8")
         self.start = options.get("starting_position", "TRIM_HORIZON").upper()
         if self.start not in ("TRIM_HORIZON", "LATEST"):
             raise ValueError(f"unknown starting_position {self.start!r}")
@@ -477,11 +413,10 @@ class KinesisLiteStreamReader(SimpleDataSourceStreamReader):
             return {"shards": {s: "" for s in shards}}
 
         # LATEST: each shard's current tip, walked once through what
-        # already exists. persist: an early stop would start the query
-        # below records that existed before it.
+        # already exists
         def tip(shard: str) -> str:
             last = ""
-            for rec in self._client.iter_after(shard, None, _UNBOUNDED, persist=True):
+            for rec in self._client.iter_after(shard, None, _UNBOUNDED):
                 last = rec["SequenceNumber"]
             return last
 
@@ -493,11 +428,12 @@ class KinesisLiteStreamReader(SimpleDataSourceStreamReader):
         # merge child) joins at TRIM_HORIZON, an unlisted one drops out
         shards = self._client.list_shards()
         got = _per_shard(
-            lambda s: self._client.read_after(s, committed.get(s) or None, self.cap),
+            lambda s: list(
+                self._client.iter_after(s, committed.get(s) or None, self.cap)
+            ),
             shards,
         )
-        # lenient read_after: `end` is the last record read, so a read
-        # that stops early still never falls below `start`
+        # `end` is the last record read, never below `start`
         end = {
             "shards": {
                 s: got[s][-1]["SequenceNumber"] if got[s] else committed.get(s, "")
@@ -508,12 +444,11 @@ class KinesisLiteStreamReader(SimpleDataSourceStreamReader):
             # the same JSON as `start`, so the engine plans no batch
             return iter(()), start
         # a list iterator: Spark's wrapper copies it to serve the batch
-        return iter([_row(r, s, self.mode) for s in shards for r in got[s]]), end
+        return iter([_row(r, s) for s in shards for r in got[s]]), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        """``(start, end]`` page by page. strict: a replay that stopped
-        short would silently drop records the offset log holds. Records
-        aged out of retention are not served, so they are not replayed."""
+        """``(start, end]`` page by page. Records aged out of retention
+        are not served, so they are not replayed."""
         committed = start["shards"]
         for shard, last in end["shards"].items():
             first = committed.get(shard, "")
@@ -521,11 +456,11 @@ class KinesisLiteStreamReader(SimpleDataSourceStreamReader):
                 continue
             stop = int(last)
             for rec in self._client.iter_after(
-                shard, first or None, _UNBOUNDED, strict=True, stop_after=stop
+                shard, first or None, _UNBOUNDED, stop_after=stop
             ):
                 if int(rec["SequenceNumber"]) > stop:
                     break
-                yield _row(rec, shard, self.mode)
+                yield _row(rec, shard)
 
 
 class KinesisLiteDataSource(DataSource):
@@ -534,7 +469,8 @@ class KinesisLiteDataSource(DataSource):
     streaming), max_records_per_shard (batch; a one-shot read that would
     exceed it RAISES unless truncate_at_limit=true), truncate_at_limit
     (batch), max_records_per_trigger (streaming; records per shard per
-    trigger, 0 or unset = 10,000), decode (utf8 | base64)."""
+    trigger, 0 or unset = 10,000). Record data decodes as UTF-8, an
+    invalid byte as U+FFFD."""
 
     @classmethod
     def name(cls) -> str:

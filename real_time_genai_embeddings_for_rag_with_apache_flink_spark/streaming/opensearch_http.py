@@ -12,18 +12,20 @@ needs —
 - ``PUT  /{index}``            index creation with the hnsw mapping,
 - ``POST /_bulk``              NDJSON bulk indexing —
 
-all public API, implemented over ``urllib``. With a region set, every
-request is signed by the package's one signer (``aws.sign``, botocore's
-SigV4, with the process's credential chain) for service ``es`` (managed
-domains) or ``aoss`` (serverless) — the reference's signer split; so
-the identical sink partition code runs
+all public API, sent by the package's one AWS wire call
+(``aws.request``). With a region set, every request is signed by the
+package's one signer (``aws.sign``, botocore's SigV4, with the
+process's credential chain) for service ``es`` (managed domains) or
+``aoss`` (serverless) — the reference's signer split; so the identical
+sink partition code runs
 against the in-process fake endpoint (streaming/opensearch_fake.py), a
 local OpenSearch, or a signed AWS domain. ``HttpOpenSearchClient``
 exposes ``indices.exists`` / ``indices.create`` and one ``request``
 method; ``http_bulk`` sends one chunk's actions as one request, and
 ``json_float_arrays`` formats their vectors in Arrow.
-HTTP 429/503 backs off inside ``request`` — the one retry loop for
-bulk, DDL and search calls alike.
+HTTP 429/503 is a throttle: ``aws.request`` sends the call again on its
+one backoff schedule, for bulk, DDL and search calls alike, and a
+throttle that outlasts it raises ``ThrottledError``.
 
 At scale nothing changes: one client + one bulk stream per output
 partition, executor-side, at most one bulk in flight; the driver only
@@ -37,9 +39,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import time
-import urllib.error
-import urllib.request
 
 import numpy as np
 import pyarrow as pa
@@ -49,7 +48,7 @@ from .. import aws
 
 
 class ThrottledError(RuntimeError):
-    """HTTP 429/503 that outlasted ``request``'s bounded backoff."""
+    """HTTP 429/503 that outlasted ``aws.request``'s bounded backoff."""
 
 
 class HttpOpenSearchClient:
@@ -58,24 +57,11 @@ class HttpOpenSearchClient:
     by http_bulk (and by tests to search the fake)."""
 
     def __init__(
-        self,
-        base_url: str,
-        region: str | None = None,
-        service: str = "es",
-        timeout: float = 10.0,
-        throttle_retries: int = 7,
-        throttle_backoff_s: float = 0.05,
+        self, base_url: str, region: str | None = None, service: str = "es"
     ):
         self.base = base_url.rstrip("/")
         self.region = region
         self.service = service
-        self.timeout = timeout
-        # 429/503 backoff applies to EVERY call — indices.exists /
-        # indices.create during sink bootstrap, _bulk, and raw
-        # GET /_search readers all survive a transient throttle; this is
-        # the transport's only retry loop
-        self.throttle_retries = throttle_retries
-        self.throttle_backoff_s = throttle_backoff_s
         self.indices = _Indices(self)
 
     def request(
@@ -85,57 +71,39 @@ class HttpOpenSearchClient:
         body: bytes | None = None,
         content_type: str = "application/json",
     ) -> tuple[int, dict]:
-        data = body or b""
-        url = self.base + path
         headers = {"content-type": content_type}
+        creds = None
         if self.region:
-            # aoss needs the payload hash among the signed headers
-            headers["x-amz-content-sha256"] = hashlib.sha256(data).hexdigest()
-        attempt = 0
-        while True:
-            if self.region:
-                # re-signed per attempt: x-amz-date stays fresh
-                signed = aws.sign(
-                    aws.credentials(), method, url, headers, data,
-                    self.region, self.service,
-                )
-            else:
-                signed = headers
-            req = urllib.request.Request(
-                url, data=data if body is not None else None,
-                headers=signed, method=method,
-            )
-            try:
-                with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                    raw = resp.read()
-                    return resp.status, (json.loads(raw) if raw else {})
-            except urllib.error.HTTPError as e:
-                # 404 is an ANSWER only for HEAD (indices.exists asks "is
-                # it there?"); for every other method it is a failure —
-                # mapping a 404 on POST /_bulk (wrong base path, proxy)
-                # to success would silently drop the batch
-                if e.code == 404 and method == "HEAD":
-                    return 404, {}
-                if e.code in (429, 503):
-                    # throttling/backpressure is RETRYABLE, not fatal:
-                    # back off in place for a bounded number of attempts
-                    # (every caller — bootstrap DDL, searches, bulk —
-                    # survives a transient throttle), then surface the
-                    # typed error, which fails the call
-                    if attempt < self.throttle_retries:
-                        time.sleep(
-                            min(self.throttle_backoff_s * (2**attempt), 5.0)
-                        )
-                        attempt += 1
-                        continue
-                    raise ThrottledError(
-                        f"OpenSearch {method} {path} throttled: HTTP {e.code}"
-                    ) from e
+            creds = aws.credentials()
+            if creds is None:
                 raise RuntimeError(
-                    f"OpenSearch {method} {path} failed: HTTP {e.code} "
-                    f"{e.read().decode()!r}"
-                ) from e
-
+                    f"cannot sign a {self.service} request: the AWS "
+                    "credential chain found no credentials"
+                )
+            # aoss needs the payload hash among the signed headers
+            headers["x-amz-content-sha256"] = hashlib.sha256(
+                body or b""
+            ).hexdigest()
+        status, raw = aws.request(
+            method, self.base + path, body, headers, creds, self.region,
+            self.service, lambda status, _: status in (429, 503),
+        )
+        # 404 is an ANSWER only for HEAD (indices.exists asks "is it
+        # there?"); for every other method it is a failure — mapping a
+        # 404 on POST /_bulk (wrong base path, proxy) to success would
+        # silently drop the batch
+        if status == 404 and method == "HEAD":
+            return 404, {}
+        if status in (429, 503):
+            raise ThrottledError(
+                f"OpenSearch {method} {path} throttled: HTTP {status}"
+            )
+        if status >= 300:
+            raise RuntimeError(
+                f"OpenSearch {method} {path} failed: HTTP {status} "
+                f"{raw.decode()!r}"
+            )
+        return status, (json.loads(raw) if raw else {})
 
     def search_all(self, index: str, sort_field: str, page_size: int = 1000):
         """Paginated read-back over ``search_after`` — yields every
@@ -227,7 +195,7 @@ def json_float_arrays(vectors) -> list[bytes]:
 def http_bulk(client: HttpOpenSearchClient, actions) -> int:
     """Bulk indexing over REST: NDJSON action lines + source lines, one
     POST /_bulk per call (throttling backs off inside
-    ``client.request``, which re-POSTs the same body). A ``_source``
+    ``aws.request``, which re-POSTs the same body). A ``_source``
     given as ``bytes`` is already JSON and goes out verbatim; a dict is
     serialised here. Raises on any per-item error: the micro-batch
     fails and is replayed, so a partial failure can never pass

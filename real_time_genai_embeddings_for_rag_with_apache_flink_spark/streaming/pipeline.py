@@ -155,16 +155,12 @@ def build_source(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
         reader = spark.readStream.format("kinesis-lite")
         for key, val in kinesis_reader_options(cfg).items():
             reader = reader.option(key, val)
-        for key in (
-            # records per shard per trigger (0 or unset: 10,000)
-            "max_records_per_trigger",
-            # throttle-backoff tuning (st34 fault-injection row shortens
-            # the schedule; production leaves the defaults)
-            "throttle_backoff_sec",
-            "max_throttle_retries",
-        ):
-            if cfg.extra.get(f"kinesis_{key}"):
-                reader = reader.option(key, str(cfg.extra[f"kinesis_{key}"]))
+        # records per shard per trigger (0 or unset: 10,000)
+        if cfg.extra.get("kinesis_max_records_per_trigger"):
+            reader = reader.option(
+                "max_records_per_trigger",
+                str(cfg.extra["kinesis_max_records_per_trigger"]),
+            )
         # the reader hands each trigger over as one driver-read
         # partition; spread it round-robin so embed and _bulk run on
         # every core

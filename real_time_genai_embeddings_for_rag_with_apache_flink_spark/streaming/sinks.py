@@ -70,19 +70,15 @@ def _parquet_writer(cfg: PipelineConfig) -> Callable[[DataFrame, int], None]:
         # Each micro-batch lands in its own _batch=<id> partition via
         # dynamic partition overwrite: a replayed batch REPLACES its
         # partition instead of appending a second copy -> effectively
-        # exactly-once output.
-        spark = df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                df.withColumn("_batch", F.lit(batch_id))
-                .write.partitionBy("_batch")
-                .mode("overwrite")
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # exactly-once output. A writer option, so no other write on
+        # the session sees the mode.
+        (
+            df.withColumn("_batch", F.lit(batch_id))
+            .write.partitionBy("_batch")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(path)
+        )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         # Plain append -> at-least-once on replay (the reference's bulk

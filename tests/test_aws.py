@@ -8,6 +8,7 @@ import datetime
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -17,12 +18,14 @@ from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.kinesis_
 )
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.kinesis_lite import (
     KinesisClient,
+    _client_put_records,
 )
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_fake import (
     FakeOpenSearchServer,
 )
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_http import (
     HttpOpenSearchClient,
+    ThrottledError,
     http_bulk,
 )
 
@@ -147,3 +150,39 @@ def test_unsigned_paths_never_import_botocore(fakes):
         [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=120
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_kinesis_opensearch_and_put_records_share_one_backoff_schedule(monkeypatch):
+    """A permanently throttled GetRecords, _bulk and PutRecords subset
+    each reach their endpoint exactly aws.THROTTLE_RETRIES + 1 times
+    and sleep the same sequence, aws.backoff(0), aws.backoff(1), ...
+    in between."""
+    naps: list[float] = []
+    monkeypatch.setattr(time, "sleep", naps.append)
+    schedule = [aws.backoff(n) for n in range(aws.THROTTLE_RETRIES)]
+    kinesis = FakeKinesisServer("docs", _SHARDS, get_throttle_every=1, put_fail_every=1)
+    opensearch = FakeOpenSearchServer(throttle_every=1)
+    urls = kinesis.start(), opensearch.start()
+    try:
+        client = KinesisClient({"stream_name": "docs", "endpoint_url": urls[0]})
+        iterator = client.shard_iterator(sorted(_SHARDS)[0], None)
+        with pytest.raises(RuntimeError, match="ProvisionedThroughput"):
+            client.get_records(iterator, 10)
+        assert kinesis._gets_seen == aws.THROTTLE_RETRIES + 1
+        assert naps == schedule
+        naps.clear()
+        with pytest.raises(ThrottledError):
+            http_bulk(
+                HttpOpenSearchClient(urls[1]),
+                [{"_index": "docs", "_source": {"a": 1}}],
+            )
+        assert opensearch._bulk_seen == aws.THROTTLE_RETRIES + 1
+        assert naps == schedule
+        naps.clear()
+        with pytest.raises(RuntimeError, match="still failing"):
+            _client_put_records(client, [("k", b"v")])
+        assert kinesis._put_seen == aws.THROTTLE_RETRIES + 1
+        assert naps == schedule
+    finally:
+        kinesis.stop()
+        opensearch.stop()

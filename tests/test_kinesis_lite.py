@@ -56,10 +56,10 @@ def test_client_protocol_roundtrip(fake, empty_aws_chain, monkeypatch):
     shards = c.list_shards()
     assert shards == [f"shardId-{i:012d}" for i in range(4)]
     # TRIM_HORIZON reads everything, paginated
-    recs = c.read_after(shards[0], None, 3)
+    recs = list(c.iter_after(shards[0], None, 3))
     assert [r["SequenceNumber"] for r in recs] == ["0", "1", "2"]
     # AFTER_SEQUENCE_NUMBER resumes exactly
-    rest = c.read_after(shards[0], "2", 1000)
+    rest = list(c.iter_after(shards[0], "2", 1000))
     assert [r["SequenceNumber"] for r in rest] == [
         str(i) for i in range(3, 10)
     ]
@@ -524,7 +524,7 @@ def test_reveal_does_not_rehide_closed_shard_remainder():
         c = KinesisClient({"stream_name": "docs", "endpoint_url": url})
         srv.split_shard("s0", {"s1": [("c", b"{}")]})
         c.list_shards()  # reveal tick — must not touch the closed parent
-        recs = c.read_after("s0", None, 100)
+        recs = list(c.iter_after("s0", None, 100))
         assert len(recs) == 6, "closed parent remainder must stay readable"
     finally:
         srv.stop()
@@ -714,7 +714,7 @@ def test_put_records_chunks_routes_and_retries():
         shards = client.list_shards()
         assert len(shards) == n_shards
         for shard in shards:
-            for rec in client.read_after(shard, None, 10_000):
+            for rec in client.iter_after(shard, None, 10_000):
                 pk = rec["PartitionKey"]
                 assert pk not in landed, f"duplicate delivery of {pk}"
                 expect = shards[
@@ -729,15 +729,17 @@ def test_put_records_chunks_routes_and_retries():
         srv.stop()
 
 
-def test_put_records_raises_when_subset_never_succeeds():
-    """A subset that keeps failing past max_retries must raise, never
-    report partial delivery as success."""
+def test_put_records_raises_when_subset_never_succeeds(monkeypatch):
+    """A subset that keeps failing past aws.THROTTLE_RETRIES resubmits
+    must raise, never report partial delivery as success."""
     import pytest as _pytest
 
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.kinesis_lite import (
         _client_put_records,
     )
 
+    monkeypatch.setattr(aws, "THROTTLE_RETRIES", 2)
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.001)
     srv = FakeKinesisServer(
         "w2", {"shardId-000000000000": []}, put_fail_every=1  # all fail
     )
@@ -745,7 +747,7 @@ def test_put_records_raises_when_subset_never_succeeds():
     try:
         client = KinesisClient({"stream_name": "w2", "endpoint_url": url})
         with _pytest.raises(RuntimeError, match="still failing"):
-            _client_put_records(client, [("k", b"v")], max_retries=2)
+            _client_put_records(client, [("k", b"v")])
     finally:
         srv.stop()
 
@@ -794,44 +796,33 @@ def test_resharding_while_paced_adopts_then_paces(fake):
     assert len(seen) == 40 + 12 and len(set(seen)) == 52
 
 
-def test_get_records_backs_off_on_throughput_exceeded():
+def test_get_records_backs_off_on_throughput_exceeded(monkeypatch):
     """The polling consumer's documented ceiling (5 reads/sec/shard)
     surfaces as ProvisionedThroughputExceededException; the client must
     back off and retry in place — not fail the executor task — and a
-    PERSISTENT throttle must still raise after max_throttle_retries."""
+    PERSISTENT throttle must still raise after aws.THROTTLE_RETRIES."""
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.01)
     srv = FakeKinesisServer("docs", _seeded_shards(), get_throttle_every=3)
     url = srv.start()
     try:
-        c = KinesisClient(
-            {
-                "stream_name": "docs",
-                "endpoint_url": url,
-                "throttle_backoff_sec": "0.01",
-            }
-        )
+        c = KinesisClient({"stream_name": "docs", "endpoint_url": url})
         # every 3rd GetRecords throttles; the full drain still succeeds
         rows = [
             rec
             for shard in c.list_shards()
-            for rec in c.read_after(shard, None, 10_000)
+            for rec in c.iter_after(shard, None, 10_000)
         ]
         assert len(rows) == 40
     finally:
         srv.stop()
 
+    monkeypatch.setattr(aws, "THROTTLE_RETRIES", 2)
     hard = FakeKinesisServer("docs", _seeded_shards(), get_throttle_every=1)
     url2 = hard.start()
     try:
-        c2 = KinesisClient(
-            {
-                "stream_name": "docs",
-                "endpoint_url": url2,
-                "max_throttle_retries": "2",
-                "throttle_backoff_sec": "0.01",
-            }
-        )
+        c2 = KinesisClient({"stream_name": "docs", "endpoint_url": url2})
         with pytest.raises(RuntimeError, match="ProvisionedThroughput"):
-            c2.read_after("shardId-000000000000", None, 10)
+            list(c2.iter_after("shardId-000000000000", None, 10))
     finally:
         hard.stop()
 
@@ -840,10 +831,10 @@ def test_latest_initial_offset_persists_through_empty_pages_behind_tip(monkeypat
     """A shard serving empty GetRecords pages while still BEHIND TIP
     (sparse/aged stream regions do this for many consecutive pages)
     must not make LATEST's tip walk stop early: the query would start
-    below records that existed before it. The walk PERSISTS through far
-    more than _MAX_EMPTY_POLLS empty pages until the true tip, and an
-    endpoint whose iterator never advances still raises rather than
-    return a below-tip start."""
+    below records that existed before it. The walk follows every empty
+    page behind the tip until the true tip, and an endpoint whose
+    iterator never advances still raises rather than return a below-tip
+    start."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources import (
         kinesis_lite as kl,
     )
@@ -889,8 +880,8 @@ def test_latest_initial_offset_persists_through_empty_pages_behind_tip(monkeypat
     assert reader.initialOffset() == {"shards": {"shardId-000000000000": "99"}}
     assert served["pages"] >= 51
 
-    # pathological endpoint (iterator never advances): the persist cap
-    # still refuses to return a below-tip start
+    # pathological endpoint (iterator never advances): the empty-page
+    # cap still refuses to return a below-tip start
     monkeypatch.setattr(
         KinesisClient,
         "get_records",
@@ -900,16 +891,22 @@ def test_latest_initial_offset_persists_through_empty_pages_behind_tip(monkeypat
             "NextShardIterator": "tok",
         },
     )
-    monkeypatch.setattr(kl, "_PERSIST_EMPTY_CAP", 20)
+    monkeypatch.setattr(kl, "_EMPTY_PAGES_CAP", 20)
     with pytest.raises(RuntimeError, match="not advancing"):
         reader.initialOffset()
 
 
 def test_lenient_read_that_stops_early_never_ends_below_start(monkeypatch):
-    """read() gives up after _MAX_EMPTY_POLLS empty behind-tip pages
-    rather than block the trigger. That is safe because its end offset
-    is the last record it actually read: an early stop only defers
-    records to the next trigger, and the end never falls below start."""
+    """read()'s end offset is the last record it actually read, so it
+    never falls below start: here a record, empty pages behind the tip,
+    then the tip. An endpoint whose iterator never advances serves only
+    empty behind-tip pages; read() raises at the empty-page cap rather
+    than return, so the offset stays put."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources import (
+        kinesis_lite as kl,
+    )
+
+    empty = {"Records": [], "MillisBehindLatest": 5000, "NextShardIterator": "tok"}
     pages = iter(
         [
             {
@@ -918,10 +915,12 @@ def test_lenient_read_that_stops_early_never_ends_below_start(monkeypatch):
                 ],
                 "MillisBehindLatest": 5000,
                 "NextShardIterator": "tok",
-            }
+            },
+            empty,
+            empty,
+            {"Records": [], "MillisBehindLatest": 0, "NextShardIterator": "tok"},
         ]
     )
-    empty = {"Records": [], "MillisBehindLatest": 5000, "NextShardIterator": "tok"}
     monkeypatch.setattr(
         KinesisClient, "list_shards", lambda self: ["shardId-000000000000"]
     )
@@ -938,15 +937,54 @@ def test_lenient_read_that_stops_early_never_ends_below_start(monkeypatch):
     rows, end = reader.read(start)
     assert [row[1] for row in rows] == ["8"]
     assert end == {"shards": {"shardId-000000000000": "8"}}
-    # only empty pages behind tip: nothing read, the offset stays put
-    rows, again = reader.read(end)
-    assert list(rows) == [] and again == end
+    # only empty pages behind tip: the iterator is not advancing
+    monkeypatch.setattr(kl, "_EMPTY_PAGES_CAP", 20)
+    with pytest.raises(RuntimeError, match="not advancing"):
+        reader.read(end)
+
+
+def test_read_walks_past_more_than_eight_empty_pages_behind_tip(monkeypatch):
+    """GetRecords serves empty pages while the iterator passes a part of
+    the shard with no records (an aged-out region under TRIM_HORIZON).
+    Each page advances the iterator, so read() follows them: with 20
+    empty pages before 2 records, the first read returns both. A walk
+    that stopped early would end at start, and the next trigger's fresh
+    iterator would walk the same empty pages again, for ever."""
+
+    def get_records(self, it, limit):
+        i = int(it)
+        if i < 20:
+            return {
+                "Records": [],
+                "MillisBehindLatest": 5000,
+                "NextShardIterator": str(i + 1),
+            }
+        return {
+            "Records": [
+                {"SequenceNumber": str(seq), "PartitionKey": "k", "Data": ""}
+                for seq in (20, 21)
+            ],
+            "MillisBehindLatest": 0,
+            "NextShardIterator": "22",
+        }
+
+    monkeypatch.setattr(
+        KinesisClient, "list_shards", lambda self: ["shardId-000000000000"]
+    )
+    monkeypatch.setattr(KinesisClient, "shard_iterator", lambda self, s, p: "0")
+    monkeypatch.setattr(KinesisClient, "get_records", get_records)
+    reader = KinesisLiteStreamReader(
+        {"stream_name": "docs", "endpoint_url": "http://127.0.0.1:1"}
+    )
+    rows, end = reader.read(reader.initialOffset())
+    assert [row[1] for row in rows] == ["20", "21"]
+    assert end == {"shards": {"shardId-000000000000": "21"}}
 
 
 def test_put_records_resubmits_back_off_between_attempts(monkeypatch):
     """Per-record throughput-exceeded failures are usually still
     throttled milliseconds later: the failed-subset resubmit loop must
-    sleep (exponential, mirroring _call's throttle backoff) between
+    sleep (aws.backoff, the schedule of every throttled call) between
     attempts rather than burning every resubmit in ~ms."""
     import time as _time
 
@@ -954,6 +992,7 @@ def test_put_records_resubmits_back_off_between_attempts(monkeypatch):
         _client_put_records,
     )
 
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.02)
     naps: list[float] = []
     real_sleep = _time.sleep
     monkeypatch.setattr(
@@ -967,13 +1006,7 @@ def test_put_records_resubmits_back_off_between_attempts(monkeypatch):
     )
     url = srv.start()
     try:
-        client = KinesisClient(
-            {
-                "stream_name": "docs",
-                "endpoint_url": url,
-                "throttle_backoff_sec": "0.02",
-            }
-        )
+        client = KinesisClient({"stream_name": "docs", "endpoint_url": url})
         records = [(str(i), f"r{i}".encode()) for i in range(30)]
         assert _client_put_records(client, records) == 30
     finally:

@@ -12,6 +12,7 @@ import json
 
 import pytest
 
+from real_time_genai_embeddings_for_rag_with_apache_flink_spark import aws
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_fake import (
     FakeOpenSearchServer,
 )
@@ -184,15 +185,17 @@ def test_404_is_an_answer_only_for_head(fake):
         FakeOpenSearchServer._handle = orig
 
 
-def test_bulk_backs_off_on_throttling_and_delivers():
+def test_bulk_backs_off_on_throttling_and_delivers(monkeypatch):
     """429/503 is backpressure, not failure: request() re-POSTs the same
     idempotent bulk body with backoff and only raises once
-    throttle_retries is exhausted — a throttled domain must not fail
+    aws.THROTTLE_RETRIES is exhausted — a throttled domain must not fail
     every micro-batch."""
+    monkeypatch.setattr(aws, "THROTTLE_RETRIES", 2)
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.01)
     srv = FakeOpenSearchServer(throttle_every=2)  # every 2nd bulk 429s
     url = srv.start()
     try:
-        client = HttpOpenSearchClient(url, throttle_retries=2, throttle_backoff_s=0.01)
+        client = HttpOpenSearchClient(url)
         client.indices.create("thr", {"settings": {}})
         for i in range(4):  # half of these hit an injected 429 first
             n = http_bulk(client, iter([{"_index": "thr", "_source": {"i": i}}]))
@@ -209,9 +212,7 @@ def test_bulk_backs_off_on_throttling_and_delivers():
 
             with pytest.raises(ThrottledError):
                 http_bulk(
-                    HttpOpenSearchClient(
-                        url2, throttle_retries=2, throttle_backoff_s=0.01
-                    ),
+                    HttpOpenSearchClient(url2),
                     iter([{"_index": "x", "_source": {"a": 1}}]),
                 )
         finally:
@@ -220,35 +221,37 @@ def test_bulk_backs_off_on_throttling_and_delivers():
         srv.stop()
 
 
-def test_throttled_bulk_has_one_retry_loop():
-    """A permanently throttled _bulk is re-sent by request()'s loop
-    alone: exactly throttle_retries + 1 requests reach the endpoint
+def test_throttled_bulk_has_one_retry_loop(monkeypatch):
+    """A permanently throttled _bulk is re-sent by aws.request's loop
+    alone: exactly aws.THROTTLE_RETRIES + 1 requests reach the endpoint
     before ThrottledError, with no second loop multiplying them."""
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_http import (
         ThrottledError,
     )
 
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.001)
     srv = FakeOpenSearchServer(throttle_every=1)
     url = srv.start()
     try:
-        client = HttpOpenSearchClient(url, throttle_backoff_s=0.001)
+        client = HttpOpenSearchClient(url)
         with pytest.raises(ThrottledError):
             http_bulk(client, iter([{"_index": "x", "_source": {"a": 1}}]))
-        assert srv._bulk_seen == client.throttle_retries + 1
+        assert srv._bulk_seen == aws.THROTTLE_RETRIES + 1
     finally:
         srv.stop()
 
 
-def test_request_level_backoff_covers_ddl_and_search():
+def test_request_level_backoff_covers_ddl_and_search(monkeypatch):
     """429/503 must be survivable on EVERY call, not just _bulk: the
     sink bootstrap (HEAD existence probe, PUT index DDL) and search
     readers hit the same domain-level throttling. request() backs off
     in place for a bounded number of attempts, then surfaces the typed
     error."""
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.01)
     srv = FakeOpenSearchServer()
     url = srv.start()
     try:
-        client = HttpOpenSearchClient(url, throttle_backoff_s=0.01)
+        client = HttpOpenSearchClient(url)
         srv.throttle_next = 2  # burst: HEAD then PUT each eat a 429
         assert not client.indices.exists("burst")
         srv.throttle_next = 1
@@ -261,9 +264,8 @@ def test_request_level_backoff_covers_ddl_and_search():
         )
 
         srv.throttle_next = 10_000
-        fast = HttpOpenSearchClient(
-            url, throttle_retries=2, throttle_backoff_s=0.01
-        )
+        monkeypatch.setattr(aws, "THROTTLE_RETRIES", 2)
+        fast = HttpOpenSearchClient(url)
         with pytest.raises(ThrottledError):
             fast.request("GET", "/burst/_search")
     finally:
@@ -310,7 +312,7 @@ def test_search_all_paginates_search_after_in_order():
         srv.stop()
 
 
-def test_torn_bulk_duplicates_without_ids_and_converges_with_them():
+def test_torn_bulk_duplicates_without_ids_and_converges_with_them(monkeypatch):
     """The adversarial at-least-once shape: a _bulk that applies HALF
     its items and then fails looks exactly like a clean rejection from
     the client side, so the full-body retry re-indexes what already
@@ -320,10 +322,11 @@ def test_torn_bulk_duplicates_without_ids_and_converges_with_them():
     st35 certifies the same property wire-to-wire."""
     # without ids: duplicates (pinned, not fixed — it documents why
     # index_by_id exists)
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.01)
     srv = FakeOpenSearchServer(partial_every=2)
     url = srv.start()
     try:
-        client = HttpOpenSearchClient(url, throttle_backoff_s=0.01)
+        client = HttpOpenSearchClient(url)
         client.indices.create("noid", {"settings": {}})
         # prime the per-request counter: tearing hits every 2nd bulk, so
         # the next call's FIRST attempt tears and its retry lands clean

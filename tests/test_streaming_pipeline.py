@@ -131,6 +131,45 @@ def test_idempotent_sink_replay_no_duplicates(spark, wire_dir, tmp_path):
     assert spark.read.parquet(str(tmp_path / "vec")).count() == 4
 
 
+def test_idempotent_sink_sets_no_session_conf(spark, tmp_path, monkeypatch):
+    """An idempotent batch asks for dynamic partition overwrite as a
+    writer option: it never sets a session conf, so no other write on
+    the session sees the mode flipped, and a replay still replaces only
+    its own _batch partition."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.conf import RuntimeConfig
+
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        embed,
+    )
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.sinks import (
+        foreach_batch_writer,
+    )
+
+    sets = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig, "set", lambda self, *a: (sets.append(a), real_set(self, *a))[1]
+    )
+    docs = spark.createDataFrame(
+        [("alpha",), ("beta",), ("gamma",)], ["text"]
+    ).withColumn("created_at", F.current_timestamp())
+    rows = embed(docs, dim=8)
+    writer = foreach_batch_writer(
+        PipelineConfig(
+            sink_format="parquet",
+            sink_path=str(tmp_path / "vec"),
+            extra={"idempotent_sink": True},
+        )
+    )
+    writer(rows, 0)
+    writer(rows, 1)
+    writer(rows, 1)  # replay of batch 1
+    assert sets == []
+    out = spark.read.parquet(str(tmp_path / "vec"))
+    assert sorted(r._batch for r in out.collect()) == [0] * 3 + [1] * 3
+
+
 def test_cli_entrypoint_runs_pipeline(spark, wire_dir, tmp_path):
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.__main__ import (
         main,
