@@ -16,9 +16,12 @@ each process resolves its own chain.
 ``request`` sends one Kinesis or OpenSearch call under one timeout
 (``TIMEOUT_S``), signing each attempt. A response its caller calls a
 throttle is retried after ``backoff(attempt)``, ``BACKOFF_S·2ⁿ`` capped
-at 5 s, at most ``THROTTLE_RETRIES`` times; PutRecords' failed-subset
-resends pause on the same schedule. Nothing configures it: a throttled
-endpoint must be slowed down, the same way for every call.
+at 5 s, at most ``THROTTLE_RETRIES`` times; PutRecords' and ``_bulk``'s
+failed-subset resends pause on the same schedule. Bedrock's calls
+(``operators/embed.BedrockTitanEmbedder``) have the same timeout, to
+connect and to read, and retry on the same schedule and bound. Nothing
+configures it: a throttled endpoint must be slowed down, the same way
+for every call.
 
 botocore is imported on first use, so a process that never signs (an
 executor writing to an unsigned local endpoint) never loads it.

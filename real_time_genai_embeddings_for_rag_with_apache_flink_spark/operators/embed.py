@@ -129,19 +129,23 @@ class Md5BowEmbedder:
         return out
 
 
+MAX_IN_FLIGHT = 32  # an embedder's Bedrock calls in flight, and its client's pool
+
+
 @functools.lru_cache(maxsize=None)
-def bedrock_client(region: str | None, endpoint_url: str | None, connections: int):
+def bedrock_client(region: str | None, endpoint_url: str | None):
     """The process's bedrock-runtime client for ``region`` and
     ``endpoint_url`` (None: the service's own). botocore clients are
     thread-safe and take a tenth of a second or more to build, so every
     embedder with these settings shares one. It is built from the
     process's botocore session (``aws.session``), so it signs with the
-    same credential chain as the Kinesis reader and the OpenSearch sink.
-    botocore's own retries are off: its loop would sleep on a pool
-    thread, under the embedder's delay heap. Its pool holds
-    ``connections``, an embedder's in-flight calls: with botocore's
-    default of 10, each call beyond that opened a connection (a TLS
-    handshake against Bedrock) and threw it away."""
+    same credential chain as the Kinesis reader and the OpenSearch sink,
+    and each attempt has the package's one timeout (``aws.TIMEOUT_S``)
+    to connect and to read. botocore's own retries are off: its loop
+    would sleep on a pool thread, under the embedder's delay heap. Its
+    pool holds ``MAX_IN_FLIGHT`` connections, an embedder's in-flight
+    calls: with botocore's default of 10, each call beyond that opened a
+    connection (a TLS handshake against Bedrock) and threw it away."""
     from botocore.config import Config
 
     return aws.session().create_client(
@@ -149,8 +153,36 @@ def bedrock_client(region: str | None, endpoint_url: str | None, connections: in
         region_name=region,
         endpoint_url=endpoint_url,
         config=Config(
-            retries={"total_max_attempts": 1}, max_pool_connections=connections
+            connect_timeout=aws.TIMEOUT_S,
+            read_timeout=aws.TIMEOUT_S,
+            retries={"total_max_attempts": 1},
+            max_pool_connections=MAX_IN_FLIGHT,
         ),
+    )
+
+
+def _can_succeed_later(e: Exception) -> bool:
+    """Whether a failed ``invoke_model`` may succeed if sent again:
+    Bedrock answered 408, 429 or 5xx (ModelTimeout, Throttling,
+    ModelNotReady, InternalServer, ServiceUnavailable), or it did not
+    answer at all (a refused connect, a read timeout, a dropped
+    connection). Anything else fails the same way every time: a 400
+    ValidationException, a 403 or 404, a body with no ``embedding``, an
+    error that is not botocore's.
+
+    ``aws.request`` does not retry "no answer": a Kinesis or OpenSearch
+    call that raises fails the task, and Spark replays the batch. Giving
+    up on a Bedrock call is final, because its row becomes a dead letter,
+    so here a missing answer is retried like a throttle."""
+    # imported on failure only: a worker whose calls all succeed never
+    # loads botocore
+    from botocore import exceptions as botocore_errors
+
+    if isinstance(e, botocore_errors.ClientError):
+        status = e.response.get("ResponseMetadata", {}).get("HTTPStatusCode", 0)
+        return status in (408, 429) or status >= 500
+    return isinstance(
+        e, (botocore_errors.ConnectionError, botocore_errors.HTTPClientError)
     )
 
 
@@ -161,12 +193,15 @@ class BedrockTitanEmbedder:
     (BedRockEmbeddingModelAsyncCustomMessage.java:80-104).
 
     One ``invoke_model`` per text (the API is single-input), at most
-    ``max_concurrency`` in flight per batch — the per-worker analogue of
+    ``MAX_IN_FLIGHT`` in flight per batch — the per-worker analogue of
     the reference's 1000-deep unordered async pool
     (``DataStreamJob.java:148-154``). Results stay in input order.
 
-    A failed call retries with exponential backoff; a text still failing
-    after ``max_retries`` is a per-row dead letter in ``row_errors``
+    A failed call that can succeed later (``_can_succeed_later``) is
+    sent again after ``aws.backoff(attempt)``, at most
+    ``aws.THROTTLE_RETRIES`` times: the schedule and bound of every
+    other AWS call of the package. A text that still fails, or fails in
+    a way no retry mends, is a per-row dead letter in ``row_errors``
     (read by ``embed_chunk``), where the reference would emit a
     sink-crashing null (:109-112). Backoff never parks a pool thread: a
     failed attempt waits on a delay heap and then goes to the back of the
@@ -174,7 +209,7 @@ class BedrockTitanEmbedder:
     episode (tests/test_embed.py pins that order).
 
     Without an injected ``client`` the calls go through
-    ``bedrock_client(region, endpoint_url, max_concurrency)``.
+    ``bedrock_client(region, endpoint_url)``.
     """
 
     def __init__(
@@ -182,18 +217,12 @@ class BedrockTitanEmbedder:
         model_key: str = "titan-v2",
         region: str | None = None,
         client=None,
-        max_retries: int = 3,
-        retry_base_seconds: float = 0.5,
-        max_concurrency: int = 32,
         endpoint_url: str | None = None,
     ):
         self.model_id, self.dim = TITAN_MODELS[model_key]
-        self._max_concurrency = max(1, int(max_concurrency))
         if client is None:
-            client = bedrock_client(region, endpoint_url, self._max_concurrency)
+            client = bedrock_client(region, endpoint_url)
         self._client = client
-        self._max_retries = max_retries
-        self._retry_base = retry_base_seconds
         self.row_errors: list[str | None] = []
 
     def _invoke_once(self, text: str) -> list[float]:
@@ -208,17 +237,17 @@ class BedrockTitanEmbedder:
         return [float(x) for x in payload["embedding"]]
 
     def embed_batch(self, texts: Sequence[str | None]) -> list[list[float] | None]:
-        """Every pending attempt is a pool task; a failed attempt with
-        retries left goes onto a (ready_time, seq, row) heap, and this
-        loop resubmits it when its backoff elapses, waking from ``wait``
-        at the next ready time. Results land by row index."""
+        """Every pending attempt is a pool task; a failed attempt worth
+        retrying goes onto a (ready_time, seq, row) heap, and this loop
+        resubmits it when its backoff elapses, waking from ``wait`` at
+        the next ready time. Results land by row index."""
         out: list[list[float] | None] = [None] * len(texts)
         errs: list[str | None] = [None] * len(texts)
         work = [(i, t) for i, t in enumerate(texts) if t is not None]
         if not work:
             self.row_errors = errs
             return out
-        with ThreadPoolExecutor(min(self._max_concurrency, len(work))) as pool:
+        with ThreadPoolExecutor(min(MAX_IN_FLIGHT, len(work))) as pool:
             in_flight = {pool.submit(self._invoke_once, t): (i, t, 0) for i, t in work}
             retry_heap: list[tuple[float, int, int, str, int]] = []
             seq = 0  # heap tiebreaker; keeps retries FIFO on equal ready times
@@ -237,10 +266,10 @@ class BedrockTitanEmbedder:
                     i, t, a = in_flight.pop(fut)
                     try:
                         out[i] = fut.result()
-                    except Exception as e:  # noqa: BLE001 - retried then dead-lettered
-                        if a < self._max_retries:
+                    except Exception as e:  # noqa: BLE001 - retried or dead-lettered
+                        if a < aws.THROTTLE_RETRIES and _can_succeed_later(e):
                             seq += 1
-                            ready = time.monotonic() + self._retry_base * (2**a)
+                            ready = time.monotonic() + aws.backoff(a)
                             heappush(retry_heap, (ready, seq, i, t, a + 1))
                         else:
                             errs[i] = f"{type(e).__name__}: {e}"

@@ -15,7 +15,6 @@ ingest and embedding:
 
 from __future__ import annotations
 
-from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -3062,19 +3061,6 @@ def d28_lsh_config_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BACKFILL_CACHE: dict[tuple[str, str], str] = {}
 
 
-@_contextmanager
-def dynamic_partition_overwrite(spark: SparkSession):
-    """Scope partitionOverwriteMode=dynamic around a write: only the
-    partitions present in the written DataFrame are replaced (static
-    mode would truncate the whole table). Restores the prior value."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
 @query(
     "p14_partition_backfill",
     oracle="""
@@ -3134,10 +3120,9 @@ def p14_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_chars", F.col("n_chars") + 1)
             .withColumn("backfilled", F.lit(True))
         )
-        with dynamic_partition_overwrite(spark):
-            corrected.write.mode("overwrite").partitionBy("lang").parquet(
-                path
-            )
+        corrected.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("lang").parquet(path)
         _BACKFILL_CACHE[key] = path
 
     back = spark.read.parquet(path)

@@ -25,7 +25,8 @@ method; ``http_bulk`` sends one chunk's actions as one request, and
 ``json_float_arrays`` formats their vectors in Arrow.
 HTTP 429/503 is a throttle: ``aws.request`` sends the call again on its
 one backoff schedule, for bulk, DDL and search calls alike, and a
-throttle that outlasts it raises ``ThrottledError``.
+throttle that outlasts it raises ``ThrottledError``. A bulk whose only
+item errors are 429s resends just those items, on the same schedule.
 
 At scale nothing changes: one client + one bulk stream per output
 partition, executor-side, at most one bulk in flight; the driver only
@@ -38,7 +39,9 @@ the reference's bulk processor.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
+import time
 
 import numpy as np
 import pyarrow as pa
@@ -48,7 +51,8 @@ from .. import aws
 
 
 class ThrottledError(RuntimeError):
-    """HTTP 429/503 that outlasted ``aws.request``'s bounded backoff."""
+    """HTTP 429/503, or bulk items rejected with 429, that outlasted the
+    bounded backoff (``aws.backoff``, ``aws.THROTTLE_RETRIES``)."""
 
 
 class HttpOpenSearchClient:
@@ -194,39 +198,59 @@ def json_float_arrays(vectors) -> list[bytes]:
 
 def http_bulk(client: HttpOpenSearchClient, actions) -> int:
     """Bulk indexing over REST: NDJSON action lines + source lines, one
-    POST /_bulk per call (throttling backs off inside
+    POST /_bulk per call (a throttled request backs off inside
     ``aws.request``, which re-POSTs the same body). A ``_source``
     given as ``bytes`` is already JSON and goes out verbatim; a dict is
-    serialised here. Raises on any per-item error: the micro-batch
-    fails and is replayed, so a partial failure can never pass
-    silently. Returns the indexed count."""
-    lines: list[bytes] = []
+    serialised here.
+
+    A full bulk queue answers HTTP 200 with per-item 429s
+    (``es_rejected_execution_exception``) while the other items are
+    applied. When every item error is a 429, only those actions are
+    sent again after ``aws.backoff(attempt)``, at most
+    ``aws.THROTTLE_RETRIES`` times — the failed-subset loop of
+    PutRecords — so an item already indexed is not indexed twice; items
+    still rejected after that raise ``ThrottledError``. Any other item
+    error raises: the micro-batch fails and is replayed, so a partial
+    failure can never pass silently. Returns the indexed count."""
+    pending: list[tuple[bytes, bytes]] = []
     for action in actions:
         source = action["_source"]
-        lines.append(bulk_action_line(action))
-        lines.append(
+        pending.append((
+            bulk_action_line(action),
             source
             if isinstance(source, bytes)
-            else json.dumps(source, separators=(",", ":")).encode()
-        )
-    if not lines:
+            else json.dumps(source, separators=(",", ":")).encode(),
+        ))
+    if not pending:
         return 0
-    body = b"\n".join(lines) + b"\n"
-    status, out = client.request(
-        "POST", "/_bulk", body, content_type="application/x-ndjson"
-    )
-    if status != 200:
-        # belt-and-braces: request() raises on HTTP errors for POST, so
-        # any non-200 reaching here is a transport-level surprise —
-        # never report it as an indexed count
-        raise RuntimeError(f"bulk indexing returned HTTP {status}: {out}")
-    if out.get("errors"):
-        bad = [
-            item for item in out.get("items", [])
+    indexed = len(pending)
+    for attempt in range(aws.THROTTLE_RETRIES + 1):
+        if attempt:
+            time.sleep(aws.backoff(attempt - 1))
+        body = b"\n".join(itertools.chain.from_iterable(pending)) + b"\n"
+        status, out = client.request(
+            "POST", "/_bulk", body, content_type="application/x-ndjson"
+        )
+        if status != 200:
+            # belt-and-braces: request() raises on HTTP errors for POST, so
+            # any non-200 reaching here is a transport-level surprise —
+            # never report it as an indexed count
+            raise RuntimeError(f"bulk indexing returned HTTP {status}: {out}")
+        if not out.get("errors"):
+            return indexed
+        failed = [
+            (sent, item)
+            for sent, item in zip(pending, out.get("items", []))
             if next(iter(item.values())).get("error")
         ]
-        raise RuntimeError(f"bulk indexing reported errors: {bad[:3]}")
-    return len(lines) // 2
+        bad = [item for _, item in failed]
+        if not bad or any(next(iter(i.values())).get("status") != 429 for i in bad):
+            raise RuntimeError(f"bulk indexing reported errors: {bad[:3]}")
+        pending = [sent for sent, _ in failed]
+    raise ThrottledError(
+        f"OpenSearch POST /_bulk: {len(pending)} items still rejected with "
+        f"HTTP 429 after {aws.THROTTLE_RETRIES} resends"
+    )
 
 
 def http_opensearch_factory(hosts, region: str | None = None, service: str = "es"):

@@ -133,16 +133,24 @@ def test_opensearch_without_credentials_fails_instead_of_going_unsigned(
 
 
 def test_unsigned_paths_never_import_botocore(fakes):
-    """Importing the Kinesis reader and an unsigned bulk leave botocore
-    unloaded: an executor on a local endpoint does not pay its import."""
+    """Importing the Kinesis reader, an unsigned bulk and a Bedrock
+    embedder whose calls all succeed leave botocore unloaded: an
+    executor on a local endpoint does not pay its import."""
     _, urls = fakes
     code = (
         "import sys\n"
         "import real_time_genai_embeddings_for_rag_with_apache_flink_spark.sources.kinesis_lite\n"
         "from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_http "
         "import HttpOpenSearchClient, http_bulk\n"
+        "from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed "
+        "import BedrockTitanEmbedder\n"
         f"client = HttpOpenSearchClient({urls[1]!r})\n"
         "assert http_bulk(client, [{'_index': 'docs', '_source': {'a': 1}}]) == 1\n"
+        "class Titan:\n"
+        "    def invoke_model(self, **kwargs):\n"
+        "        return {'body': b'{\"embedding\": [0.5, 0.25]}'}\n"
+        "emb = BedrockTitanEmbedder(client=Titan())\n"
+        "assert emb.embed_batch(['a', None, 'b']) == [[0.5, 0.25], None, [0.5, 0.25]]\n"
         "assert 'botocore' not in sys.modules, 'botocore imported'\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

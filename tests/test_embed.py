@@ -9,11 +9,13 @@ null, which would NPE its own sink), and embedding-dimension invariance
 
 from __future__ import annotations
 
+import importlib
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
+from real_time_genai_embeddings_for_rag_with_apache_flink_spark import aws
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
     DeterministicEmbedder,
     embed,
@@ -124,10 +126,42 @@ def test_embed_distinct_drop_policy(spark):
     assert out.count() == 0
 
 
+def _client_error(code: str, status: int):
+    """The botocore error Bedrock's client raises for an HTTP ``status``
+    answer with error ``code``."""
+    from botocore.exceptions import ClientError
+
+    return ClientError(
+        {
+            "Error": {"Code": code, "Message": "simulated"},
+            "ResponseMetadata": {"HTTPStatusCode": status},
+        },
+        "InvokeModel",
+    )
+
+
+@pytest.fixture()
+def policy(monkeypatch):
+    """Sets the embedder's retry bound, first pause and in-flight bound
+    for one test: ``policy(retries, backoff_s, in_flight)``."""
+
+    def set_policy(retries=aws.THROTTLE_RETRIES, backoff_s=0.0, in_flight=32):
+        monkeypatch.setattr(aws, "THROTTLE_RETRIES", retries)
+        monkeypatch.setattr(aws, "BACKOFF_S", backoff_s)
+        # imported by name: the package's ``operators.embed`` attribute
+        # is the function
+        module = importlib.import_module(
+            "real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed"
+        )
+        monkeypatch.setattr(module, "MAX_IN_FLIGHT", in_flight)
+
+    return set_policy
+
+
 class _StubBedrockClient:
     """Records invoke_model requests; scripted per-text behavior:
-    'flaky ...' fails (fail_times) then succeeds, 'poison ...' always
-    fails. Response shape mirrors the Bedrock runtime API."""
+    'flaky ...' is throttled (fail_times) then succeeds, 'poison ...' is
+    always throttled. Response shape mirrors the Bedrock runtime API."""
 
     def __init__(self, dim=4, fail_times=2):
         self.dim = dim
@@ -142,12 +176,12 @@ class _StubBedrockClient:
         self.requests.append({"modelId": modelId, "body": body})
         text = json.loads(body)["inputText"]
         if text.startswith("poison"):
-            raise RuntimeError("ThrottlingException: simulated permanent failure")
+            raise _client_error("ThrottlingException", 429)
         if text.startswith("flaky"):
             n = self._failures.get(text, 0)
             if n < self.fail_times:
                 self._failures[text] = n + 1
-                raise RuntimeError("simulated transient failure")
+                raise _client_error("ThrottlingException", 429)
         vec = [float(len(text) + i) for i in range(self.dim)]
         return {"body": io.BytesIO(json.dumps({"embedding": vec}).encode())}
 
@@ -177,15 +211,14 @@ def test_bedrock_adapter_request_response_mapping():
         assert emb.row_errors == [None, None]
 
 
-def test_bedrock_adapter_retries_then_succeeds():
+def test_bedrock_adapter_retries_then_succeeds(policy):
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
         BedrockTitanEmbedder,
     )
 
+    policy(retries=3)
     client = _StubBedrockClient(fail_times=2)
-    emb = BedrockTitanEmbedder(
-        client=client, max_retries=3, retry_base_seconds=0.0
-    )
+    emb = BedrockTitanEmbedder(client=client)
     vecs = emb.embed_batch(["flaky doc"])
     assert vecs[0] is not None
     assert emb.row_errors == [None]
@@ -193,7 +226,7 @@ def test_bedrock_adapter_retries_then_succeeds():
     assert len(client.requests) == 3
 
 
-def test_bedrock_adapter_per_row_dead_letter():
+def test_bedrock_adapter_per_row_dead_letter(policy):
     """One poisoned text must dead-letter ONLY its own row — the other
     texts in the batch still embed (the reference would null the record
     and crash its sink; per-row isolation is the fix)."""
@@ -201,15 +234,68 @@ def test_bedrock_adapter_per_row_dead_letter():
         BedrockTitanEmbedder,
     )
 
+    policy(retries=1)
     client = _StubBedrockClient()
-    emb = BedrockTitanEmbedder(
-        client=client, max_retries=1, retry_base_seconds=0.0
-    )
+    emb = BedrockTitanEmbedder(client=client)
     vecs = emb.embed_batch(["good doc", "poison doc", "another good"])
     assert vecs[0] is not None and vecs[2] is not None
     assert vecs[1] is None
     assert emb.row_errors[0] is None and emb.row_errors[2] is None
     assert "ThrottlingException" in emb.row_errors[1]
+
+
+def test_bedrock_rejected_request_is_not_retried(policy):
+    """A request Bedrock rejects (400 ValidationException) would be
+    rejected again: it is sent once and its row dead-letters at once,
+    instead of holding the chunk through the backoff schedule; the
+    other rows embed."""
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        BedrockTitanEmbedder,
+    )
+
+    policy()
+
+    class RejectingClient(_StubBedrockClient):
+        def invoke_model(self, modelId, body, accept, contentType):
+            if body == '{"inputText": "bad input"}':
+                self.requests.append({"modelId": modelId, "body": body})
+                raise _client_error("ValidationException", 400)
+            return super().invoke_model(modelId, body, accept, contentType)
+
+    client = RejectingClient()
+    emb = BedrockTitanEmbedder(client=client)
+    texts = ["bad input"] + [f"fine row {i}" for i in range(10)]
+    vecs = emb.embed_batch(texts)
+    sent = [r["body"] for r in client.requests]
+    assert sent.count('{"inputText": "bad input"}') == 1
+    assert vecs[0] is None and "ValidationException" in emb.row_errors[0]
+    assert emb.row_errors[1:] == [None] * 10
+    for t, v in zip(texts[1:], vecs[1:]):
+        assert v == [float(len(t) + i) for i in range(4)]
+
+
+def test_bedrock_read_timeout_is_retried_then_dead_letters(policy):
+    """No answer at all (a read timeout) may succeed later, so it is
+    retried up to aws.THROTTLE_RETRIES times before its row
+    dead-letters."""
+    from botocore.exceptions import ReadTimeoutError
+
+    from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
+        BedrockTitanEmbedder,
+    )
+
+    policy(retries=2)
+
+    class SilentClient(_StubBedrockClient):
+        def invoke_model(self, modelId, body, accept, contentType):
+            self.requests.append({"modelId": modelId, "body": body})
+            raise ReadTimeoutError(endpoint_url="http://bedrock.invalid")
+
+    client = SilentClient()
+    emb = BedrockTitanEmbedder(client=client)
+    assert emb.embed_batch(["slow"]) == [None]
+    assert len(client.requests) == aws.THROTTLE_RETRIES + 1 == 3
+    assert "ReadTimeoutError" in emb.row_errors[0]
 
 
 def test_bedrock_rows_dead_letter_through_embed(spark):
@@ -237,9 +323,8 @@ def test_bedrock_rows_dead_letter_through_embed(spark):
                     "body": io.BytesIO(json.dumps({"embedding": vec}).encode())
                 }
 
-        return BedrockTitanEmbedder(
-            client=StubClient(), max_retries=0, retry_base_seconds=0.0
-        )
+        # a RuntimeError is not botocore's: dead-lettered, not retried
+        return BedrockTitanEmbedder(client=StubClient())
 
     df = spark.createDataFrame(
         [("good doc",), ("poison doc",)], ["text"]
@@ -283,7 +368,7 @@ class _BlockingBedrockClient:
                 self._inflight -= 1
 
 
-def test_bedrock_adapter_overlaps_invokes():
+def test_bedrock_adapter_overlaps_invokes(policy):
     """The reference holds up to 1000 unordered Bedrock calls in flight
     (DataStreamJob.java:148-154); the adapter's bounded pool must
     actually overlap calls — with sequential invokes this test would
@@ -293,8 +378,9 @@ def test_bedrock_adapter_overlaps_invokes():
         BedrockTitanEmbedder,
     )
 
+    policy(retries=0, in_flight=4)
     client = _BlockingBedrockClient(expected=4)
-    emb = BedrockTitanEmbedder(client=client, max_concurrency=4, max_retries=0)
+    emb = BedrockTitanEmbedder(client=client)
     texts = [f"doc number {i}" for i in range(8)]
     vecs = emb.embed_batch(texts)
     assert client.peak_inflight >= 4
@@ -304,7 +390,7 @@ def test_bedrock_adapter_overlaps_invokes():
     assert emb.row_errors == [None] * 8
 
 
-def test_bedrock_concurrent_retry_and_dead_letter_order():
+def test_bedrock_concurrent_retry_and_dead_letter_order(policy):
     """Concurrency must not scramble the per-row dead-letter alignment:
     flaky texts retry (on their own pool thread) and recover, poison
     texts dead-letter, and every result lands on its source row."""
@@ -312,10 +398,9 @@ def test_bedrock_concurrent_retry_and_dead_letter_order():
         BedrockTitanEmbedder,
     )
 
+    policy(retries=2, in_flight=8)
     client = _StubBedrockClient(fail_times=1)
-    emb = BedrockTitanEmbedder(
-        client=client, max_concurrency=8, max_retries=2, retry_base_seconds=0.0
-    )
+    emb = BedrockTitanEmbedder(client=client)
     texts = ["good a", "flaky b", None, "poison c", "good d"]
     vecs = emb.embed_batch(texts)
     assert vecs[0] is not None and vecs[1] is not None and vecs[4] is not None
@@ -328,19 +413,20 @@ def test_bedrock_concurrent_retry_and_dead_letter_order():
         assert vecs[i] == [float(len(texts[i]) + j) for j in range(4)]
 
 
-def test_bedrock_sequential_when_concurrency_one():
+def test_bedrock_sequential_when_concurrency_one(policy):
     from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
         BedrockTitanEmbedder,
     )
 
+    policy(retries=0, in_flight=1)
     client = _StubBedrockClient()
-    emb = BedrockTitanEmbedder(client=client, max_concurrency=1, max_retries=0)
+    emb = BedrockTitanEmbedder(client=client)
     vecs = emb.embed_batch(["one", "two"])
     assert len(client.requests) == 2
     assert vecs[0] == [float(len("one") + i) for i in range(4)]
 
 
-def test_bedrock_backoff_does_not_block_healthy_rows():
+def test_bedrock_backoff_does_not_block_healthy_rows(policy):
     """Retry backoff must not park the pool: with ONE worker (the
     worst case), a throttled row's backoff window has to be spent
     serving the healthy rows, so the request order is flaky#1, all
@@ -352,10 +438,9 @@ def test_bedrock_backoff_does_not_block_healthy_rows():
         BedrockTitanEmbedder,
     )
 
+    policy(retries=2, backoff_s=0.3, in_flight=1)
     client = _StubBedrockClient(fail_times=2)
-    emb = BedrockTitanEmbedder(
-        client=client, max_concurrency=1, max_retries=2, retry_base_seconds=0.3
-    )
+    emb = BedrockTitanEmbedder(client=client)
     texts = ["flaky slow row"] + [f"healthy row {i}" for i in range(10)]
     vecs = emb.embed_batch(texts)
 

@@ -16,6 +16,7 @@ the CLI.
 from __future__ import annotations
 
 import contextlib
+import importlib
 import json
 import logging
 import os
@@ -27,11 +28,18 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
+from real_time_genai_embeddings_for_rag_with_apache_flink_spark import aws
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.config import (
     PipelineConfig,
 )
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed import (
     BedrockTitanEmbedder,
+    bedrock_client,
+)
+
+# imported by name: the package's ``operators.embed`` attribute is the function
+embed_module = importlib.import_module(
+    "real_time_genai_embeddings_for_rag_with_apache_flink_spark.operators.embed"
 )
 
 
@@ -144,11 +152,22 @@ def titan_stub():
         yield stub
 
 
+@pytest.fixture()
+def aws_env(monkeypatch):
+    for key in [k for k in os.environ if k.startswith("AWS_")]:
+        monkeypatch.delenv(key)
+    for key, val in AWS_ENV.items():
+        monkeypatch.setenv(key, val)
+
+
+def _boto3_embedder(url: str, model_key: str = "titan-v2"):
+    """The adapter over its own botocore client, at the stub."""
+    return BedrockTitanEmbedder(model_key, region="us-east-1", endpoint_url=url)
+
+
 def test_http_roundtrip_executes_real_serialization(titan_stub):
     srv, url = titan_stub
-    emb = BedrockTitanEmbedder(
-        model_key="titan-v2", client=_HttpInvokeClient(url), max_retries=0
-    )
+    emb = BedrockTitanEmbedder(model_key="titan-v2", client=_HttpInvokeClient(url))
     texts = ["alpha", "beta gamma", None, "delta"]
     got = emb.embed_batch(texts)
     assert got[2] is None and emb.row_errors == [None] * 4
@@ -172,19 +191,16 @@ def test_http_roundtrip_executes_real_serialization(titan_stub):
     }
 
 
-def test_http_429_retries_through_delay_heap(titan_stub):
+def test_http_429_retries_through_delay_heap(titan_stub, aws_env, monkeypatch):
     """Two 429s then success: the non-blocking retry scheduler must
     re-invoke over real HTTP until the throttle clears, healthy rows
     unaffected."""
     srv, url = titan_stub
     srv.throttle["hot"] = 2
-    emb = BedrockTitanEmbedder(
-        model_key="titan-v1",
-        client=_HttpInvokeClient(url),
-        max_retries=3,
-        retry_base_seconds=0.02,
-        max_concurrency=4,
-    )
+    monkeypatch.setattr(aws, "THROTTLE_RETRIES", 3)
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.02)
+    monkeypatch.setattr(embed_module, "MAX_IN_FLIGHT", 4)
+    emb = _boto3_embedder(url, "titan-v1")
     got = emb.embed_batch(["hot", "cold", "warm"])
     assert emb.row_errors == [None, None, None]
     assert got[0] == _stub_vector("hot")
@@ -198,32 +214,33 @@ def test_http_429_retries_through_delay_heap(titan_stub):
     )
 
 
-def test_http_exhausted_retries_dead_letter(titan_stub):
-    """A text the server throttles past max_retries dead-letters with
-    the HTTP error in row_errors; the rest of the batch embeds."""
+def test_http_exhausted_retries_dead_letter(titan_stub, aws_env, monkeypatch):
+    """A text the server throttles past aws.THROTTLE_RETRIES
+    dead-letters with the HTTP error in row_errors; the rest of the
+    batch embeds."""
     srv, url = titan_stub
     srv.throttle["poison"] = 99
-    emb = BedrockTitanEmbedder(
-        client=_HttpInvokeClient(url),
-        max_retries=1,
-        retry_base_seconds=0.01,
-        max_concurrency=2,
-    )
+    monkeypatch.setattr(aws, "THROTTLE_RETRIES", 1)
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.01)
+    monkeypatch.setattr(embed_module, "MAX_IN_FLIGHT", 2)
+    emb = _boto3_embedder(url)
     got = emb.embed_batch(["poison", "fine"])
     assert got[0] is None and got[1] == _stub_vector("fine")
     assert emb.row_errors[1] is None
-    assert emb.row_errors[0] is not None and "429" in emb.row_errors[0]
+    # botocore names the error code of the 429, not its status
+    assert emb.row_errors[0] is not None
+    assert "ThrottlingException" in emb.row_errors[0]
     assert srv.attempts["poison"] == 2  # initial + 1 retry
 
 
-def test_http_single_row_batch_retry_path(titan_stub):
+def test_http_single_row_batch_retry_path(titan_stub, aws_env, monkeypatch):
     """A one-row batch goes through the same pool scheduler, speaks
     real HTTP and retries."""
     srv, url = titan_stub
     srv.throttle["solo"] = 1
-    emb = BedrockTitanEmbedder(
-        client=_HttpInvokeClient(url), max_retries=2, retry_base_seconds=0.01
-    )
+    monkeypatch.setattr(aws, "THROTTLE_RETRIES", 2)
+    monkeypatch.setattr(aws, "BACKOFF_S", 0.01)
+    emb = _boto3_embedder(url)
     got = emb.embed_batch(["solo"])
     assert got[0] == _stub_vector("solo")
     assert emb.row_errors == [None]
@@ -234,32 +251,32 @@ def test_http_single_row_batch_retry_path(titan_stub):
 _V2_PATH = "/model/amazon.titan-embed-text-v2%3A0/invoke"
 
 
-@pytest.fixture()
-def aws_env(monkeypatch):
-    for key in [k for k in os.environ if k.startswith("AWS_")]:
-        monkeypatch.delenv(key)
-    for key, val in AWS_ENV.items():
-        monkeypatch.setenv(key, val)
-
-
-def test_boto3_client_makes_one_attempt_per_retry(titan_stub, aws_env):
+def test_boto3_client_makes_one_attempt_per_retry(titan_stub, aws_env, monkeypatch):
     """The adapter's own client does not retry a throttled call: a text
-    throttled past max_retries reaches Bedrock exactly max_retries + 1
-    times, every wait on the delay heap rather than inside botocore."""
+    throttled past aws.THROTTLE_RETRIES reaches Bedrock exactly
+    aws.THROTTLE_RETRIES + 1 times, every wait on the delay heap rather
+    than inside botocore, and the waits are the package's one schedule,
+    aws.backoff(0), aws.backoff(1), ... in order."""
     srv, url = titan_stub
     srv.throttle["poison"] = 99
-    emb = BedrockTitanEmbedder(
-        "titan-v2",
-        region="us-east-1",
-        endpoint_url=url,
-        max_retries=2,
-        retry_base_seconds=0.01,
-    )
+    asked = []
+    monkeypatch.setattr(aws, "backoff", lambda attempt: asked.append(attempt) or 0.0)
+    emb = _boto3_embedder(url)
     got = emb.embed_batch(["poison", "fine"])
     assert got[1] == _stub_vector("fine") and got[0] is None
     assert "ThrottlingException" in emb.row_errors[0]
-    assert srv.attempts == {"poison": 3, "fine": 1}
+    assert srv.attempts == {"poison": aws.THROTTLE_RETRIES + 1, "fine": 1}
+    assert asked == list(range(aws.THROTTLE_RETRIES))
     assert {r["path"] for r in srv.requests} == {_V2_PATH}
+
+
+def test_bedrock_client_has_the_one_timeout(aws_env):
+    """Bedrock's connect and read timeouts are the package's one
+    timeout, not botocore's 60 s, and botocore makes one attempt."""
+    config = bedrock_client("us-east-1", "http://127.0.0.1:9").meta.config
+    assert config.connect_timeout == config.read_timeout == aws.TIMEOUT_S
+    assert config.retries["total_max_attempts"] == 1
+    assert config.max_pool_connections == embed_module.MAX_IN_FLIGHT
 
 
 def test_embedders_with_same_settings_share_one_client(aws_env):
@@ -274,7 +291,7 @@ def test_embedders_with_same_settings_share_one_client(aws_env):
 
 def test_bedrock_pool_holds_every_in_flight_call(aws_env, caplog):
     """The shared client's connection pool holds the embedder's
-    ``max_concurrency`` in-flight calls: over three batches on a
+    ``MAX_IN_FLIGHT`` in-flight calls: over three batches on a
     keep-alive endpoint it opens at most that many connections and
     never discards one for a full pool."""
     caplog.set_level(logging.WARNING, logger="urllib3.connectionpool")
@@ -284,7 +301,7 @@ def test_bedrock_pool_holds_every_in_flight_call(aws_env, caplog):
             texts = [f"text {batch} {i}" for i in range(64)]
             assert emb.embed_batch(texts) == [_stub_vector(t) for t in texts]
         assert len(srv.requests) == 3 * 64
-        assert 0 < srv.connections <= emb._max_concurrency == 32
+        assert 0 < srv.connections <= embed_module.MAX_IN_FLIGHT == 32
     assert not [r for r in caplog.records if "pool is full" in r.getMessage()]
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime
 import json
+import time
 
 import pytest
 
@@ -18,6 +19,7 @@ from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opense
 )
 from real_time_genai_embeddings_for_rag_with_apache_flink_spark.streaming.opensearch_http import (
     HttpOpenSearchClient,
+    ThrottledError,
     http_bulk,
     http_opensearch_factory,
     json_float_arrays,
@@ -95,6 +97,59 @@ def test_bulk_errors_raise_not_pass_silently(fake):
             http_bulk(client, iter(_Actions()))
     finally:
         FakeOpenSearchServer._handle = orig
+
+
+def test_bulk_resends_only_items_rejected_with_429(fake, monkeypatch):
+    """A full bulk queue answers HTTP 200 with per-item 429s while the
+    other items are applied: only the rejected items are sent again,
+    so every document is indexed exactly once, even without ids. Items
+    rejected on every attempt raise ThrottledError after
+    aws.THROTTLE_RETRIES resends on the aws.backoff schedule."""
+    srv, url = fake
+    sent = []  # the actions each /_bulk request carried
+    rejections = [3]  # the leading actions the next /_bulk rejects
+    orig = FakeOpenSearchServer._handle
+
+    def reject_leading_items(self, method, path, b):
+        if path != "/_bulk":
+            return orig(self, method, path, b)
+        lines = b.splitlines()
+        sent.append(len(lines) // 2)
+        k = rejections.pop(0) if rejections else 0
+        if not k:
+            return orig(self, method, path, b)
+        status, o = orig(self, method, path, b"\n".join(lines[2 * k:]) + b"\n")
+        rejected = {"index": {"status": 429, "error": {
+            "type": "es_rejected_execution_exception"}}}
+        return status, {"errors": True, "items": [rejected] * k + o["items"]}
+
+    client = HttpOpenSearchClient(url)
+    FakeOpenSearchServer._handle = reject_leading_items
+    try:
+        n = http_bulk(
+            client,
+            [{"_index": "docs", "_source": {"text": f"t{i}"}} for i in range(10)],
+        )
+        assert n == 10
+        assert sent == [10, 3]
+        assert sorted(d["text"] for d in srv.docs["docs"]) == sorted(
+            f"t{i}" for i in range(10)
+        )
+
+        naps: list[float] = []
+        monkeypatch.setattr(time, "sleep", naps.append)
+        sent.clear()
+        rejections[:] = [1] * (aws.THROTTLE_RETRIES + 1)
+        with pytest.raises(ThrottledError, match="1 items still rejected"):
+            http_bulk(
+                client,
+                [{"_index": "docs", "_source": {"text": t}} for t in ("hot", "ok")],
+            )
+    finally:
+        FakeOpenSearchServer._handle = orig
+    assert sent == [2] + [1] * aws.THROTTLE_RETRIES
+    assert naps == [aws.backoff(a) for a in range(aws.THROTTLE_RETRIES)]
+    assert [d["text"] for d in srv.docs["docs"]].count("ok") == 1
 
 
 def test_sink_writer_http_transport_end_to_end(spark, fake):

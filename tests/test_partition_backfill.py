@@ -21,9 +21,19 @@ from real_time_genai_embeddings_for_rag_with_apache_flink_spark.plans import (
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
-def test_backfill_rewrites_only_the_target_partition(spark):
+def test_backfill_rewrites_only_the_target_partition(spark, monkeypatch):
+    from pyspark.sql.conf import RuntimeConfig
+
+    # the dynamic mode is a writer option: no session conf is flipped
+    # under any other write on the session
+    sets = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig, "set", lambda self, *a: (sets.append(a), real_set(self, *a))[1]
+    )
     pipeline_extra._BACKFILL_CACHE.clear()
     pipeline_extra.p14_partition_backfill(spark, SF_SMOKE).collect()
+    assert sets == []
     (path,) = pipeline_extra._BACKFILL_CACHE.values()
 
     def files_with_mtimes(lang):
@@ -43,8 +53,9 @@ def test_backfill_rewrites_only_the_target_partition(spark):
         spark.read.parquet(path).filter("lang = 'de'").count()
     )
     corrected = spark.read.parquet(path).filter("lang = 'de'")
-    with pipeline_extra.dynamic_partition_overwrite(spark):
-        corrected.write.mode("overwrite").partitionBy("lang").parquet(path)
+    corrected.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("lang").parquet(path)
 
     after = {lang: files_with_mtimes(lang) for lang in ("en", "fr", "de")}
     # Non-target partitions: same files, same mtimes — physically
